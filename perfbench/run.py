@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
 """The crawl engine's benchmark: one command per workload and seed.
 
-    python3 perfbench/run.py --workload crawl_checkpointed --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload crawl_checkpointed --seed 1 --seconds 8 --trace 0
 
 Run from the repository root. It builds the engine and the benchmark from
 source (perfbench/build.py), runs one workload in one JVM on local[4] with
-one client thread in a closed loop for --seconds, checks every output
+one client thread in a closed loop for --seconds (and at least the
+workload's minimum number of operations), checks every output
 against an oracle (Oracle.run in the JVM; DuckDB for the operator queries),
 and prints the metrics by name with their units. The last line of standard
 output is one JSON object:
@@ -64,6 +65,14 @@ def host_noise(before, after):
             "host.load1": load1}
 
 
+def applicable_metrics(workload):
+    """Per-layer metrics whose layer runs in `workload`, from layers.json's
+    layer -> metric -> workload map."""
+    with open(os.path.join(HERE, "layers.json")) as fh:
+        layers = json.load(fh)["layers"]
+    return {m for layer in layers if workload in layer["workloads"] for m in layer["metrics"]}
+
+
 def _load_check_oracle():
     spec = importlib.util.spec_from_file_location(
         "check_oracle", os.path.join(ROOT, "tools", "check_oracle.py"))
@@ -72,10 +81,21 @@ def _load_check_oracle():
     return co
 
 
+CHECK_WORKERS = 2
+
+
+def _alive(pid):
+    try:
+        os.kill(pid, 0)
+        return True
+    except OSError:
+        return False
+
+
 def _check_query(job):
     """One query's written result against its oracle SQL in DuckDB, with
     tools/check_oracle.py's canonicalization. Returns an error or None."""
-    q, sql, out, data = job
+    q, sql, out, data, jvm_pid = job
     import duckdb
     import pandas as pd
     # check_oracle.py's canonicalization uses DataFrame.applymap
@@ -87,15 +107,20 @@ def _check_query(job):
             if name.endswith(".parquet"):
                 con.execute(f"CREATE VIEW {name[:-8]} AS SELECT * FROM "
                             f"read_parquet('{os.path.join(data, name)}/*.parquet')")
-        files = sorted(os.path.join(out, q, f) for f in os.listdir(os.path.join(out, q))
-                       if f.endswith(".parquet"))
-        spark = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
-        s, o = co.canon_df(spark), co.canon_df(con.execute(sql).fetchdf())
+        o = co.canon_df(con.execute(sql).fetchdf())
+        # the JVM is still writing the results when the checks start: wait
+        # for this query's commit, or for the pass (or the JVM) to end
+        d = os.path.join(out, q)
+        while not (os.path.exists(os.path.join(d, "_SUCCESS"))
+                   or os.path.exists(os.path.join(out, "done")) or not _alive(jvm_pid)):
+            time.sleep(0.05)
+        files = sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+        s = co.canon_df(pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame())
         if (len(s) == len(o) and list(s.columns) == list(o.columns)
                 and co.df_hash(s) == co.df_hash(o)):
             return None
         return f"{q}: DuckDB mismatch rows={len(s)}/{len(o)}"
-    except Exception as e:  # a failed oracle query counts as a failed check
+    except Exception as e:  # a failed oracle query or a missing result fails the check
         return f"{q}: {type(e).__name__}: {e}"
 
 
@@ -105,18 +130,20 @@ def _default_signals():
     signal.signal(signal.SIGINT, signal.SIG_IGN)
 
 
-def start_duckdb_checks(work):
-    """Submits every written query result's check against SparkEntry.oracleSql,
-    one process per core. Started as soon as the JVM has written the oracle
-    SQL (after its measured window), so it overlaps the JVM's own checks and
-    shutdown. Returns (pool, futures)."""
+def start_duckdb_checks(work, jvm_pid):
+    """Submits the check of every query's written result against
+    SparkEntry.oracleSql, in two processes. Started as soon as the JVM has
+    written the oracle SQL, after its measured window, so they overlap the
+    JVM's untimed written pass, which keeps the other two cores.
+    Returns (pool, futures)."""
     out, data = os.path.join(work, "check"), os.path.join(work, "tables")
     with open(os.path.join(out, "oracle_sql.json")) as fh:
         sqls = json.load(fh)
-    pool = concurrent.futures.ProcessPoolExecutor(max_workers=os.cpu_count() or 1,
+    pool = concurrent.futures.ProcessPoolExecutor(max_workers=CHECK_WORKERS,
                                                   initializer=_default_signals)
     # slowest oracle first, so the pool's tail is short
-    jobs = sorted(((q, sql, out, data) for q, sql in sqls.items()), key=lambda j: -len(j[1]))
+    jobs = sorted(((q, sql, out, data, jvm_pid) for q, sql in sqls.items()),
+                  key=lambda j: -len(j[1]))
     return pool, [pool.submit(_check_query, j) for j in jobs]
 
 
@@ -161,7 +188,7 @@ def main():
     oracle_sql = os.path.join(work, "check", "oracle_sql.json")
     while proc.poll() is None:
         if a.workload == "query_suite" and checks is None and os.path.exists(oracle_sql):
-            checks = start_duckdb_checks(work)
+            checks = start_duckdb_checks(work, proc.pid)
         if time.time() > deadline:
             stop("the run exceeded its time limit")
         time.sleep(0.1)
@@ -178,7 +205,7 @@ def main():
     jvm_s = time.time() - t_start - built_s
     if a.workload == "query_suite":
         if checks is None:
-            checks = start_duckdb_checks(work)
+            checks = start_duckdb_checks(work, proc.pid)
         with checks[0]:
             errs = [e for e in (f.result() for f in checks[1]) if e]
         attempted += len(checks[1])
@@ -194,6 +221,21 @@ def main():
                        "end_to_end": res["end_to_end"], "host": noise}, fh)
     shutil.rmtree(work, ignore_errors=True)
 
+    # every metric of BENCHMARK.json; one that should have been measured and
+    # was not is a failed check, not a plausible 0
+    specs = bench["per_layer"] if a.trace else bench["end_to_end"]
+    values = res["per_layer"] if a.trace else res["end_to_end"]
+    applies = applicable_metrics(a.workload) if a.trace else {m["name"] for m in specs}
+    metrics = {}
+    for m in specs:
+        if m["name"] not in values and m["name"] in applies:
+            attempted += 1
+            failed += 1
+            errors.append(f"metric {m['name']} was not measured")
+        # not measured and not applying: layers.json says the metric's layer
+        # does not run in this workload
+        metrics[m["name"]] = {"value": float(values.get(m["name"], 0.0)), "unit": m["unit"]}
+
     # human-readable report: inputs, host noise, then every metric by name
     print(f"workload {a.workload} seed {a.seed}: {len(res['ops'])} operations in "
           f"{res['window_s']:.1f} s (closed loop, 1 client, local[4])")
@@ -204,21 +246,16 @@ def main():
     print(f"  set-up: session {res['setup']['session_s']:.2f} s, input builds "
           + ", ".join(f"{x:.2f}" for x in res["setup"]["input_reps_s"])
           + f" s, warm-up {res['setup']['warm_up_s']:.2f} s")
-    print(f"  wall: build {built_s:.1f} s, JVM {jvm_s:.1f} s, then DuckDB checks "
+    print(f"  wall: build {built_s:.1f} s, JVM {jvm_s:.1f} s (of which checks after the window "
+          f"{res['verify_s']:.1f} s), then DuckDB checks "
           f"{time.time() - t_start - built_s - jvm_s:.1f} s")
     print(f"  operations, wall (CPU) s: "
           + ", ".join(f"{o['wall_s']:.3f} ({o['cpu_s']:.2f})" for o in res["ops"]))
     for e in errors:
         print(f"  FAILED {e}")
     print(f"  error_rate = {failed / max(1, attempted):.4f} ({failed} of {attempted})")
-
-    specs = bench["per_layer"] if a.trace else bench["end_to_end"]
-    values = dict(res["per_layer"], **noise) if a.trace else res["end_to_end"]
-    metrics = {}
-    for m in specs:
-        v = float(values.get(m["name"], 0.0))
-        metrics[m["name"]] = {"value": v, "unit": m["unit"]}
-        print(f"  {m['name']} = {v:.6g} {m['unit']}")
+    for name, m in metrics.items():
+        print(f"  {name} = {m['value']:.6g} {m['unit']}")
     if a.trace:
         print(f"  spans written to {os.path.relpath(trace_file, ROOT)}; self time by layer (s):")
         for layer, s in sorted(res["self_time_s"].items(), key=lambda x: -x[1]):

@@ -7,17 +7,19 @@ import scala.collection.mutable
 
 /**
  * `crawl_checkpointed`: one operation = a checkpointed crawl that stops
- * after `maxSupersteps = 2` (the interrupted leg) plus `resumePrepared` to
+ * after `maxSupersteps = 1` (the interrupted leg) plus `resumePrepared` to
  * completion, up to a materialized `order`, over one prepared snapshot of a
  * seed-generated web.
  *
  * Why: it is the only workload that commits every superstep and reads the
  * commits back, including the fold commit that crosses `smallSeenBound`; it
  * also runs the superstep loop with Bloom segments maintained every
- * superstep, and the per-superstep driver floor. `smallSeenBound` is scaled
- * with the web (the default is sized for 10^5-page webs) so the fold commit
- * lands in the interrupted leg and the resume reads it back, at a size whose
- * operations fit the measured window several times.
+ * superstep, and the per-superstep driver floor. A superstep costs about the
+ * same 1.5-2 s at 10 or 3,000 frontier rows (that floor), so the operation
+ * is sized in supersteps: `maxDepth 2` is the shortest crawl whose resume
+ * still expands against the seen set it read back. `smallSeenBound` is
+ * scaled down with the web (the default is sized for 10^5-page webs) so the
+ * first superstep's commit is the fold and the resume reads it back.
  */
 final class CrawlCheckpointed(ctx: Ctx) extends Workload {
   import CrawlCheckpointed._
@@ -27,7 +29,7 @@ final class CrawlCheckpointed(ctx: Ctx) extends Workload {
   private val seeds = Fixtures.seedsAll(spec)
   private def cfg(dir: String) = Schemas.CrawlConfig(maxDepth = MaxDepth,
     partitions = Main.Cores, recordStreams = true, checkpointDir = Some(dir),
-    maxSupersteps = 2, smallSeenBound = spec.totalPages * 3L / 20)
+    maxSupersteps = 1, smallSeenBound = spec.totalPages / 50)
 
   private var prep: DataFrame = null
   private var prepRows = 0L
@@ -54,9 +56,13 @@ final class CrawlCheckpointed(ctx: Ctx) extends Workload {
     ctx.inputs("seed_urls") = seeds.size
   }
 
-  /** Two crawls: in a fresh JVM the first runs ~1.7x the steady state and
-    * the second still ~1.1x. */
+  /** Two crawls: in a fresh JVM the first runs ~2.7x the steady state and
+    * the second ~1.35x; the third and fourth, the measured ones, still run
+    * ~1.15x and ~1.1x. A third warm-up crawl cost 6-7 s of a run's budget. */
   def warmUp(): Unit = (0 until 2).foreach(_ => crawl(s"${ctx.work}/ckpt/warm", traced = false))
+
+  def minOps: Int = 2
+  def heapEachOp: Boolean = true
 
   private def crawl(dir: String, traced: Boolean): (Double, Double) = {
     delete(new File(dir))
@@ -174,7 +180,7 @@ final class CrawlCheckpointed(ctx: Ctx) extends Workload {
 object CrawlCheckpointed {
   val Hosts = 20
   val PagesPerHost = 250
-  val MaxDepth = 3
+  val MaxDepth = 2
   val KernelPages = 2000
   /** Estimated bytes of one seen row, the engine's own figure for delta
     * stats (SparkCrawler's private seenRowBytes). */

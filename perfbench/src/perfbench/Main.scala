@@ -1,5 +1,7 @@
 package perfbench
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
@@ -43,9 +45,13 @@ object Main {
         e.printStackTrace()
         Map[String, Any]("fatal" -> s"${e.getClass.getName}: ${e.getMessage}")
     }
-    Files.writeString(Paths.get(resultFile), Json.render(result))
+    Files.writeString(Paths.get(resultFile), toJson(result))
     spark.stop()
   }
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+  /** The result and oracle files: maps keep their insertion order. */
+  def toJson(v: Any): String = mapper.writeValueAsString(v)
 
   def session(work: String): SparkSession = SparkSession.builder()
     .master(s"local[$Cores]")
@@ -78,6 +84,8 @@ final class Ctx(val spark: SparkSession, val seed: Long, val seconds: Double,
   var attempted = 0
   var failed = 0
   val errors = mutable.ArrayBuffer.empty[String]
+  /** Heap samples a workload takes outside the measured window (MB). */
+  val heapSamples = mutable.ArrayBuffer.empty[Double]
 
   def span[A](name: String, layer: String, newTrace: Boolean = false)(f: => A): A =
     tracer match {
@@ -98,9 +106,9 @@ final class Ctx(val spark: SparkSession, val seed: Long, val seconds: Double,
   }
 }
 
-/** One operation of a workload's closed loop: its wall time and the work
-  * it completed (URL fetch attempts, or queries). */
-final case class OpResult(wallS: Double, work: Long)
+/** One operation of a workload's closed loop: its wall time, the work it
+  * completed (URL fetch attempts, or queries) and what it ran (the query). */
+final case class OpResult(wallS: Double, work: Long, key: String = "")
 
 /** An operation as the measurement loop saw it; `cpuS` is the JVM's CPU time
   * (every thread) over the operation. */
@@ -113,9 +121,20 @@ trait Workload {
   /** Runs before timing, operations of the workload's own shape; timed into
     * setup_s. */
   def warmUp(): Unit
+  /** Operations every run measures, however long they take. */
+  def minOps: Int
+  /** A traced run alternates untraced and traced blocks of this many
+    * operations. */
+  def traceStride: Int = 1
+  /** Whether the heap is sampled after every operation (each sample is two
+    * full collections, so only for operations that take seconds). */
+  def heapEachOp: Boolean
   /** One operation; `traced` says whether the tracer records it. */
   def op(i: Int, traced: Boolean): OpResult
-  /** Untimed checks against the oracle, after the measured window. */
+  /** latency_s over the measured operations: by default their median. */
+  def latency(ops: Seq[Op]): Double = Stats.median(ops.map(_.res.wallS))
+  /** Untimed checks against the oracle, after the measured window; may add
+    * heap samples to `ctx.heapSamples`. */
   def verify(): Unit
   /** Workload-specific per-layer metrics from the measured operations. */
   def layerMetrics(ops: Seq[Op]): Unit
@@ -149,11 +168,13 @@ object Harness {
     val heaps = mutable.ArrayBuffer.empty[(Double, Boolean)]
     val t0 = System.nanoTime()
     var i = 0
-    // operations start until the window has elapsed, and at least two (a
-    // traced run needs one untraced and one traced)
+    // operations start until the window has elapsed, and at least minOps; a
+    // traced run measures as many untraced operations as traced ones
+    val stride = w.traceStride
+    val minOps = if (ctx.traced) 2 * math.max(w.minOps, stride) else w.minOps
     def elapsed = (System.nanoTime() - t0) / 1e9
-    while (i < 2 || elapsed < ctx.seconds) {
-      val tr = ctx.traced && i % 2 == 1
+    while (i < minOps || elapsed < ctx.seconds) {
+      val tr = ctx.traced && (i / stride) % 2 == 1
       t.foreach(_.recording = tr)
       val startMs = System.currentTimeMillis()
       val cpu0 = Mem.processCpuS()
@@ -167,26 +188,33 @@ object Harness {
       }
       t.foreach(_.recording = false)
       r.foreach(x => ops += Op(x, tr, startMs, System.currentTimeMillis(), Mem.processCpuS() - cpu0))
-      heaps += ((Mem.oldGenAfterGc(), tr))
+      if (w.heapEachOp) heaps += ((Mem.oldGenAfterGc(), tr))
       i += 1
     }
     val windowS = elapsed
     if (ops.isEmpty) throw new IllegalStateException("no operation completed")
 
-    w.verify()
+    val (_, verifyS) = Stats.timed(w.verify())
     w.release()
     val cachedRdds = spark.sparkContext.getPersistentRDDs.size
     val retainedMb = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum / 1048576.0
 
+    // the peak over a fixed number of operations, so it does not grow with
+    // how many fit the window (the engine retains heap across crawls; that
+    // growth is reported on its own as memory.heap_growth_mb_per_op)
+    val peakOps = heaps.take(minOps)
     def e2e(traced: Boolean): Map[String, Double] = Map(
-      "op_p50_s" -> Stats.median(ops.filter(_.traced == traced).map(_.res.wallS).toSeq),
-      "peak_heap_mb" -> (heap0 +: heaps.filter(_._2 == traced).map(_._1).toSeq).max)
+      "latency_s" -> w.latency(ops.filter(_.traced == traced).toSeq),
+      "peak_heap_mb" -> (heap0 +: (peakOps.filter(_._2 == traced).map(_._1) ++ ctx.heapSamples)
+        .toSeq).max)
     val untraced = e2e(traced = false)
     val end2end = mutable.LinkedHashMap[String, Double]("setup_s" -> setupS) ++= untraced
 
     ctx.layer("spark.cached_rdds") = cachedRdds
     ctx.layer("memory.retained_cache_mb") = retainedMb
+    if (heaps.size >= 2)
+      ctx.layer("memory.heap_growth_mb_per_op") = (heaps.last._1 - heaps.head._1) / (heaps.size - 1)
     t.foreach { tr =>
       val traced = ops.filter(_.traced).toVector
       tr.recording = true
@@ -198,7 +226,8 @@ object Harness {
       if (traced.nonEmpty) {
         val te = e2e(traced = true)
         te.foreach { case (k, v) => ctx.layer(s"trace.overhead.$k") = v - untraced(k) }
-        val tReps = reps.filter(_._2).map(_._1); val uReps = reps.filterNot(_._2).map(_._1)
+        // the first repetition runs JIT-cold: compare the later ones only
+        val tReps = reps.filter(_._2).map(_._1); val uReps = reps.drop(1).filterNot(_._2).map(_._1)
         ctx.layer("trace.overhead.setup_s") = Stats.median(tReps) - Stats.median(uReps)
       }
     }
@@ -210,6 +239,7 @@ object Harness {
       "ops" -> ops.map(o => Map("wall_s" -> o.res.wallS, "cpu_s" -> o.cpuS,
         "work" -> o.res.work, "traced" -> o.traced)),
       "window_s" -> windowS,
+      "verify_s" -> verifyS,
       "inputs" -> ctx.inputs,
       "attempted" -> ctx.attempted,
       "failed" -> ctx.failed,

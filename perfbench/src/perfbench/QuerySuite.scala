@@ -6,10 +6,11 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 /**
- * `query_suite`: one operation = one pass over the operator queries of
- * `SparkEntry.queries`, each built and then forced through the `noop` sink
- * (`count()` would let Catalyst prune the computed columns), in a
- * seed-permuted order per pass.
+ * `query_suite`: one operation = one operator query of `SparkEntry.queries`,
+ * built and then forced through the `noop` sink (`count()` would let
+ * Catalyst prune the computed columns). The closed loop runs the queries in
+ * passes, each pass in its own seed-permuted order; every run measures at
+ * least one whole pass.
  *
  * Why: per-query fixed costs (planning, codegen, AQE stage jobs) dominate
  * here, not data; it is the only workload that runs the `ops` layers and
@@ -27,7 +28,8 @@ final class QuerySuite(ctx: Ctx) extends Workload {
   private val spark = ctx.spark
   /** run.py reads the tables and the written results at these paths */
   private val dataDir = s"${ctx.work}/tables"
-  private val queries: Vector[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] =
+  private val checkDir = s"${ctx.work}/check"
+  private val queries: Vector[(String, QueryFn)] =
     SparkEntry.queries.toVector.filterNot(q => LeftOut(q._1)).sortBy(_._1)
   /** per query: its runs in traced passes */
   private val perQuery = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[QRun]]
@@ -38,61 +40,81 @@ final class QuerySuite(ctx: Ctx) extends Workload {
     ctx.inputs("queries") = queries.size
   }
 
-  private def checkDir = s"${ctx.work}/check"
+  /** The warm-up: one pass in name order through the `noop` sink, as the
+    * measured passes run. (A second warm-up pass added 8 s of set-up and
+    * left latency_s as spread across runs.) */
+  def warmUp(): Unit =
+    queries.foreach { case (_, fn) => fn(spark, dataDir).write.format("noop").mode("overwrite").save() }
 
-  /** The warm-up is one pass that writes every result to one parquet file
-    * for the oracle checks, where the measured passes use the `noop` sink. */
-  def warmUp(): Unit = {
+  def minOps: Int = queries.size
+  override def traceStride: Int = queries.size
+  def heapEachOp: Boolean = false
+
+  private def order(pass: Int) =
+    new scala.util.Random(ctx.seed * 1000003L + pass).shuffle(queries)
+  private var orderCache = (-1, Vector.empty[(String, QueryFn)])
+
+  def op(i: Int, traced: Boolean): OpResult = {
+    val pass = i / queries.size
+    if (orderCache._1 != pass) orderCache = (pass, order(pass))
+    val (name, fn) = orderCache._2(i % queries.size)
+    val startMs = System.currentTimeMillis()
+    val g = group(name)
+    val (df, wall) = Stats.timed(ctx.span(s"$name (op $i)", g, newTrace = true) {
+      val df = ctx.span(s"$name build", g)(fn(spark, dataDir))
+      ctx.span(s"$name execute", g)(df.write.format("noop").mode("overwrite").save())
+      df
+    })
+    if (traced) ctx.tracer.foreach { t =>
+      t.drain()
+      val w = t.window(startMs, System.currentTimeMillis())
+      // the returned DataFrame's own phases; touching executedPlan runs its
+      // optimizer and planner (outside the timed wall)
+      val qe = df.queryExecution
+      qe.executedPlan
+      val planS = qe.tracker.phases.values.map(_.durationMs).sum / 1000.0
+      perQuery.getOrElseUpdate(name, mutable.ArrayBuffer.empty) +=
+        QRun(wall, w.jobs, planS, w.tasks, (w.shuffleRead + w.shuffleWrite) / 1048576.0)
+    }
+    OpResult(wall, 1, name)
+  }
+
+  /** The geometric mean over the queries of each query's median wall: every
+    * query weighs the same, whatever its size, and a run that measures a
+    * few queries of a second pass gets no more weight for them. */
+  override def latency(ops: Seq[Op]): Double = {
+    val perQ = ops.groupBy(_.res.key).values.map(os => Stats.median(os.map(_.res.wallS)))
+    math.exp(perQ.map(math.log).sum / perQ.size)
+  }
+
+  /** After the window, one more pass writes every result, and run.py
+    * checks each against DuckDB: results of queries that have already run
+    * many times in this JVM, so state carried across calls shows. It runs in
+    * name order, as the warm-up does, so the heap sample after it (this
+    * workload's peak_heap_mb, with the one after set-up) always follows the
+    * same query: a few queries leave ~20 MB until the next one runs, and
+    * after a seed-permuted pass the sample depended on which ran last.
+    * Sampling after every query instead added ~10 s to the run. */
+  def verify(): Unit = {
+    // written first and atomically: run.py starts the DuckDB checks as soon
+    // as it appears, and checks each query's result once its commit is there
+    val sqls = SparkEntry.oracleSql.filter { case (k, _) => queries.exists(_._1 == k) }
+    Files.createDirectories(Paths.get(checkDir))
+    val tmp = Paths.get(s"$checkDir/oracle_sql.json.tmp")
+    Files.writeString(tmp, Main.toJson(sqls))
+    Files.move(tmp, Paths.get(s"$checkDir/oracle_sql.json"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     queries.foreach { case (name, fn) =>
       ctx.check(s"$name executes") {
-        fn(spark, dataDir).coalesce(1).write.mode("overwrite").option("compression", "none")
+        fn(spark, dataDir).write.mode("overwrite").option("compression", "none")
           .parquet(s"$checkDir/$name")
         true
       }
     }
-  }
-
-  private def pass(i: Int, traced: Boolean): Double = {
-    val order = new scala.util.Random(ctx.seed * 1000003L + i).shuffle(queries)
-    order.map { case (name, fn) =>
-      val startMs = System.currentTimeMillis()
-      val g = group(name)
-      val (df, wall) = Stats.timed(ctx.span(name, g) {
-        val df = ctx.span(s"$name build", g)(fn(spark, dataDir))
-        ctx.span(s"$name execute", g)(df.write.format("noop").mode("overwrite").save())
-        df
-      })
-      if (traced) ctx.tracer.foreach { t =>
-        t.drain()
-        val w = t.window(startMs, System.currentTimeMillis())
-        // the returned DataFrame's own phases; touching executedPlan runs its
-        // optimizer and planner (outside the timed wall)
-        val qe = df.queryExecution
-        qe.executedPlan
-        val planS = qe.tracker.phases.values.map(_.durationMs).sum / 1000.0
-        perQuery.getOrElseUpdate(name, mutable.ArrayBuffer.empty) +=
-          QRun(wall, w.jobs, planS, w.tasks, (w.shuffleRead + w.shuffleWrite) / 1048576.0)
-      }
-      wall
-    }.sum
-  }
-
-  def op(i: Int, traced: Boolean): OpResult = {
-    val wall = ctx.span(s"pass $i", "workload", newTrace = true)(pass(i, traced))
-    OpResult(wall, queries.size)
-  }
-
-  /** The warm-up's results go to the DuckDB oracle: run.py checks each
-    * against `SparkEntry.oracleSql`. */
-  def verify(): Unit = {
-    // written first and atomically: run.py starts the DuckDB checks as soon
-    // as it appears, while this JVM shuts down
-    val sqls = SparkEntry.oracleSql.filter { case (k, _) => queries.exists(_._1 == k) }
-    Files.createDirectories(Paths.get(checkDir))
-    val tmp = Paths.get(s"$checkDir/oracle_sql.json.tmp")
-    Files.writeString(tmp, Json.render(sqls))
-    Files.move(tmp, Paths.get(s"$checkDir/oracle_sql.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // a query whose write failed leaves no commit; this tells the checks to
+    // stop waiting for one
+    Files.writeString(Paths.get(s"$checkDir/done"), "")
+    ctx.heapSamples += Mem.oldGenAfterGc()
   }
 
   def layerMetrics(ops: Seq[Op]): Unit = {
@@ -103,20 +125,21 @@ final class QuerySuite(ctx: Ctx) extends Workload {
     }
     Groups.foreach { g =>
       val qs = perQuery.filter { case (n, _) => group(n) == g }.values.toSeq
-      // per pass: the group's sum over its queries, median over passes
-      def perPass(f: QRun => Double) =
-        med(qs.map(_.map(f).toSeq).transpose.map(_.sum))
-      ctx.layer(s"$g.plan_s") = perPass(_.planS)
-      ctx.layer(s"$g.tasks") = perPass(_.tasks.toDouble)
-      ctx.layer(s"$g.shuffle_mb") = perPass(_.shuffleMb)
+      // the group's sum over its queries of each query's median
+      def sum(f: QRun => Double) = qs.map(rs => med(rs.map(f).toSeq)).sum
+      ctx.layer(s"$g.plan_s") = sum(_.planS)
+      ctx.layer(s"$g.tasks") = sum(_.tasks.toDouble)
+      ctx.layer(s"$g.shuffle_mb") = sum(_.shuffleMb)
     }
-    ctx.layer("query.suite_s") = med(ops.map(_.res.wallS))
+    // one pass: the sum over queries of each query's median wall
+    ctx.layer("query.suite_s") = perQuery.values.map(rs => med(rs.map(_.wallS).toSeq)).sum
   }
 
   def release(): Unit = ()
 }
 
 object QuerySuite {
+  type QueryFn = (org.apache.spark.sql.SparkSession, String) => DataFrame
   final case class QRun(wallS: Double, jobs: Int, planS: Double, tasks: Long, shuffleMb: Double)
 
   val LeftOut: Set[String] = Set("q24_crawl_tiny", "q30_crawl_step_sql")
