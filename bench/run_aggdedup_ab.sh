@@ -1,7 +1,7 @@
 #!/bin/bash
-# Same-window A/B of the map-side partial first-occurrence (agg-dedup) vs the
-# round-4 window shape (SPARK_GRAFT_NO_AGG_DEDUP=1), alternated to control
-# host drift. N=4 legs first (the win is remote shuffle reads), then N=1.
+# Same-window A/B of the map-side partial first-occurrence (agg-dedup, opted in
+# with SPARK_GRAFT_AGG_DEDUP=1) vs the default window shape, alternated to
+# control host drift. N=4 legs first (the win is remote shuffle reads), then N=1.
 # Usage: bench/run_aggdedup_ab.sh [nHosts pph maxDepth]
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -28,9 +28,9 @@ leg() { # nWorkers pin label extra-env...
   echo "leg=$LABEL $R" | tee -a "$OUT"
 }
 
-leg 4 4-12 n4_agg
-leg 4 4-12 n4_win SPARK_GRAFT_NO_AGG_DEDUP=1
-leg 4 4-12 n4_agg2
-leg 4 4-12 n4_win2 SPARK_GRAFT_NO_AGG_DEDUP=1
-leg 1 4-6  n1_agg
-leg 1 4-6  n1_win SPARK_GRAFT_NO_AGG_DEDUP=1
+leg 4 4-12 n4_agg SPARK_GRAFT_AGG_DEDUP=1
+leg 4 4-12 n4_win
+leg 4 4-12 n4_agg2 SPARK_GRAFT_AGG_DEDUP=1
+leg 4 4-12 n4_win2
+leg 1 4-6  n1_agg SPARK_GRAFT_AGG_DEDUP=1
+leg 1 4-6  n1_win

@@ -267,11 +267,11 @@ object SparkEntry {
       val pages = Fixtures.allPages(spec)
         .map(p => (p.url, new java.sql.Timestamp(p.warcTsMs), p.html, p.text, p.lang))
         .toDF("url", "warc_ts", "html", "text", "lang")
-      // bloomMinSeen: segment upkeep only pays past ~10^5 seen URLs — on a
-      // tiny crawl the exact anti-join runs alone (results are identical
-      // either way; the Bloom paths are pinned by CrawlerParitySpec)
+      // default config: the exact anti-join runs alone, no Bloom store is
+      // built (SparkCrawler.newBloom); the Bloom paths are pinned by
+      // CrawlerParitySpec
       val run = SparkCrawler.run(s, pages, Fixtures.seeds(spec),
-        Schemas.CrawlConfig(maxDepth = 2, partitions = 4, bloomMinSeen = 100000L))
+        Schemas.CrawlConfig(maxDepth = 2, partitions = 4))
       run.order.orderBy("seq").select("seq", "depth", "url", "canon", "hash")
     }),
 

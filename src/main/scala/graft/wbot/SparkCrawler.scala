@@ -16,7 +16,7 @@ import Schemas._
  *   frontier(depth d)  —[politeness ranked-window drain]→  rate intervals
  *     —[left join pages on canon (the "fetch")]→  crawled_d + failures
  *     —[extractLinks ∘ posexplode → resolve → Q1 ∧ Q2 ∧ Q3]→ candidates
- *     —[in-batch first-occurrence window + Bloom-prefiltered anti-join seen]→ fresh
+ *     —[in-batch first-occurrence window + anti-join seen]→ fresh
  *     —[scalable global rank → seq]→ frontier(d+1);  seen ∪= fresh
  *
  * Exact-match guarantees vs the reference at WithParallel(1):
@@ -148,12 +148,15 @@ object SparkCrawler {
       .persist(bulkLevel)
   }
 
-  /** Executor for per-superstep side jobs (order-stream checkpoint, Bloom
-    * segment merge, snapshot commit): they are independent of the main
+  /** Executor for per-superstep side jobs (order-stream checkpoint, seen-delta
+    * alignment, snapshot commit and its table writes, and the Bloom segment
+    * merge when a store is built): they are independent of the main
     * superstep plan and of each other, so running them as concurrent Spark
-    * jobs collapses 3-4 sequential driver round-trips into ~max(one). Daemon
-    * threads; all futures are awaited inside the superstep that spawned them. */
-  private lazy val sideEc: scala.concurrent.ExecutionContextExecutor =
+    * jobs collapses sequential driver round-trips into ~max(one). Daemon
+    * threads, unbounded (a side job may itself fan out and await, as the
+    * commit does); all futures are awaited inside the superstep that spawned
+    * them. */
+  private[wbot] lazy val sideEc: scala.concurrent.ExecutionContextExecutor =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newCachedThreadPool { r =>
         val t = new Thread(r, "wbot-sidejob"); t.setDaemon(true); t
@@ -267,8 +270,9 @@ object SparkCrawler {
     val deltas = st.readSeenDeltas(spark, snap.lastStep, snap.seenBaseStep, alignP, seenRowBytes)
     val bloom = newBloom(spark, cfg)
     if (bloom != null && deltas.nonEmpty)
-      // layout-free view: the segment build re-shuffles by pid anyway, and
-      // parquet column pruning makes this a hash64-only scan
+      // only in the probed regimes (newBloom). Layout-free view: the segment
+      // build re-shuffles by pid anyway, and parquet column pruning makes
+      // this a hash64-only scan
       st.readSeen(spark, snap.lastStep, snap.seenBaseStep)
         .foreach(s => bloom.update(s.select("hash64")))
     val orderParts = mutable.ArrayBuffer.empty[DataFrame]
@@ -280,11 +284,20 @@ object SparkCrawler {
         snap.lastStep + 1, orderParts, attemptParts, snap.seenBaseStep))
   }
 
-  private def newBloom(spark: SparkSession, cfg: CrawlConfig): BloomSeen.SegmentStore =
-    if (cfg.bloomEnabled)
-      new BloomSeen.SegmentStore(spark, cfg.partitions,
-        BloomSeen.bytesFor(1L << 16, cfg.bloomBitsPerKey), cfg.bloomBroadcastMaxBytes)
+  /** The Bloom seen store, or null when the loop would never probe it. The
+    * superstep reads the store only in the two-leg probe split, which runs
+    * when `bloomTwoPassProbe` is forced or when the segments exceed the
+    * broadcast cutover (the cogroup regime) — both fixed by the config. In
+    * the default broadcast regime the single-pass exact anti-join decides
+    * alone, so building the store would only pay segment merges (every
+    * superstep) and a rebuild (every resume) that no probe reads. */
+  private def newBloom(spark: SparkSession, cfg: CrawlConfig): BloomSeen.SegmentStore = {
+    val segBytes = BloomSeen.bytesFor(1L << 16, cfg.bloomBitsPerKey)
+    val cogroup = cfg.partitions.toLong * segBytes > cfg.bloomBroadcastMaxBytes
+    if (cfg.bloomEnabled && (cfg.bloomTwoPassProbe || cogroup))
+      new BloomSeen.SegmentStore(spark, cfg.partitions, segBytes, cfg.bloomBroadcastMaxBytes)
     else null
+  }
 
   /** Materialize a seen delta HASH-PARTITIONED on its join key: one
     * O(delta) repartition + accounted persist at birth, lineage-cut with the
@@ -332,8 +345,6 @@ object SparkCrawler {
     // attribution toggles (bench bisection; engine defaults are the fast path)
     val alignSeen = !sys.env.get("SPARK_GRAFT_NO_SEEN_ALIGN").contains("1")
     val pruneFetch = !sys.env.get("SPARK_GRAFT_NO_PRUNE").contains("1")
-    val twoPassProbe = cfg.bloomTwoPassProbe ||
-      sys.env.get("SPARK_GRAFT_TWO_PASS_PROBE").contains("1")
     // ALIGNED deltas (canon-hash-partitioned at alignP — the aligned-union
     // view's inputs) and DEFERRED small deltas (unaligned stats-bearing
     // leaves over tiny persisted projections: while the accumulated seen set
@@ -344,8 +355,6 @@ object SparkCrawler {
     val smallDeltas = mutable.ArrayBuffer.empty[DataFrame]
     val smallCaches = mutable.ArrayBuffer.empty[DataFrame]
     if (st0.loadedDeltas.nonEmpty && st0.metrics.getOrElse("crawled_link", 0L) > 0L) {
-      st0.loadedDeltas.foreach(ld => require(ld.df.columns.contains("canon"),
-        "seen snapshot predates the canon-keyed format (pre-round-5); cannot resume"))
       def proj(df: DataFrame) = df.select(col("canon"), col("hash"), col("hash64"))
       if (alignSeen) {
         if (st0.metrics("crawled_link") > smallSeenBound) {
@@ -423,9 +432,10 @@ object SparkCrawler {
 
     var d = st0.startDepth
     var stepsRun = 0
-    // in-flight Bloom segment merge: runs concurrently with the order-stream
-    // checkpoint and the snapshot commit, awaited before the superstep closes
-    // (the next superstep's probe reads the store)
+    // in-flight Bloom segment merge (only when a store exists — newBloom):
+    // runs concurrently with the order-stream checkpoint and the snapshot
+    // commit, awaited before the superstep closes (the next superstep's
+    // probe reads the store)
     var bloomFut: scala.concurrent.Future[Unit] = null
     def awaitBloom(): Unit = if (bloomFut != null) {
       scala.concurrent.Await.result(bloomFut, scala.concurrent.duration.Duration.Inf)
@@ -792,10 +802,10 @@ object SparkCrawler {
         // Bloom probe's key, and next superstep's politeness salt
         val firsts = firsts1.withColumn("hash64", xxhash64(col("canon")))
 
-        // Q4b: cross-superstep dedup — Bloom segment pre-filter (no false
-        // negatives → misses are definitely fresh), exact anti-join backstop.
-        // The store picks broadcast vs pid-co-partitioned join by segment
-        // volume; either way only suspects enter the anti-join shuffle.
+        // Q4b: cross-superstep dedup — the exact anti-join, pre-filtered by
+        // the Bloom segments only where a store exists (newBloom: forced
+        // two-leg split or the cogroup regime). No false negatives → misses
+        // are definitely fresh, and only suspects enter the anti-join.
         val bloomActive = bloom != null && seenTotal >= cfg.bloomMinSeen
         // The seen side is the partition-wise union of the hash-aligned
         // deltas: NO exchange, NO sort on it, at any seen size. Below the
@@ -827,7 +837,7 @@ object SparkCrawler {
           }
         var markedCache: DataFrame = null
         val fresh0pre =
-          if (bloomActive && (bloom.usesCogroup || twoPassProbe)) {
+          if (bloomActive && (bloom.usesCogroup || cfg.bloomTwoPassProbe)) {
             // TWO-LEG probe split: sure rows (bloom says definitely fresh)
             // bypass the anti-join; suspects go through it. This pays a
             // SECOND read of the first-occurrence shuffle (both legs re-read
@@ -860,10 +870,10 @@ object SparkCrawler {
             // profile put the candidate reduce stage's remote-read CPU at
             // +29% at N=4 — halving its shuffle reads is worth more than the
             // broadcast bloom probe saves (no false negatives ⇒ identical
-            // output either way; `SPARK_GRAFT_TWO_PASS_PROBE=1` restores the
-            // split for attribution). The Bloom store keeps building
-            // concurrently: it is the probe of record the moment segment
-            // volume escalates to the cogroup path, and it rides resume.
+            // output either way; `bloomTwoPassProbe` restores the split).
+            // In the broadcast regime without the forced split no Bloom store
+            // exists at all (newBloom): the config fixes the regime, so
+            // segments nothing probes are never merged or rebuilt on resume.
             firsts.join(seenHinted, Seq("canon"), "left_anti")
         // the identity/addressing columns are recomputed HERE, post-dedup,
         // so only fresh-set rows pay them: sha-256 (F3) via the codegen'd
@@ -1087,9 +1097,10 @@ object SparkCrawler {
         alignFut = null
       }
       // atomic superstep commit: frontier, seen delta, crawled delta,
-      // attempts delta, metrics, seq watermark — overlaps the Bloom merge,
-      // awaited before the superstep closes (the next superstep unpersists
-      // the previous frontier this commit reads)
+      // attempts delta (written concurrently by Storage.commitStep), then
+      // metrics and seq watermark — overlaps the Bloom merge when a store
+      // exists, awaited before the superstep closes (the next superstep
+      // unpersists the previous frontier this commit reads)
       val commitFut = storage.map { s =>
         val fr = frontier; val sd = seenCommit
         val od = orderParts.lastOption.getOrElse(emptyOrder(spark))

@@ -1,8 +1,12 @@
 package graft.wbot
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.types.StructType
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 
 /**
  * Snapshot-table checkpoint layer (SURVEY.md §7.6) — the sandbox stand-in for
@@ -40,6 +44,21 @@ object Storage {
 
   final case class Snapshot(lastStep: Int, seqBase: Long, metrics: Map[String, Long],
       seenBaseStep: Int)
+
+  /** Declared read schemas, one per committed table — exactly what the
+    * engine's commits write (StorageSpec pins each against the schema Spark
+    * infers from the written footers). Reads never infer: an inferring
+    * parquet read launches one footer-reading Spark job per call, a fixed
+    * driver round-trip per table on the resume path. */
+  val FrontierSchema: StructType = StructType.fromDDL(
+    "url STRING, canon STRING, hash STRING, hash64 BIGINT, host STRING, root STRING, " +
+      "depth INT, score BIGINT, seq BIGINT, ua STRING, proxy STRING")
+  val SeenSchema: StructType = StructType.fromDDL("canon STRING, hash STRING, hash64 BIGINT")
+  val CrawledSchema: StructType = StructType.fromDDL(
+    "seq BIGINT, url STRING, canon STRING, hash STRING, depth INT, status INT, " +
+      "superstep INT, interval INT, ua STRING, proxy STRING")
+  val AttemptsSchema: StructType = StructType.fromDDL(
+    "seq BIGINT, canon STRING, depth INT, hit BOOLEAN, superstep INT")
 }
 
 final class Storage(dir: String) {
@@ -93,16 +112,27 @@ final class Storage(dir: String) {
 
   /** Commit superstep d: all tables first, manifest rename last (the commit
     * point — a crash mid-write leaves the previous manifest authoritative).
-    * `seenBase` = the step whose seen delta supersedes all earlier ones
-    * (-1 = none; maintained by the crawl loop across fold commits). */
+    * The table writes are independent directories, so they run as concurrent
+    * Spark jobs on the engine's side-job pool; all of them are awaited, and
+    * the first failure (in table order) is rethrown before any manifest is
+    * written. `seenBase` = the step whose seen delta supersedes all earlier
+    * ones (-1 = none; maintained by the crawl loop across fold commits). */
   def commitStep(d: Int, frontier: DataFrame, seenDelta: Option[SeenCommit],
       crawledDelta: DataFrame, attemptsDelta: DataFrame,
       metrics: Map[String, Long], seqBase: Long, seenBase: Int = -1): Unit = {
-    new File(stepDir(d)).mkdirs()
-    writeAtomic(frontier, s"${stepDir(d)}/frontier")
-    seenDelta.foreach(writeSeenDelta(d, _))
-    writeAtomic(crawledDelta, s"${stepDir(d)}/crawled")
-    writeAtomic(attemptsDelta, s"${stepDir(d)}/attempts")
+    // a step past the manifest's is uncommitted: clear what a torn earlier
+    // attempt at this step left, so no stale table outlives the retry
+    val sdir = new File(stepDir(d))
+    if (sdir.exists()) delete(sdir)
+    sdir.mkdirs()
+    val writes: Seq[() => Unit] = Seq(
+      () => writeAtomic(frontier, s"${stepDir(d)}/frontier"),
+      () => seenDelta.foreach(writeSeenDelta(d, _)),
+      () => writeAtomic(crawledDelta, s"${stepDir(d)}/crawled"),
+      () => writeAtomic(attemptsDelta, s"${stepDir(d)}/attempts"))
+    writes.map(w => Future(w())(SparkCrawler.sideEc))
+      .map(f => Await.ready(f, Duration.Inf).value.get)
+      .foreach(_.get)
     val props = new java.util.Properties()
     props.setProperty("committed_step", d.toString)
     props.setProperty("seq_base", seqBase.toString)
@@ -131,12 +161,29 @@ final class Storage(dir: String) {
   }
 
   /** Frontier snapshot, with forward migration: snapshots written before the
-    * O2 `score` column existed resume as pure FIFO (score = 0) instead of
-    * failing Politeness' drain-order resolution with an AnalysisException. */
-  def readFrontier(spark: SparkSession, d: Int): DataFrame = {
-    val df = spark.read.parquet(s"${stepDir(d)}/frontier")
-    if (df.columns.contains("score")) df
-    else df.withColumn("score", org.apache.spark.sql.functions.lit(0L))
+    * O2 `score` column existed read `score` as null under the declared
+    * schema, and resume as pure FIFO (score = 0). The engine always writes a
+    * non-null score, so the coalesce is the identity on its own commits. */
+  def readFrontier(spark: SparkSession, d: Int): DataFrame =
+    spark.read.schema(FrontierSchema).parquet(s"${stepDir(d)}/frontier")
+      .withColumn("score", coalesce(col("score"), lit(0L)))
+
+  /** Pre-round-5 seen deltas were keyed by `hash` alone; the declared schema
+    * would read their `canon` as all-null and silently treat every seen URL
+    * as fresh. One driver-side footer read per delta (no Spark job) makes
+    * that a loud error instead. */
+  private def requireCanonKeyed(deltaDir: File): Unit = {
+    def firstParquet(f: File): Option[File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
+        .iterator.flatMap(firstParquet).nextOption()
+      else Some(f).filter(_.getName.endsWith(".parquet"))
+    firstParquet(deltaDir).foreach { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(f.toPath))
+      val keyed = try r.getFileMetaData.getSchema.containsField("canon") finally r.close()
+      require(keyed, s"seen snapshot $deltaDir predates the canon-keyed format " +
+        "(pre-round-5); cannot resume")
+    }
   }
 
   /** The committed seen deltas as of step `upTo`, one [[LoadedDelta]] per
@@ -145,13 +192,14 @@ final class Storage(dir: String) {
     * zero-shuffle aligned leaves with stats (`rows`, `rows × rowBytes`);
     * anything else (pre-fold smalls, width-mismatched layouts, legacy plain
     * commits) comes back as a plain parquet read for the engine to treat as
-    * small or re-align. */
+    * small or re-align. Every read uses [[SeenSchema]]. */
   def readSeenDeltas(spark: SparkSession, upTo: Int, seenBase: Int, wantP: Int,
       rowBytes: Long): Seq[LoadedDelta] = {
     (math.max(0, seenBase) to upTo).flatMap { i =>
       val path = s"${stepDir(i)}/seen_delta"
       if (!new File(path).exists()) None
       else {
+        requireCanonKeyed(new File(path))
         val (alignedP, rows) = {
           val pf = new File(s"${stepDir(i)}/seen_delta.properties")
           if (!pf.exists()) (None, -1L)
@@ -167,7 +215,8 @@ final class Storage(dir: String) {
           case Some(p) if p == wantP && rows > 0L =>
             val buckets = (0 until p).map { b =>
               val bdir = new File(s"$path/__bucket=$b")
-              if (bdir.exists()) Some(spark.read.parquet(bdir.toString)) else None
+              if (bdir.exists()) Some(spark.read.schema(SeenSchema).parquet(bdir.toString))
+              else None
             }
             if (buckets.forall(_.isEmpty)) None
             else Some(LoadedDelta(
@@ -178,11 +227,12 @@ final class Storage(dir: String) {
             // width mismatch: flat read across the bucket dirs (partition
             // discovery adds __bucket — drop it), engine re-aligns
             if (!new File(path).listFiles().exists(_.getName.startsWith("__bucket="))) None
-            else Some(LoadedDelta(spark.read.parquet(path).drop("__bucket"),
+            else Some(LoadedDelta(spark.read.schema(SeenSchema).parquet(path).drop("__bucket"),
               aligned = false, rows))
           case None =>
             if (rows == 0L) None
-            else Some(LoadedDelta(spark.read.parquet(path), aligned = false, rows))
+            else Some(LoadedDelta(spark.read.schema(SeenSchema).parquet(path),
+              aligned = false, rows))
         }
       }
     }
@@ -197,13 +247,15 @@ final class Storage(dir: String) {
     readSeenDeltas(spark, upTo, seenBase, wantP = -1, rowBytes = 1L)
       .map(_.df).reduceOption(_ unionByName _)
 
-  def readCrawled(spark: SparkSession, upTo: Int): Option[DataFrame] = {
-    val paths = (0 to upTo).map(i => s"${stepDir(i)}/crawled").filter(p => new File(p).exists())
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-  }
+  def readCrawled(spark: SparkSession, upTo: Int): Option[DataFrame] =
+    readSteps(spark, upTo, "crawled", CrawledSchema)
 
-  def readAttempts(spark: SparkSession, upTo: Int): Option[DataFrame] = {
-    val paths = (0 to upTo).map(i => s"${stepDir(i)}/attempts").filter(p => new File(p).exists())
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+  def readAttempts(spark: SparkSession, upTo: Int): Option[DataFrame] =
+    readSteps(spark, upTo, "attempts", AttemptsSchema)
+
+  private def readSteps(spark: SparkSession, upTo: Int, table: String,
+      schema: StructType): Option[DataFrame] = {
+    val paths = (0 to upTo).map(i => s"${stepDir(i)}/$table").filter(p => new File(p).exists())
+    if (paths.isEmpty) None else Some(spark.read.schema(schema).parquet(paths: _*))
   }
 }

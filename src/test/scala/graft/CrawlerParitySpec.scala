@@ -2,6 +2,7 @@ package graft
 
 import graft.wbot._
 import graft.wbot.Schemas._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /**
  * The exact-match criteria of BASELINE.json: identical crawl ordering and
@@ -68,8 +69,72 @@ class CrawlerParitySpec extends SparkSuite {
   private val tiny = Fixtures.tiny
   private val tinySeeds = Fixtures.seeds(tiny)
 
-  test("parity: tiny site, default config, maxDepth 3 (bloom on)") {
+  test("parity: tiny site, default config, maxDepth 3") {
     assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4))
+  }
+
+  /** The call sites of every job `body` starts: each job's `callSite.short`
+    * (when set) and the names of its stages, which Spark derives from the
+    * call site that created them (`<action> at <File>.scala:<line>`). */
+  private def jobCallSites(body: => Unit): Vector[String] = {
+    val sc = spark.sparkContext
+    val marker = s"call-site-marker-${System.nanoTime()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(p => p.getProperty("spark.job.description") == marker))
+          markerSeen = true
+        else {
+          props.flatMap(p => Option(p.getProperty("callSite.short"))).foreach(sites.add)
+          e.stageInfos.foreach(si => sites.add(si.name))
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job `body` started has been recorded
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toVector
+  }
+
+  test("default config builds no Bloom store: no job starts from BloomSeen") {
+    // the default broadcast regime never probes the store, so neither the
+    // per-superstep segment merge nor the resume rebuild may run; the
+    // forced two-leg split is the control that the call sites are caught
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(tiny), 4)
+    val oracle = Oracle.run(Fixtures.oraclePages(tiny), tinySeeds,
+      CrawlConfig(maxDepth = 3, partitions = 4))
+    def checkpointedCrawl(cfg: CrawlConfig): Vector[String] = {
+      val dir = java.nio.file.Files.createTempDirectory("wbot_bloom_gate").toString
+      val c = cfg.copy(checkpointDir = Some(dir))
+      var res: SparkCrawler.CrawlRun = null
+      val sites = jobCallSites {
+        SparkCrawler.runPrepared(spark, pagesPrep, tinySeeds, c.copy(maxSupersteps = 2))
+        res = SparkCrawler.resumePrepared(spark, pagesPrep, c)
+        res.order.count()
+      }
+      assertRunsEqual(oracle, res)
+      sites
+    }
+    val default = checkpointedCrawl(CrawlConfig(maxDepth = 3, partitions = 4))
+    assert(default.nonEmpty)
+    assert(!default.exists(_.contains("BloomSeen")),
+      s"default config started Bloom jobs: ${default.filter(_.contains("BloomSeen"))}")
+    val probed = checkpointedCrawl(CrawlConfig(maxDepth = 3, partitions = 4,
+      bloomTwoPassProbe = true))
+    assert(probed.exists(_.contains("BloomSeen")),
+      s"control: the probed config's Bloom jobs were not caught: ${probed.distinct}")
+    pagesPrep.unpersist()
   }
 
   test("parity: bloom disabled gives identical results") {
@@ -79,9 +144,11 @@ class CrawlerParitySpec extends SparkSuite {
   test("parity: bloom activation threshold crossed mid-crawl (catch-up build)") {
     // threshold crossed between supersteps: early depths run the bare
     // anti-join, the crossing superstep bulk-builds segments over ALL deltas,
-    // later depths prefilter — results identical throughout
+    // later depths prefilter — results identical throughout. The forced
+    // two-leg split makes the store exist (and be probed) in the broadcast
+    // regime.
     assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4,
-      bloomMinSeen = 60L))
+      bloomMinSeen = 60L, bloomTwoPassProbe = true))
   }
 
   test("parity: broadcast bloom two-leg probe split gives identical results") {
