@@ -155,12 +155,37 @@ object SparkCrawler {
     * jobs collapses sequential driver round-trips into ~max(one). Daemon
     * threads, unbounded (a side job may itself fan out and await, as the
     * commit does); all futures are awaited inside the superstep that spawned
-    * them. */
-  private[wbot] lazy val sideEc: scala.concurrent.ExecutionContextExecutor =
+    * them. Submit through [[sideJob]] only. */
+  private lazy val sideEc: scala.concurrent.ExecutionContextExecutor =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newCachedThreadPool { r =>
         val t = new Thread(r, "wbot-sidejob"); t.setDaemon(true); t
       })
+
+  /** Run `body` on the side-job pool as the SUBMITTING thread would: its
+    * Spark local properties (job group, description, scheduler pool, job
+    * tags) and active session are captured here and set in the task, then
+    * restored — what Spark's `SQLExecution.withThreadLocalCaptured` does.
+    * Local properties are inheritable thread-locals, so a pooled thread
+    * otherwise keeps those of whichever thread created it: the caller's
+    * `cancelJobGroup` would miss the side job, and a stale group would be
+    * credited with it. */
+  private[wbot] def sideJob[A](spark: SparkSession)(body: => A): scala.concurrent.Future[A] = {
+    import org.apache.spark.sql.graftbridge.DatasetBridge.{localProperties, setLocalProperties}
+    val sc = spark.sparkContext
+    val props = localProperties(sc)
+    scala.concurrent.Future {
+      val prevProps = localProperties(sc)
+      val prevSession = SparkSession.getActiveSession
+      setLocalProperties(sc, props)
+      SparkSession.setActiveSession(spark)
+      try body
+      finally {
+        setLocalProperties(sc, prevProps)
+        prevSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+      }
+    }(sideEc)
+  }
 
   /** Storage level for the engine's bulk caches: off-heap when the session
     * has an off-heap pool (columnar bytes stay out of the GC'd heap — the
@@ -194,8 +219,12 @@ object SparkCrawler {
   private def scoreCol(cfg: CrawlConfig) =
     cfg.scoreExpr.map(e => coalesce(expr(e).cast("long"), lit(0L))).getOrElse(lit(0L))
 
+  /** The loop's starting point. `frontierSize` is the frontier's exact row
+    * count, known on the driver wherever a frontier is born (seed list,
+    * previous superstep's fresh count, manifest), so no count job measures
+    * it. */
   private final case class State(
-      frontier: DataFrame, loadedDeltas: Seq[Storage.LoadedDelta],
+      frontier: DataFrame, frontierSize: Long, loadedDeltas: Seq[Storage.LoadedDelta],
       bloom: BloomSeen.SegmentStore,
       metrics: mutable.Map[String, Long], seqBase: Long, startDepth: Int,
       orderParts: mutable.ArrayBuffer[DataFrame],
@@ -236,14 +265,15 @@ object SparkCrawler {
     * slower) on a mismatched external snapshot. */
   def runPrepared(spark: SparkSession, pagesPrep: DataFrame, seeds: Seq[String],
       cfg: CrawlConfig, saltedPoliteness: Boolean = false): CrawlRun = {
+    // seedFrontier keeps every seed or throws: its row count is seeds.size
     val frontier = seedFrontier(spark, seeds, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    val seqBase = frontier.count()
+    val seqBase = seeds.size.toLong
     val m = mutable.Map(
       "total_requests" -> 0L, "successful_requests" -> 0L, "failed_requests" -> 0L,
       "total_link" -> 0L, "crawled_link" -> 0L, "skipped_link" -> 0L,
       "duplicated_link" -> 0L)
     crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
-      State(frontier, Nil, newBloom(spark, cfg), m, seqBase, 0,
+      State(frontier, seqBase, Nil, newBloom(spark, cfg), m, seqBase, 0,
         mutable.ArrayBuffer.empty, mutable.ArrayBuffer.empty))
   }
 
@@ -265,6 +295,8 @@ object SparkCrawler {
     val snap = st.readManifest().getOrElse(
       throw new IllegalStateException("no committed snapshot to resume from"))
     val frontier = st.readFrontier(spark, snap.lastStep).persist(StorageLevel.MEMORY_AND_DISK)
+    // a manifest written before `frontier_rows` existed pays one count
+    val frontierSize = snap.frontierRows.getOrElse(frontier.count())
     val alignP = cfg.seenAlignPartitions.getOrElse(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val deltas = st.readSeenDeltas(spark, snap.lastStep, snap.seenBaseStep, alignP, seenRowBytes)
@@ -280,8 +312,8 @@ object SparkCrawler {
     val attemptParts = mutable.ArrayBuffer.empty[DataFrame]
     st.readAttempts(spark, snap.lastStep).foreach(attemptParts += _)
     crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
-      State(frontier, deltas, bloom, mutable.Map(snap.metrics.toSeq: _*), snap.seqBase,
-        snap.lastStep + 1, orderParts, attemptParts, snap.seenBaseStep))
+      State(frontier, frontierSize, deltas, bloom, mutable.Map(snap.metrics.toSeq: _*),
+        snap.seqBase, snap.lastStep + 1, orderParts, attemptParts, snap.seenBaseStep))
   }
 
   /** The Bloom seen store, or null when the loop would never probe it. The
@@ -445,7 +477,7 @@ object SparkCrawler {
     // — the terminal hit count — read this and skip the seq-window sort);
     // null when the frontier didn't come from an expansion (seeds, resume)
     var frontierRaw: DataFrame = null
-    var frontierSize = frontier.count()
+    var frontierSize = st0.frontierSize
     // size of the seen set == crawled_link (every fresh candidate is marked
     // seen; seeds are not) — gates Bloom activation without extra actions
     var seenTotal = m("crawled_link")
@@ -484,7 +516,7 @@ object SparkCrawler {
         frontierRaw = null
         oldFrontier.unpersist()
         storage.foreach { s =>
-          s.commitStep(d, frontier, None, emptyOrder(spark), emptyAttempts(spark),
+          s.commitStep(d, frontier, 0L, None, emptyOrder(spark), emptyAttempts(spark),
             m.toMap, seqBase, seenBaseStep)
         }
         steps += StepStat(d, frontierSize, fetched, frontierSize - fetched, 0L, 0L, 0L, 0,
@@ -512,24 +544,11 @@ object SparkCrawler {
       // drains (whose per-slot unions are expensive to recompute).
       val ivObs = new org.apache.spark.sql.Observation(s"iv_d${d}_s$stepsRun")
       val cacheScheduled = cfg.strictPoliteness || cfg.recordStreams
-      // adaptive salt fan-out from OBSERVED skew (verdict round-3 #8): the
-      // previous superstep's interval span bounds the max-host share —
-      // est. max-host rows ≈ prevIntervals × budget, scaled to this
-      // frontier. s is sized so the biggest (host, salt) window partition
-      // is ~one balanced share; uniform hosts get s = 1 (no 16× offsets-row
-      // inflation), true skew fans out. First superstep: no evidence yet →
-      // conservative 16 (tiny frontier, cost irrelevant).
-      val saltFanout: Int = steps.lastOption match {
-        case Some(prev) if prev.frontierSize > 0 && prev.intervals > 0 =>
-          val maxBudget =
-            if (cfg.rateLimits.isEmpty) 10 else cfg.rateLimits.values.map(_.n).max
-          val estMaxHost =
-            prev.intervals.toLong * maxBudget * frontierSize / prev.frontierSize
-          val balancedShare = math.max(1L, frontierSize / alignP)
-          math.max(1, math.min(16,
-            math.ceil(estMaxHost.toDouble / balancedShare).toInt))
-        case _ => 16
-      }
+      // salt fan-out (salted mode only): 1 while the frontier fits one
+      // task, else from the previous superstep's observed skew
+      val prev = steps.lastOption
+      val saltFanout = Politeness.saltFanout(cfg, frontierSize,
+        prev.fold(0L)(_.frontierSize), prev.fold(0)(_.intervals), alignP)
       val scheduled0 = Politeness.assignIntervals(frontier, cfg, saltedPoliteness, saltFanout)
       val scheduled = {
         val s = if (cfg.strictPoliteness) scheduled0
@@ -638,8 +657,9 @@ object SparkCrawler {
           // width (32 tasks materializing a 24-row superstep on the tiny
           // bench crawl). coalesce never widens, so corpus-scale supersteps
           // keep their parallelism.
-          val ckW = math.max(1, math.min(cfg.partitions, (frontierSize / 25000.0).toInt + 1))
-          Some(scala.concurrent.Future(ckDf.coalesce(ckW).localCheckpoint(true))(sideEc))
+          val ckW = math.max(1,
+            math.min(cfg.partitions, (frontierSize / Politeness.RowsPerTask).toInt + 1))
+          Some(sideJob(spark)(ckDf.coalesce(ckW).localCheckpoint(true)))
         } else None
 
       var freshCount = 0L
@@ -917,7 +937,7 @@ object SparkCrawler {
           case _ => 16.0
         }
         val rankP = math.max(1, math.min(cfg.partitions,
-          (frontierSize * fanoutEst / 25000.0).toInt + 1))
+          (frontierSize * fanoutEst / Politeness.RowsPerTask).toInt + 1))
         // INVARIANT: denseRangeRank's counts job MATERIALIZES its input plan
         // (it repartitions fresh0Obs into the bucket store and counts the
         // buckets), so pidObs below is guaranteed to have fired — if Ranks
@@ -993,12 +1013,12 @@ object SparkCrawler {
             // seen commits — the manifest's seen_base_step advances and a
             // resume reads one bucketed store instead of d small parquets
             alignSupersedes = toFold.nonEmpty
-            alignFut = scala.concurrent.Future {
+            alignFut = sideJob(spark) {
               val aligned = alignDelta(
                 (toFold :+ freshDelta).reduce(_ unionByName _), alignP)
               toRelease.foreach(_.unpersist())
               aligned
-            }(sideEc)
+            }
           } else {
             val cache = freshDelta.persist(bulkLevel)
             val leaf = org.apache.spark.sql.graftbridge.DatasetBridge.lineageCut(
@@ -1022,15 +1042,14 @@ object SparkCrawler {
           // the snapshot commit — run it concurrently, await before the next
           // superstep's probe needs the store
           if (seenTotal >= cfg.bloomMinSeen)
-            bloomFut = scala.concurrent.Future(
-              bloom.update(rank.cached.select("hash64")))(sideEc)
+            bloomFut = sideJob(spark)(bloom.update(rank.cached.select("hash64")))
           else if (seenTotal + freshCount >= cfg.bloomMinSeen) {
             // one-time catch-up over all prior deltas PLUS this superstep's
             // fresh keys (not yet appended — the alignment is in flight):
             // the filter must cover every seen key before the next probe,
             // or a duplicate would pass as fresh (no-false-negatives bound)
             val allSeen = seen.select("hash64").unionByName(rank.cached.select("hash64"))
-            bloomFut = scala.concurrent.Future(bloom.update(allSeen))(sideEc)
+            bloomFut = sideJob(spark)(bloom.update(allSeen))
           }
           // else: deferred — the early anti-joins are cheaper than segment upkeep
         }
@@ -1096,17 +1115,20 @@ object SparkCrawler {
         if (alignSupersedes) seenBaseStep = d
         alignFut = null
       }
+      // exact: the fresh set is the next frontier (none past maxDepth)
+      val nextFrontierSize = if (d < cfg.maxDepth) freshCount else 0L
       // atomic superstep commit: frontier, seen delta, crawled delta,
       // attempts delta (written concurrently by Storage.commitStep), then
-      // metrics and seq watermark — overlaps the Bloom merge when a store
-      // exists, awaited before the superstep closes (the next superstep
-      // unpersists the previous frontier this commit reads)
+      // metrics, seq watermark and the next frontier's row count — overlaps
+      // the Bloom merge when a store exists, awaited before the superstep
+      // closes (the next superstep unpersists the previous frontier this
+      // commit reads)
       val commitFut = storage.map { s =>
-        val fr = frontier; val sd = seenCommit
+        val fr = frontier; val frRows = nextFrontierSize; val sd = seenCommit
         val od = orderParts.lastOption.getOrElse(emptyOrder(spark))
         val at = attemptParts.lastOption.getOrElse(emptyAttempts(spark))
         val mSnap = m.toMap; val sb = seqBase; val sbase = seenBaseStep
-        scala.concurrent.Future(s.commitStep(d, fr, sd, od, at, mSnap, sb, sbase))(sideEc)
+        sideJob(spark)(s.commitStep(d, fr, frRows, sd, od, at, mSnap, sb, sbase))
       }
       commitFut.foreach(f =>
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
@@ -1126,7 +1148,7 @@ object SparkCrawler {
           (consumedStore ne protectedStore))
         consumedStore.unpersist()
 
-      frontierSize = if (d < cfg.maxDepth) freshCount else 0L
+      frontierSize = nextFrontierSize
       d += 1
       } // end full superstep
     }

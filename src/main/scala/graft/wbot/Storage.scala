@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types.StructType
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import scala.concurrent.{Await, Future}
+import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
 /**
@@ -18,7 +18,8 @@ import scala.concurrent.duration.Duration
  * `writeTo(catalog.table).append()` on a bucketed Iceberg table.
  *
  * Layout:
- *   <dir>/manifest.properties      — committed step, seqBase, metrics (atomic rename)
+ *   <dir>/manifest.properties      — committed step, seqBase, metrics,
+ *                                    frontier row count (atomic rename)
  *   <dir>/step=<d>/{frontier,seen_delta,crawled,attempts}/  — parquet
  */
 object Storage {
@@ -42,8 +43,11 @@ object Storage {
     * exchange over it). Otherwise `df` is a plain parquet read. */
   final case class LoadedDelta(df: DataFrame, aligned: Boolean, rows: Long)
 
+  /** A committed manifest. `frontierRows` is the committed frontier's row
+    * count (`frontier_rows`); None for a manifest written before the key
+    * existed, which the resume then counts. */
   final case class Snapshot(lastStep: Int, seqBase: Long, metrics: Map[String, Long],
-      seenBaseStep: Int)
+      seenBaseStep: Int, frontierRows: Option[Long])
 
   /** Declared read schemas, one per committed table — exactly what the
     * engine's commits write (StorageSpec pins each against the schema Spark
@@ -115,9 +119,11 @@ final class Storage(dir: String) {
     * The table writes are independent directories, so they run as concurrent
     * Spark jobs on the engine's side-job pool; all of them are awaited, and
     * the first failure (in table order) is rethrown before any manifest is
-    * written. `seenBase` = the step whose seen delta supersedes all earlier
+    * written. `frontierRows` = `frontier`'s exact row count, which the
+    * caller knows (the manifest records it, so a resume needs no count
+    * job). `seenBase` = the step whose seen delta supersedes all earlier
     * ones (-1 = none; maintained by the crawl loop across fold commits). */
-  def commitStep(d: Int, frontier: DataFrame, seenDelta: Option[SeenCommit],
+  def commitStep(d: Int, frontier: DataFrame, frontierRows: Long, seenDelta: Option[SeenCommit],
       crawledDelta: DataFrame, attemptsDelta: DataFrame,
       metrics: Map[String, Long], seqBase: Long, seenBase: Int = -1): Unit = {
     // a step past the manifest's is uncommitted: clear what a torn earlier
@@ -130,13 +136,14 @@ final class Storage(dir: String) {
       () => seenDelta.foreach(writeSeenDelta(d, _)),
       () => writeAtomic(crawledDelta, s"${stepDir(d)}/crawled"),
       () => writeAtomic(attemptsDelta, s"${stepDir(d)}/attempts"))
-    writes.map(w => Future(w())(SparkCrawler.sideEc))
+    writes.map(w => SparkCrawler.sideJob(frontier.sparkSession)(w()))
       .map(f => Await.ready(f, Duration.Inf).value.get)
       .foreach(_.get)
     val props = new java.util.Properties()
     props.setProperty("committed_step", d.toString)
     props.setProperty("seq_base", seqBase.toString)
     props.setProperty("seen_base_step", seenBase.toString)
+    props.setProperty("frontier_rows", frontierRows.toString)
     metrics.foreach { case (k, v) => props.setProperty(s"metric.$k", v.toString) }
     val tmp = Paths.get(s"$dir/manifest.properties.tmp")
     val out = Files.newOutputStream(tmp)
@@ -157,7 +164,8 @@ final class Storage(dir: String) {
       .map(k => k.stripPrefix("metric.") -> props.getProperty(k).toLong).toMap
     Some(Snapshot(props.getProperty("committed_step").toInt,
       props.getProperty("seq_base").toLong, metrics,
-      Option(props.getProperty("seen_base_step")).map(_.toInt).getOrElse(-1)))
+      Option(props.getProperty("seen_base_step")).map(_.toInt).getOrElse(-1),
+      Option(props.getProperty("frontier_rows")).map(_.toLong)))
   }
 
   /** Frontier snapshot, with forward migration: snapshots written before the

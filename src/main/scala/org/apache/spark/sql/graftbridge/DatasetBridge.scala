@@ -164,6 +164,16 @@ object DatasetBridge {
         head.sparkSession, stats, None))
   }
 
+  /** A copy of the calling thread's Spark local properties (job group,
+    * description, scheduler pool, job tags); `SparkContext` keeps the
+    * accessors `private[spark]`. */
+  def localProperties(sc: org.apache.spark.SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  /** Replace the calling thread's Spark local properties with `props`. */
+  def setLocalProperties(sc: org.apache.spark.SparkContext, props: java.util.Properties): Unit =
+    sc.setLocalProperties(props)
+
   /** debug: physical output partitioning + leaf partitioning of a plan */
   def debugPartitioning(df: DataFrame): String = {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]

@@ -73,24 +73,17 @@ class CrawlerParitySpec extends SparkSuite {
     assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4))
   }
 
-  /** The call sites of every job `body` starts: each job's `callSite.short`
-    * (when set) and the names of its stages, which Spark derives from the
-    * call site that created them (`<action> at <File>.scala:<line>`). */
-  private def jobCallSites(body: => Unit): Vector[String] = {
+  /** The start event of every job `body` starts, in start order. */
+  private def jobStarts(body: => Unit): Vector[SparkListenerJobStart] = {
     val sc = spark.sparkContext
     val marker = s"call-site-marker-${System.nanoTime()}"
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
     @volatile var markerSeen = false
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(p => p.getProperty("spark.job.description") == marker))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           markerSeen = true
-        else {
-          props.flatMap(p => Option(p.getProperty("callSite.short"))).foreach(sites.add)
-          e.stageInfos.foreach(si => sites.add(si.name))
-        }
-      }
+        else starts.add(e)
     }
     sc.addSparkListener(listener)
     try {
@@ -104,7 +97,68 @@ class CrawlerParitySpec extends SparkSuite {
       assert(markerSeen, "listener never saw the marker job")
     } finally sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
-    sites.asScala.toVector
+    starts.asScala.toVector
+  }
+
+  /** The call sites of every job `body` starts: each job's `callSite.short`
+    * (when set) and the names of its stages, which Spark derives from the
+    * call site that created them (`<action> at <File>.scala:<line>`). */
+  private def jobCallSites(body: => Unit): Vector[String] =
+    jobStarts(body).flatMap { e =>
+      Option(e.properties).flatMap(p => Option(p.getProperty("callSite.short"))).toVector ++
+        e.stageInfos.map(_.name)
+    }
+
+  test("frontier size is driver state: zero supersteps start no Spark job") {
+    // seeds (the driver's list) and a committed manifest (`frontier_rows`)
+    // both give the frontier's row count without a count job
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(tiny), 4)
+    pagesPrep.count() // the prepared cache is this test's input, built up front
+    val dir = java.nio.file.Files.createTempDirectory("wbot_zero_steps").toString
+    val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir))
+    val seedJobs = jobCallSites {
+      SparkCrawler.runPrepared(spark, pagesPrep, tinySeeds, cfg.copy(maxSupersteps = 0))
+    }
+    assert(seedJobs.isEmpty, s"runPrepared started jobs before its first superstep: $seedJobs")
+    SparkCrawler.runPrepared(spark, pagesPrep, tinySeeds, cfg.copy(maxSupersteps = 2))
+    assert(new Storage(dir).readManifest().get.frontierRows.nonEmpty)
+    val resumeJobs = jobCallSites {
+      SparkCrawler.resumePrepared(spark, pagesPrep, cfg.copy(maxSupersteps = 0))
+    }
+    assert(resumeJobs.isEmpty,
+      s"resumePrepared started jobs before its first superstep: $resumeJobs")
+    assertRunsEqual(Oracle.run(Fixtures.oraclePages(tiny), tinySeeds, cfg),
+      SparkCrawler.resumePrepared(spark, pagesPrep, cfg))
+    pagesPrep.unpersist()
+  }
+
+  test("every job of a checkpointed crawl carries the caller's job group") {
+    // side jobs (order checkpoint, seen alignment, commit and its table
+    // writes) run on pooled threads; a pooled thread must not keep the job
+    // group of the crawl that created it
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(tiny), 4)
+    val sc = spark.sparkContext
+    def groupsOfCrawl(group: String): Vector[String] = {
+      val dir = java.nio.file.Files.createTempDirectory("wbot_job_group").toString
+      // a tiny smallSeenBound makes every expansion's seen delta an aligned
+      // side job too
+      val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir),
+        smallSeenBound = 1L)
+      sc.setJobGroup(group, s"crawl in $group", interruptOnCancel = false)
+      try jobStarts {
+        SparkCrawler.runPrepared(spark, pagesPrep, tinySeeds, cfg.copy(maxSupersteps = 2))
+        SparkCrawler.resumePrepared(spark, pagesPrep, cfg).order.count()
+      }.map(e => Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+      finally sc.clearJobGroup()
+    }
+    // the first crawl leaves pooled side-job threads behind for the second
+    groupsOfCrawl("wbot-crawl-a")
+    val groups = groupsOfCrawl("wbot-crawl-b")
+    assert(groups.nonEmpty)
+    assert(groups.forall(_ == "wbot-crawl-b"),
+      s"${groups.count(_ != "wbot-crawl-b")} of ${groups.size} jobs in another group: " +
+        groups.distinct.mkString(", "))
+    pagesPrep.unpersist()
   }
 
   test("default config builds no Bloom store: no job starts from BloomSeen") {

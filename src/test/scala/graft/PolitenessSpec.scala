@@ -51,4 +51,35 @@ class PolitenessSpec extends SparkSuite {
       .where(col("count") > 3).count()
     assert(over == 0, "salted schedule exceeded budget")
   }
+
+  test("salt fan-out: 1 up to one task's rows, observed skew above, 16 without evidence") {
+    val cfg = CrawlConfig()
+    val bound = Politeness.RowsPerTask
+    // the whole frontier fits one task: no salting, whatever the evidence
+    assert(Politeness.saltFanout(cfg, 20L, 0L, 0, 32) == 1)
+    assert(Politeness.saltFanout(cfg, bound, 0L, 0, 32) == 1)
+    assert(Politeness.saltFanout(cfg, bound, bound / 2, 500, 32) == 1)
+    // above the bound with no previous superstep: the conservative 16
+    assert(Politeness.saltFanout(cfg, bound + 1, 0L, 0, 32) == 16)
+    // above the bound, skewed: 500 intervals × budget 10 over 50k rows →
+    // ≈ 10k rows of the biggest host at 100k rows vs a 3,125-row share
+    assert(Politeness.saltFanout(cfg, 100000L, 50000L, 500, 32) == 4)
+    // above the bound, uniform hosts: one interval → no fan-out
+    assert(Politeness.saltFanout(cfg, 100000L, 50000L, 1, 32) == 1)
+
+    // the salted plan at the fan-out the rule picks for a skewed frontier
+    // above the bound: same per-(host, interval) loads as the exact rank
+    val cfg3 = CrawlConfig(rateLimits = Map("*" -> Budget(3, 1000L)))
+    val n = bound + 5000L
+    val rows = (0L until n).map(i => (if (i % 5 == 0) s"h${i % 50}.com" else "big.com", i % 7, i))
+    val fanout = Politeness.saltFanout(cfg3, n, n, (n * 4 / 5 / 3).toInt, 32)
+    assert(fanout > 1)
+    def loads(salted: Boolean) =
+      Politeness.assignIntervals(frontier(rows), cfg3, salted, fanout)
+        .groupBy("root", "interval").count().collect()
+        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val salted = loads(salted = true)
+    assert(salted.values.forall(_ <= 3L), "salted schedule exceeded budget")
+    assert(salted == loads(salted = false))
+  }
 }

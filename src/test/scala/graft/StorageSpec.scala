@@ -66,7 +66,7 @@ class StorageSpec extends SparkSuite {
         if (name != failing) tables(name)
         else tables(name).where(expr("raise_error('injected commit failure') IS NULL"))
       val e = intercept[Exception] {
-        st.commitStep(1, table("frontier"),
+        st.commitStep(1, table("frontier"), 1L,
           Some(Storage.SeenCommit(table("seen_delta"), None, 1L, supersedesPrior = false)),
           table("crawled"), table("attempts"), snap.metrics + ("crawled_link" -> 1L),
           snap.seqBase + 1L, snap.seenBaseStep)
@@ -82,6 +82,50 @@ class StorageSpec extends SparkSuite {
     assertMatchesOracle(SparkCrawler.resumePrepared(spark, pagesPrep, cfg), cfg)
     val leftovers = new File(s"$dir/step=1").list().filter(_.endsWith(".tmp"))
     assert(leftovers.isEmpty, leftovers.mkString(","))
+    pagesPrep.unpersist()
+  }
+
+  private def manifestProps(dir: String): java.util.Properties = {
+    val props = new java.util.Properties()
+    val in = Files.newInputStream(Paths.get(s"$dir/manifest.properties"))
+    try props.load(in) finally in.close()
+    props
+  }
+
+  test("manifest records the committed frontier's row count; a manifest without it resumes") {
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    val dir = Files.createTempDirectory("wbot_ckpt_rows").toString
+    val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir))
+    val st = new Storage(dir)
+    // one superstep per call: every step's manifest is checked, the
+    // terminal one (no next frontier) included
+    SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg.copy(maxSupersteps = 1))
+    var steps = 0
+    var snap = st.readManifest().get
+    while ({
+      val rows = st.readFrontier(spark, snap.lastStep).count()
+      assert(manifestProps(dir).getProperty("frontier_rows") == rows.toString,
+        s"step ${snap.lastStep}")
+      assert(snap.frontierRows.contains(rows), s"step ${snap.lastStep}: ${snap.frontierRows}")
+      steps += 1
+      rows > 0L
+    }) {
+      SparkCrawler.resumePrepared(spark, pagesPrep, cfg.copy(maxSupersteps = 1))
+      snap = st.readManifest().get
+    }
+    assert(snap.lastStep == 3 && steps == 4, s"last step ${snap.lastStep}, $steps manifests")
+
+    // a manifest written before `frontier_rows` existed: the resume counts
+    // the frontier instead, and still reproduces the uninterrupted run
+    val dirOld = Files.createTempDirectory("wbot_ckpt_rows_old").toString
+    val cfgOld = cfg.copy(checkpointDir = Some(dirOld))
+    SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfgOld.copy(maxSupersteps = 2))
+    val props = manifestProps(dirOld)
+    assert(props.remove("frontier_rows") != null)
+    val out = Files.newOutputStream(Paths.get(s"$dirOld/manifest.properties"))
+    try props.store(out, "manifest without frontier_rows") finally out.close()
+    assert(new Storage(dirOld).readManifest().get.frontierRows.isEmpty)
+    assertMatchesOracle(SparkCrawler.resumePrepared(spark, pagesPrep, cfgOld), cfgOld)
     pagesPrep.unpersist()
   }
 
