@@ -13,6 +13,13 @@ many pairs the change won, and whether the median gap exceeds the base's
 interquartile range. A run that fails its oracle checks is reported and
 leaves its pair out. Nothing under perfbench/ is written except the build
 and work directories perfbench itself uses.
+
+With --trace 1 the runs report per-layer metrics instead; name the ones to
+summarize the same way with --layer (repeatable), e.g.
+
+    python3 bench/perfbench_ab.py --base ../parent --change . \\
+        --workload crawl_checkpointed --seeds 1,3 --trace 1 \\
+        --layer spark.jobs --layer memory.heap_growth_mb_per_op
 """
 import argparse
 import json
@@ -63,12 +70,23 @@ def main():
     ap.add_argument("--seeds", required=True, help="e.g. 501-510 or 1,2,7")
     ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--layer", action="append", default=[], metavar="METRIC",
+                    help="per-layer metric to summarize (needs --trace 1; repeatable)")
     ap.add_argument("--json", help="write every run's metrics to this file")
     a = ap.parse_args()
 
     base, change = os.path.abspath(a.base), os.path.abspath(a.change)
     with open(os.path.join(base, "BENCHMARK.json")) as fh:
-        e2e = json.load(fh)["end_to_end"]
+        bench = json.load(fh)
+    if a.layer and not a.trace:
+        ap.error("--layer needs --trace 1 (untraced runs report end-to-end metrics only)")
+    per_layer = {m["name"]: m for m in bench["per_layer"]}
+    unknown = [n for n in a.layer if n not in per_layer]
+    if unknown:
+        ap.error(f"not a per-layer metric of BENCHMARK.json: {', '.join(unknown)}")
+    # a traced run reports per-layer metrics only, so its summary is the
+    # named layers; an untraced one reports the end-to-end metrics
+    shown_specs = [per_layer[n] for n in a.layer] if a.trace else bench["end_to_end"]
     sides = {"base": base, "change": change}
     pairs, log = [], []
     for i, seed in enumerate(parse_seeds(a.seeds)):
@@ -84,7 +102,7 @@ def main():
             continue
         pairs.append((seed, got["base"], got["change"]))
         shown = " ".join(f"{e['name']} {got['base'][e['name']]:.4g} -> "
-                         f"{got['change'][e['name']]:.4g}" for e in e2e
+                         f"{got['change'][e['name']]:.4g}" for e in shown_specs
                          if e["name"] in got["base"] and e["name"] in got["change"])
         print(f"seed {seed} ({order[0]} first): {shown}", flush=True)
 
@@ -95,7 +113,7 @@ def main():
         print("no complete pair")
         return 1
     print(f"\n{a.workload}: {len(pairs)} pairs")
-    for e in e2e:
+    for e in shown_specs:
         name, lower = e["name"], e["better"] == "lower"
         if not all(name in b and name in c for _, b, c in pairs):
             continue

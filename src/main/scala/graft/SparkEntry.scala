@@ -24,8 +24,9 @@ object SparkEntry {
     * infers from the parquet footers (ts IS TIMESTAMP_NTZ there), declared so
     * no query pays a per-read footer schema-inference driver job (~1-3 tiny
     * jobs per query across the bench). Same bytes, same columns, same types;
-    * unknown table names still fall back to inference. */
-  private val tableSchemas: Map[String, String] = Map(
+    * unknown table names still fall back to inference. PlanSpec pins each
+    * against the footers. */
+  private[graft] val tableSchemas: Map[String, String] = Map(
     "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
     "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING"),

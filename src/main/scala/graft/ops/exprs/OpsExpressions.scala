@@ -306,7 +306,8 @@ object OpsExprs {
   def quantizedDot(a: Column, b: Column): Column =
     ColumnBridge.column(QuantizedDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def simhashTokenBits(tok: Column): Column =
+  /** Kept only as OpsExprSpec's intermediate per-token pin; no query uses it. */
+  private[graft] def simhashTokenBits(tok: Column): Column =
     ColumnBridge.column(SimhashTokenBits(ColumnBridge.expression(tok)))
 
   def minhashDocSigs(text: Column, width: Int, numHashes: Int): Column =
@@ -366,8 +367,11 @@ case class LshBandKeys(child: Expression, bands: Int, bitsPerBand: Int, dims: In
 }
 
 /** `simhash_token_bits(tok)` → bigint of the token's 64 md5-derived SimHash
-  * bits (see [[OpsExprEval.simhashTokenBits]]). */
-case class SimhashTokenBits(child: Expression) extends UnaryExpression {
+  * bits (see [[OpsExprEval.simhashTokenBits]]). Kept only as the
+  * intermediate OpsExprSpec pin between the per-bit md5-substring
+  * construction and [[SimhashDocHex]], which shares its bit function; no
+  * query plans it. */
+private[graft] case class SimhashTokenBits(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(

@@ -84,6 +84,11 @@ object SparkCrawler {
   }
 
 
+  /** Declared read schema of a [[writePreparedPages]] bucket — exactly what
+    * the write leaves in the footers (PrepSnapshotSpec pins it). */
+  val PreparedPagesSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL("canon STRING, hash64 BIGINT, html BINARY")
+
   /** Persist a [[preparePages]] snapshot to disk as one bucket directory per
     * partition (`__bucket=<pid>`, pid ≡ `pmod(hash(canon), P)`), rows inside
     * each bucket file sorted by canon — the pages-side analogue of the
@@ -131,7 +136,9 @@ object SparkCrawler {
     * to the in-session prep), cached at the same storage level
     * [[preparePages]] uses. No stats are declared — the pages side must never
     * broadcast, and the session-default (effectively infinite) size
-    * guarantees that. Drop-in for [[runPrepared]]/[[resumePrepared]]. */
+    * guarantees that. Every bucket is read with [[PreparedPagesSchema]], so
+    * no bucket pays a footer-inference job. Drop-in for
+    * [[runPrepared]]/[[resumePrepared]]. */
   def readPreparedPages(spark: SparkSession, dir: String): DataFrame = {
     val pf = new java.io.File(s"$dir/_prep.properties")
     require(pf.exists(), s"no prepared-pages snapshot at $dir")
@@ -141,7 +148,8 @@ object SparkCrawler {
     val p = props.getProperty("partitions").toInt
     val buckets = (0 until p).map { b =>
       val bdir = new java.io.File(s"$dir/__bucket=$b")
-      if (bdir.exists()) Some(spark.read.parquet(bdir.toString)) else None
+      if (bdir.exists()) Some(spark.read.schema(PreparedPagesSchema).parquet(bdir.toString))
+      else None
     }
     org.apache.spark.sql.graftbridge.DatasetBridge
       .bucketSourcesAligned(buckets, Seq("canon"), None, orderedBy = Seq("canon"))
@@ -598,18 +606,17 @@ object SparkCrawler {
       // (schedule-faithful); default joins the whole depth at once (the
       // interval column still records the schedule).
       //
-      // BROADCAST GUARD: AQE converts these joins to broadcast from
-      // COMPRESSED shuffle sizes, and hash-hex / url columns compress 3-4× —
-      // a "10 MB" frontier or seen shuffle decompresses into a multi-hundred-
-      // MB UnsafeHashedRelation on executors already holding the pages cache
-      // (measured: deep-run executor death in exactly that allocation). The
-      // loop tracks both row counts EXACTLY, so past a bound the join is
-      // pinned to sort-merge (spills end to end); below it broadcast remains
-      // profitable and allowed.
-      val frontierBroadcastable = frontierSize <= 200000L
+      // PINNED SORT-MERGE at every frontier size: a left join that keeps the
+      // frontier can only build its RIGHT side, so the only broadcast AQE can
+      // pick here is the pages cache itself — chosen from its COMPRESSED
+      // cached size, then built decompressed, html included, on the driver
+      // and every executor (BENCH/BASELINE.md: the whole corpus on every
+      // fetch join of a small crawl; peak heap halves once pinned). The
+      // merge join reads the hash-partitioned, canon-sorted pages side in
+      // place — no exchange, no sort — and exchanges and sorts only the
+      // frontier.
       def fetchJoin(fr: DataFrame): DataFrame =
-        (if (frontierBroadcastable) fr else fr.hint("merge"))
-          .join(pagesSide.drop("hash64"), Seq("canon"), "left")
+        fr.hint("merge").join(pagesSide.drop("hash64"), Seq("canon"), "left")
       val fetchObs = new org.apache.spark.sql.Observation(s"fetch_d${d}_s$stepsRun")
       val joined0 = (
         if (cfg.strictPoliteness && strictIntervals > 1) {

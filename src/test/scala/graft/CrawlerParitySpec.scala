@@ -75,27 +75,11 @@ class CrawlerParitySpec extends SparkSuite {
 
   /** The start event of every job `body` starts, in start order. */
   private def jobStarts(body: => Unit): Vector[SparkListenerJobStart] = {
-    val sc = spark.sparkContext
-    val marker = s"call-site-marker-${System.nanoTime()}"
     val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
+    SparkTestBase.listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          markerSeen = true
-        else starts.add(e)
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      // listener events arrive in order: once the marker job's start is
-      // seen, every job `body` started has been recorded
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(markerSeen, "listener never saw the marker job")
-    } finally sc.removeSparkListener(listener)
+        if (!SparkTestBase.isMarker(e)) starts.add(e)
+    })(body)
     import scala.jdk.CollectionConverters._
     starts.asScala.toVector
   }

@@ -35,6 +35,16 @@ class PlanSpec extends SparkSuite {
       s"small query side should broadcast:\n$plan")
   }
 
+  test("declared driver-table schemas equal the parquet footers' schemas") {
+    // sf0.01, next to the sf0.001 tables the other tests read
+    val dir = new java.io.File(sf).getParent + "/sf0.01"
+    for ((name, ddl) <- SparkEntry.tableSchemas) {
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      assert(inferred == org.apache.spark.sql.types.StructType.fromDDL(ddl),
+        s"$name: declared $ddl, footers ${inferred.toDDL}")
+    }
+  }
+
   test("whole-stage codegen spans the quality-score projection") {
     // codegen stages appear as "*(n)" in the plan string
     val plan = planOf(SparkEntry.queries("q20_quality")(spark, sf))
@@ -51,13 +61,72 @@ class PlanSpec extends SparkSuite {
     val plan = planOf(joined)
     // the cached pages relation must not be re-shuffled: no fresh
     // hashpartitioning exchange ABOVE the InMemoryRelation (the exchange
-    // inside the cached plan is the one-time preparePages layout; a
-    // BroadcastExchange of a tiny side is fine — that's AQE doing its job)
+    // inside the cached plan is the one-time preparePages layout). This
+    // unhinted join may still broadcast: a left join that keeps the
+    // frontier can only build its right side, so the broadcast AQE picks is
+    // the PAGES side — which is why the engine pins sort-merge (see the
+    // crawl-wide fetch-join plan test below)
     val above = plan.substring(0, plan.indexOf("InMemoryRelation").max(0))
     assert(plan.contains("InMemoryTableScan"), s"pages cache missing:\n$plan")
     assert(!above.contains("Exchange hashpartitioning"),
       s"pages side re-shuffled above the cache:\n$plan")
     pagesPrep.unpersist()
+  }
+
+  test("fetch join: every superstep sort-merges over the pages side in place; it never broadcasts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    // two seeds over 20 hosts × 50 pages at P = 4: d0's frontier reads the
+    // pruned bucket scan, later frontiers pass 4·P rows and read the whole
+    // cache (the corpus is far below the 10 MB broadcast threshold)
+    val spec = Fixtures.SiteSpec(nHosts = 20, pagesPerHost = 50)
+    val cfg = graft.wbot.Schemas.CrawlConfig(maxDepth = 3, partitions = 4)
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    pagesPrep.count()
+    // every SQL execution's latest plan; AQE posts each re-plan, the last
+    // one being the final plan
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]()
+    val run = try SparkTestBase.listening(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.putIfAbsent(s.executionId, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.put(u.executionId, u.sparkPlanInfo)
+        case _ =>
+      }
+    })(SparkCrawler.runPrepared(spark, pagesPrep, Fixtures.seeds(spec), cfg))
+    finally { pagesPrep.unpersist(); () }
+    assert(run.steps.map(_.frontierSize).max >= 16L, "no frontier reached 4·P rows")
+
+    // the pages side's leaf: the cache scan or its pruned bucket scan, the
+    // only leaves carrying html. An InMemoryTableScan's info holds the
+    // cached plan as its child; a walk stops there.
+    def pagesLeaf(p: SparkPlanInfo) = p.simpleString.contains("html#") &&
+      (p.nodeName == "InMemoryTableScan" || p.nodeName == "Scan ExistingRDD")
+    def pathsToPages(p: SparkPlanInfo): Seq[Seq[SparkPlanInfo]] =
+      if (pagesLeaf(p)) Seq(Seq(p))
+      else if (p.nodeName == "InMemoryTableScan") Nil
+      else p.children.toSeq.flatMap(c => pathsToPages(c).map(p +: _))
+    import scala.jdk.CollectionConverters._
+    val finals = plans.values.asScala.toSeq.filter(_.simpleString.contains("isFinalPlan=true"))
+    // per path, the join nearest the pages leaf is the fetch join (the one
+    // path without a join is `pagesPrep.rdd`, read for the partition count)
+    val fetches = for {
+      plan <- finals; path <- pathsToPages(plan)
+      j = path.lastIndexWhere(_.nodeName.contains("Join")) if j >= 0
+    } yield (path(j), path.drop(j + 1))
+    assert(fetches.size >= run.steps.size, s"${fetches.size} fetch joins in ${run.steps.size} supersteps")
+    val leaves = fetches.map(_._2.last.nodeName).toSet
+    assert(leaves == Set("InMemoryTableScan", "Scan ExistingRDD"),
+      s"expected pruned and whole-cache fetch joins, got $leaves")
+    for ((join, pagesSide) <- fetches) {
+      val shown = (join +: pagesSide).map(_.simpleString).mkString("\n")
+      assert(join.nodeName == "SortMergeJoin" && join.simpleString.contains("LeftOuter"),
+        s"fetch join is not a sort-merge left join:\n$shown")
+      val moved = pagesSide.filter(n => Set("BroadcastExchange", "BroadcastQueryStage",
+        "Exchange", "ShuffleQueryStage", "Sort").contains(n.nodeName))
+      assert(moved.isEmpty, s"pages side exchanged, sorted or broadcast:\n$shown")
+    }
   }
 
   test("preparePages: duplicate canons resolve to a deterministic winner (latest snapshot)") {

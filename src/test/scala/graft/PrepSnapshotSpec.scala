@@ -60,6 +60,14 @@ class PrepSnapshotSpec extends SparkSuite {
       val scanPlan = planOf(stored)
       assert(!scanPlan.toLowerCase.contains("canonicalize"),
         s"stored prep must not re-canonicalize the corpus:\n$scanPlan")
+
+      // 5. the declared read schema is what every bucket's footers hold
+      val buckets = new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
+      assert(buckets.nonEmpty, s"no bucket directory under $dir")
+      for (b <- buckets) {
+        val footers = spark.read.parquet(b.toString).schema
+        assert(footers == SparkCrawler.PreparedPagesSchema, s"$b: ${footers.toDDL}")
+      }
     } finally {
       stored.unpersist()
       prep.unpersist()

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +15,41 @@ object SparkTestBase {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with `listener` registered and returns once `listener`
+    * has received every event `body` posted: listeners on the shared queue
+    * get events in post order, so a marker job started after `body` is seen
+    * only after all of them. `listener` also sees the marker job's start
+    * ([[isMarker]]). */
+  def listening[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    val marker = s"$MarkerPrefix${System.nanoTime()}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val markerListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(markerListener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+      out
+    } finally {
+      sc.removeSparkListener(markerListener)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val MarkerPrefix = "listener-marker-"
+
+  def isMarker(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .exists(_.startsWith(MarkerPrefix))
 
   def pagesDf(spec: Fixtures.SiteSpec): DataFrame = {
     val s = spark
