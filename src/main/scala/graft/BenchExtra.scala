@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
   * (guide §1.4): `PlanDump` writes `.explain("formatted")` for every declared
   * query to a directory (the plans/r06 evidence files); `BenchExtra` times a
   * named subset of queries in isolation with the noop sink, N repeats each,
-  * with labelled jobs. Neither is used by the driver. */
+  * with labelled jobs and, per repeat, the classes Janino compiled and their
+  * compile time. `BenchExtra crawl_rate` times Bench's crawl-rate leaf the
+  * same way (only `runPrepared`, over a built pages cache). Neither is part
+  * of the frozen harness. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -91,26 +94,49 @@ object BenchExtra {
           f"[stage] ${s.stageInfo.stageId}%3d tasks=${s.stageInfo.numTasks}%3d ${s.stageInfo.name.take(90)}")
       }
     })
-    val out = SparkEntry.queries.toSeq.sortBy(_._1)
+    // Bench's crawl-rate leaf, only when named: its 100k-page cache is built
+    // before the first repeat, and a repeat times `runPrepared` alone
+    val crawlRate: Option[() => Unit] = if (!only.contains("crawl_rate")) None else {
+      val spec = graft.wbot.Fixtures.SiteSpec(nHosts = 100, pagesPerHost = 1000,
+        fanMin = 12, fanRand = 4)
+      val cfg = graft.wbot.Schemas.CrawlConfig(maxDepth = 4, partitions = cpus.toInt,
+        recordStreams = false, bloomMinSeen = 500000L)
+      val prep = graft.wbot.SparkCrawler.preparePages(
+        graft.wbot.Fixtures.pagesDf(spark, spec), cpus.toInt)
+      prep.count()
+      Some(() => { graft.wbot.SparkCrawler.runPrepared(spark, prep,
+        graft.wbot.Fixtures.seedsAll(spec), cfg, saltedPoliteness = true); () })
+    }
+    val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
-      .map { case (name, fn) =>
-        val ts = (1 to repeats).map { r =>
-          spark.sparkContext.setJobDescription(s"$name rep$r")
-          jobs.set(0); stages.set(0); tasks.set(0)
-          val t0 = System.nanoTime()
-          force(fn(spark, sfDir))
-          val dt = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(50) // let listener events drain
-          (dt, jobs.get, stages.get, tasks.get)
-        }
-        spark.sparkContext.setJobDescription(null)
-        name -> ts
+      .map { case (n, fn) => n -> (() => force(fn(spark, sfDir))) } ++
+      crawlRate.map("crawl_rate" -> _)
+    // JVM-wide, driver and tasks alike (local mode): classes compiled, and
+    // their compile time in ns
+    def compiled = (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+    val out = named.map { case (name, body) =>
+      val ts = (1 to repeats).map { r =>
+        spark.sparkContext.setJobDescription(s"$name rep$r")
+        jobs.set(0); stages.set(0); tasks.set(0)
+        val (c0, ns0) = compiled
+        val t0 = System.nanoTime()
+        body()
+        val dt = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(50) // let listener events drain
+        val (c1, ns1) = compiled
+        (dt, jobs.get, stages.get, tasks.get, c1 - c0, (ns1 - ns0) / 1e6)
       }
+      spark.sparkContext.setJobDescription(null)
+      name -> ts
+    }
     out.foreach { case (n, ts) =>
       val t = ts.map(_._1)
       println(f"$n%-24s min=${t.min}%.3f med=${t.sorted.apply(t.size / 2)}%.3f " +
         f"jobs=${ts.last._2} stages=${ts.last._3} tasks=${ts.last._4} " +
-        f"all=${t.map(x => f"$x%.3f").mkString(",")}")
+        f"all=${t.map(x => f"$x%.3f").mkString(",")} " +
+        f"classes=${ts.map(_._5).mkString(",")} " +
+        f"compile_ms=${ts.map(x => f"${x._6}%.0f").mkString(",")}")
     }
     spark.stop()
   }

@@ -45,7 +45,8 @@ object CrawlDemo {
     println("=== supersteps ===")
     run.steps.foreach(s => println(
       f"  depth=${s.depth} frontier=${s.frontierSize} fetched=${s.fetched} failed=${s.failed} " +
-      f"cand=${s.candidates} fresh=${s.fresh} intervals=${s.intervals} wall=${s.wallMs}ms"))
+      f"cand=${s.candidates} fresh=${s.fresh} intervals=${s.intervals} wall=${s.wallMs}ms " +
+      f"codegen=${s.generatedCode}"))
     spark.stop()
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import scala.collection.mutable
 import Schemas._
 
@@ -30,8 +31,11 @@ import Schemas._
  */
 object SparkCrawler {
 
+  /** One superstep's counts and wall time; `generatedCode` records its
+    * execution regime (false: run interpreted, see [[generatedCode]]). */
   final case class StepStat(depth: Int, frontierSize: Long, fetched: Long, failed: Long,
-      candidates: Long, passedFilters: Long, fresh: Long, intervals: Int, wallMs: Long)
+      candidates: Long, passedFilters: Long, fresh: Long, intervals: Int, wallMs: Long,
+      generatedCode: Boolean = true)
 
   final case class CrawlRun(
       order: DataFrame, // seq,url,canon,hash,depth,status,superstep,interval,ua — sort by seq = reference order
@@ -366,6 +370,25 @@ object SparkCrawler {
       parted, Seq("canon"), p, Some((n, math.max(1L, n * seenRowBytes))))
   }
 
+  /** Whether a superstep runs with Spark's generated code. It runs
+    * interpreted when everything it reads fits one task: the pages cache,
+    * the frontier and, when it expands, the expected candidates — at most
+    * `bound` rows together ([[interpretedRowsBound]]). Below that, Janino
+    * time for the ~100 classes of a small crawl's plans, which Spark's
+    * codegen cache cannot keep from one run to the next
+    * (`DatasetBridge.withoutGeneratedCode`), is a large share of each
+    * superstep, and interpretation costs little on so few rows. A pages
+    * cache that is not built yet (`pagesRows` None) counts as large. */
+  private[graft] def generatedCode(pagesRows: Option[Long], frontierSize: Long,
+      expectedCandidates: Long, bound: Long): Boolean =
+    pagesRows.forall(_ + frontierSize + expectedCandidates > bound)
+
+  /** The row bound of [[generatedCode]]: [[Politeness.RowsPerTask]]. Tests
+    * set it per crawl (`withValue(0L)`) to run small crawls with generated
+    * code. */
+  private[graft] val interpretedRowsBound =
+    new scala.util.DynamicVariable[Long](Politeness.RowsPerTask)
+
   private def crawlLoop(spark: SparkSession, pagesPrep: DataFrame, cfg: CrawlConfig,
       saltedPoliteness: Boolean, st0: State): CrawlRun = {
     import spark.implicits._
@@ -444,8 +467,12 @@ object SparkCrawler {
 
     // pages-cache bucket count: the fetch join's pruning granularity (equals
     // cfg.partitions when the prep came from this config; derived from the
-    // actual layout so externally-prepared snapshots are safe)
-    val pagesP = pagesPrep.rdd.getNumPartitions
+    // actual layout so externally-prepared snapshots are safe). The cached
+    // plan declares it, so no job reads it; only a pages side that is not a
+    // hash-partitioned cache pays `.rdd`, which under AQE runs its shuffle.
+    val pagesP = DatasetBridge.cacheFacts(pagesPrep).hashPartitions
+      .getOrElse(pagesPrep.rdd.getNumPartitions)
+    val codegenBound = interpretedRowsBound.value
     // runPrepared's layout contract, machine-checked on a sampled prefix the
     // first time pruning would fire (lazy: one tiny job per crawl, and only
     // when pruning matters): every sampled row must sit in partition
@@ -492,6 +519,19 @@ object SparkCrawler {
     while (d <= cfg.maxDepth && frontierSize > 0 && stepsRun < cfg.maxSupersteps) {
       stepsRun += 1
       val t0 = System.nanoTime()
+      // expected candidates per frontier row: the previous superstep's
+      // observed fan-out, default 16
+      val fanoutEst = steps.lastOption match {
+        case Some(p) if p.frontierSize > 0 && p.candidates > 0 =>
+          math.max(1.0, p.candidates.toDouble / p.frontierSize)
+        case _ => 16.0
+      }
+      // execution regime, from sizes the driver holds: a superstep whose
+      // rows fit one task runs without generated code (the whole superstep,
+      // side jobs included — each is awaited inside it)
+      val withCodegen = generatedCode(DatasetBridge.cacheFacts(pagesPrep).rows, frontierSize,
+        if (d < cfg.maxDepth) (frontierSize * fanoutEst).toLong else 0L, codegenBound)
+      def superstep(): Unit = {
 
       // FAST TERMINAL SUPERSTEP: no expansion, no recorded streams, no
       // strict drains — nothing downstream consumes the join payload, so the
@@ -528,7 +568,7 @@ object SparkCrawler {
             m.toMap, seqBase, seenBaseStep)
         }
         steps += StepStat(d, frontierSize, fetched, frontierSize - fetched, 0L, 0L, 0L, 0,
-          (System.nanoTime() - t0) / 1000000L)
+          (System.nanoTime() - t0) / 1000000L, withCodegen)
         frontierSize = 0L
         d += 1
       } else {
@@ -938,11 +978,6 @@ object SparkCrawler {
         // the round-4 d0–d2 floor's biggest fixed term. Only a balance
         // knob: denseRangeRank's offsets are exact at any width, and an
         // underestimate merely means fuller (spill-safe) buckets.
-        val fanoutEst = steps.lastOption match {
-          case Some(p) if p.frontierSize > 0 && p.candidates > 0 =>
-            math.max(1.0, p.candidates.toDouble / p.frontierSize)
-          case _ => 16.0
-        }
         val rankP = math.max(1, math.min(cfg.partitions,
           (frontierSize * fanoutEst / Politeness.RowsPerTask).toInt + 1))
         // INVARIANT: denseRangeRank's counts job MATERIALIZES its input plan
@@ -1143,7 +1178,7 @@ object SparkCrawler {
 
       val wallMs = (System.nanoTime() - t0) / 1000000L
       steps += StepStat(d, frontierSize, fetched, failed, candTotal, passedCount, freshCount,
-        nIntervals, wallMs)
+        nIntervals, wallMs, withCodegen)
       if (cacheScheduled) scheduled.unpersist()
       if (cfg.strictPoliteness) joined.unpersist()
       // every consumer of the PREVIOUS superstep's bucket store (this
@@ -1158,6 +1193,8 @@ object SparkCrawler {
       frontierSize = nextFrontierSize
       d += 1
       } // end full superstep
+      } // superstep()
+      if (withCodegen) superstep() else DatasetBridge.withoutGeneratedCode(spark)(superstep())
     }
 
     val order = orderParts.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark))

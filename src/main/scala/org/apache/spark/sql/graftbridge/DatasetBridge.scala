@@ -164,6 +164,94 @@ object DatasetBridge {
         head.sparkSession, stats, None))
   }
 
+  /** What the cache entry of a persisted DataFrame already knows, read with no
+    * job: `rows` once every partition of the cache is built (None before
+    * that, or when `df` is not itself a cached plan), and `hashPartitions`,
+    * the width of the `HashPartitioning` its cached plan declares (None when
+    * it declares none). The width is the plan's claim: a caller that relies
+    * on the rows' placement checks it, as the crawl's pages layout check
+    * does. */
+  final case class CacheFacts(rows: Option[Long], hashPartitions: Option[Int])
+
+  def cacheFacts(df: DataFrame): CacheFacts = {
+    val cdf = df.asInstanceOf[classic.Dataset[Row]]
+    cdf.sparkSession.sharedState.cacheManager.lookupCachedData(cdf)
+      .map(_.cachedRepresentation) match {
+        case Some(r) =>
+          val b = r.cacheBuilder
+          val rows =
+            if (b.isCachedColumnBuffersLoaded) Some(b.rowCountStats.value.longValue) else None
+          // an adaptive cached plan reports its partitioning once final
+          // (what InMemoryTableScanExec reads); before that, the plan it
+          // starts from declares it
+          val plan = r.cachedPlan match {
+            case a: execution.adaptive.AdaptiveSparkPlanExec =>
+              if (a.isFinalPlan) a.executedPlan else a.inputPlan
+            case p => p
+          }
+          val width = plan.outputPartitioning match {
+            case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+              Some(h.numPartitions)
+            case _ => None
+          }
+          CacheFacts(rows, width)
+        case None => CacheFacts(None, None)
+      }
+  }
+
+  /** Runs `body` with the session's generated code off: whole-stage codegen
+    * disabled (`spark.sql.codegen.wholeStage=false`) and every
+    * expression-level projection, predicate and ordering interpreted
+    * (`spark.sql.codegen.factoryMode=NO_CODEGEN`, an internal conf — hence
+    * here). The physical operators stay the same; only how they execute
+    * changes. For small inputs this skips Janino compilation that costs more
+    * than the rows it would speed up: Spark 4.1's codegen cache is static,
+    * 100 entries, and keyed by (class loader, code), so in local mode the
+    * driver's and the tasks' copies of a small crawl's ~100 classes evict
+    * each other and are recompiled by every run.
+    *
+    * The confs are session-wide, so nested or concurrent calls on one
+    * session share one regime: the first entry saves the caller's values
+    * (set or unset) and the last exit restores them, also when `body`
+    * throws. Other queries of the session that run meanwhile run
+    * interpreted too; results are the same either way. */
+  def withoutGeneratedCode[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    Interpreted.enter(conf)
+    try body finally Interpreted.exit(conf)
+  }
+
+  private object Interpreted {
+    private val Keys = Seq(
+      org.apache.spark.sql.internal.SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+      org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
+    /** Per session conf: (entries, the caller's values of [[Keys]]). */
+    private val active =
+      new java.util.IdentityHashMap[org.apache.spark.sql.internal.SQLConf, (Int, Seq[Option[String]])]
+
+    def enter(conf: org.apache.spark.sql.internal.SQLConf): Unit = synchronized {
+      val (n, saved) = Option(active.get(conf)).getOrElse {
+        val caller = Keys.map { case (k, _) =>
+          if (conf.contains(k)) Some(conf.getConfString(k)) else None }
+        Keys.foreach { case (k, v) => conf.setConfString(k, v) }
+        (0, caller)
+      }
+      active.put(conf, (n + 1, saved))
+    }
+
+    def exit(conf: org.apache.spark.sql.internal.SQLConf): Unit = synchronized {
+      val (n, saved) = active.get(conf)
+      if (n > 1) active.put(conf, (n - 1, saved))
+      else {
+        active.remove(conf)
+        Keys.map(_._1).zip(saved).foreach {
+          case (k, Some(v)) => conf.setConfString(k, v)
+          case (k, None) => conf.unsetConf(k)
+        }
+      }
+    }
+  }
+
   /** A copy of the calling thread's Spark local properties (job group,
     * description, scheduler pool, job tags); `SparkContext` keeps the
     * accessors `private[spark]`. */

@@ -1,0 +1,147 @@
+package graft
+
+import graft.wbot._
+import graft.wbot.Schemas._
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
+
+/** The small checkpointed crawl both execution regimes are tested on: the
+  * tiny web at maxDepth 3, an interrupted one-superstep leg and its resume.
+  * Every seen delta is aligned (`smallSeenBound = 1`), so the fold commit,
+  * the alignment side jobs and the bucketed resume run too. */
+object CheckpointedTiny {
+  val spec: Fixtures.SiteSpec = Fixtures.tiny
+  val seeds: Seq[String] = Fixtures.seeds(spec)
+
+  def cfg(dir: String): CrawlConfig = CrawlConfig(maxDepth = 3, partitions = 4,
+    checkpointDir = Some(dir), smallSeenBound = 1L)
+
+  /** (the interrupted leg, the resumed run) at row bound `bound`. */
+  def crawl(spark: org.apache.spark.sql.SparkSession, pagesPrep: DataFrame,
+      bound: Long = Politeness.RowsPerTask): (SparkCrawler.CrawlRun, SparkCrawler.CrawlRun) = {
+    val dir = java.nio.file.Files.createTempDirectory("wbot_regime").toString
+    SparkCrawler.interpretedRowsBound.withValue(bound) {
+      val leg = SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg(dir).copy(maxSupersteps = 1))
+      (leg, SparkCrawler.resumePrepared(spark, pagesPrep, cfg(dir)))
+    }
+  }
+}
+
+/** Which supersteps run with Spark's generated code, and that running
+  * without it leaves the session's codegen settings as the caller had them. */
+class CodegenRegimeSpec extends SparkSuite {
+
+  private val WholeStage = "spark.sql.codegen.wholeStage"
+  private val FactoryMode = "spark.sql.codegen.factoryMode"
+
+  private def prepared(): DataFrame = {
+    val p = SparkCrawler.preparePages(SparkTestBase.pagesDf(CheckpointedTiny.spec), 4)
+    p.count() // built up front: the gate reads the cache's row count
+    p
+  }
+
+  /** `body`'s result, the classes Janino compiled while it ran, and the
+    * final plan of every SQL execution it started. */
+  private def compiling[T](body: => T): (T, Long, Seq[SparkPlanInfo]) = {
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = SparkTestBase.listening(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.putIfAbsent(s.executionId, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.put(u.executionId, u.sparkPlanInfo)
+        case _ =>
+      }
+    })(body)
+    val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    import scala.jdk.CollectionConverters._
+    (out, classes, plans.values.asScala.toSeq.filter(_.simpleString.contains("isFinalPlan=true")))
+  }
+
+  /** Whole-stage codegen stages (`*(n)` in a plan string) of a plan, not
+    * counting the plans inside the caches it scans. */
+  private def codegenStages(p: SparkPlanInfo): Int =
+    if (p.nodeName == "InMemoryTableScan") 0
+    else (if (p.nodeName.startsWith("WholeStageCodegen")) 1 else 0) +
+      p.children.map(codegenStages).sum
+
+  test("regime gate: no generated code while pages, frontier and expected candidates fit one task") {
+    val b = Politeness.RowsPerTask
+    // the checkpointed perfbench crawl's largest expanding superstep
+    assert(!SparkCrawler.generatedCode(Some(5000L), 909L, 909L * 16, b))
+    assert(!SparkCrawler.generatedCode(Some(b - 30L), 10L, 20L, b)) // at the bound
+    assert(SparkCrawler.generatedCode(Some(b - 30L), 10L, 21L, b)) // one row above it
+    assert(SparkCrawler.generatedCode(Some(b - 30L), 31L, 0L, b)) // a terminal superstep
+    assert(SparkCrawler.generatedCode(None, 1L, 0L, b), "an unbuilt pages cache counts as large")
+    // the crawl-rate spec's 100k-page corpus keeps generated code at any frontier
+    assert(SparkCrawler.generatedCode(Some(100000L), 1L, 16L, b))
+    assert(SparkCrawler.generatedCode(Some(1L), 1L, 0L, 0L), "bound 0: every superstep compiles")
+  }
+
+  test("a small checkpointed crawl and its resume compile no class in their supersteps") {
+    val pagesPrep = prepared()
+    try {
+      CheckpointedTiny.crawl(spark, pagesPrep) // steady state: one crawl first
+      val ((leg, res), classes, plans) = compiling(CheckpointedTiny.crawl(spark, pagesPrep))
+      val steps = leg.steps ++ res.steps
+      assert(steps.size == 4 && steps.forall(!_.generatedCode), steps.mkString("\n"))
+      assert(classes == 0L, s"$classes classes compiled")
+      assert(plans.nonEmpty)
+      val compiled = plans.filter(codegenStages(_) > 0)
+      assert(compiled.isEmpty, s"whole-stage codegen in:\n${compiled.map(_.simpleString).mkString("\n")}")
+    } finally { pagesPrep.unpersist(); () }
+  }
+
+  test("above the row bound the same crawl keeps generated code: classes compile, plans show *( stages") {
+    val pagesPrep = prepared()
+    try {
+      val ((leg, res), classes, plans) = compiling(CheckpointedTiny.crawl(spark, pagesPrep, bound = 0L))
+      val steps = leg.steps ++ res.steps
+      assert(steps.size == 4 && steps.forall(_.generatedCode), steps.mkString("\n"))
+      assert(classes > 0L)
+      assert(plans.exists(codegenStages(_) > 0), "no whole-stage codegen stage in any plan")
+    } finally { pagesPrep.unpersist(); () }
+  }
+
+  test("the session's codegen settings come back as the caller had them, also when a superstep throws") {
+    val conf = spark.conf
+    def settings: (Option[String], Option[String]) =
+      (conf.getAll.get(WholeStage), conf.getAll.get(FactoryMode))
+    val pagesPrep = prepared()
+    try {
+      // a value the caller set, and an unset one
+      conf.set(WholeStage, "true"); conf.unset(FactoryMode)
+      val (leg, res) = CheckpointedTiny.crawl(spark, pagesPrep)
+      assert((leg.steps ++ res.steps).forall(!_.generatedCode))
+      assert(settings == ((Some("true"), None)))
+
+      // the other way round, and a commit that fails inside the first
+      // superstep: the next frontier's score raises when the commit writes it
+      conf.unset(WholeStage); conf.set(FactoryMode, "FALLBACK")
+      val dir = java.nio.file.Files.createTempDirectory("wbot_regime_poisoned").toString
+      val poisoned = CheckpointedTiny.cfg(dir).copy(
+        scoreExpr = Some("if(depth >= 1, raise_error('injected commit failure'), 0)"))
+      val e = intercept[Exception] {
+        SparkCrawler.runPrepared(spark, pagesPrep, CheckpointedTiny.seeds, poisoned)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => Option(c.getMessage).exists(_.contains("injected commit failure"))), e)
+      assert(new Storage(dir).readManifest().isEmpty, "the poisoned step committed")
+      assert(settings == ((None, Some("FALLBACK"))))
+
+      // nested scopes share one regime: only the outermost exit restores
+      import org.apache.spark.sql.graftbridge.DatasetBridge.withoutGeneratedCode
+      withoutGeneratedCode(spark) {
+        withoutGeneratedCode(spark)(())
+        assert(settings == ((Some("false"), Some("NO_CODEGEN"))))
+      }
+      assert(settings == ((None, Some("FALLBACK"))))
+    } finally {
+      conf.unset(WholeStage); conf.unset(FactoryMode)
+      pagesPrep.unpersist(); ()
+    }
+  }
+}

@@ -116,6 +116,36 @@ class CrawlerParitySpec extends SparkSuite {
     pagesPrep.unpersist()
   }
 
+  test("pages width comes from the cached plan: an unbuilt pages cache starts no job") {
+    import org.apache.spark.sql.graftbridge.DatasetBridge.{CacheFacts, cacheFacts}
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(tiny), 4)
+    assert(cacheFacts(pagesPrep) == CacheFacts(None, Some(4)))
+    val dir = java.nio.file.Files.createTempDirectory("wbot_unbuilt_pages").toString
+    val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir))
+    val jobs = jobCallSites {
+      SparkCrawler.runPrepared(spark, pagesPrep, tinySeeds, cfg.copy(maxSupersteps = 0))
+    }
+    assert(jobs.isEmpty, s"runPrepared started jobs before its first superstep: $jobs")
+    val rows = pagesPrep.count()
+    assert(cacheFacts(pagesPrep) == CacheFacts(Some(rows), Some(4)))
+    assert(cacheFacts(pagesPrep.select("canon")) == CacheFacts(None, None), "not itself cached")
+    pagesPrep.unpersist()
+  }
+
+  test("parity: a small checkpointed crawl with and without generated code") {
+    // the same crawl and resume below the row bound (interpreted) and with
+    // the bound forced to 0 (generated code in every superstep)
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(tiny), 4)
+    pagesPrep.count()
+    val oracle = Oracle.run(Fixtures.oraclePages(tiny), tinySeeds, CheckpointedTiny.cfg(""))
+    for (bound <- Seq(Politeness.RowsPerTask, 0L)) {
+      val (leg, res) = CheckpointedTiny.crawl(spark, pagesPrep, bound)
+      assert((leg.steps ++ res.steps).forall(_.generatedCode == (bound == 0L)), s"bound $bound")
+      assertRunsEqual(oracle, res)
+    }
+    pagesPrep.unpersist()
+  }
+
   test("every job of a checkpointed crawl carries the caller's job group") {
     // side jobs (order checkpoint, seen alignment, commit and its table
     // writes) run on pooled threads; a pooled thread must not keep the job

@@ -109,8 +109,7 @@ class PlanSpec extends SparkSuite {
       else p.children.toSeq.flatMap(c => pathsToPages(c).map(p +: _))
     import scala.jdk.CollectionConverters._
     val finals = plans.values.asScala.toSeq.filter(_.simpleString.contains("isFinalPlan=true"))
-    // per path, the join nearest the pages leaf is the fetch join (the one
-    // path without a join is `pagesPrep.rdd`, read for the partition count)
+    // per path, the join nearest the pages leaf is the fetch join
     val fetches = for {
       plan <- finals; path <- pathsToPages(plan)
       j = path.lastIndexWhere(_.nodeName.contains("Join")) if j >= 0
