@@ -9,8 +9,9 @@ alternating order (even pairs base first, odd pairs change first), so slow
 drift of the host hits both sides alike. Each run uses its own checkout's
 perfbench and engine sources. It then prints, for every end-to-end metric of
 the base checkout's BENCHMARK.json: each side's median and quartiles, how
-many pairs the change won, and whether the median gap exceeds the base's
-interquartile range. A run that fails its oracle checks is reported and
+many pairs the change won, whether the median gap exceeds the base's
+interquartile range, and whether every change run read better than every
+base run. A run that fails its oracle checks is reported and
 leaves its pair out. Nothing under perfbench/ is written except the build
 and work directories perfbench itself uses.
 
@@ -123,12 +124,16 @@ def main():
         wins = sum(1 for x, y in zip(b, c) if (y < x if lower else y > x))
         gap = bq[1] - cq[1] if lower else cq[1] - bq[1]
         iqr = bq[2] - bq[0]
+        # every change run better than every base run: the criterion that
+        # still decides when the base's own spread is wider than the gap
+        apart = max(c) < min(b) if lower else min(c) > max(b)
         print(f"  {name} ({e['unit']}, {'lower' if lower else 'higher'} is better)")
         print(f"    base   median {bq[1]:.4g}  [Q1 {bq[0]:.4g}, Q3 {bq[2]:.4g}]")
         print(f"    change median {cq[1]:.4g}  [Q1 {cq[0]:.4g}, Q3 {cq[2]:.4g}]  "
               f"({(cq[1] - bq[1]) / bq[1]:+.1%})")
         print(f"    change won {wins} of {len(pairs)}; median gap {gap:+.4g} vs base IQR "
               f"{iqr:.4g}: {'exceeds' if gap > iqr else 'does not exceed'}")
+        print(f"    every change run better than every base run: {'yes' if apart else 'no'}")
     return 0
 
 

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.functions._
 import graft.wbot.{Fixtures, Schemas, SparkCrawler}
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -66,12 +68,76 @@ object SparkEntry {
     ()
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+  type Query = (SparkSession, String) => DataFrame
+
+  def queries: Map[String, Query] = {
     warmOneTimeJvmInit()
     queryMap
   }
 
-  private lazy val queryMap: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Whether a query runs with Spark's generated code: yes when the
+    * relations its analyzed plan scans (`leaves`, each relation counted once
+    * however often the plan reads it) total more than `bound` bytes, or when
+    * one of them has no known size (`Long.MaxValue`, Spark's default). The
+    * sizes are the leaves' own statistics — for files, the file listing — so
+    * deciding runs no job. Below the bound a query's Janino time (Spark's
+    * codegen cache cannot keep a pass's ~220 classes, see
+    * `DatasetBridge.withoutGeneratedCode`) outweighs what compiled code
+    * saves on its rows. */
+  private[graft] def generatedCode(leaves: Seq[LogicalPlan], bound: Long): Boolean = {
+    val sizes = leaves.distinctBy(_.canonicalized).map(_.stats.sizeInBytes)
+    sizes.exists(_ >= Long.MaxValue) || sizes.sum > bound
+  }
+
+  /** The byte bound of [[generatedCode]]: 3 MiB, between the event-table
+    * sizes, as Spark writes them, on either side of the crossover measured
+    * on a 4-vCPU host when each run pays its compile (BENCH/BASELINE.md):
+    * interpreted runs of the event queries were faster at 100k rows
+    * (2.0 MB) and slower at 400k rows (3.9 MB). Tests set it per query
+    * (`withValue`). */
+  private[graft] val interpretedBytesBound = new scala.util.DynamicVariable[Long](3L << 20)
+
+  /** `q` with its regime decided from the DataFrame it builds: below the
+    * bound the DataFrame is rebound to an interpreted copy of its session,
+    * so it runs without generated code wherever the caller executes it —
+    * unless the caller is repeating queries back to back ([[Repeats]]), when
+    * the compiled classes stay in Spark's codegen cache and are reused. */
+  private def sized(name: String, q: Query): Query =
+    (s, d) => {
+      val df = q(s, d)
+      if (Repeats.record((name, d)) ||
+          generatedCode(df.queryExecution.analyzed.collectLeaves(), interpretedBytesBound.value)) df
+      else DatasetBridge.interpreted(df)
+    }
+
+  /** Which builds keep generated code because their classes will be
+    * reused. Spark's codegen cache holds 100 classes and a pass over the
+    * queries compiles ~220, so a query built again after the others has
+    * lost its classes, while one built again right after itself finds them.
+    * A build keeps generated code when it repeats the build before it (same
+    * query name and data dir), or when that build was itself a repeat: a
+    * caller that repeats each query back to back then compiles each query
+    * once and reuses its classes, as the compiled regime alone would (only
+    * the first query's first build runs interpreted). */
+  private[graft] object Repeats {
+    private var last: (String, String) = null
+    private var lastRepeated = false
+
+    /** Records a build of query `key` (name, data dir): whether it keeps
+      * generated code. */
+    def record(key: (String, String)): Boolean = synchronized {
+      val repeated = key == last
+      val keep = repeated || lastRepeated
+      last = key
+      lastRepeated = repeated
+      keep
+    }
+
+    /** Forgets the builds so far (tests start from a fresh pattern). */
+    def forget(): Unit = synchronized { last = null; lastRepeated = false }
+  }
+
+  private lazy val queryMap: Map[String, Query] = Map[String, Query](
     // ---- crawl-loop operators on the driver tables (SURVEY.md §2) ----
     "q01_sha_identity" -> ((s, d) => // F3: content identity digest
       t(s, d, "documents").select(col("doc_id"), sha2(col("text"), 256).as("content_hash"))),
@@ -329,7 +395,7 @@ object SparkEntry {
         .select((col("rr") - 1 + col("o") + lit(seqBase)).as("seq"),
           col("url"), col("canon"), col("hash"))
     })
-  )
+  ).map { case (name, q) => name -> sized(name, q) }
 
   /** ±1 hyperplane sign, the SQL twin of `Similarity.planeSigns`: +qx iff
     * md5("plane-p-<i>") starts with a hex char >= '8' (hex a..f > '8'). */

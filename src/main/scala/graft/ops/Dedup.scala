@@ -220,7 +220,7 @@ object Dedup {
       // here would recompute the whole pair pipeline at consumption time.
       // Like the big path's final labels cache, it is the one surviving cache
       // (Spark evicts LRU; callers needing deterministic release unpersist).
-      return smallGraphClusters(edgesCache, maxIter)
+      return smallGraphClusters(edgesCache, nEdges)
     }
     var labelsCache = edgesCache.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).persist(bulk)
@@ -315,7 +315,7 @@ object Dedup {
     * Comparable order, which matches Catalyst's `least` for the numeric and
     * ASCII-string ids this operator accepts); `maxIter` does not apply — the
     * answer is exact by construction. */
-  private def smallGraphClusters(edgesCache: DataFrame, maxIter: Int): DataFrame = {
+  private def smallGraphClusters(edgesCache: DataFrame, nEdges: Long): DataFrame = {
     val spark = edgesCache.sparkSession
     val idType = edgesCache.schema("src").dataType
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -351,7 +351,11 @@ object Dedup {
       }
       out.iterator
     }
-    spark.createDataFrame(one, outSchema)
+    // one row per endpoint, and every edge is stored both ways: at most
+    // nEdges rows. Declared, so the result reports a size like a file scan
+    // does (an RDD leaf's default size is unknown)
+    org.apache.spark.sql.graftbridge.DatasetBridge.lineageCut(spark.createDataFrame(one, outSchema),
+      Some((nEdges, math.max(1L, nEdges * outSchema.defaultSize))))
   }
 
   /**

@@ -246,8 +246,12 @@ object SparkCrawler {
   def run(spark: SparkSession, pages: DataFrame, seeds: Seq[String], cfg: CrawlConfig,
       saltedPoliteness: Boolean = false): CrawlRun = {
     val pagesPrep = preparePages(pages, cfg.partitions)
-    try runPrepared(spark, pagesPrep, seeds, cfg, saltedPoliteness)
-    finally { pagesPrep.unpersist(); () }
+    try {
+      // built here, not by the first superstep: the regime gate
+      // ([[generatedCode]]) reads the built cache's row count
+      pagesPrep.count()
+      runPrepared(spark, pagesPrep, seeds, cfg, saltedPoliteness)
+    } finally { pagesPrep.unpersist(); () }
   }
 
   /** Standard-robots crawl: bootstrap the RFC 9309 rule table from the SAME

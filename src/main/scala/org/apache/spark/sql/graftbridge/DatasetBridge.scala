@@ -221,10 +221,45 @@ object DatasetBridge {
     try body finally Interpreted.exit(conf)
   }
 
+  /** `df` rebound to an interpreted copy of its session: the same analyzed
+    * plan, run wherever the caller later executes it (a write, a count, a
+    * collect) with generated code off, as in [[withoutGeneratedCode]]. The
+    * regime travels with the DataFrame, so no conf of the caller's session
+    * changes. Jobs that built `df` have already run in the caller's regime. */
+  def interpreted(df: DataFrame): DataFrame = {
+    val cdf = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(Interpreted.copyOf(cdf.sparkSession), cdf.logicalPlan)
+  }
+
   private object Interpreted {
-    private val Keys = Seq(
+    /** The confs of the regime without generated code. */
+    val Keys = Seq(
       org.apache.spark.sql.internal.SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
       org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
+
+    /** Per caller session: the caller's runtime confs and the interpreted
+      * copy made with them. One copy per caller, not one per DataFrame:
+      * executors keep per-session state with its own class loader, and
+      * generated classes are cached per class loader, so a copy per query
+      * recompiled the few classes interpreted plans still generate in tasks
+      * (10 per pass over the queries). The copy is a new session given the
+      * caller's confs, not a clone: a clone keeps its parent's session state,
+      * which would keep the weak key alive as long as the map holds the
+      * copy. */
+    private val copies =
+      new java.util.WeakHashMap[classic.SparkSession, (Map[String, String], classic.SparkSession)]
+
+    /** The caller's copy, made again once the caller's confs have changed. */
+    def copyOf(caller: classic.SparkSession): classic.SparkSession = synchronized {
+      val confs = caller.sessionState.conf.getAllConfs
+      Option(copies.get(caller)).filter(_._1 == confs).map(_._2).getOrElse {
+        val copy = caller.newSession()
+        (confs ++ Keys).foreach { case (k, v) => copy.sessionState.conf.setConfString(k, v) }
+        copies.put(caller, (confs, copy))
+        copy
+      }
+    }
+
     /** Per session conf: (entries, the caller's values of [[Keys]]). */
     private val active =
       new java.util.IdentityHashMap[org.apache.spark.sql.internal.SQLConf, (Int, Seq[Option[String]])]

@@ -31,8 +31,9 @@ object CheckpointedTiny {
   }
 }
 
-/** Which supersteps run with Spark's generated code, and that running
-  * without it leaves the session's codegen settings as the caller had them. */
+/** Which supersteps and operator queries run with Spark's generated code,
+  * and that running without it leaves the session's settings as the caller
+  * had them. */
 class CodegenRegimeSpec extends SparkSuite {
 
   private val WholeStage = "spark.sql.codegen.wholeStage"
@@ -143,5 +144,124 @@ class CodegenRegimeSpec extends SparkSuite {
       conf.unset(WholeStage); conf.unset(FactoryMode)
       pagesPrep.unpersist(); ()
     }
+  }
+
+  private val sf = "/root/testdata/sf0.01"
+
+  /** The operator queries of a `query_suite` pass: all but the crawl (q24)
+    * and the crawl superstep that writes side tables (q30). */
+  private def passQueries: Seq[(String, SparkEntry.Query)] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filterNot { case (n, _) => n == "q24_crawl_tiny" || n == "q30_crawl_step_sql" }
+
+  private def noopPass(s: org.apache.spark.sql.SparkSession = spark): Unit =
+    passQueries.foreach { case (_, q) => q(s, sf).write.format("noop").mode("overwrite").save() }
+
+  private def leaves(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+
+  test("query gate: scanned bytes, each relation once; unknown size counts as large") {
+    import spark.implicits._
+    val events = spark.read.parquet(s"$sf/events.parquet")
+    val bytes = leaves(events).map(_.stats.sizeInBytes.toLong).sum
+    assert(bytes > 0L)
+    assert(!SparkEntry.generatedCode(leaves(events), bytes), "at the bound")
+    assert(SparkEntry.generatedCode(leaves(events), bytes - 1), "one byte above it")
+    // a self-join scans the same relation twice; so does a second read of it
+    val twice = events.as("a").join(events.as("b"), $"a.event_id" === $"b.event_id")
+      .select($"a.event_id")
+      .unionByName(spark.read.parquet(s"$sf/events.parquet").select("event_id"))
+    assert(leaves(twice).size == 3)
+    assert(!SparkEntry.generatedCode(leaves(twice), bytes))
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row(1L))), org.apache.spark.sql.types.StructType.fromDDL("x BIGINT"))
+    assert(leaves(rdd).map(_.stats.sizeInBytes) == Seq(BigInt(Long.MaxValue)))
+    assert(SparkEntry.generatedCode(leaves(rdd), Long.MaxValue), "an unknown size counts as large")
+    assert(SparkEntry.generatedCode(leaves(events.crossJoin(rdd)), Long.MaxValue))
+  }
+
+  test("after one warm-up pass, a pass over the operator queries compiles no class") {
+    SparkEntry.Repeats.forget()
+    noopPass()
+    val (_, classes, _) = compiling(noopPass())
+    assert(classes == 0L, s"$classes classes compiled")
+  }
+
+  test("every operator query returns the same rows with and without generated code") {
+    /** (whether the query runs on an interpreted copy, its rows as a multiset) */
+    def run(q: SparkEntry.Query, bound: Long) = SparkEntry.interpretedBytesBound.withValue(bound) {
+      val df = q(spark, sf)
+      (df.sparkSession ne spark,
+        df.collect().toSeq.map(_.toString).groupBy(identity).view.mapValues(_.size).toMap)
+    }
+    // one pass per regime, so no query is built right after itself
+    SparkEntry.Repeats.forget()
+    val interpreted = passQueries.map { case (name, q) => name -> run(q, SparkEntry.interpretedBytesBound.value) }
+    val compiled = passQueries.map { case (name, q) => name -> run(q, 0L) }
+    interpreted.zip(compiled).foreach { case ((name, (copied, rows)), (_, (copiedAt0, rowsAt0))) =>
+      assert(copied, s"$name keeps generated code at sf0.01")
+      assert(rows.nonEmpty, name)
+      assert(!copiedAt0, s"$name runs interpreted at bound 0")
+      assert(rows == rowsAt0, s"$name: rows differ between the regimes")
+    }
+  }
+
+  test("queries built back to back keep generated code; a pass does not") {
+    def copied(name: String) = SparkEntry.queries(name)(spark, sf).sparkSession ne spark
+    SparkEntry.Repeats.forget()
+    assert(copied("q07_metrics_agg"))
+    assert(!copied("q07_metrics_agg"), "a repeat finds its classes compiled")
+    assert(!copied("q08_contains_scope"), "the build after a repeat keeps generated code")
+    assert(!copied("q08_contains_scope"))
+    assert(!copied("q09_regex_filter"))
+    assert(copied("q10_seen_union"), "q09 repeated no build")
+    assert(copied("q07_metrics_agg"))
+    SparkEntry.Repeats.forget()
+    assert(copied("q07_metrics_agg"))
+    val other = new java.io.File(sf).getParent + "/sf0.001"
+    assert(SparkEntry.queries("q07_metrics_agg")(spark, other).sparkSession ne spark,
+      "the same query over other data is not a repeat")
+  }
+
+  test("a pass leaves the caller's confs as they were and runs on one interpreted copy") {
+    val caller = spark.newSession()
+    val before = caller.conf.getAll
+    SparkEntry.Repeats.forget()
+    val sessions = passQueries.map { case (_, q) =>
+      val df = q(caller, sf)
+      df.write.format("noop").mode("overwrite").save()
+      df.sparkSession
+    }
+    assert(caller.conf.getAll == before)
+    assert(sessions.distinct.size == 1 && !sessions.contains(caller))
+  }
+
+  test("a caller session dropped after an interpreted query becomes unreachable") {
+    def use(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
+      val caller = spark.newSession()
+      val df = SparkEntry.queries("q07_metrics_agg")(caller, sf)
+      assert(df.sparkSession ne caller, "q07 should run interpreted")
+      df.write.format("noop").mode("overwrite").save()
+      new java.lang.ref.WeakReference(caller)
+    }
+    SparkEntry.Repeats.forget()
+    val ref = use()
+    val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+    while (ref.get != null && System.nanoTime() < deadline) { System.gc(); Thread.sleep(100) }
+    assert(ref.get == null, "the caller session is still reachable")
+  }
+
+  test("a conf the caller changes reaches the interpreted copy") {
+    val caller = spark.newSession()
+    SparkEntry.Repeats.forget()
+    val q07 = SparkEntry.queries("q07_metrics_agg")
+    q07(caller, sf).collect()
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    SparkEntry.Repeats.forget()
+    val df = q07(caller, sf)
+    assert(df.sparkSession ne caller, "q07 should run interpreted")
+    val plan = df.queryExecution.executedPlan.toString
+    val widths = """hashpartitioning\([^)]*, (\d+)\)""".r.findAllMatchIn(plan).map(_.group(1)).toSet
+    assert(widths == Set("3"), plan)
+    assert(!plan.contains("*("), plan)
   }
 }
