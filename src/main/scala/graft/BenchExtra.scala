@@ -100,7 +100,7 @@ object BenchExtra {
       val spec = graft.wbot.Fixtures.SiteSpec(nHosts = 100, pagesPerHost = 1000,
         fanMin = 12, fanRand = 4)
       val cfg = graft.wbot.Schemas.CrawlConfig(maxDepth = 4, partitions = cpus.toInt,
-        recordStreams = false, bloomMinSeen = 500000L)
+        recordStreams = false)
       val prep = graft.wbot.SparkCrawler.preparePages(
         graft.wbot.Fixtures.pagesDf(spark, spec), cpus.toInt)
       prep.count()

@@ -50,7 +50,7 @@ object SparkEntry {
       .map(p => (p.url, new java.sql.Timestamp(p.warcTsMs), p.html, p.text, p.lang))
       .toDF("url", "warc_ts", "html", "text", "lang")
     val run = SparkCrawler.run(spark, pages, Fixtures.seeds(spec),
-      Schemas.CrawlConfig(maxDepth = 2, partitions = 4, bloomMinSeen = 100000L))
+      Schemas.CrawlConfig(maxDepth = 2, partitions = 4))
     run.order.orderBy("seq").select("seq", "depth", "url", "canon", "hash")
   }
 
@@ -334,9 +334,6 @@ object SparkEntry {
       val pages = Fixtures.allPages(spec)
         .map(p => (p.url, new java.sql.Timestamp(p.warcTsMs), p.html, p.text, p.lang))
         .toDF("url", "warc_ts", "html", "text", "lang")
-      // default config: the exact anti-join runs alone, no Bloom store is
-      // built (SparkCrawler.newBloom); the Bloom paths are pinned by
-      // CrawlerParitySpec
       val run = SparkCrawler.run(s, pages, Fixtures.seeds(spec),
         Schemas.CrawlConfig(maxDepth = 2, partitions = 4))
       run.order.orderBy("seq").select("seq", "depth", "url", "canon", "hash")

@@ -281,8 +281,7 @@ object Dedup {
       // engage turned one 33→32 stall on the sf0.1 bench graph into six
       // jump-join rounds (+0.9 s) while the changes sequence (32→16→8→2→1)
       // was already halving without help.
-      jumpOn = !converged && i >= 2 && changes * 2 > prevChanges &&
-        !sys.env.contains("SPARK_GRAFT_CC_NO_JUMP") // bisect toggle
+      jumpOn = !converged && i >= 2 && changes * 2 > prevChanges
       prevChanges = changes
       if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
         System.err.println(s"[cc] round=$i changes=$changes nextJump=$jumpOn")

@@ -157,7 +157,7 @@ object CrawlBench {
       // executor heap OOM in BlockManager.maybeCacheDiskBytesInMemory).
       val parts = math.max(math.max(32, cores), spec.totalRows / 25000)
       val cfg = Schemas.CrawlConfig(maxDepth = maxDepth, partitions = parts,
-        recordStreams = false, bloomMinSeen = 500000L)
+        recordStreams = false)
       val pagesPrep = SparkCrawler.preparePages(pages, parts)
       pagesPrep.count() // materialize input outside the timed section
       val t0 = System.nanoTime()

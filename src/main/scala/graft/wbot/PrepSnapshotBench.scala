@@ -26,7 +26,7 @@ object PrepSnapshotBench {
     val spec = Fixtures.SiteSpec(nHosts = nHosts, pagesPerHost = perHost,
       fanMin = 12, fanRand = 4)
     val cfg = Schemas.CrawlConfig(maxDepth = 2, partitions = cpus.toInt,
-      recordStreams = false, bloomMinSeen = 500000L)
+      recordStreams = false)
     val dir = java.nio.file.Files.createTempDirectory("prep_bench").toString + "/pages"
 
     def timed[A](tag: String)(f: => A): A = {

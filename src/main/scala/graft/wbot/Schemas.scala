@@ -15,7 +15,7 @@ object Schemas {
       url: String, // Go-serialized absolute URL (fetch key pre-canon)
       canon: String, // canonical form, hashLink's pre-hash string (wbot.go:219-238)
       hash: String, // sha256 hex of canon — reference-exact identity
-      hash64: Long, // xxhash64(canon) — partitioning / Bloom key
+      hash64: Long, // xxhash64(canon) — partitioning / politeness salt key
       host: String, // URL host[:port] as parsed (Q1 operand, crawler.go:252)
       root: String, // registrable domain (politeness + rule key)
       depth: Int,
@@ -124,34 +124,10 @@ object Schemas {
       // interval), the reference's blocking token bucket (limiter.go:52-59)
       // for a continuous service. Off for batch/bench (logical slots only).
       paceWallClock: Boolean = false,
-      // Bloom seen store (BloomSeen). It is BUILT only where the superstep
-      // probes it: with bloomTwoPassProbe, or when partitions × segment
-      // bytes exceed bloomBroadcastMaxBytes (the cogroup regime — above
-      // ~3,276 partitions at the defaults). Otherwise no store exists and
-      // the exact anti-join decides alone; results are identical either way.
-      bloomEnabled: Boolean = true,
-      bloomBitsPerKey: Int = 10,
-      // Where a store is built, segment upkeep (a merge per superstep) only
-      // pays once the seen set dwarfs it: below this seen-set size the exact
-      // anti-join runs alone and the store is built once, in a catch-up
-      // over every seen key, the superstep the size is crossed.
-      // 0 = active from the first superstep.
+      // Read by nothing. Kept only because `graft.Bench` passes it, and that
+      // harness stays unchanged so its numbers compare across rounds;
+      // cross-superstep dedup is the exact anti-join alone.
       bloomMinSeen: Long = 0L,
-      // seen-set Bloom distribution strategy cutover: total segment bytes at
-      // or below this broadcast (transient, per-superstep); above it,
-      // candidates pid-shuffle and hash-join their own segment row
-      // 10^8-key measurement: 119 MB of segments still broadcast-probes 3.6x
-      // faster than the pid-cogroup (the cogroup pays a full candidate
-      // shuffle); cut over only when per-executor memory actually hurts
-      bloomBroadcastMaxBytes: Long = 256L << 20,
-      // Force the two-leg probe split (sure rows bypass the anti-join) even
-      // in the broadcast-probe regime, which also makes the store exist
-      // there. Default OFF: with the aligned seen side the split's second
-      // read of the first-occurrence shuffle costs more than the bloom saves
-      // (see the fresh0pre comment in SparkCrawler); the cogroup path always
-      // splits. Parity tests force this on to pin the broadcast two-leg
-      // shape and the catch-up build result-identical.
-      bloomTwoPassProbe: Boolean = false,
       checkpointDir: Option[String] = None,
       maxSupersteps: Int = Int.MaxValue, // stop after N supersteps (resume testing / ops)
       recordStreams: Boolean = true, // retain order/attempts streams (parity tests, sinks)

@@ -161,13 +161,12 @@ object SparkCrawler {
   }
 
   /** Executor for per-superstep side jobs (order-stream checkpoint, seen-delta
-    * alignment, snapshot commit and its table writes, and the Bloom segment
-    * merge when a store is built): they are independent of the main
-    * superstep plan and of each other, so running them as concurrent Spark
-    * jobs collapses sequential driver round-trips into ~max(one). Daemon
-    * threads, unbounded (a side job may itself fan out and await, as the
-    * commit does); all futures are awaited inside the superstep that spawned
-    * them. Submit through [[sideJob]] only. */
+    * alignment, snapshot commit and its table writes): they are independent
+    * of the main superstep plan and of each other, so running them as
+    * concurrent Spark jobs collapses sequential driver round-trips into
+    * ~max(one). Daemon threads, unbounded (a side job may itself fan out and
+    * await, as the commit does); all futures are awaited inside the
+    * superstep that spawned them. Submit through [[sideJob]] only. */
   private lazy val sideEc: scala.concurrent.ExecutionContextExecutor =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newCachedThreadPool { r =>
@@ -237,7 +236,6 @@ object SparkCrawler {
     * it. */
   private final case class State(
       frontier: DataFrame, frontierSize: Long, loadedDeltas: Seq[Storage.LoadedDelta],
-      bloom: BloomSeen.SegmentStore,
       metrics: mutable.Map[String, Long], seqBase: Long, startDepth: Int,
       orderParts: mutable.ArrayBuffer[DataFrame],
       attemptParts: mutable.ArrayBuffer[DataFrame],
@@ -289,7 +287,7 @@ object SparkCrawler {
       "total_link" -> 0L, "crawled_link" -> 0L, "skipped_link" -> 0L,
       "duplicated_link" -> 0L)
     crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
-      State(frontier, seqBase, Nil, newBloom(spark, cfg), m, seqBase, 0,
+      State(frontier, seqBase, Nil, m, seqBase, 0,
         mutable.ArrayBuffer.empty, mutable.ArrayBuffer.empty))
   }
 
@@ -316,35 +314,13 @@ object SparkCrawler {
     val alignP = cfg.seenAlignPartitions.getOrElse(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val deltas = st.readSeenDeltas(spark, snap.lastStep, snap.seenBaseStep, alignP, seenRowBytes)
-    val bloom = newBloom(spark, cfg)
-    if (bloom != null && deltas.nonEmpty)
-      // only in the probed regimes (newBloom). Layout-free view: the segment
-      // build re-shuffles by pid anyway, and parquet column pruning makes
-      // this a hash64-only scan
-      st.readSeen(spark, snap.lastStep, snap.seenBaseStep)
-        .foreach(s => bloom.update(s.select("hash64")))
     val orderParts = mutable.ArrayBuffer.empty[DataFrame]
     st.readCrawled(spark, snap.lastStep).foreach(orderParts += _)
     val attemptParts = mutable.ArrayBuffer.empty[DataFrame]
     st.readAttempts(spark, snap.lastStep).foreach(attemptParts += _)
     crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
-      State(frontier, frontierSize, deltas, bloom, mutable.Map(snap.metrics.toSeq: _*),
+      State(frontier, frontierSize, deltas, mutable.Map(snap.metrics.toSeq: _*),
         snap.seqBase, snap.lastStep + 1, orderParts, attemptParts, snap.seenBaseStep))
-  }
-
-  /** The Bloom seen store, or null when the loop would never probe it. The
-    * superstep reads the store only in the two-leg probe split, which runs
-    * when `bloomTwoPassProbe` is forced or when the segments exceed the
-    * broadcast cutover (the cogroup regime) — both fixed by the config. In
-    * the default broadcast regime the single-pass exact anti-join decides
-    * alone, so building the store would only pay segment merges (every
-    * superstep) and a rebuild (every resume) that no probe reads. */
-  private def newBloom(spark: SparkSession, cfg: CrawlConfig): BloomSeen.SegmentStore = {
-    val segBytes = BloomSeen.bytesFor(1L << 16, cfg.bloomBitsPerKey)
-    val cogroup = cfg.partitions.toLong * segBytes > cfg.bloomBroadcastMaxBytes
-    if (cfg.bloomEnabled && (cfg.bloomTwoPassProbe || cogroup))
-      new BloomSeen.SegmentStore(spark, cfg.partitions, segBytes, cfg.bloomBroadcastMaxBytes)
-    else null
   }
 
   /** Materialize a seen delta HASH-PARTITIONED on its join key: one
@@ -409,9 +385,6 @@ object SparkCrawler {
     // side job entirely; the accumulated smalls are folded into one aligned
     // store the first time the bound is crossed)
     val smallSeenBound = cfg.smallSeenBound
-    // attribution toggles (bench bisection; engine defaults are the fast path)
-    val alignSeen = !sys.env.get("SPARK_GRAFT_NO_SEEN_ALIGN").contains("1")
-    val pruneFetch = !sys.env.get("SPARK_GRAFT_NO_PRUNE").contains("1")
     // ALIGNED deltas (canon-hash-partitioned at alignP — the aligned-union
     // view's inputs) and DEFERRED small deltas (unaligned stats-bearing
     // leaves over tiny persisted projections: while the accumulated seen set
@@ -423,26 +396,24 @@ object SparkCrawler {
     val smallCaches = mutable.ArrayBuffer.empty[DataFrame]
     if (st0.loadedDeltas.nonEmpty && st0.metrics.getOrElse("crawled_link", 0L) > 0L) {
       def proj(df: DataFrame) = df.select(col("canon"), col("hash"), col("hash64"))
-      if (alignSeen) {
-        if (st0.metrics("crawled_link") > smallSeenBound) {
-          // invariant past the bound: every delta aligned. Bucket-committed
-          // deltas already reconstruct as zero-shuffle aligned leaves
-          // (Storage.readSeenDeltas); only the unaligned residue — small
-          // pre-fold deltas, the final expansion's plain commit — pays one
-          // O(residue) re-shuffle, where the pre-round-5 resume re-aligned
-          // the FULL seen set.
-          val (ok, residue) = st0.loadedDeltas.partition(_.aligned)
-          seenDeltas ++= ok.map(_.df)
-          if (residue.nonEmpty)
-            seenDeltas += alignDelta(residue.map(ld => proj(ld.df)).reduce(_ unionByName _), alignP)
-        } else {
-          // below the broadcast bound nothing needs a layout: every loaded
-          // delta stays a small parquet leaf (file stats make it
-          // broadcastable), and seenDeltas stays EMPTY so a later crossing
-          // fold genuinely covers all seen rows (supersedesPrior contract)
-          smallDeltas ++= st0.loadedDeltas.map(ld => proj(ld.df))
-        }
-      } else seenDeltas += st0.loadedDeltas.map(ld => proj(ld.df)).reduce(_ unionByName _)
+      if (st0.metrics("crawled_link") > smallSeenBound) {
+        // invariant past the bound: every delta aligned. Bucket-committed
+        // deltas already reconstruct as zero-shuffle aligned leaves
+        // (Storage.readSeenDeltas); only the unaligned residue — small
+        // pre-fold deltas, the final expansion's plain commit — pays one
+        // O(residue) re-shuffle, where the pre-round-5 resume re-aligned
+        // the FULL seen set.
+        val (ok, residue) = st0.loadedDeltas.partition(_.aligned)
+        seenDeltas ++= ok.map(_.df)
+        if (residue.nonEmpty)
+          seenDeltas += alignDelta(residue.map(ld => proj(ld.df)).reduce(_ unionByName _), alignP)
+      } else {
+        // below the broadcast bound nothing needs a layout: every loaded
+        // delta stays a small parquet leaf (file stats make it
+        // broadcastable), and seenDeltas stays EMPTY so a later crossing
+        // fold genuinely covers all seen rows (supersedesPrior contract)
+        smallDeltas ++= st0.loadedDeltas.map(ld => proj(ld.df))
+      }
     }
     def emptySeen: DataFrame =
       spark.emptyDataset[(String, String, Long)].toDF("canon", "hash", "hash64")
@@ -457,7 +428,6 @@ object SparkCrawler {
       else org.apache.spark.sql.graftbridge.DatasetBridge
         .alignedUnion(seenDeltas.toSeq, Seq("canon"), alignP,
           Some((totalRows, math.max(1L, totalRows * seenRowBytes))))
-    val bloom = st0.bloom
     val m = st0.metrics
     var seqBase = st0.seqBase
     // the step whose committed seen delta supersedes all earlier ones (the
@@ -503,22 +473,13 @@ object SparkCrawler {
 
     var d = st0.startDepth
     var stepsRun = 0
-    // in-flight Bloom segment merge (only when a store exists — newBloom):
-    // runs concurrently with the order-stream checkpoint and the snapshot
-    // commit, awaited before the superstep closes (the next superstep's
-    // probe reads the store)
-    var bloomFut: scala.concurrent.Future[Unit] = null
-    def awaitBloom(): Unit = if (bloomFut != null) {
-      scala.concurrent.Await.result(bloomFut, scala.concurrent.duration.Duration.Inf)
-      bloomFut = null
-    }
     // the current frontier's UNRANKED bucket store (rank-invariant consumers
     // — the terminal hit count — read this and skip the seq-window sort);
     // null when the frontier didn't come from an expansion (seeds, resume)
     var frontierRaw: DataFrame = null
     var frontierSize = st0.frontierSize
     // size of the seen set == crawled_link (every fresh candidate is marked
-    // seen; seeds are not) — gates Bloom activation without extra actions
+    // seen; seeds are not) — picks the seen side's shape without extra actions
     var seenTotal = m("crawled_link")
     while (d <= cfg.maxDepth && frontierSize > 0 && stepsRun < cfg.maxSupersteps) {
       stepsRun += 1
@@ -563,7 +524,7 @@ object SparkCrawler {
         val oldFrontier = frontier
         frontier = spark.emptyDataset[FrontierRow].toDF
         // terminal count done (unless the store doubles as a seen delta)
-        if (alignSeen && frontierRaw != null && (frontierRaw ne protectedStore))
+        if (frontierRaw != null && (frontierRaw ne protectedStore))
           frontierRaw.unpersist()
         frontierRaw = null
         oldFrontier.unpersist()
@@ -627,7 +588,7 @@ object SparkCrawler {
       // not O(corpus). Only worthwhile while the frontier can miss buckets:
       // past ~4·P random keys expected coverage is ≈ 98%, so skip the probe.
       val pagesSide: DataFrame =
-        if (pruneFetch && frontierSize < 4L * pagesP && pagesLayoutOk) {
+        if (frontierSize < 4L * pagesP && pagesLayoutOk) {
           // pid set from the previous rank job's observation when available
           // (zero extra jobs); else one tiny distinct-collect over the
           // cached frontier (seeds, resume)
@@ -717,9 +678,8 @@ object SparkCrawler {
       var candTotal = 0L
       var passedCount = 0L
       var seenCommit: Option[Storage.SeenCommit] = None
-      // in-flight hash-alignment of this superstep's seen delta (concurrent
-      // with the Bloom merge — both read the materialized bucket store);
-      // when it lands, the COMMITTED delta is the aligned store itself
+      // in-flight hash-alignment of this superstep's seen delta (reads the
+      // materialized bucket store); when it lands, the COMMITTED delta is the aligned store itself
       // (bucket-partitioned on disk → zero-shuffle resume), superseding all
       // earlier commits when it folded the deferred smalls in
       var alignFut: scala.concurrent.Future[DataFrame] = null
@@ -772,14 +732,14 @@ object SparkCrawler {
         // on the deep bench's d4 — is cut to the 6 columns no later stage
         // can derive. `hash` (64 hex chars), `hash64`, `host` and `root`
         // are all pure functions of (canon | url): hash64 is re-derived
-        // right after the window (the Bloom probe's key), hash/host/root by
+        // right after the window, hash/host/root by
         // codegen'd exprs (sha2, UrlHost, HostRoot — byte-equality with the
         // UDF-side values pinned by UrlExprSpec) over the POST-dedup fresh
         // set, which on a geometric crawl is a fraction of the candidate
         // volume. hostname/path/parent_root are consumed by passCond above
         // and ship nowhere.
-        // SHUFFLE-SLIM v2 (default ON, `SPARK_GRAFT_NO_SLIM2=1` restores the
-        // string-payload shape for attribution): of the 6 shipped columns,
+        // SHUFFLE-SLIM v2 (when both rotation lists have ≤ 64 entries; longer
+        // lists ship the strings): of the 6 shipped columns,
         // `ua`/`proxy` are drawn from the config's small rotation lists
         // (request build P1 / sticky child build P2 — every candidate's
         // value is provably a list member), so they cross the exchange as a
@@ -794,8 +754,7 @@ object SparkCrawler {
         // Winner selection is by the globally unique (parent_seq, link_pos)
         // — payload re-encoding can never change which row wins, so order,
         // seen set, and counters stay byte-identical (parity suites pin it).
-        val slim2 = !sys.env.get("SPARK_GRAFT_NO_SLIM2").contains("1") &&
-          cfg.userAgents.length <= 64 && cfg.proxies.length <= 64
+        val slim2 = cfg.userAgents.length <= 64 && cfg.proxies.length <= 64
         val uaVals = cfg.userAgents
         val proxyVals = if (cfg.proxies.isEmpty) Vector("") else cfg.proxies
         def dictIx(c: Column, vs: Vector[String]): Column =
@@ -820,44 +779,16 @@ object SparkCrawler {
         // NOT persisted: downstream legs read it through the aggregation's
         // shuffle, which Catalyst reuses — spill-safe at any candidate
         // volume, unlike a 26.8M-row cache. Keyed by canon (dedup-equivalent
-        // to the reference's hash key — see alignDelta's scaladoc).
-        //
-        // MAP-SIDE PARTIAL FIRST-OCCURRENCE — measured NEGATIVE, kept as an
-        // opt-in (`SPARK_GRAFT_AGG_DEDUP=1`) for attribution. The winner is
-        // min-by the globally UNIQUE (parent_seq, link_pos) pair, so
-        // row_number()=1 over that order ≡ min(struct(parent_seq, link_pos,
-        // <payload>)) — ties can never reach the payload fields — and as an
-        // aggregate Spark plans a partial SortAggregate in the MAP stage
-        // (min over a struct buffer is not HashAggregate-able). The hoped-for
-        // win (shrink the crawl's biggest shuffle before the remote read —
-        // the reduce stage's +27-29% CPU at N=4) does not materialize: the
-        // map input is the fetch join's output, hash(canon)-partitioned, so
-        // a link's duplicate copies — same-host pages scattered uniformly
-        // across partitions — almost never colocate within a map partition.
-        // The combine yields ~nothing; the extra map-side sort costs nothing
-        // measurable either (shuffle-write spill already buffers the rows).
-        // Alternated ABAB A/B at maxDepth-5/N=4 (2026-08-18,
-        // bench/run_aggdedup_ab.sh): agg 85.1/103.7k URLs/s vs window
-        // 103.2/88.0k — means 94.4k vs 95.6k, indistinguishable inside this
-        // host's noise; counters byte-identical. The window shape stays the
-        // default (the established, PlanSpec-pinned plan); the reference's
-        // in-page duplicate collapse (crawler.go:268-274) has no volume to
-        // collapse here because candidates are already per-page-unique by
-        // construction.
-        val firsts0 =
-          if (sys.env.contains("SPARK_GRAFT_AGG_DEDUP")) {
-            // payload-generic: (parent_seq, link_pos) lead the struct in
-            // passed's column order, so min-by stays the same winner
-            val payload = passed.columns.filterNot(_ == "canon")
-            passed.groupBy(col("canon"))
-              .agg(min(struct(payload.map(col).toIndexedSeq: _*)).as("__w"))
-              .select(col("canon") +: payload.map(c => col(s"__w.$c").as(c)): _*)
-          } else {
-            val w = Window.partitionBy(col("canon"))
-              .orderBy(col("parent_seq"), col("link_pos"))
-            passed.withColumn("__rn", row_number().over(w))
-              .where(col("__rn") === 1).drop("__rn")
-          }
+        // to the reference's hash key — see alignDelta's scaladoc). A window,
+        // not a min-struct aggregate: duplicates of a link almost never share
+        // a map partition, so a map-side partial aggregate measured no gain
+        // (BENCH/BASELINE.md).
+        val firsts0 = {
+          val w = Window.partitionBy(col("canon"))
+            .orderBy(col("parent_seq"), col("link_pos"))
+          passed.withColumn("__rn", row_number().over(w))
+            .where(col("__rn") === 1).drop("__rn")
+        }
         // slim2 payload re-materialized HERE, on the post-dedup set (a
         // fraction of candidate volume): literal-CASE dictionary lookups
         // (codegen'd, same pattern as the politeness budget map) and the
@@ -869,16 +800,12 @@ object SparkCrawler {
             dictVal(col("proxy_ix"), proxyVals).as("proxy"),
             coalesce(col("url_d"), col("canon")).as("url"), col("canon"))
           else firsts0
-        // hash64 re-derived ABOVE the dedup (not shipped through it): the
-        // Bloom probe's key, and next superstep's politeness salt
+        // hash64 re-derived ABOVE the dedup (not shipped through it): next
+        // superstep's politeness salt
         val firsts = firsts1.withColumn("hash64", xxhash64(col("canon")))
 
-        // Q4b: cross-superstep dedup — the exact anti-join, pre-filtered by
-        // the Bloom segments only where a store exists (newBloom: forced
-        // two-leg split or the cogroup regime). No false negatives → misses
-        // are definitely fresh, and only suspects enter the anti-join.
-        val bloomActive = bloom != null && seenTotal >= cfg.bloomMinSeen
-        // The seen side is the partition-wise union of the hash-aligned
+        // Q4b: cross-superstep dedup — the exact anti-join against the seen
+        // set. The seen side is the partition-wise union of the hash-aligned
         // deltas: NO exchange, NO sort on it, at any seen size. Below the
         // broadcast bound a broadcast of the (small) seen set stays allowed;
         // above it the join is pinned to a shuffled-hash join whose BUILD is
@@ -887,65 +814,21 @@ object SparkCrawler {
         // reuses the first-occurrence window's hash partitioning. AQE's
         // compressed-size broadcast estimates (the round-3 OOM) never see an
         // exchange to convert.
+        //
+        // small seen: a PLAIN union of the (stats-bearing) delta leaves —
+        // broadcastable, and crucially NOT a fixed-P sibling, so AQE stays
+        // free to coalesce the shallow supersteps' tiny candidate stages (a
+        // fixed-partition leaf next to the join pins the probe side to full
+        // width — measured on the deep bench's d0-d3 floor). large seen: the
+        // partition-aligned union leaf + shuffled-hash build — zero exchange,
+        // zero sort on the seen side.
         val seenHinted =
-          if (alignSeen) {
-            // small seen: a PLAIN union of the (stats-bearing) delta leaves
-            // — broadcastable, and crucially NOT a fixed-P sibling, so AQE
-            // stays free to coalesce the shallow supersteps' tiny candidate
-            // stages (a fixed-partition leaf next to the join pins the
-            // probe side to full width — measured on the deep bench's
-            // d0-d3 floor). large seen: the partition-aligned union leaf +
-            // shuffled-hash build — zero exchange, zero sort on the seen
-            // side.
-            if (seenTotal <= smallSeenBound)
-              (seenDeltas ++ smallDeltas).map(_.select("canon"))
-                .reduceOption(_ unionByName _)
-                .getOrElse(emptySeen.select("canon"))
-            else seenForJoin(seenTotal).select("canon").hint("shuffle_hash")
-          } else { // bisection fallback: round-3 shape (full seen re-shuffle)
-            if (seenTotal <= smallSeenBound) seen.select("canon")
-            else seen.select("canon").hint("merge")
-          }
-        var markedCache: DataFrame = null
-        val fresh0pre =
-          if (bloomActive && (bloom.usesCogroup || cfg.bloomTwoPassProbe)) {
-            // TWO-LEG probe split: sure rows (bloom says definitely fresh)
-            // bypass the anti-join; suspects go through it. This pays a
-            // SECOND read of the first-occurrence shuffle (both legs re-read
-            // it) — worth it only when the probe itself is expensive enough
-            // to amortize that: the cogroup probe (the 10^10 path — its own
-            // shuffle + per-group segment decode) is, so it is materialized
-            // ONCE (persist at bulkLevel, NOT localCheckpoint: checkpoint
-            // blocks are forced on-heap, pinned forever by the retained
-            // seen-delta caches, and a lost block fails the job — the
-            // accounted persist is spill-safe, recomputable, and explicitly
-            // unpersisted once the rank's bucket store is materialized).
-            val marked0 = bloom.withMight(firsts, col("hash64"))
-            val marked = if (bloom.usesCogroup) {
-              markedCache = marked0.persist(bulkLevel)
-              markedCache.count() // eager: both legs read blocks, not the cogroup twice
-              markedCache
-            } else marked0
-            val sure = marked.where(!col("__might")).drop("__might")
-            val suspect = marked.where(col("__might")).drop("__might")
-              .join(seenHinted, Seq("canon"), "left_anti")
-            sure.unionByName(suspect)
-          } else
-            // SINGLE-PASS exact anti-join (broadcast-probe regime and the
-            // no-bloom path). With the aligned seen side the anti-join's
-            // probe reuses the first-occurrence shuffle's hash partitioning
-            // and its build is one aligned partition (seen/P rows) — so the
-            // marginal cost of probing a SURE row is one in-memory hash
-            // lookup, while the bloom split costs a second full (remote at
-            // N>1) read of the crawl's biggest shuffle. The round-4 stage
-            // profile put the candidate reduce stage's remote-read CPU at
-            // +29% at N=4 — halving its shuffle reads is worth more than the
-            // broadcast bloom probe saves (no false negatives ⇒ identical
-            // output either way; `bloomTwoPassProbe` restores the split).
-            // In the broadcast regime without the forced split no Bloom store
-            // exists at all (newBloom): the config fixes the regime, so
-            // segments nothing probes are never merged or rebuilt on resume.
-            firsts.join(seenHinted, Seq("canon"), "left_anti")
+          if (seenTotal <= smallSeenBound)
+            (seenDeltas ++ smallDeltas).map(_.select("canon"))
+              .reduceOption(_ unionByName _)
+              .getOrElse(emptySeen.select("canon"))
+          else seenForJoin(seenTotal).select("canon").hint("shuffle_hash")
+        val fresh0pre = firsts.join(seenHinted, Seq("canon"), "left_anti")
         // the identity/addressing columns are recomputed HERE, post-dedup,
         // so only fresh-set rows pay them: sha-256 (F3) via the codegen'd
         // sha2 ≡ UrlFuncs.sha256hex; host via ONE GoUrl re-parse of the
@@ -961,7 +844,7 @@ object SparkCrawler {
         // seqs are dense in [seqBase − frontierSize, seqBase) by construction,
         // so the rank needs no sampling pass (Ranks.denseRangeRank): the whole
         // dataflow up to here — schedule → fetch join → extract → filters →
-        // first-occurrence → Bloom/anti-join — executes ONCE into one
+        // first-occurrence → anti-join — executes ONCE into one
         // spill-safe, lineage-cut bucket store (the superstep's only
         // candidate-sized state), and the per-bucket counts cross the driver
         // as ≤ 8·P longs, giving the fresh count for free. The next frontier
@@ -998,9 +881,6 @@ object SparkCrawler {
           if (m0.isEmpty) null
           else Option(m0("pids")).map(_.asInstanceOf[Seq[Int]].toSet).orNull
         }
-        // the rank's bucket store is materialized (its counts pass just ran):
-        // the cogroup probe cache has served its purpose — release the blocks
-        if (markedCache != null) { markedCache.unpersist(); markedCache = null }
         val fresh = rank.df
           .withColumn("seq", col("__rank") - 1 + lit(seqBase))
           .withColumn("depth", lit(d + 1))
@@ -1048,7 +928,7 @@ object SparkCrawler {
         //  - the superstep that CROSSES the bound folds every deferred small
         //    plus its own delta into one aligned store (one O(bound) job).
         val lastExpansion = d + 1 >= cfg.maxDepth
-        if (alignSeen && !lastExpansion) {
+        if (!lastExpansion) {
           val freshDelta = rank.cached.select(col("canon"), col("hash"), col("hash64"))
           if (seenTotal + freshCount > smallSeenBound) {
             val toFold = smallDeltas.toVector
@@ -1082,22 +962,6 @@ object SparkCrawler {
             seenCommit = Some(Storage.SeenCommit(d0, None, freshCount,
               supersedesPrior = false))
           protectedStore = rank.cached
-        }
-        if (bloom != null) {
-          // segment merge is independent of the order-stream checkpoint and
-          // the snapshot commit — run it concurrently, await before the next
-          // superstep's probe needs the store
-          if (seenTotal >= cfg.bloomMinSeen)
-            bloomFut = sideJob(spark)(bloom.update(rank.cached.select("hash64")))
-          else if (seenTotal + freshCount >= cfg.bloomMinSeen) {
-            // one-time catch-up over all prior deltas PLUS this superstep's
-            // fresh keys (not yet appended — the alignment is in flight):
-            // the filter must cover every seen key before the next probe,
-            // or a duplicate would pass as fresh (no-false-negatives bound)
-            val allSeen = seen.select("hash64").unionByName(rank.cached.select("hash64"))
-            bloomFut = sideJob(spark)(bloom.update(allSeen))
-          }
-          // else: deferred — the early anti-joins are cheaper than segment upkeep
         }
         seenTotal += freshCount
 
@@ -1165,10 +1029,9 @@ object SparkCrawler {
       val nextFrontierSize = if (d < cfg.maxDepth) freshCount else 0L
       // atomic superstep commit: frontier, seen delta, crawled delta,
       // attempts delta (written concurrently by Storage.commitStep), then
-      // metrics, seq watermark and the next frontier's row count — overlaps
-      // the Bloom merge when a store exists, awaited before the superstep
-      // closes (the next superstep unpersists the previous frontier this
-      // commit reads)
+      // metrics, seq watermark and the next frontier's row count — awaited
+      // before the superstep closes (the next superstep unpersists the
+      // previous frontier this commit reads)
       val commitFut = storage.map { s =>
         val fr = frontier; val frRows = nextFrontierSize; val sd = seenCommit
         val od = orderParts.lastOption.getOrElse(emptyOrder(spark))
@@ -1178,7 +1041,6 @@ object SparkCrawler {
       }
       commitFut.foreach(f =>
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-      awaitBloom()
 
       val wallMs = (System.nanoTime() - t0) / 1000000L
       steps += StepStat(d, frontierSize, fetched, failed, candTotal, passedCount, freshCount,
@@ -1190,7 +1052,7 @@ object SparkCrawler {
       // the seen delta no longer aliases it (hash-aligned copy) — release.
       // Before the alignment, deltas pinned every store for the crawl's
       // lifetime: Σ O(full frontier rows) off-heap, vs Σ O(hash rows) now.
-      if (alignSeen && consumedStore != null && (consumedStore ne frontierRaw) &&
+      if (consumedStore != null && (consumedStore ne frontierRaw) &&
           (consumedStore ne protectedStore))
         consumedStore.unpersist()
 

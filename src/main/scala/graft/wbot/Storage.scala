@@ -247,7 +247,7 @@ final class Storage(dir: String) {
   }
 
   /** Full seen set as of step d = plain union of the surviving committed
-    * deltas (layout-free view: Bloom rebuilds, result surfaces). Reads each
+    * deltas (layout-free view for result surfaces and checks). Reads each
     * commit separately — a single multi-path read would trip partition
     * discovery over the mixed plain/bucketed layouts — with wantP = -1 so no
     * per-bucket reconstruction happens. */

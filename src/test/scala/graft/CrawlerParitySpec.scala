@@ -175,65 +175,6 @@ class CrawlerParitySpec extends SparkSuite {
     pagesPrep.unpersist()
   }
 
-  test("default config builds no Bloom store: no job starts from BloomSeen") {
-    // the default broadcast regime never probes the store, so neither the
-    // per-superstep segment merge nor the resume rebuild may run; the
-    // forced two-leg split is the control that the call sites are caught
-    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(tiny), 4)
-    val oracle = Oracle.run(Fixtures.oraclePages(tiny), tinySeeds,
-      CrawlConfig(maxDepth = 3, partitions = 4))
-    def checkpointedCrawl(cfg: CrawlConfig): Vector[String] = {
-      val dir = java.nio.file.Files.createTempDirectory("wbot_bloom_gate").toString
-      val c = cfg.copy(checkpointDir = Some(dir))
-      var res: SparkCrawler.CrawlRun = null
-      val sites = jobCallSites {
-        SparkCrawler.runPrepared(spark, pagesPrep, tinySeeds, c.copy(maxSupersteps = 2))
-        res = SparkCrawler.resumePrepared(spark, pagesPrep, c)
-        res.order.count()
-      }
-      assertRunsEqual(oracle, res)
-      sites
-    }
-    val default = checkpointedCrawl(CrawlConfig(maxDepth = 3, partitions = 4))
-    assert(default.nonEmpty)
-    assert(!default.exists(_.contains("BloomSeen")),
-      s"default config started Bloom jobs: ${default.filter(_.contains("BloomSeen"))}")
-    val probed = checkpointedCrawl(CrawlConfig(maxDepth = 3, partitions = 4,
-      bloomTwoPassProbe = true))
-    assert(probed.exists(_.contains("BloomSeen")),
-      s"control: the probed config's Bloom jobs were not caught: ${probed.distinct}")
-    pagesPrep.unpersist()
-  }
-
-  test("parity: bloom disabled gives identical results") {
-    assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4, bloomEnabled = false))
-  }
-
-  test("parity: bloom activation threshold crossed mid-crawl (catch-up build)") {
-    // threshold crossed between supersteps: early depths run the bare
-    // anti-join, the crossing superstep bulk-builds segments over ALL deltas,
-    // later depths prefilter — results identical throughout. The forced
-    // two-leg split makes the store exist (and be probed) in the broadcast
-    // regime.
-    assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4,
-      bloomMinSeen = 60L, bloomTwoPassProbe = true))
-  }
-
-  test("parity: broadcast bloom two-leg probe split gives identical results") {
-    // the default broadcast regime runs the single-pass exact anti-join;
-    // forcing the two-leg split (sure rows bypass the anti-join) must be
-    // result-identical — bloom has no false negatives
-    assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4,
-      bloomTwoPassProbe = true))
-  }
-
-  test("parity: distributed bloom segments (pid-co-partitioned join path)") {
-    // broadcastMaxBytes = 0 forces the 10^10-scale strategy: candidates
-    // shuffle on pid and hash-join their own segment row
-    assertParity(tiny, tinySeeds,
-      CrawlConfig(maxDepth = 3, partitions = 4, bloomBroadcastMaxBytes = 0L))
-  }
-
   test("parity: score-priority drain is schedule-only (order/seen/metrics invariant)") {
     // O2: a non-constant drain priority must change interval slots but NEVER
     // crawl order, the seen set, or the counters
@@ -332,6 +273,9 @@ class CrawlerParitySpec extends SparkSuite {
     // both proxies in use, each branch sticky to its seed's proxy
     val used = run.order.select("proxy").collect().map(_.getString(0)).toSet
     assert(used == Set("http://proxy1:8080", "http://proxy2:8080"))
+    // more than 64 user agents: the candidate exchange ships the strings
+    // instead of dictionary indexes
+    assertParity(tiny, tinySeeds, cfg.copy(userAgents = Vector.tabulate(65)(i => s"UA-$i/1.0")))
   }
 
   test("parity: maxBodySize truncation changes extraction identically") {

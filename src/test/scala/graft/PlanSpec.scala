@@ -251,21 +251,6 @@ class PlanSpec extends SparkSuite {
     } finally prep.unpersist()
   }
 
-  test("broadcast Bloom probe is a codegen'd native expression (no scala UDF)") {
-    import spark.implicits._
-    val store = new graft.wbot.BloomSeen.SegmentStore(spark, 4, 1024, 256L << 20)
-    store.update((1L to 500L).toDF("hash64"))
-    // Range scan (not a LocalRelation): the probe projection must survive
-    // into the physical plan instead of being constant-folded driver-side
-    val cand = spark.range(400L, 601L).withColumnRenamed("id", "hash64")
-    val marked = store.withMight(cand, col("hash64"))
-    val rows = marked.collect().map(r => (r.getLong(0), r.getBoolean(1)))
-    assert(rows.filter(_._1 <= 500L).forall(_._2), "false negative in bloom probe")
-    val plan = planOf(marked)
-    assert(!plan.contains("UDF"), s"bloom probe fell back to a scala UDF:\n$plan")
-    assert(plan.contains("wbot_bloom_might_contain"), plan)
-  }
-
   test("seen anti-join: aligned delta union needs NO exchange or sort on the seen side") {
     import spark.implicits._
     import org.apache.spark.sql.graftbridge.DatasetBridge

@@ -17,7 +17,7 @@ class PrepSnapshotSpec extends SparkSuite {
 
   test("stored prep crawls byte-identical to in-session prep; read is sort/shuffle/canonicalize-free") {
     val spec = Fixtures.SiteSpec(nHosts = 3, pagesPerHost = 8)
-    val cfg = Schemas.CrawlConfig(maxDepth = 2, partitions = 4, bloomMinSeen = 100000L)
+    val cfg = Schemas.CrawlConfig(maxDepth = 2, partitions = 4)
     val dir = java.nio.file.Files.createTempDirectory("prep_snap").toString + "/pages"
 
     val prep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)

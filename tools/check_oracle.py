@@ -28,7 +28,7 @@ def canon_df(df: pd.DataFrame) -> pd.DataFrame:
                 return ''
             return repr(round(v, 9))
         return str(v)
-    out = df.applymap(norm)
+    out = df.map(norm)
     if len(out):
         out = out.sort_values(by=list(out.columns), kind='mergesort').reset_index(drop=True)
     return out
