@@ -89,18 +89,13 @@ object OpsExprEval {
   private val suffixA = "#a".getBytes("UTF-8")
   private val suffixB = "#b".getBytes("UTF-8")
 
-  /** All 64 engine-portable SimHash bit votes of one token as ONE int64:
-    * bit i (i < 32) = high bit of hex char i of md5(tok ⊕ "#a"), bit 32+i =
-    * same over md5(tok ⊕ "#b") — exactly `substring(md5hex, i+1, 1) >= "8"`
-    * of the previous per-bit construction (lowercase hex: char ≥ '8' ⟺ the
-    * nibble's high bit; hex char 2k is byte k's bit 7, char 2k+1 its bit 3).
-    * md5 over the UTF-8 bytes ≡ Spark's `md5(concat(tok, lit("#x")))` (UTF-8
-    * string concat is byte concat). */
-  def simhashTokenBits(tok: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val t = tok.getBytes
-    tokenBits(t, 0, t.length)
-  }
-
+  /** All 64 engine-portable SimHash bit votes of the token `b[off, off+len)`
+    * as ONE int64: bit i (i < 32) = high bit of hex char i of md5(tok ⊕
+    * "#a"), bit 32+i = same over md5(tok ⊕ "#b") — exactly
+    * `substring(md5hex, i+1, 1) >= "8"` of the per-bit construction
+    * (lowercase hex: char ≥ '8' ⟺ the nibble's high bit; hex char 2k is byte
+    * k's bit 7, char 2k+1 its bit 3). md5 over the UTF-8 bytes ≡ Spark's
+    * `md5(concat(tok, lit("#x")))` (UTF-8 string concat is byte concat). */
   private def tokenBits(b: Array[Byte], off: Int, len: Int): Long = {
     val md = md5Local.get()
     md.reset(); md.update(b, off, len); md.update(suffixA)
@@ -306,10 +301,6 @@ object OpsExprs {
   def quantizedDot(a: Column, b: Column): Column =
     ColumnBridge.column(QuantizedDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Kept only as OpsExprSpec's intermediate per-token pin; no query uses it. */
-  private[graft] def simhashTokenBits(tok: Column): Column =
-    ColumnBridge.column(SimhashTokenBits(ColumnBridge.expression(tok)))
-
   def minhashDocSigs(text: Column, width: Int, numHashes: Int): Column =
     ColumnBridge.column(MinhashDocSigs(ColumnBridge.expression(text), width, numHashes))
 
@@ -364,31 +355,6 @@ case class LshBandKeys(child: Expression, bands: Int, bitsPerBand: Int, dims: In
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "lsh_band_keys"
-}
-
-/** `simhash_token_bits(tok)` → bigint of the token's 64 md5-derived SimHash
-  * bits (see [[OpsExprEval.simhashTokenBits]]). Kept only as the
-  * intermediate OpsExprSpec pin between the per-bit md5-substring
-  * construction and [[SimhashDocHex]], which shares its bit function; no
-  * query plans it. */
-private[graft] case class SimhashTokenBits(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(input: Any): Any =
-    OpsExprEval.simhashTokenBits(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ops.exprs.OpsExprEval.simhashTokenBits($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "simhash_token_bits"
 }
 
 /** `token_set_counts(text)` → array<bigint> of per-set marker-token counts

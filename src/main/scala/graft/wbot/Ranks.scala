@@ -10,31 +10,28 @@ import org.apache.spark.sql.functions._
  * `seq` column WITHOUT a single-partition window (which would serialize the
  * whole frontier through one task at 10^10 scale).
  *
- * Pattern: range-partition by the sort keys, rank within partitions, then add
- * per-partition offsets (the tiny per-partition counts are the only thing
- * that crosses the driver). Wall-clock cost is one range shuffle + one narrow
- * window per call; every stage is fully parallel.
+ * Pattern: range-partition by the leading sort key, rank within partitions,
+ * then add per-partition offsets (the tiny per-partition counts are the only
+ * thing that crosses the driver). Wall-clock cost is one range shuffle + one
+ * narrow window per call; every stage is fully parallel.
  */
 object Ranks {
 
-  /**
-   * Adds `outCol` = 1-based dense global row number of `df` ordered by `keys`
-   * (which must be unique per row). Scales: no global single-partition window.
-   */
-  def globalRank(df: DataFrame, keys: Seq[Column], outCol: String, numPartitions: Int): DataFrame =
-    globalRankWithCount(df, keys, outCol, numPartitions).df
-
-  /** Ranked output plus the total row count (free from the offset pass) and
-    * the internal range-partitioned cache handle so callers can unpersist it
-    * once downstream results are materialized. */
-  final case class RankResult(df: DataFrame, total: Long, cached: DataFrame)
+  /** Ranked output plus the total row count (free from the offset pass).
+    * `cached` is the lineage-cut leaf over the range-partitioned bucket
+    * store — `df` and any further views read it without their plans
+    * compounding; `persisted` is the Dataset that holds the store's blocks:
+    * `persisted.unpersist()` frees them once nothing reads `df` or `cached`
+    * any more (`cached` is a leaf, not a cached plan, so unpersisting it
+    * frees nothing). */
+  final case class RankResult(df: DataFrame, total: Long, cached: DataFrame,
+      persisted: DataFrame)
 
   /**
    * SAMPLING-FREE global rank for sort keys led by a dense integer column
    * whose value range [lo, hi) is already known (the crawl frontier: parent
    * seqs are consecutive by construction, so the range is driver state, not a
-   * sampling job). vs [[globalRankWithCount]] this removes the
-   * repartitionByRange sampling pass and one of the two input caches:
+   * sampling job), so no repartitionByRange sampling pass is needed:
    *
    *   - bucket = monotone linear map of `seqCol` over its known range (a
    *     range partitioning with ZERO sampling — the bucket id is a codegen'd
@@ -91,43 +88,6 @@ object Ranks {
     val out = parted
       .withColumn(outCol, row_number().over(w).cast("long") + offsetExpr)
       .drop("__pid")
-    RankResult(out, total, parted)
-  }
-
-  /** As [[globalRank]], but also returns the total row count — already known
-    * from the per-partition offsets, so callers that need `count()` anyway
-    * save one action. Prefer [[denseRangeRank]] when the leading key's value
-    * range is already known (no sampling pass, no cache, no driver actions). */
-  def globalRankWithCount(df: DataFrame, keys: Seq[Column], outCol: String,
-      numPartitions: Int): RankResult = {
-    // cache the INPUT: repartitionByRange adds a sampling pass, which would
-    // otherwise recompute the (typically expensive) upstream chain twice.
-    // Off-heap when available: these are bulk row caches, not driver state.
-    val offHeap = org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.memory.offHeap.enabled").contains("true")
-    val in = df.persist(
-      if (offHeap) org.apache.spark.storage.StorageLevel.OFF_HEAP
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val ranged = in.repartitionByRange(math.max(1, numPartitions), keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-partition counts → cumulative offsets (≤ numPartitions rows cross
-    // the driver — the only non-distributed state)
-    val counts = ranged.groupBy(col("__pid")).count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var total = 0L
-    val offsets: Map[Int, Long] =
-      counts.map { case (pid, c) => val o = (pid, total); total += c; o }.toMap
-    in.unpersist() // ranged is materialized by the counts action above
-    // literal-map lookup (≤ numPartitions entries): stays inside whole-stage
-    // codegen, unlike a per-row Scala UDF
-    val offsetExpr =
-      if (offsets.isEmpty) lit(0L)
-      else coalesce(element_at(typedlit(offsets), col("__pid")), lit(0L))
-    val w = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-    val out = ranged
-      .withColumn(outCol, row_number().over(w).cast("long") + offsetExpr)
-      .drop("__pid")
-    RankResult(out, total, ranged)
+    RankResult(out, total, parted, parted0)
   }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.graftbridge.DatasetBridge
-import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import Schemas._
 
 /**
@@ -37,6 +38,13 @@ object SparkCrawler {
       candidates: Long, passedFilters: Long, fresh: Long, intervals: Int, wallMs: Long,
       generatedCode: Boolean = true)
 
+  /** A crawl's results. The only caches a run leaves registered are the
+    * ones these views read: for `seen`, its in-memory deltas (the small
+    * persisted projections, the canon-aligned stores and the last
+    * expansion's rank bucket store); for `order` and `attempts`, one
+    * order-stream checkpoint per superstep when `recordStreams` is on.
+    * Parts reloaded by a resume are parquet reads. The pages cache stays the
+    * caller's ([[runPrepared]]) or is released ([[run]]). */
   final case class CrawlRun(
       order: DataFrame, // seq,url,canon,hash,depth,status,superstep,interval,ua — sort by seq = reference order
       attempts: DataFrame, // every fetch attempt incl. misses
@@ -230,17 +238,6 @@ object SparkCrawler {
   private def scoreCol(cfg: CrawlConfig) =
     cfg.scoreExpr.map(e => coalesce(expr(e).cast("long"), lit(0L))).getOrElse(lit(0L))
 
-  /** The loop's starting point. `frontierSize` is the frontier's exact row
-    * count, known on the driver wherever a frontier is born (seed list,
-    * previous superstep's fresh count, manifest), so no count job measures
-    * it. */
-  private final case class State(
-      frontier: DataFrame, frontierSize: Long, loadedDeltas: Seq[Storage.LoadedDelta],
-      metrics: mutable.Map[String, Long], seqBase: Long, startDepth: Int,
-      orderParts: mutable.ArrayBuffer[DataFrame],
-      attemptParts: mutable.ArrayBuffer[DataFrame],
-      seenBaseStep: Int = -1)
-
   def run(spark: SparkSession, pages: DataFrame, seeds: Seq[String], cfg: CrawlConfig,
       saltedPoliteness: Boolean = false): CrawlRun = {
     val pagesPrep = preparePages(pages, cfg.partitions)
@@ -280,15 +277,12 @@ object SparkCrawler {
   def runPrepared(spark: SparkSession, pagesPrep: DataFrame, seeds: Seq[String],
       cfg: CrawlConfig, saltedPoliteness: Boolean = false): CrawlRun = {
     // seedFrontier keeps every seed or throws: its row count is seeds.size
-    val frontier = seedFrontier(spark, seeds, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    val seqBase = seeds.size.toLong
-    val m = mutable.Map(
-      "total_requests" -> 0L, "successful_requests" -> 0L, "failed_requests" -> 0L,
-      "total_link" -> 0L, "crawled_link" -> 0L, "skipped_link" -> 0L,
-      "duplicated_link" -> 0L)
+    val frontier = Frontier.persisted(seedFrontier(spark, seeds, cfg), Some(seeds.size.toLong))
+    val metrics = Seq("total_requests", "successful_requests", "failed_requests",
+      "total_link", "crawled_link", "skipped_link", "duplicated_link").map(_ -> 0L).toMap
     crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
-      State(frontier, seqBase, Nil, m, seqBase, 0,
-        mutable.ArrayBuffer.empty, mutable.ArrayBuffer.empty))
+      Crawl(0, frontier, SeenSet.load(spark, cfg, Nil, 0L, -1), seeds.size.toLong, metrics,
+        Vector.empty, Vector.empty, Vector.empty))
   }
 
   /** Resume from the last committed superstep in cfg.checkpointDir: reload
@@ -308,20 +302,21 @@ object SparkCrawler {
       throw new IllegalArgumentException("resume requires checkpointDir")))
     val snap = st.readManifest().getOrElse(
       throw new IllegalStateException("no committed snapshot to resume from"))
-    val frontier = st.readFrontier(spark, snap.lastStep).persist(StorageLevel.MEMORY_AND_DISK)
     // a manifest written before `frontier_rows` existed pays one count
-    val frontierSize = snap.frontierRows.getOrElse(frontier.count())
-    val alignP = cfg.seenAlignPartitions.getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val deltas = st.readSeenDeltas(spark, snap.lastStep, snap.seenBaseStep, alignP, seenRowBytes)
-    val orderParts = mutable.ArrayBuffer.empty[DataFrame]
-    st.readCrawled(spark, snap.lastStep).foreach(orderParts += _)
-    val attemptParts = mutable.ArrayBuffer.empty[DataFrame]
-    st.readAttempts(spark, snap.lastStep).foreach(attemptParts += _)
+    val frontier = Frontier.persisted(st.readFrontier(spark, snap.lastStep), snap.frontierRows)
+    val deltas = st.readSeenDeltas(spark, snap.lastStep, snap.seenBaseStep,
+      SeenSet.width(spark, cfg), seenRowBytes)
+    val seen = SeenSet.load(spark, cfg, deltas, snap.metrics.getOrElse("crawled_link", 0L),
+      snap.seenBaseStep)
     crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
-      State(frontier, frontierSize, deltas, mutable.Map(snap.metrics.toSeq: _*),
-        snap.seqBase, snap.lastStep + 1, orderParts, attemptParts, snap.seenBaseStep))
+      Crawl(snap.lastStep + 1, frontier, seen, snap.seqBase, snap.metrics,
+        st.readCrawled(spark, snap.lastStep).toVector,
+        st.readAttempts(spark, snap.lastStep).toVector, Vector.empty))
   }
+
+  /** Estimated unsafe-row bytes of a (canon, hash, hash64) seen row — feeds
+    * the leaf stats so a small seen side stays broadcastable. */
+  private val seenRowBytes = 160L
 
   /** Materialize a seen delta HASH-PARTITIONED on its join key: one
     * O(delta) repartition + accounted persist at birth, lineage-cut with the
@@ -330,23 +325,10 @@ object SparkCrawler {
     * analogue of appending to a bucketed seen table — SURVEY §1.1/§4.3),
     * where the unaligned design re-shuffled the FULL seen set every
     * superstep: O(seen) per superstep, quadratic cumulative. */
-  /** Estimated unsafe-row bytes of a (canon, hash, hash64) seen row — feeds
-    * the leaf stats so a small seen side stays broadcastable. */
-  private val seenRowBytes = 160L
-
-  /** The seen set is keyed by CANON, not by the sha-256 `hash`: hash is a
-    * deterministic function of canon (`UrlFuncs.sha256hex(canon)` ≡
-    * `sha2(canon, 256)`), so grouping by canon is dedup-equivalent while the
-    * 64-char hex hash — incompressible, ~30% of the candidate shuffle's wire
-    * bytes — stays OUT of the per-superstep window shuffle and is recomputed
-    * by a codegen'd `sha2` on the (much smaller) post-dedup fresh set. The
-    * one formal divergence from the reference's hash-keyed store — two
-    * DISTINCT canons sharing a sha-256 digest would dedup there and not here
-    * — requires a sha-256 collision. */
   private def alignDelta(delta: DataFrame, p: Int): DataFrame = {
     val parted = delta.repartition(p, col("canon")).persist(bulkLevel)
     val n = parted.count()
-    org.apache.spark.sql.graftbridge.DatasetBridge.lineageCutPartitioned(
+    DatasetBridge.lineageCutPartitioned(
       parted, Seq("canon"), p, Some((n, math.max(1L, n * seenRowBytes))))
   }
 
@@ -369,706 +351,724 @@ object SparkCrawler {
   private[graft] val interpretedRowsBound =
     new scala.util.DynamicVariable[Long](Politeness.RowsPerTask)
 
-  private def crawlLoop(spark: SparkSession, pagesPrep: DataFrame, cfg: CrawlConfig,
-      saltedPoliteness: Boolean, st0: State): CrawlRun = {
-    import spark.implicits._
-    var frontier = st0.frontier
-    // join-width alignment: deltas are partitioned at cfg.seenAlignPartitions
-    // (default: the session's shuffle width) so the anti-join's candidate
-    // side (the first-occurrence window's shuffle) and the seen side line up
-    // with no extra exchange; see CrawlConfig for the at-scale sizing rule
-    val alignP = cfg.seenAlignPartitions.getOrElse(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    // seen-set size below which the anti-join's seen side broadcasts — also
-    // the bound below which per-superstep delta ALIGNMENT is deferred (a
-    // broadcast side needs no layout, so tiny supersteps skip the alignP-wide
-    // side job entirely; the accumulated smalls are folded into one aligned
-    // store the first time the bound is crossed)
-    val smallSeenBound = cfg.smallSeenBound
-    // ALIGNED deltas (canon-hash-partitioned at alignP — the aligned-union
-    // view's inputs) and DEFERRED small deltas (unaligned stats-bearing
-    // leaves over tiny persisted projections: while the accumulated seen set
-    // fits the broadcast bound nothing needs a layout, so shallow supersteps
-    // skip the alignP-wide alignment side job — the round-4 d0–d2 floor paid
-    // one 160-task job per tiny superstep for a layout no join ever used)
-    val seenDeltas = mutable.ArrayBuffer.empty[DataFrame]
-    val smallDeltas = mutable.ArrayBuffer.empty[DataFrame]
-    val smallCaches = mutable.ArrayBuffer.empty[DataFrame]
-    if (st0.loadedDeltas.nonEmpty && st0.metrics.getOrElse("crawled_link", 0L) > 0L) {
-      def proj(df: DataFrame) = df.select(col("canon"), col("hash"), col("hash64"))
-      if (st0.metrics("crawled_link") > smallSeenBound) {
-        // invariant past the bound: every delta aligned. Bucket-committed
-        // deltas already reconstruct as zero-shuffle aligned leaves
-        // (Storage.readSeenDeltas); only the unaligned residue — small
-        // pre-fold deltas, the final expansion's plain commit — pays one
-        // O(residue) re-shuffle, where the pre-round-5 resume re-aligned
-        // the FULL seen set.
-        val (ok, residue) = st0.loadedDeltas.partition(_.aligned)
-        seenDeltas ++= ok.map(_.df)
-        if (residue.nonEmpty)
-          seenDeltas += alignDelta(residue.map(ld => proj(ld.df)).reduce(_ unionByName _), alignP)
+  /** What one superstep hands the next: the depth it runs at, its frontier,
+    * the seen set, the seq watermark, the 7 counters, the recorded order and
+    * attempts streams (committed parts first on a resume) and the stats of
+    * the supersteps run so far. */
+  private final case class Crawl(depth: Int, frontier: Frontier, seen: SeenSet, seqBase: Long,
+      metrics: Map[String, Long], order: Vector[DataFrame], attempts: Vector[DataFrame],
+      steps: Vector[StepStat])
+
+  /** The frontier a superstep consumes. `rows` is its exact row count, known
+    * on the driver wherever a frontier is born (seed list, previous
+    * superstep's fresh count, manifest), so no count job measures it. `raw`
+    * is the UNRANKED bucket store an expansion left: rank-invariant
+    * consumers (the prune probe, the terminal hit count) read it and skip
+    * the seq-window sort. `owned` is the persisted Dataset the frontier
+    * releases once the superstep that consumes it is done: the seed or
+    * resumed frontier itself, or the rank bucket store — None when that store
+    * doubles as a seen delta, which the [[SeenSet]] then owns. `prunePids`
+    * are the frontier's distinct pages-cache bucket ids when the rank job
+    * that made it observed them (zero extra jobs). */
+  private final case class Frontier(df: DataFrame, rows: Long, raw: Option[DataFrame] = None,
+      owned: Option[DataFrame] = None, prunePids: Option[Set[Int]] = None) {
+    def release(): Unit = owned.foreach(_.unpersist())
+  }
+
+  private object Frontier {
+    /** A seed or resumed frontier of `rows` rows (counted when None):
+      * persisted here, owned by the frontier. */
+    def persisted(df: DataFrame, rows: Option[Long]): Frontier = {
+      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+      Frontier(cached, rows.getOrElse(cached.count()), owned = Some(cached))
+    }
+
+    def empty(spark: SparkSession): Frontier = {
+      import spark.implicits._
+      Frontier(spark.emptyDataset[FrontierRow].toDF, 0L)
+    }
+  }
+
+  /** The crawl's seen set, and the one place that knows its layout.
+    *
+    * It is a LIST of materialized deltas. While the accumulated set fits the
+    * broadcast bound (`CrawlConfig.smallSeenBound`), each delta stays a
+    * SMALL stats-bearing leaf over a tiny persisted projection, and the
+    * anti-join broadcasts their plain union: nothing needs a layout, so
+    * shallow supersteps skip the alignP-wide alignment side job, and no
+    * fixed-partition leaf next to the join pins the probe side to full
+    * width (which stops AQE coalescing the shallow supersteps' tiny
+    * candidate stages — measured on the deep bench's d0-d3 floor). The
+    * superstep that crosses the bound FOLDS every small delta plus its own
+    * into one store hash-aligned on canon at `alignP` ([[alignDelta]]);
+    * past the bound each delta is aligned at birth as a concurrent side
+    * job. On a real cluster this is an append to the bucketed seen table,
+    * and `Storage` commits exactly these aligned deltas. Invariant: past
+    * the bound every delta is aligned. The LAST expansion's delta has no
+    * anti-join consumer (the next superstep only fetches — Q5), so it is
+    * the rank bucket store itself (`last`), never aligned: the single
+    * biggest delta of a geometric crawl is not copied.
+    *
+    * @param rows its size == crawled_link (every fresh candidate is marked
+    *   seen; seeds are not)
+    * @param smallCaches the persisted projections behind `small`, released
+    *   by the fold
+    * @param baseStep the step whose committed delta supersedes all earlier
+    *   ones (the fold's compaction point); -1 until a fold commits */
+  private final case class SeenSet(aligned: Vector[DataFrame], small: Vector[DataFrame],
+      smallCaches: Vector[DataFrame], last: Option[DataFrame], rows: Long, baseStep: Int,
+      alignP: Int, bound: Long) {
+
+    /** The anti-join's seen side. Small: the PLAIN union of the delta
+      * leaves, broadcastable. Past the bound: the partition-wise union of
+      * the aligned deltas — ONE leaf with the canon partitioning still
+      * visible to Catalyst — pinned to a shuffled-hash join whose BUILD is
+      * one aligned partition (seen/P rows per task; P is sized so that fits,
+      * ~60 MB at 10^10 keys with P=16384) and whose probe side reuses the
+      * first-occurrence window's hash partitioning: no exchange and no sort
+      * on the seen side at any seen size, and AQE's compressed-size
+      * broadcast estimates (the round-3 OOM) never see an exchange to
+      * convert. */
+    def joinSide(spark: SparkSession): DataFrame =
+      if (rows <= bound)
+        (aligned ++ small).map(_.select("canon")).reduceOption(_ unionByName _)
+          .getOrElse(SeenSet.empty(spark).select("canon"))
+      else {
+        val union =
+          if (aligned.isEmpty) SeenSet.empty(spark)
+          else DatasetBridge.alignedUnion(aligned, Seq("canon"), alignP,
+            Some((rows, math.max(1L, rows * seenRowBytes))))
+        union.select("canon").hint("shuffle_hash")
+      }
+
+    /** The layout-free union of every delta: `CrawlRun.seen`. */
+    def view(spark: SparkSession): DataFrame =
+      (aligned ++ last ++ small).reduceOption(_ unionByName _).getOrElse(SeenSet.empty(spark))
+
+    /** Adds one expansion's `fresh` rows, read from its rank bucket leaf
+      * `store`, at superstep `step`. */
+    def add(spark: SparkSession, store: DataFrame, fresh: Long, lastExpansion: Boolean,
+        step: Int): SeenUpdate = {
+      val delta = store.select(col("canon"), col("hash"), col("hash64"))
+      val total = rows + fresh
+      def commit(df: DataFrame, p: Option[Int], n: Long, supersedes: Boolean) =
+        if (n > 0L) Some(Storage.SeenCommit(df, p, n, supersedes)) else None
+      if (lastExpansion)
+        SeenUpdate(Future.successful((copy(last = Some(delta), rows = total),
+          commit(delta, None, fresh, supersedes = false))), ownsStore = true)
+      else if (total > bound) {
+        // a fold covers every seen row so far (`aligned` is empty while
+        // smalls exist), so its commit SUPERSEDES all earlier seen commits:
+        // the manifest's seen_base_step advances and a resume reads one
+        // bucketed store instead of d small parquets. The commit is the
+        // ALIGNED store itself (one bucket dir per partition — resume
+        // reconstructs the layout with zero shuffle).
+        val supersedes = small.nonEmpty
+        SeenUpdate(sideJob(spark) {
+          val a = alignDelta((small :+ delta).reduce(_ unionByName _), alignP)
+          smallCaches.foreach(_.unpersist())
+          (copy(aligned = aligned :+ a, small = Vector.empty, smallCaches = Vector.empty,
+            rows = total, baseStep = if (supersedes) step else baseStep),
+            commit(a, Some(alignP), if (supersedes) total else fresh, supersedes))
+        }, ownsStore = false)
       } else {
-        // below the broadcast bound nothing needs a layout: every loaded
-        // delta stays a small parquet leaf (file stats make it
-        // broadcastable), and seenDeltas stays EMPTY so a later crossing
-        // fold genuinely covers all seen rows (supersedesPrior contract)
-        smallDeltas ++= st0.loadedDeltas.map(ld => proj(ld.df))
+        val cache = delta.persist(bulkLevel)
+        val leaf = DatasetBridge.lineageCut(cache,
+          Some((fresh, math.max(1L, fresh * seenRowBytes))))
+        SeenUpdate(Future.successful((copy(small = small :+ leaf,
+          smallCaches = smallCaches :+ cache, rows = total),
+          commit(leaf, None, fresh, supersedes = false))), ownsStore = false)
       }
     }
-    def emptySeen: DataFrame =
-      spark.emptyDataset[(String, String, Long)].toDF("canon", "hash", "hash64")
-    def seen: DataFrame =
-      (seenDeltas ++ smallDeltas).reduceOption(_ unionByName _).getOrElse(emptySeen)
-    // the anti-join view past the broadcast bound: partition-wise union of
-    // the aligned deltas — ONE leaf with the canon partitioning still
-    // visible to Catalyst. Invariant: when seenTotal > smallSeenBound every
-    // delta is aligned (smalls are folded at the crossing superstep).
-    def seenForJoin(totalRows: Long): DataFrame =
-      if (seenDeltas.isEmpty) emptySeen
-      else org.apache.spark.sql.graftbridge.DatasetBridge
-        .alignedUnion(seenDeltas.toSeq, Seq("canon"), alignP,
-          Some((totalRows, math.max(1L, totalRows * seenRowBytes))))
-    val m = st0.metrics
-    var seqBase = st0.seqBase
-    // the step whose committed seen delta supersedes all earlier ones (the
-    // bound-crossing fold's compaction point); -1 until a fold commits
-    var seenBaseStep = st0.seenBaseStep
-    val orderParts = st0.orderParts
-    val attemptParts = st0.attemptParts
-    val steps = mutable.ArrayBuffer.empty[StepStat]
-    val storage = cfg.checkpointDir.map(new Storage(_))
-    storage.foreach(_.init())
+  }
 
-    // pages-cache bucket count: the fetch join's pruning granularity (equals
-    // cfg.partitions when the prep came from this config; derived from the
-    // actual layout so externally-prepared snapshots are safe). The cached
-    // plan declares it, so no job reads it; only a pages side that is not a
-    // hash-partitioned cache pays `.rdd`, which under AQE runs its shuffle.
-    val pagesP = DatasetBridge.cacheFacts(pagesPrep).hashPartitions
-      .getOrElse(pagesPrep.rdd.getNumPartitions)
-    val codegenBound = interpretedRowsBound.value
+  private object SeenSet {
+    /** The alignment width: `CrawlConfig.seenAlignPartitions`, by default
+      * the session's shuffle width, so the anti-join's candidate side (the
+      * first-occurrence window's shuffle) and the seen side line up with no
+      * extra exchange; see CrawlConfig for the at-scale sizing rule. */
+    def width(spark: SparkSession, cfg: CrawlConfig): Int =
+      cfg.seenAlignPartitions.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
+    def empty(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      spark.emptyDataset[(String, String, Long)].toDF("canon", "hash", "hash64")
+    }
+
+    /** The seen set of `rows` rows committed as `loaded` (empty for a new
+      * crawl). Past the bound every delta must be aligned: bucket-committed
+      * deltas already reconstruct as zero-shuffle aligned leaves
+      * (Storage.readSeenDeltas), and only the unaligned residue — small
+      * pre-fold deltas, the final expansion's plain commit — pays one
+      * O(residue) re-shuffle. Below it every loaded delta stays a small
+      * parquet leaf (file stats make it broadcastable), and `aligned` stays
+      * EMPTY so a later crossing fold genuinely covers all seen rows. */
+    def load(spark: SparkSession, cfg: CrawlConfig, loaded: Seq[Storage.LoadedDelta],
+        rows: Long, baseStep: Int): SeenSet = {
+      val empty = SeenSet(Vector.empty, Vector.empty, Vector.empty, None, rows, baseStep,
+        width(spark, cfg), cfg.smallSeenBound)
+      def proj(df: DataFrame) = df.select(col("canon"), col("hash"), col("hash64"))
+      if (loaded.isEmpty || rows <= 0L) empty
+      else if (rows > cfg.smallSeenBound) {
+        val (ok, residue) = loaded.partition(_.aligned)
+        empty.copy(aligned = ok.map(_.df).toVector ++ residue.map(ld => proj(ld.df))
+          .reduceOption(_ unionByName _).map(alignDelta(_, empty.alignP)))
+      } else empty.copy(small = loaded.map(ld => proj(ld.df)).toVector)
+    }
+  }
+
+  /** One expansion's seen-set update. `landed` completes with the new set
+    * and the delta this superstep commits, once a concurrent alignment (if
+    * any) is done; `ownsStore`: the rank bucket store is now a seen delta,
+    * so its frontier must not release it. */
+  private final case class SeenUpdate(
+      landed: Future[(SeenSet, Option[Storage.SeenCommit])], ownsStore: Boolean)
+
+  /** The fetch join's pages side: the prepared cache and its bucket count,
+    * the fetch join's pruning granularity (equal to cfg.partitions when the
+    * prep came from this config; derived from the actual layout so
+    * externally-prepared snapshots are safe). The cached plan declares it,
+    * so no job reads it; only a pages side that is not a hash-partitioned
+    * cache pays `.rdd`, which under AQE runs its shuffle. */
+  private final class Pages(val prep: DataFrame) {
+    val buckets: Int = DatasetBridge.cacheFacts(prep).hashPartitions
+      .getOrElse(prep.rdd.getNumPartitions)
+
+    /** The row count of the built cache (None before it is built). */
+    def rows: Option[Long] = DatasetBridge.cacheFacts(prep).rows
+
+    /** The pages-cache partition a canon hashes to. */
+    def bucketOf(canon: Column): Column = pmod(hash(canon), lit(buckets)).cast("int")
+
     // runPrepared's layout contract, machine-checked on a sampled prefix the
     // first time pruning would fire (lazy: one tiny job per crawl, and only
     // when pruning matters): every sampled row must sit in partition
     // pmod(hash(canon), P). An externally-prepared snapshot with a matching
     // partition COUNT but a different layout would otherwise be silently
     // pruned into failed fetches; instead it crawls unpruned (correct).
-    lazy val pagesLayoutOk: Boolean = {
-      val bad = pagesPrep
-        .select(spark_partition_id().as("__pid"),
-          pmod(hash(col("canon")), lit(pagesP)).cast("int").as("__want"))
+    private lazy val layoutOk: Boolean = {
+      val bad = prep
+        .select(spark_partition_id().as("__pid"), bucketOf(col("canon")).as("__want"))
         .limit(1000).where(col("__pid") =!= col("__want")).count()
       if (bad > 0)
-        System.err.println(s"[wbot] pagesPrep layout is not HashPartitioning(canon, $pagesP) " +
+        System.err.println(s"[wbot] pagesPrep layout is not HashPartitioning(canon, $buckets) " +
           s"($bad of <=1000 sampled rows misplaced) — frontier-bucket pruning disabled")
       bad == 0L
     }
 
-    // the NEXT frontier's distinct pages-cache bucket ids, harvested for
-    // free from the rank job's map stage (an observation) — so shallow
-    // supersteps prune the fetch join without a dedicated driver round-trip
-    var nextPids: Set[Int] = null
-    // a bucket store doubling as an (un-aligned) seen delta — never unpersist
-    var protectedStore: DataFrame = null
-
-    var d = st0.startDepth
-    var stepsRun = 0
-    // the current frontier's UNRANKED bucket store (rank-invariant consumers
-    // — the terminal hit count — read this and skip the seq-window sort);
-    // null when the frontier didn't come from an expansion (seeds, resume)
-    var frontierRaw: DataFrame = null
-    var frontierSize = st0.frontierSize
-    // size of the seen set == crawled_link (every fresh candidate is marked
-    // seen; seeds are not) — picks the seen side's shape without extra actions
-    var seenTotal = m("crawled_link")
-    while (d <= cfg.maxDepth && frontierSize > 0 && stepsRun < cfg.maxSupersteps) {
-      stepsRun += 1
-      val t0 = System.nanoTime()
-      // expected candidates per frontier row: the previous superstep's
-      // observed fan-out, default 16
-      val fanoutEst = steps.lastOption match {
-        case Some(p) if p.frontierSize > 0 && p.candidates > 0 =>
-          math.max(1.0, p.candidates.toDouble / p.frontierSize)
-        case _ => 16.0
-      }
-      // execution regime, from sizes the driver holds: a superstep whose
-      // rows fit one task runs without generated code (the whole superstep,
-      // side jobs included — each is awaited inside it)
-      val withCodegen = generatedCode(DatasetBridge.cacheFacts(pagesPrep).rows, frontierSize,
-        if (d < cfg.maxDepth) (frontierSize * fanoutEst).toLong else 0L, codegenBound)
-      def superstep(): Unit = {
-
-      // FAST TERMINAL SUPERSTEP: no expansion, no recorded streams, no
-      // strict drains — nothing downstream consumes the join payload, so the
-      // hit count is a column-pruned SEMI join (the html bytes never ride a
-      // cache) and politeness intervals (schedule-only metadata nothing
-      // records) are skipped entirely. Metrics are identical by definition.
-      // The count is also RANK-invariant, so it reads the raw bucket store
-      // when one exists — the biggest frontier of the whole crawl skips its
-      // seq-window sort entirely.
-      if (d >= cfg.maxDepth && !cfg.recordStreams && !cfg.strictPoliteness) {
-        m("total_requests") += frontierSize
-        val hitSrc = if (frontierRaw != null) frontierRaw else frontier
-        // count-only semi join: ship ONE column through the frontier-side
-        // exchange (canon, ~4x fewer bytes than the full store row) and pin
-        // the join shuffled-hash — the build is one aligned pages partition
-        // (corpus/P rows, no exchange, no sort on the cache side) and the
-        // probe side skips its sort too. On the biggest frontier of the crawl
-        // (the terminal depth is the geometric peak) SMJ's two sorts are pure
-        // waste: nothing downstream consumes an ordering.
-        val fetched = hitSrc.select("canon")
-          .join(pagesPrep.select("canon").hint("shuffle_hash"), Seq("canon"), "left_semi")
-          .count()
-        m("successful_requests") += fetched
-        m("failed_requests") += frontierSize - fetched
-        val oldFrontier = frontier
-        frontier = spark.emptyDataset[FrontierRow].toDF
-        // terminal count done (unless the store doubles as a seen delta)
-        if (frontierRaw != null && (frontierRaw ne protectedStore))
-          frontierRaw.unpersist()
-        frontierRaw = null
-        oldFrontier.unpersist()
-        storage.foreach { s =>
-          s.commitStep(d, frontier, 0L, None, emptyOrder(spark), emptyAttempts(spark),
-            m.toMap, seqBase, seenBaseStep)
-        }
-        steps += StepStat(d, frontierSize, fetched, frontierSize - fetched, 0L, 0L, 0L, 0,
-          (System.nanoTime() - t0) / 1000000L, withCodegen)
-        frontierSize = 0L
-        d += 1
-      } else {
-
-      // R1: politeness schedule — rate-interval slots within this depth.
-      // Job-count discipline: every driver action is a scheduling round-trip,
-      // so the per-superstep counters (interval span, hit count, candidate
-      // count, pass count) ride `observe()` metrics on jobs the loop must run
-      // anyway; only strict drains need the interval span EAGERLY (to build
-      // the per-interval union) and keep a real agg. frontierSize is carried
-      // exactly from the previous superstep's fresh count.
-      //
-      // CACHE DISCIPLINE (the 100 TB memory bound): on the default batch path
-      // (!strictPoliteness, !recordStreams) the whole superstep is ONE plan
-      // with ONE consumer, so NOTHING per-superstep is persisted — the fetch
-      // payload (html) streams through the extract map stage and is never
-      // cached, candidates live only in spill-safe shuffle files, and the
-      // rank is a zero-action range bucket (Ranks.denseRangeRank). Caches
-      // exist only where a second consumer does: `scheduled` when the order
-      // stream or strict drains re-read it, `joined` only under strict
-      // drains (whose per-slot unions are expensive to recompute).
-      val ivObs = new org.apache.spark.sql.Observation(s"iv_d${d}_s$stepsRun")
-      val cacheScheduled = cfg.strictPoliteness || cfg.recordStreams
-      // salt fan-out (salted mode only): 1 while the frontier fits one
-      // task, else from the previous superstep's observed skew
-      val prev = steps.lastOption
-      val saltFanout = Politeness.saltFanout(cfg, frontierSize,
-        prev.fold(0L)(_.frontierSize), prev.fold(0)(_.intervals), alignP)
-      val scheduled0 = Politeness.assignIntervals(frontier, cfg, saltedPoliteness, saltFanout)
-      val scheduled = {
-        val s = if (cfg.strictPoliteness) scheduled0
-          else scheduled0.observe(ivObs, max(col("interval")).as("max_iv"))
-        if (cacheScheduled) s.persist(StorageLevel.MEMORY_AND_DISK) else s
-      }
-      m("total_requests") += frontierSize
-      val strictIntervals =
-        if (cfg.strictPoliteness) {
-          val r = scheduled.agg(max(col("interval"))).first()
-          (if (r.isNullAt(0)) 0 else r.getInt(0)) + 1
-        } else 0
-
-      // FRONTIER-BUCKET PRUNING of the pages cache — the in-engine analogue
-      // of Iceberg bucket pruning (on a real cluster the bucketed pages
-      // table gives this via storage-partitioned joins; the reference
-      // analogue is that an HTTP GET touches ONE url, http_client.go:99-106,
-      // never the corpus). The cache is hash-partitioned on canon, so the
-      // frontier's distinct partition ids (a tiny agg over the cached
-      // frontier store — ≤ P ints cross the driver) bound which cache
-      // partitions the fetch join can possibly hit; the rest become empty
-      // scan tasks that never decompress a batch. Shallow supersteps (the
-      // per-superstep floor's biggest term) then cost ~O(frontier-buckets),
-      // not O(corpus). Only worthwhile while the frontier can miss buckets:
-      // past ~4·P random keys expected coverage is ≈ 98%, so skip the probe.
-      val pagesSide: DataFrame =
-        if (frontierSize < 4L * pagesP && pagesLayoutOk) {
-          // pid set from the previous rank job's observation when available
-          // (zero extra jobs); else one tiny distinct-collect over the
-          // cached frontier (seeds, resume)
-          val pids =
-            if (nextPids != null) nextPids
-            else {
-              val src = if (frontierRaw != null) frontierRaw else frontier
-              src.select(pmod(hash(col("canon")), lit(pagesP)).cast("int").as("__p"))
-                .distinct().collect().map(_.getInt(0)).toSet
-            }
-          if (pids.size < pagesP)
-            org.apache.spark.sql.graftbridge.DatasetBridge.prunedCacheScan(
-              pagesPrep, pids, Seq("canon"), pagesP, Seq("canon"))
-          else pagesPrep
-        } else pagesPrep
-      nextPids = null // consumed (applies to THIS frontier only)
-
-      // S2: the fetch = left join against the pages snapshot on canonical key.
-      // strictPoliteness physically drains one rate interval at a time
-      // (schedule-faithful); default joins the whole depth at once (the
-      // interval column still records the schedule).
-      //
-      // PINNED SORT-MERGE at every frontier size: a left join that keeps the
-      // frontier can only build its RIGHT side, so the only broadcast AQE can
-      // pick here is the pages cache itself — chosen from its COMPRESSED
-      // cached size, then built decompressed, html included, on the driver
-      // and every executor (BENCH/BASELINE.md: the whole corpus on every
-      // fetch join of a small crawl; peak heap halves once pinned). The
-      // merge join reads the hash-partitioned, canon-sorted pages side in
-      // place — no exchange, no sort — and exchanges and sorts only the
-      // frontier.
-      def fetchJoin(fr: DataFrame): DataFrame =
-        fr.hint("merge").join(pagesSide.drop("hash64"), Seq("canon"), "left")
-      val fetchObs = new org.apache.spark.sql.Observation(s"fetch_d${d}_s$stepsRun")
-      val joined0 = (
-        if (cfg.strictPoliteness && strictIntervals > 1) {
-          // wall-clock pacing (limiter.go:52-59 semantics): slot i's fetch is
-          // MATERIALIZED no earlier than i × slot-length; safe slot length =
-          // the longest configured budget interval
-          val slotMs =
-            if (cfg.paceWallClock) cfg.rateLimits.values.map(_.intervalMs).max else 0L
-          val tPace0 = System.nanoTime()
-          (0 until strictIntervals).map { i =>
-            val part = fetchJoin(scheduled.where(col("interval") === i))
-            if (cfg.paceWallClock) {
-              val sleepMs = (tPace0 + i * slotMs * 1000000L - System.nanoTime()) / 1000000L
-              if (sleepMs > 0) Thread.sleep(sleepMs)
-              part.localCheckpoint(true) // fetch happens NOW, inside its slot
-            } else part
-          }.reduce(_ unionByName _)
-        } else fetchJoin(scheduled)
-      ).observe(fetchObs,
-          sum(when(col("html").isNotNull, 1L).otherwise(0L)).as("fetched"))
-      // html payload is cached ONLY under strict drains; everywhere else it
-      // streams through its single pass (a second consumer — the order-stream
-      // checkpoint — recomputes the fetch join from the cached schedule
-      // CONCURRENTLY instead of holding frontier×html bytes in memory)
-      val joined = if (cfg.strictPoliteness) joined0.persist(bulkLevel) else joined0
-
-      val hits = joined.where(col("html").isNotNull)
-      var actionRan = false
-      // The order-stream checkpoint runs as a CONCURRENT job: it shares the
-      // cached schedule (and the pages cache) with the main expansion plan,
-      // so the two jobs overlap instead of serializing two driver
-      // round-trips. The main thread awaits it before touching the stream
-      // buffers (no cross-thread mutation).
-      val ckFut: Option[scala.concurrent.Future[DataFrame]] =
-        if (cfg.recordStreams) {
-          actionRan = true
-          val ckDf = joined.select(col("seq"), col("url"), col("canon"), col("hash"),
-            col("depth"), col("interval"), col("ua"), col("proxy"),
-            col("html").isNotNull.as("hit"), lit(d).as("superstep"))
-          // checkpoint width sized from the EXACT frontier row count (same
-          // rows-per-task rule as the rank width below): the stream rows are
-          // a pure side output — unioned and seq-sorted at crawl end, never
-          // joined back — so partitioning is only a task-count knob, and the
-          // uncoalesced plan inherits the politeness window's full shuffle
-          // width (32 tasks materializing a 24-row superstep on the tiny
-          // bench crawl). coalesce never widens, so corpus-scale supersteps
-          // keep their parallelism.
-          val ckW = math.max(1,
-            math.min(cfg.partitions, (frontierSize / Politeness.RowsPerTask).toInt + 1))
-          Some(sideJob(spark)(ckDf.coalesce(ckW).localCheckpoint(true)))
-        } else None
-
-      var freshCount = 0L
-      var candTotal = 0L
-      var passedCount = 0L
-      var seenCommit: Option[Storage.SeenCommit] = None
-      // in-flight hash-alignment of this superstep's seen delta (reads the
-      // materialized bucket store); when it lands, the COMMITTED delta is the aligned store itself
-      // (bucket-partitioned on disk → zero-shuffle resume), superseding all
-      // earlier commits when it folded the deferred smalls in
-      var alignFut: scala.concurrent.Future[DataFrame] = null
-      var alignSupersedes = false
-      // the store backing the frontier this superstep consumes: releasable
-      // once every consumer (main plan, order checkpoint, commit) is done
-      val consumedStore = frontierRaw
-      if (d < cfg.maxDepth) { // Q5: expand only when depth+1 ≤ maxDepth
-        // F4+F5+F1+F3: extract (on the MaxBodySize-truncated body,
-        // http_client.go:117-123) → resolve → validate; drops are silent
-        val exploded = hits.select(
-          col("seq").as("parent_seq"), col("url").as("parent_url"),
-          col("root").as("parent_root"), col("ua"), col("proxy"),
-          posexplode(Udfs.extractLinks(col("html"), lit(cfg.maxBodySize))).as(Seq("link_pos", "href")))
-        // Q1: substring same-root (crawler.go:252-255 — contains, not suffix)
-        var passCond = col("host").contains(col("parent_root"))
-        // Q2: robots. Reference parity = allow-all no-op (robot.go:35-38);
-        // standard mode enforces hostname-keyed prefix rules on the candidate
-        // — the PORT-STRIPPED hostname (Go URL.Hostname()), matching the
-        // Oracle's `target.url.hostnameOnly` gate: a rule for `site.com`
-        // applies to `http://site.com:8080/...` too.
-        if (cfg.robotsStandardMode && cfg.robots.nonEmpty) {
-          val allowed = Udfs.robotsAllowedUdf(cfg.robots)
-          passCond = passCond && allowed(col("hostname"), col("path"), col("ua"))
-        }
-        // Q3: bad-extension (+ rule engine when configured) — filter.go:30-57
-        passCond = passCond && (
-          if (cfg.filterRules.isEmpty) !col("path").rlike(badExtRegex)
-          else Udfs.filterAllowUdf(cfg.filterRules)(col("root"), col("path"), col("url")))
-
-        // Candidate counters ride an observation BELOW the first-occurrence
-        // window's shuffle: the metric fires exactly once, in that shuffle's
-        // map stage (downstream branches re-read shuffle/cached output, never
-        // this node) — accumulator-exact, zero extra jobs.
-        val candObs = new org.apache.spark.sql.Observation(s"cand_d${d}_s$stepsRun")
-        val cands = exploded
-          .withColumn("cand", Udfs.resolveCandidate(col("parent_url"), col("href")))
-          .where(col("cand").isNotNull)
-          .select(col("parent_seq"), col("link_pos"), col("ua"), col("proxy"), col("parent_root"),
-            col("cand.url").as("url"), col("cand.canon").as("canon"),
-            col("cand.host").as("host"),
-            col("cand.hostname").as("hostname"),
-            col("cand.root").as("root"), col("cand.path").as("path"))
-          .withColumn("pass", passCond)
-          .observe(candObs, count(lit(1)).as("n_cands"),
-            sum(when(col("pass"), 1L).otherwise(0L)).as("n_passed"))
-        // SHUFFLE-SLIM PROJECTION (the round-4 profile's reduce-stage
-        // remote-read CPU term): everything entering the first-occurrence
-        // window's exchange — the biggest shuffle of the crawl, 26.8M rows
-        // on the deep bench's d4 — is cut to the 6 columns no later stage
-        // can derive. `hash` (64 hex chars), `hash64`, `host` and `root`
-        // are all pure functions of (canon | url): hash64 is re-derived
-        // right after the window, hash/host/root by
-        // codegen'd exprs (sha2, UrlHost, HostRoot — byte-equality with the
-        // UDF-side values pinned by UrlExprSpec) over the POST-dedup fresh
-        // set, which on a geometric crawl is a fraction of the candidate
-        // volume. hostname/path/parent_root are consumed by passCond above
-        // and ship nowhere.
-        // SHUFFLE-SLIM v2 (when both rotation lists have ≤ 64 entries; longer
-        // lists ship the strings): of the 6 shipped columns,
-        // `ua`/`proxy` are drawn from the config's small rotation lists
-        // (request build P1 / sticky child build P2 — every candidate's
-        // value is provably a list member), so they cross the exchange as a
-        // dictionary INDEX and are re-materialized by a codegen'd literal
-        // CASE right after the dedup; `url` equals `canon` for the large
-        // majority of web links (already-canonical URLs), so it ships as a
-        // null-when-equal delta and is rebuilt with one coalesce. Raw row
-        // width through the crawl's biggest shuffle drops ~2x (the wide
-        // strings were most of it), which is paid on the N>1 remote-read
-        // path per-byte: shuffle-write serialize, netty fetch, decompress,
-        // deserialize, and the window sort's spill all scale with it.
-        // Winner selection is by the globally unique (parent_seq, link_pos)
-        // — payload re-encoding can never change which row wins, so order,
-        // seen set, and counters stay byte-identical (parity suites pin it).
-        val slim2 = cfg.userAgents.length <= 64 && cfg.proxies.length <= 64
-        val uaVals = cfg.userAgents
-        val proxyVals = if (cfg.proxies.isEmpty) Vector("") else cfg.proxies
-        def dictIx(c: Column, vs: Vector[String]): Column =
-          vs.zipWithIndex.foldLeft(lit(-1)) { case (acc, (v, i)) =>
-            when(c === lit(v), lit(i)).otherwise(acc) }
-        def dictVal(c: Column, vs: Vector[String]): Column =
-          vs.zipWithIndex.foldLeft(lit(vs.head)) { case (acc, (v, i)) =>
-            if (i == 0) acc else when(c === lit(i), lit(v)).otherwise(acc) }
-        val passed =
-          if (slim2) cands.where(col("pass"))
-            .select(col("parent_seq"), col("link_pos"),
-              dictIx(col("ua"), uaVals).as("ua_ix"),
-              dictIx(col("proxy"), proxyVals).as("proxy_ix"),
-              when(col("url") === col("canon"), lit(null).cast("string"))
-                .otherwise(col("url")).as("url_d"),
-              col("canon"))
-          else cands.where(col("pass"))
-            .select(col("parent_seq"), col("link_pos"), col("ua"), col("proxy"),
-              col("url"), col("canon"))
-
-        // Q4a: in-batch first occurrence — discovery order (parent_seq, link_pos).
-        // NOT persisted: downstream legs read it through the aggregation's
-        // shuffle, which Catalyst reuses — spill-safe at any candidate
-        // volume, unlike a 26.8M-row cache. Keyed by canon (dedup-equivalent
-        // to the reference's hash key — see alignDelta's scaladoc). A window,
-        // not a min-struct aggregate: duplicates of a link almost never share
-        // a map partition, so a map-side partial aggregate measured no gain
-        // (BENCH/BASELINE.md).
-        val firsts0 = {
-          val w = Window.partitionBy(col("canon"))
-            .orderBy(col("parent_seq"), col("link_pos"))
-          passed.withColumn("__rn", row_number().over(w))
-            .where(col("__rn") === 1).drop("__rn")
-        }
-        // slim2 payload re-materialized HERE, on the post-dedup set (a
-        // fraction of candidate volume): literal-CASE dictionary lookups
-        // (codegen'd, same pattern as the politeness budget map) and the
-        // url delta's one coalesce — downstream sees the exact pre-slim2
-        // schema, so every later plan is unchanged.
-        val firsts1 =
-          if (slim2) firsts0.select(col("parent_seq"), col("link_pos"),
-            dictVal(col("ua_ix"), uaVals).as("ua"),
-            dictVal(col("proxy_ix"), proxyVals).as("proxy"),
-            coalesce(col("url_d"), col("canon")).as("url"), col("canon"))
-          else firsts0
-        // hash64 re-derived ABOVE the dedup (not shipped through it): next
-        // superstep's politeness salt
-        val firsts = firsts1.withColumn("hash64", xxhash64(col("canon")))
-
-        // Q4b: cross-superstep dedup — the exact anti-join against the seen
-        // set. The seen side is the partition-wise union of the hash-aligned
-        // deltas: NO exchange, NO sort on it, at any seen size. Below the
-        // broadcast bound a broadcast of the (small) seen set stays allowed;
-        // above it the join is pinned to a shuffled-hash join whose BUILD is
-        // one aligned partition (seen/P rows per task — P is sized so that
-        // fits, ~60 MB at 10^10 keys with P=16384), and whose probe side
-        // reuses the first-occurrence window's hash partitioning. AQE's
-        // compressed-size broadcast estimates (the round-3 OOM) never see an
-        // exchange to convert.
-        //
-        // small seen: a PLAIN union of the (stats-bearing) delta leaves —
-        // broadcastable, and crucially NOT a fixed-P sibling, so AQE stays
-        // free to coalesce the shallow supersteps' tiny candidate stages (a
-        // fixed-partition leaf next to the join pins the probe side to full
-        // width — measured on the deep bench's d0-d3 floor). large seen: the
-        // partition-aligned union leaf + shuffled-hash build — zero exchange,
-        // zero sort on the seen side.
-        val seenHinted =
-          if (seenTotal <= smallSeenBound)
-            (seenDeltas ++ smallDeltas).map(_.select("canon"))
-              .reduceOption(_ unionByName _)
-              .getOrElse(emptySeen.select("canon"))
-          else seenForJoin(seenTotal).select("canon").hint("shuffle_hash")
-        val fresh0pre = firsts.join(seenHinted, Seq("canon"), "left_anti")
-        // the identity/addressing columns are recomputed HERE, post-dedup,
-        // so only fresh-set rows pay them: sha-256 (F3) via the codegen'd
-        // sha2 ≡ UrlFuncs.sha256hex; host via ONE GoUrl re-parse of the
-        // resolved url (exact by the round-trip identity CandidateFastPathSpec
-        // pins); root from host by pure label arithmetic — all pinned
-        // byte-equal to the UDF-side Parsed values in UrlExprSpec.
-        val fresh0 = fresh0pre
-          .withColumn("hash", sha2(col("canon"), 256))
-          .withColumn("host", exprs.UrlExprs.urlHost(col("url")))
-          .withColumn("root", exprs.UrlExprs.hostRoot(col("host")))
-
-        // O1: reify FIFO order — ONE action for the whole superstep. Parent
-        // seqs are dense in [seqBase − frontierSize, seqBase) by construction,
-        // so the rank needs no sampling pass (Ranks.denseRangeRank): the whole
-        // dataflow up to here — schedule → fetch join → extract → filters →
-        // first-occurrence → anti-join — executes ONCE into one
-        // spill-safe, lineage-cut bucket store (the superstep's only
-        // candidate-sized state), and the per-bucket counts cross the driver
-        // as ≤ 8·P longs, giving the fresh count for free. The next frontier
-        // and the seen delta are LAZY views over those blocks: the rank window
-        // re-sorts the (materialized, bucketed) blocks on each downstream
-        // scan instead of paying a second materialization job per superstep,
-        // and the seen delta is a plain projection (no window at all).
-        // ride the rank job's map stage: the fresh set's distinct pages-
-        // cache bucket ids (≤ pagesP ints) — next superstep's prune set
-        val pidObs = new org.apache.spark.sql.Observation(s"pids_d${d}_s$stepsRun")
-        val fresh0Obs = fresh0.observe(pidObs,
-          collect_set(pmod(hash(col("canon")), lit(pagesP)).cast("int")).as("pids"))
-        // rank width sized from the EXPECTED candidate volume (previous
-        // superstep's observed fan-out, default 16), not pinned to the full
-        // cfg.partitions: a 200-row seed superstep ranks through 1 bucket
-        // task instead of 160 — repartition(n, col) is a fixed-width
-        // exchange AQE cannot coalesce, and those empty task launches were
-        // the round-4 d0–d2 floor's biggest fixed term. Only a balance
-        // knob: denseRangeRank's offsets are exact at any width, and an
-        // underestimate merely means fuller (spill-safe) buckets.
-        val rankP = math.max(1, math.min(cfg.partitions,
-          (frontierSize * fanoutEst / Politeness.RowsPerTask).toInt + 1))
-        // INVARIANT: denseRangeRank's counts job MATERIALIZES its input plan
-        // (it repartitions fresh0Obs into the bucket store and counts the
-        // buckets), so pidObs below is guaranteed to have fired — if Ranks
-        // ever computes counts without traversing the input plan, the
-        // blocking pidObs.get would hang the driver (the empty-map fallback
-        // only covers AQE collapsing the plan, not a never-run observation).
-        val rank = Ranks.denseRangeRank(fresh0Obs, col("parent_seq"),
-          seqBase - frontierSize, seqBase, Seq(col("link_pos")), "__rank", rankP)
-        freshCount = rank.total
-        nextPids = {
-          val m0 = pidObs.get // already fired (the rank's counts job ran)
-          if (m0.isEmpty) null
-          else Option(m0("pids")).map(_.asInstanceOf[Seq[Int]].toSet).orNull
-        }
-        val fresh = rank.df
-          .withColumn("seq", col("__rank") - 1 + lit(seqBase))
-          .withColumn("depth", lit(d + 1))
-          .withColumn("score", scoreCol(cfg))
-          .select(col("url"), col("canon"), col("hash"), col("hash64"),
-            col("host"), col("root"), col("depth"), col("score"), col("seq"),
-            col("ua"), col("proxy"))
-        actionRan = true
-        // filled by this superstep's jobs. CAVEAT: when the expansion yields
-        // ZERO fresh rows, AQE's empty-relation propagation can rewrite the
-        // whole collapsed subtree to an empty LocalTableScan and DROP the
-        // CollectMetrics node — the observation then completes with an EMPTY
-        // row. Rare (an expanding superstep where every candidate is a dup),
-        // and the recount below is exact because the pipeline is
-        // deterministic.
-        val candStats = candObs.get
-        if (candStats.isEmpty) {
-          val r = cands.agg(count(lit(1)),
-            sum(when(col("pass"), 1L).otherwise(0L))).first()
-          candTotal = r.getLong(0)
-          passedCount = if (r.isNullAt(1)) 0L else r.getLong(1)
-        } else {
-          candTotal = candStats("n_cands").asInstanceOf[Long]
-          passedCount = Option(candStats("n_passed")).fold(0L)(_.asInstanceOf[Long])
-        }
-        m("total_link") += candTotal
-        m("skipped_link") += candTotal - passedCount
-        m("duplicated_link") += passedCount - freshCount
-        m("crawled_link") += freshCount
-        seqBase += freshCount
-
-        // the seen set is a LIST of canon-aligned materialized deltas: the
-        // alignment costs one O(fresh) repartition per superstep (concurrent
-        // side job), and every later anti-join reads the union with zero
-        // shuffle on the seen side. On a real cluster this is an append to
-        // the bucketed seen table (Storage writes exactly these aligned
-        // deltas when a checkpointDir is configured).
-        // Three exemptions from per-superstep alignment:
-        //  - the LAST expansion's delta has no anti-join consumer (the next
-        //    superstep only fetches — Q5): skip entirely, the single biggest
-        //    delta of a geometric crawl rides the bucket store;
-        //  - while the accumulated seen fits the broadcast bound, the delta
-        //    stays a DEFERRED small leaf (tiny persisted projection, no side
-        //    job, no alignP-wide stage — the next anti-join broadcasts it);
-        //  - the superstep that CROSSES the bound folds every deferred small
-        //    plus its own delta into one aligned store (one O(bound) job).
-        val lastExpansion = d + 1 >= cfg.maxDepth
-        if (!lastExpansion) {
-          val freshDelta = rank.cached.select(col("canon"), col("hash"), col("hash64"))
-          if (seenTotal + freshCount > smallSeenBound) {
-            val toFold = smallDeltas.toVector
-            val toRelease = smallCaches.toVector
-            smallDeltas.clear(); smallCaches.clear()
-            // the fold covers every seen row so far (seenDeltas is empty
-            // while smalls exist), so its commit SUPERSEDES all earlier
-            // seen commits — the manifest's seen_base_step advances and a
-            // resume reads one bucketed store instead of d small parquets
-            alignSupersedes = toFold.nonEmpty
-            alignFut = sideJob(spark) {
-              val aligned = alignDelta(
-                (toFold :+ freshDelta).reduce(_ unionByName _), alignP)
-              toRelease.foreach(_.unpersist())
-              aligned
-            }
-          } else {
-            val cache = freshDelta.persist(bulkLevel)
-            val leaf = org.apache.spark.sql.graftbridge.DatasetBridge.lineageCut(
-              cache, Some((freshCount, math.max(1L, freshCount * seenRowBytes))))
-            smallDeltas += leaf
-            smallCaches += cache
-            if (freshCount > 0L)
-              seenCommit = Some(Storage.SeenCommit(leaf, None, freshCount,
-                supersedesPrior = false))
-          }
-        } else {
-          val d0 = rank.cached.select(col("canon"), col("hash"), col("hash64"))
-          seenDeltas += d0
-          if (freshCount > 0L)
-            seenCommit = Some(Storage.SeenCommit(d0, None, freshCount,
-              supersedesPrior = false))
-          protectedStore = rank.cached
-        }
-        seenTotal += freshCount
-
-        val oldFrontier = frontier
-        frontier = fresh
-        frontierRaw = rank.cached
-        oldFrontier.unpersist()
-      } else {
-        val oldFrontier = frontier
-        frontier = spark.emptyDataset[FrontierRow].toDF
-        frontierRaw = null
-        oldFrontier.unpersist()
-      }
-      // harvest the concurrent order-stream checkpoint (main thread owns the
-      // stream buffers)
-      ckFut.foreach { f =>
-        val ck = scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-        attemptParts += ck.select(col("seq"), col("canon"), col("depth"), col("hit"),
-          col("superstep"))
-        orderParts += ck.where(col("hit")).select(col("seq"), col("url"), col("canon"),
-          col("hash"), col("depth"), lit(200).as("status"), col("superstep"),
-          col("interval"), col("ua"), col("proxy"))
-      }
-      if (!actionRan) joined.count() // ensure the fetch observation fired
-      // same empty-row hazard as candObs (see above): recount on the rare
-      // collapsed-plan path
-      val fetched = {
-        val m0 = fetchObs.get
-        if (m0.isEmpty) {
-          val r = joined.agg(sum(when(col("html").isNotNull, 1L).otherwise(0L))).first()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        } else Option(m0("fetched")).fold(0L)(_.asInstanceOf[Long])
-      }
-      val failed = frontierSize - fetched
-      m("successful_requests") += fetched
-      m("failed_requests") += failed
-      val nIntervals =
-        if (cfg.strictPoliteness) strictIntervals
-        else {
-          val m0 = ivObs.get
-          if (m0.isEmpty) {
-            val r = scheduled.agg(max(col("interval"))).first()
-            (if (r.isNullAt(0)) -1 else r.getInt(0)) + 1
-          } else Option(m0("max_iv")).fold(0)(_.asInstanceOf[Int] + 1)
-        }
-
-      // harvest the concurrent delta alignment: the NEXT superstep's
-      // anti-join (and this superstep's commit) read the aligned store
-      if (alignFut != null) {
-        val aligned = scala.concurrent.Await.result(alignFut,
-          scala.concurrent.duration.Duration.Inf)
-        seenDeltas += aligned
-        // commit the ALIGNED store (one bucket dir per partition — resume
-        // reconstructs the layout with zero shuffle); a fold carries every
-        // seen row (seenTotal, already updated above) and advances the
-        // compaction point, a plain post-bound delta carries just the fresh
-        val alignedRows = if (alignSupersedes) seenTotal else freshCount
-        if (alignedRows > 0L)
-          seenCommit = Some(Storage.SeenCommit(aligned, Some(alignP), alignedRows,
-            supersedesPrior = alignSupersedes))
-        if (alignSupersedes) seenBaseStep = d
-        alignFut = null
-      }
-      // exact: the fresh set is the next frontier (none past maxDepth)
-      val nextFrontierSize = if (d < cfg.maxDepth) freshCount else 0L
-      // atomic superstep commit: frontier, seen delta, crawled delta,
-      // attempts delta (written concurrently by Storage.commitStep), then
-      // metrics, seq watermark and the next frontier's row count — awaited
-      // before the superstep closes (the next superstep unpersists the
-      // previous frontier this commit reads)
-      val commitFut = storage.map { s =>
-        val fr = frontier; val frRows = nextFrontierSize; val sd = seenCommit
-        val od = orderParts.lastOption.getOrElse(emptyOrder(spark))
-        val at = attemptParts.lastOption.getOrElse(emptyAttempts(spark))
-        val mSnap = m.toMap; val sb = seqBase; val sbase = seenBaseStep
-        sideJob(spark)(s.commitStep(d, fr, frRows, sd, od, at, mSnap, sb, sbase))
-      }
-      commitFut.foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      steps += StepStat(d, frontierSize, fetched, failed, candTotal, passedCount, freshCount,
-        nIntervals, wallMs, withCodegen)
-      if (cacheScheduled) scheduled.unpersist()
-      if (cfg.strictPoliteness) joined.unpersist()
-      // every consumer of the PREVIOUS superstep's bucket store (this
-      // superstep's main plan, order checkpoint, commit) has finished, and
-      // the seen delta no longer aliases it (hash-aligned copy) — release.
-      // Before the alignment, deltas pinned every store for the crawl's
-      // lifetime: Σ O(full frontier rows) off-heap, vs Σ O(hash rows) now.
-      if (consumedStore != null && (consumedStore ne frontierRaw) &&
-          (consumedStore ne protectedStore))
-        consumedStore.unpersist()
-
-      frontierSize = nextFrontierSize
-      d += 1
-      } // end full superstep
-      } // superstep()
-      if (withCodegen) superstep() else DatasetBridge.withoutGeneratedCode(spark)(superstep())
-    }
-
-    val order = orderParts.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark))
-    val attempts = attemptParts.reduceOption(_ unionByName _)
-      .getOrElse(spark.emptyDataset[(Long, String, Int, Boolean, Int)]
-        .toDF("seq", "canon", "depth", "hit", "superstep"))
-    CrawlRun(order, attempts, seen, m.toMap, steps.toVector)
+    /** FRONTIER-BUCKET PRUNING of the pages cache — the in-engine analogue
+      * of Iceberg bucket pruning (on a real cluster the bucketed pages table
+      * gives this via storage-partitioned joins; the reference analogue is
+      * that an HTTP GET touches ONE url, http_client.go:99-106, never the
+      * corpus). The cache is hash-partitioned on canon, so the frontier's
+      * distinct partition ids bound which cache partitions the fetch join
+      * can possibly hit; the rest become empty scan tasks that never
+      * decompress a batch. Shallow supersteps (the per-superstep floor's
+      * biggest term) then cost ~O(frontier-buckets), not O(corpus). Only
+      * worthwhile while the frontier can miss buckets: past ~4·P random keys
+      * expected coverage is ≈ 98%, so skip the probe. The ids come from the
+      * previous rank job's observation when available (zero extra jobs),
+      * else from one tiny distinct-collect over the cached frontier (seeds,
+      * resume; ≤ P ints cross the driver). */
+    def sideFor(frontier: Frontier): DataFrame =
+      if (frontier.rows < 4L * buckets && layoutOk) {
+        val pids = frontier.prunePids.getOrElse(
+          frontier.raw.getOrElse(frontier.df).select(bucketOf(col("canon")).as("__p"))
+            .distinct().collect().map(_.getInt(0)).toSet)
+        if (pids.size < buckets)
+          DatasetBridge.prunedCacheScan(prep, pids, Seq("canon"), buckets, Seq("canon"))
+        else prep
+      } else prep
   }
+
+  /** Counters that ride a job the superstep runs anyway, as an observation:
+    * zero extra jobs. */
+  private final class Counters(name: String, aggs: (String, Column)*) {
+    private val obs = new org.apache.spark.sql.Observation(name)
+    private val cols = aggs.map { case (n, c) => c.as(n) }
+
+    def on(df: DataFrame): DataFrame = df.observe(obs, cols.head, cols.tail: _*)
+
+    /** The counters in `aggs` order (null where an aggregate saw no rows),
+      * once a job over `on`'s output has run. When the whole observed
+      * subtree is empty, AQE's empty-relation propagation can rewrite it to
+      * an empty LocalTableScan and DROP the CollectMetrics node; the
+      * observation then completes with an EMPTY row, and the counters are
+      * recounted from `observed` (`on`'s output, or a view of it): exact,
+      * because the pipeline is deterministic, and one job on that rare
+      * path. */
+    def get(observed: DataFrame): Seq[Any] = {
+      val m = obs.get
+      if (m.isEmpty) observed.agg(cols.head, cols.tail: _*).first().toSeq
+      else aggs.map { case (n, _) => m(n) }
+    }
+  }
+
+  /** Expected candidates per frontier row: the previous superstep's observed
+    * fan-out, default 16. */
+  private def fanout(steps: Vector[StepStat]): Double = steps.lastOption match {
+    case Some(p) if p.frontierSize > 0 && p.candidates > 0 =>
+      math.max(1.0, p.candidates.toDouble / p.frontierSize)
+    case _ => 16.0
+  }
+
+  /** One superstep per BFS depth until maxDepth, an empty frontier or
+    * maxSupersteps. */
+  private def crawlLoop(spark: SparkSession, pagesPrep: DataFrame, cfg: CrawlConfig,
+      saltedPoliteness: Boolean, start: Crawl): CrawlRun = {
+    val storage = cfg.checkpointDir.map(new Storage(_))
+    storage.foreach(_.init())
+    val pages = new Pages(pagesPrep)
+    val codegenBound = interpretedRowsBound.value
+    @scala.annotation.tailrec
+    def loop(s: Crawl, stepsRun: Int): Crawl =
+      if (s.depth > cfg.maxDepth || s.frontier.rows <= 0L || stepsRun >= cfg.maxSupersteps) s
+      else {
+        // execution regime, from sizes the driver holds: a superstep whose
+        // rows fit one task runs without generated code (the whole
+        // superstep, side jobs included — each is awaited inside it)
+        val rows = s.frontier.rows
+        val withCodegen = generatedCode(pages.rows, rows,
+          if (s.depth < cfg.maxDepth) (rows * fanout(s.steps)).toLong else 0L, codegenBound)
+        def step() =
+          superstep(spark, cfg, saltedPoliteness, pages, storage, s, stepsRun + 1, withCodegen)
+        loop(if (withCodegen) step() else DatasetBridge.withoutGeneratedCode(spark)(step()),
+          stepsRun + 1)
+      }
+    val end = loop(start, 0)
+    // a crawl stopped by maxSupersteps (or by an empty expansion) leaves a
+    // live frontier that no result reads
+    end.frontier.release()
+    CrawlRun(end.order.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark)),
+      end.attempts.reduceOption(_ unionByName _).getOrElse(emptyAttempts(spark)),
+      end.seen.view(spark), end.metrics, end.steps)
+  }
+
+  private def bump(m: Map[String, Long], deltas: (String, Long)*): Map[String, Long] =
+    deltas.foldLeft(m) { case (acc, (k, v)) => acc.updated(k, acc(k) + v) }
+
+  /** Superstep `d` = `s.depth` (the `n`th this call runs): schedule → fetch
+    * → expand (when d < maxDepth, Q5) → commit, then release the caches the
+    * superstep consumed.
+    *
+    * Job-count discipline: every driver action is a scheduling round-trip,
+    * so the per-superstep counters (interval span, hit count, candidate and
+    * pass counts) ride `observe()` metrics on jobs the superstep runs anyway.
+    *
+    * CACHE DISCIPLINE (the 100 TB memory bound): on the default batch path
+    * (!strictPoliteness, !recordStreams) the whole superstep is ONE plan
+    * with ONE consumer, so nothing per-superstep is persisted but the rank
+    * bucket store — the fetch payload (html) streams through the extract map
+    * stage and is never cached, and candidates live only in spill-safe
+    * shuffle files. Caches exist only where a second consumer does:
+    * `scheduled` when the order stream or strict drains re-read it, the
+    * fetch join only under strict drains (whose per-slot unions are
+    * expensive to recompute). Each has one owner that releases the Dataset
+    * it persisted once every consumer (main plan, order stream, commit) is
+    * done; the seen set owns its own deltas. */
+  private def superstep(spark: SparkSession, cfg: CrawlConfig, salted: Boolean, pages: Pages,
+      storage: Option[Storage], s: Crawl, n: Int, withCodegen: Boolean): Crawl = {
+    val t0 = System.nanoTime()
+    val d = s.depth
+    val fr = s.frontier
+    def wallMs = (System.nanoTime() - t0) / 1000000L
+    if (d >= cfg.maxDepth && !cfg.recordStreams && !cfg.strictPoliteness) {
+      val fetched = terminalCount(pages, fr)
+      val m = bump(s.metrics, "total_requests" -> fr.rows, "successful_requests" -> fetched,
+        "failed_requests" -> (fr.rows - fetched))
+      val next = Frontier.empty(spark)
+      commit(storage, d, next, None, emptyOrder(spark), emptyAttempts(spark), m, s.seqBase,
+        s.seen.baseStep)
+      fr.release()
+      s.copy(depth = d + 1, frontier = next, metrics = m, steps = s.steps :+
+        StepStat(d, fr.rows, fetched, fr.rows - fetched, 0L, 0L, 0L, 0, wallMs, withCodegen))
+    } else {
+      val sched = schedule(cfg, salted, s, n)
+      val f = fetch(spark, cfg, pages, fr, sched, d, n)
+      val exp =
+        if (d < cfg.maxDepth) Some(expand(spark, cfg, pages, s, f.joined, n)) else None
+      // the main thread owns the stream buffers: harvest the concurrent
+      // order-stream checkpoint here
+      val streams = f.stream.map { fut =>
+        val ck = Await.result(fut, Duration.Inf)
+        (ck.where(col("hit")).select(col("seq"), col("url"), col("canon"), col("hash"),
+          col("depth"), lit(200).as("status"), col("superstep"), col("interval"), col("ua"),
+          col("proxy")),
+          ck.select(col("seq"), col("canon"), col("depth"), col("hit"), col("superstep")))
+      }
+      if (streams.isEmpty && exp.isEmpty) f.joined.count() // fires the fetch observation
+      val fetched = f.fetched
+      val intervals = sched.intervals
+      // the NEXT superstep's anti-join (and this superstep's commit) read the
+      // landed seen set
+      val (seen, seenCommit) = exp.fold((s.seen, Option.empty[Storage.SeenCommit]))(e =>
+        Await.result(e.seen.landed, Duration.Inf))
+      val next = exp.fold(Frontier.empty(spark))(_.frontier)
+      val (cands, passed) = exp.fold((0L, 0L))(e => (e.candidates, e.passed))
+      val m = bump(s.metrics, "total_requests" -> fr.rows, "successful_requests" -> fetched,
+        "failed_requests" -> (fr.rows - fetched), "total_link" -> cands,
+        "skipped_link" -> (cands - passed), "duplicated_link" -> (passed - next.rows),
+        "crawled_link" -> next.rows)
+      val seqBase = s.seqBase + next.rows
+      commit(storage, d, next, seenCommit, streams.fold(emptyOrder(spark))(_._1),
+        streams.fold(emptyAttempts(spark))(_._2), m, seqBase, seen.baseStep)
+      val stat = StepStat(d, fr.rows, fetched, fr.rows - fetched, cands, passed, next.rows,
+        intervals, wallMs, withCodegen)
+      sched.release()
+      f.release()
+      fr.release()
+      Crawl(d + 1, next, seen, seqBase, m, s.order ++ streams.map(_._1),
+        s.attempts ++ streams.map(_._2), s.steps :+ stat)
+    }
+  }
+
+  /** The FAST TERMINAL SUPERSTEP's hit count (no expansion, no recorded
+    * streams, no strict drains): nothing downstream consumes the join
+    * payload, so the hit count is a column-pruned SEMI join (the html bytes
+    * never ride a cache) and politeness intervals (schedule-only metadata
+    * nothing records) are skipped entirely. Metrics are identical by
+    * definition. The count is RANK-invariant, so it reads the raw bucket
+    * store when one exists — the biggest frontier of the whole crawl skips
+    * its seq-window sort. It ships ONE column through the frontier-side
+    * exchange (canon, ~4x fewer bytes than the full store row) and pins the
+    * join shuffled-hash: the build is one aligned pages partition (corpus/P
+    * rows, no exchange, no sort on the cache side) and the probe side skips
+    * its sort too — on the terminal depth, the geometric peak, SMJ's two
+    * sorts are pure waste. */
+  private def terminalCount(pages: Pages, frontier: Frontier): Long =
+    frontier.raw.getOrElse(frontier.df).select("canon")
+      .join(pages.prep.select("canon").hint("shuffle_hash"), Seq("canon"), "left_semi")
+      .count()
+
+  /** A superstep's politeness schedule: `df` (cached when `cached`),
+    * and its interval count — eager under strict drains, which need it to
+    * build the per-interval union, else observed. */
+  private final case class Schedule(df: DataFrame, cached: Boolean, strictIntervals: Int,
+      counters: Option[Counters]) {
+    def intervals: Int = counters.fold(strictIntervals)(c =>
+      Option(c.get(df).head).fold(0)(_.asInstanceOf[Int] + 1))
+
+    def release(): Unit = if (cached) { df.unpersist(); () }
+  }
+
+  /** R1: politeness schedule — rate-interval slots within this depth. The
+    * salt fan-out (salted mode only) is 1 while the frontier fits one task,
+    * else from the previous superstep's observed skew. */
+  private def schedule(cfg: CrawlConfig, salted: Boolean, s: Crawl, n: Int): Schedule = {
+    val prev = s.steps.lastOption
+    val saltFanout = Politeness.saltFanout(cfg, s.frontier.rows,
+      prev.fold(0L)(_.frontierSize), prev.fold(0)(_.intervals), s.seen.alignP)
+    val scheduled0 = Politeness.assignIntervals(s.frontier.df, cfg, salted, saltFanout)
+    val counters =
+      if (cfg.strictPoliteness) None
+      else Some(new Counters(s"iv_d${s.depth}_s$n", "max_iv" -> max(col("interval"))))
+    val cached = cfg.strictPoliteness || cfg.recordStreams
+    val df = {
+      val o = counters.fold(scheduled0)(_.on(scheduled0))
+      if (cached) o.persist(StorageLevel.MEMORY_AND_DISK) else o
+    }
+    val strictIntervals =
+      if (cfg.strictPoliteness) {
+        val r = df.agg(max(col("interval"))).first()
+        (if (r.isNullAt(0)) 0 else r.getInt(0)) + 1
+      } else 0
+    Schedule(df, cached, strictIntervals, counters)
+  }
+
+  /** A superstep's fetch join (cached when `cached`), its hit counter and
+    * the concurrent order-stream checkpoint when streams are recorded. */
+  private final case class Fetch(joined: DataFrame, cached: Boolean, counters: Counters,
+      stream: Option[Future[DataFrame]]) {
+    def fetched: Long = Option(counters.get(joined).head).fold(0L)(_.asInstanceOf[Long])
+
+    def release(): Unit = if (cached) { joined.unpersist(); () }
+  }
+
+  /** S2: the fetch = left join against the pages snapshot on canonical key.
+    * strictPoliteness physically drains one rate interval at a time
+    * (schedule-faithful); default joins the whole depth at once (the
+    * interval column still records the schedule).
+    *
+    * PINNED SORT-MERGE at every frontier size: a left join that keeps the
+    * frontier can only build its RIGHT side, so the only broadcast AQE can
+    * pick here is the pages cache itself — chosen from its COMPRESSED cached
+    * size, then built decompressed, html included, on the driver and every
+    * executor (BENCH/BASELINE.md: the whole corpus on every fetch join of a
+    * small crawl; peak heap halves once pinned). The merge join reads the
+    * hash-partitioned, canon-sorted pages side in place — no exchange, no
+    * sort — and exchanges and sorts only the frontier.
+    *
+    * The html payload is cached ONLY under strict drains; everywhere else it
+    * streams through its single pass. The order-stream checkpoint, its
+    * second consumer, runs as a CONCURRENT job that recomputes the fetch join
+    * from the cached schedule (and the pages cache) instead of holding
+    * frontier×html bytes in memory, so the two jobs overlap instead of
+    * serializing two driver round-trips. */
+  private def fetch(spark: SparkSession, cfg: CrawlConfig, pages: Pages, fr: Frontier,
+      sched: Schedule, d: Int, n: Int): Fetch = {
+    val pagesSide = pages.sideFor(fr)
+    def fetchJoin(f: DataFrame): DataFrame =
+      f.hint("merge").join(pagesSide.drop("hash64"), Seq("canon"), "left")
+    val counters = new Counters(s"fetch_d${d}_s$n",
+      "fetched" -> sum(when(col("html").isNotNull, 1L).otherwise(0L)))
+    val joined0 = counters.on(
+      if (cfg.strictPoliteness && sched.strictIntervals > 1) {
+        // wall-clock pacing (limiter.go:52-59 semantics): slot i's fetch is
+        // MATERIALIZED no earlier than i × slot-length; safe slot length =
+        // the longest configured budget interval
+        val slotMs =
+          if (cfg.paceWallClock) cfg.rateLimits.values.map(_.intervalMs).max else 0L
+        val tPace0 = System.nanoTime()
+        (0 until sched.strictIntervals).map { i =>
+          val part = fetchJoin(sched.df.where(col("interval") === i))
+          if (cfg.paceWallClock) {
+            val sleepMs = (tPace0 + i * slotMs * 1000000L - System.nanoTime()) / 1000000L
+            if (sleepMs > 0) Thread.sleep(sleepMs)
+            part.localCheckpoint(true) // fetch happens NOW, inside its slot
+          } else part
+        }.reduce(_ unionByName _)
+      } else fetchJoin(sched.df))
+    val joined = if (cfg.strictPoliteness) joined0.persist(bulkLevel) else joined0
+    val stream =
+      if (!cfg.recordStreams) None
+      else {
+        val ckDf = joined.select(col("seq"), col("url"), col("canon"), col("hash"),
+          col("depth"), col("interval"), col("ua"), col("proxy"),
+          col("html").isNotNull.as("hit"), lit(d).as("superstep"))
+        // checkpoint width sized from the EXACT frontier row count (same
+        // rows-per-task rule as the rank width): the stream rows are a pure
+        // side output — unioned and seq-sorted at crawl end, never joined
+        // back — so partitioning is only a task-count knob, and the
+        // uncoalesced plan inherits the politeness window's full shuffle
+        // width (32 tasks materializing a 24-row superstep on the tiny
+        // bench crawl). coalesce never widens, so corpus-scale supersteps
+        // keep their parallelism.
+        val ckW = math.max(1,
+          math.min(cfg.partitions, (fr.rows / Politeness.RowsPerTask).toInt + 1))
+        Some(sideJob(spark)(ckDf.coalesce(ckW).localCheckpoint(true)))
+      }
+    Fetch(joined, cfg.strictPoliteness, counters, stream)
+  }
+
+  /** An expansion's next frontier, its candidate counts and its seen-set
+    * update. */
+  private final case class Expansion(frontier: Frontier, candidates: Long, passed: Long,
+      seen: SeenUpdate)
+
+  /** extract → Q1-Q3 → first occurrence → seen anti-join → rank: the next
+    * frontier.
+    *
+    * O1: reify FIFO order — ONE action for the whole superstep. Parent seqs
+    * are dense in [seqBase − frontier rows, seqBase) by construction, so the
+    * rank needs no sampling pass (Ranks.denseRangeRank): the whole dataflow
+    * up to here — schedule → fetch join → extract → filters →
+    * first-occurrence → anti-join — executes ONCE into one spill-safe,
+    * lineage-cut bucket store (the superstep's only candidate-sized state),
+    * and the per-bucket counts cross the driver as ≤ 8·P longs, giving the
+    * fresh count for free. The next frontier and the seen delta are LAZY
+    * views over those blocks: the rank window re-sorts the (materialized,
+    * bucketed) blocks on each downstream scan instead of paying a second
+    * materialization job per superstep, and the seen delta is a plain
+    * projection (no window at all). */
+  private def expand(spark: SparkSession, cfg: CrawlConfig, pages: Pages, s: Crawl,
+      joined: DataFrame, n: Int): Expansion = {
+    val d = s.depth
+    val candCounters = new Counters(s"cand_d${d}_s$n", "n_cands" -> count(lit(1)),
+      "n_passed" -> sum(when(col("pass"), 1L).otherwise(0L)))
+    val cands = extract(cfg, joined.where(col("html").isNotNull), candCounters)
+    val fresh0 = dedup(cfg, cands, s.seen.joinSide(spark))
+    // rides the rank job's map stage: the fresh set's distinct pages-cache
+    // bucket ids (≤ P ints) — the next superstep's prune set
+    val pidObs = new org.apache.spark.sql.Observation(s"pids_d${d}_s$n")
+    val fresh0Obs = fresh0.observe(pidObs, collect_set(pages.bucketOf(col("canon"))).as("pids"))
+    // rank width sized from the EXPECTED candidate volume (previous
+    // superstep's observed fan-out, default 16), not pinned to the full
+    // cfg.partitions: a 200-row seed superstep ranks through 1 bucket task
+    // instead of 160 — repartition(n, col) is a fixed-width exchange AQE
+    // cannot coalesce, and those empty task launches were the round-4 d0–d2
+    // floor's biggest fixed term. Only a balance knob: denseRangeRank's
+    // offsets are exact at any width, and an underestimate merely means
+    // fuller (spill-safe) buckets.
+    val rankP = math.max(1, math.min(cfg.partitions,
+      (s.frontier.rows * fanout(s.steps) / Politeness.RowsPerTask).toInt + 1))
+    // INVARIANT: denseRangeRank's counts job MATERIALIZES its input plan (it
+    // repartitions fresh0Obs into the bucket store and counts the buckets),
+    // so pidObs below is guaranteed to have fired — if Ranks ever computes
+    // counts without traversing the input plan, the blocking pidObs.get
+    // would hang the driver (the empty fallback only covers AQE collapsing
+    // the plan, not a never-run observation).
+    val rank = Ranks.denseRangeRank(fresh0Obs, col("parent_seq"),
+      s.seqBase - s.frontier.rows, s.seqBase, Seq(col("link_pos")), "__rank", rankP)
+    val pids = {
+      val m0 = pidObs.get // already fired (the rank's counts job ran)
+      if (m0.isEmpty) None else Option(m0("pids")).map(_.asInstanceOf[Seq[Int]].toSet)
+    }
+    val fresh = rank.df
+      .withColumn("seq", col("__rank") - 1 + lit(s.seqBase))
+      .withColumn("depth", lit(d + 1))
+      .withColumn("score", scoreCol(cfg))
+      .select(col("url"), col("canon"), col("hash"), col("hash64"),
+        col("host"), col("root"), col("depth"), col("score"), col("seq"),
+        col("ua"), col("proxy"))
+    val Seq(nCands, nPassed) = candCounters.get(cands)
+    val seen = s.seen.add(spark, rank.cached, rank.total,
+      lastExpansion = d + 1 >= cfg.maxDepth, step = d)
+    Expansion(Frontier(fresh, rank.total, raw = Some(rank.cached),
+      owned = if (seen.ownsStore) None else Some(rank.persisted), prunePids = pids),
+      nCands.asInstanceOf[Long], Option(nPassed).fold(0L)(_.asInstanceOf[Long]), seen)
+  }
+
+  /** F4+F5+F1+F3: extract (on the MaxBodySize-truncated body,
+    * http_client.go:117-123) → resolve → validate, drops silent; then the
+    * Q1-Q3 filters as the `pass` flag. The candidate counters ride an
+    * observation BELOW the first-occurrence window's shuffle: the metric
+    * fires exactly once, in that shuffle's map stage (downstream branches
+    * re-read shuffle/cached output, never this node) — accumulator-exact,
+    * zero extra jobs. */
+  private def extract(cfg: CrawlConfig, hits: DataFrame, counters: Counters): DataFrame = {
+    val exploded = hits.select(
+      col("seq").as("parent_seq"), col("url").as("parent_url"),
+      col("root").as("parent_root"), col("ua"), col("proxy"),
+      posexplode(Udfs.extractLinks(col("html"), lit(cfg.maxBodySize))).as(Seq("link_pos", "href")))
+    // Q1: substring same-root (crawler.go:252-255 — contains, not suffix)
+    val sameRoot = col("host").contains(col("parent_root"))
+    // Q2: robots. Reference parity = allow-all no-op (robot.go:35-38);
+    // standard mode enforces hostname-keyed prefix rules on the candidate —
+    // the PORT-STRIPPED hostname (Go URL.Hostname()), matching the Oracle's
+    // `target.url.hostnameOnly` gate: a rule for `site.com` applies to
+    // `http://site.com:8080/...` too.
+    val robots =
+      if (cfg.robotsStandardMode && cfg.robots.nonEmpty)
+        Some(Udfs.robotsAllowedUdf(cfg.robots)(col("hostname"), col("path"), col("ua")))
+      else None
+    // Q3: bad-extension (+ rule engine when configured) — filter.go:30-57
+    val extension =
+      if (cfg.filterRules.isEmpty) !col("path").rlike(badExtRegex)
+      else Udfs.filterAllowUdf(cfg.filterRules)(col("root"), col("path"), col("url"))
+    val passCond = (sameRoot +: robots.toSeq :+ extension).reduce(_ && _)
+    counters.on(exploded
+      .withColumn("cand", Udfs.resolveCandidate(col("parent_url"), col("href")))
+      .where(col("cand").isNotNull)
+      .select(col("parent_seq"), col("link_pos"), col("ua"), col("proxy"), col("parent_root"),
+        col("cand.url").as("url"), col("cand.canon").as("canon"),
+        col("cand.host").as("host"),
+        col("cand.hostname").as("hostname"),
+        col("cand.root").as("root"), col("cand.path").as("path"))
+      .withColumn("pass", passCond))
+  }
+
+  /** Q4: the candidates that passed, deduplicated in two halves —
+    * in-batch first occurrence (Q4a) and the exact anti-join against the
+    * seen set (Q4b) — with the identity columns the fresh set needs.
+    *
+    * The seen key is CANON, not the sha-256 `hash`: hash is a deterministic
+    * function of canon (`UrlFuncs.sha256hex(canon)` ≡ `sha2(canon, 256)`),
+    * so grouping by canon is dedup-equivalent while the 64-char hex hash —
+    * incompressible, ~30% of the candidate shuffle's wire bytes — stays OUT
+    * of the per-superstep window shuffle and is recomputed by a codegen'd
+    * `sha2` on the (much smaller) post-dedup fresh set. The one formal
+    * divergence from the reference's hash-keyed store — two DISTINCT canons
+    * sharing a sha-256 digest would dedup there and not here — requires a
+    * sha-256 collision. */
+  private def dedup(cfg: CrawlConfig, cands: DataFrame, seenSide: DataFrame): DataFrame = {
+    // SHUFFLE-SLIM PROJECTION (the round-4 profile's reduce-stage
+    // remote-read CPU term): everything entering the first-occurrence
+    // window's exchange — the biggest shuffle of the crawl, 26.8M rows on
+    // the deep bench's d4 — is cut to the 6 columns no later stage can
+    // derive. `hash` (64 hex chars), `hash64`, `host` and `root` are all
+    // pure functions of (canon | url): hash64 is re-derived right after the
+    // window, hash/host/root by codegen'd exprs (sha2, UrlHost, HostRoot —
+    // byte-equality with the UDF-side values pinned by UrlExprSpec) over the
+    // POST-dedup fresh set, which on a geometric crawl is a fraction of the
+    // candidate volume. hostname/path/parent_root are consumed by the pass
+    // condition and ship nowhere.
+    // SHUFFLE-SLIM v2 (when both rotation lists have ≤ 64 entries; longer
+    // lists ship the strings): of the 6 shipped columns, `ua`/`proxy` are
+    // drawn from the config's small rotation lists (request build P1 /
+    // sticky child build P2 — every candidate's value is provably a list
+    // member), so they cross the exchange as a dictionary INDEX and are
+    // re-materialized by a codegen'd literal CASE right after the dedup;
+    // `url` equals `canon` for the large majority of web links
+    // (already-canonical URLs), so it ships as a null-when-equal delta and
+    // is rebuilt with one coalesce. Raw row width through the crawl's
+    // biggest shuffle drops ~2x (the wide strings were most of it), which is
+    // paid on the N>1 remote-read path per-byte: shuffle-write serialize,
+    // netty fetch, decompress, deserialize, and the window sort's spill all
+    // scale with it. Winner selection is by the globally unique
+    // (parent_seq, link_pos) — payload re-encoding can never change which
+    // row wins, so order, seen set, and counters stay byte-identical (parity
+    // suites pin it).
+    val slim2 = cfg.userAgents.length <= 64 && cfg.proxies.length <= 64
+    val uaVals = cfg.userAgents
+    val proxyVals = if (cfg.proxies.isEmpty) Vector("") else cfg.proxies
+    def dictIx(c: Column, vs: Vector[String]): Column =
+      vs.zipWithIndex.foldLeft(lit(-1)) { case (acc, (v, i)) =>
+        when(c === lit(v), lit(i)).otherwise(acc) }
+    def dictVal(c: Column, vs: Vector[String]): Column =
+      vs.zipWithIndex.foldLeft(lit(vs.head)) { case (acc, (v, i)) =>
+        if (i == 0) acc else when(c === lit(i), lit(v)).otherwise(acc) }
+    val passed =
+      if (slim2) cands.where(col("pass"))
+        .select(col("parent_seq"), col("link_pos"),
+          dictIx(col("ua"), uaVals).as("ua_ix"),
+          dictIx(col("proxy"), proxyVals).as("proxy_ix"),
+          when(col("url") === col("canon"), lit(null).cast("string"))
+            .otherwise(col("url")).as("url_d"),
+          col("canon"))
+      else cands.where(col("pass"))
+        .select(col("parent_seq"), col("link_pos"), col("ua"), col("proxy"),
+          col("url"), col("canon"))
+
+    // Q4a: in-batch first occurrence — discovery order (parent_seq,
+    // link_pos). NOT persisted: downstream legs read it through the
+    // aggregation's shuffle, which Catalyst reuses — spill-safe at any
+    // candidate volume, unlike a 26.8M-row cache. A window, not a
+    // min-struct aggregate: duplicates of a link almost never share a map
+    // partition, so a map-side partial aggregate measured no gain
+    // (BENCH/BASELINE.md).
+    val firsts0 = {
+      val w = Window.partitionBy(col("canon"))
+        .orderBy(col("parent_seq"), col("link_pos"))
+      passed.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+    }
+    // slim2 payload re-materialized HERE, on the post-dedup set (a fraction
+    // of candidate volume): literal-CASE dictionary lookups (codegen'd, same
+    // pattern as the politeness budget map) and the url delta's one
+    // coalesce — downstream sees the exact pre-slim2 schema, so every later
+    // plan is unchanged.
+    val firsts1 =
+      if (slim2) firsts0.select(col("parent_seq"), col("link_pos"),
+        dictVal(col("ua_ix"), uaVals).as("ua"),
+        dictVal(col("proxy_ix"), proxyVals).as("proxy"),
+        coalesce(col("url_d"), col("canon")).as("url"), col("canon"))
+      else firsts0
+    // hash64 re-derived ABOVE the dedup (not shipped through it): next
+    // superstep's politeness salt
+    val firsts = firsts1.withColumn("hash64", xxhash64(col("canon")))
+
+    // Q4b: cross-superstep dedup — the exact anti-join against the seen set
+    // (its side: SeenSet.joinSide). The identity/addressing columns are
+    // recomputed after it, so only fresh-set rows pay them: sha-256 (F3) via
+    // the codegen'd sha2 ≡ UrlFuncs.sha256hex; host via ONE GoUrl re-parse
+    // of the resolved url (exact by the round-trip identity
+    // CandidateFastPathSpec pins); root from host by pure label arithmetic —
+    // all pinned byte-equal to the UDF-side Parsed values in UrlExprSpec.
+    firsts.join(seenSide, Seq("canon"), "left_anti")
+      .withColumn("hash", sha2(col("canon"), 256))
+      .withColumn("host", exprs.UrlExprs.urlHost(col("url")))
+      .withColumn("root", exprs.UrlExprs.hostRoot(col("host")))
+  }
+
+  /** Atomic superstep commit: frontier, seen delta, crawled delta, attempts
+    * delta (written concurrently by Storage.commitStep), then metrics, seq
+    * watermark and the next frontier's row count. It returns before the
+    * superstep releases the caches it reads. */
+  private def commit(storage: Option[Storage], d: Int, next: Frontier,
+      seen: Option[Storage.SeenCommit], order: DataFrame, attempts: DataFrame,
+      metrics: Map[String, Long], seqBase: Long, seenBase: Int): Unit =
+    storage.foreach(_.commitStep(d, next.df, next.rows, seen, order, attempts, metrics,
+      seqBase, seenBase))
 
   private def emptyOrder(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -246,15 +246,6 @@ final class Storage(dir: String) {
     }
   }
 
-  /** Full seen set as of step d = plain union of the surviving committed
-    * deltas (layout-free view for result surfaces and checks). Reads each
-    * commit separately — a single multi-path read would trip partition
-    * discovery over the mixed plain/bucketed layouts — with wantP = -1 so no
-    * per-bucket reconstruction happens. */
-  def readSeen(spark: SparkSession, upTo: Int, seenBase: Int = -1): Option[DataFrame] =
-    readSeenDeltas(spark, upTo, seenBase, wantP = -1, rowBytes = 1L)
-      .map(_.df).reduceOption(_ unionByName _)
-
   def readCrawled(spark: SparkSession, upTo: Int): Option[DataFrame] =
     readSteps(spark, upTo, "crawled", CrawledSchema)
 

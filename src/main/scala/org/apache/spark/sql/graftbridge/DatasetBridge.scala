@@ -297,18 +297,6 @@ object DatasetBridge {
   def setLocalProperties(sc: org.apache.spark.SparkContext, props: java.util.Properties): Unit =
     sc.setLocalProperties(props)
 
-  /** debug: physical output partitioning + leaf partitioning of a plan */
-  def debugPartitioning(df: DataFrame): String = {
-    val cdf = df.asInstanceOf[classic.Dataset[Row]]
-    val ep = cdf.queryExecution.executedPlan
-    s"executed=${ep.getClass.getSimpleName} partitioning=${ep.outputPartitioning} " +
-      s"logical=${cdf.queryExecution.optimizedPlan.getClass.getSimpleName}" +
-      (cdf.queryExecution.optimizedPlan match {
-        case l: execution.LogicalRDD => s" leafPartitioning=${l.outputPartitioning}"
-        case _ => ""
-      })
-  }
-
   /** Partition-wise union of same-partitioning DataFrames: output partition i
     * is the concatenation of every input's partition i, declared with the
     * FIRST input's physical partitioning/ordering-free layout. Unlike

@@ -175,6 +175,38 @@ class CrawlerParitySpec extends SparkSuite {
     pagesPrep.unpersist()
   }
 
+  /** The ids of the persisted RDDs `df` reads: each persisted RDD its
+    * lineage reaches without passing through another one. */
+  private def cachesRead(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    def walk(r: org.apache.spark.rdd.RDD[_]): Set[Int] =
+      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Set(r.id)
+      else r.dependencies.flatMap(dep => walk(dep.rdd)).toSet
+    walk(df.queryExecution.toRdd)
+  }
+
+  test("a crawl leaves persisted exactly the caches its seen set and order read") {
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val base = CrawlConfig(maxDepth = 3, partitions = 4)
+    val oracle = Oracle.run(Fixtures.oraclePages(tiny), tinySeeds, base)
+    for ((leg, cfg) <- Seq(
+        "fold, no streams" -> base.copy(recordStreams = false, smallSeenBound = 3L),
+        "streams" -> base,
+        "stopped after one superstep" -> base.copy(maxSupersteps = 1))) {
+      val before = persisted
+      val run = SparkCrawler.run(spark, SparkTestBase.pagesDf(tiny), tinySeeds, cfg)
+      val left = persisted -- before
+      val read = cachesRead(run.seen) ++ cachesRead(run.order)
+      assert(left == read, s"$leg: ${(left -- read).size} caches nothing reads, " +
+        s"${(read -- left).size} read but not persisted")
+      if (cfg.maxSupersteps > 1) {
+        assert(run.seen.select("hash").collect().map(_.getString(0)).toSet == oracle.seen, leg)
+        assert(run.metrics == oracle.metrics, leg)
+      }
+      left.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+    }
+  }
+
   test("parity: score-priority drain is schedule-only (order/seen/metrics invariant)") {
     // O2: a non-constant drain priority must change interval slots but NEVER
     // crawl order, the seen set, or the counters

@@ -80,37 +80,20 @@ class OpsExprSpec extends SparkSuite {
     }
   }
 
-  test("SimhashTokenBits ≡ per-bit md5-substring construction") {
-    val s = spark
-    import s.implicits._
-    val r = rng(99L)
-    val toks = Seq("a", "wbot", "héllo", "ü—ß", "0", "#a", "x" * 50) ++
-      (0 until 50).map(_ => r.alphanumeric.take(1 + r.nextInt(12)).mkString)
-    val df = toks.toDF("tok")
-    def refBit(i: Int): Column = {
-      val src = if (i < 32) md5(concat(col("tok"), lit("#a")))
-      else md5(concat(col("tok"), lit("#b")))
-      substring(src, (i % 32) + 1, 1) >= "8"
-    }
-    val refBits = (0 until 64).map(i =>
-      when(refBit(i), lit(1L << i)).otherwise(lit(0L))).reduce(_ bitwiseOR _)
-    val got = df.select(col("tok"),
-        graft.ops.exprs.OpsExprs.simhashTokenBits(col("tok")).as("native"),
-        refBits.as("ref"))
-      .collect()
-    got.foreach(row =>
-      assert(row.getLong(1) == row.getLong(2), s"tok=${row.getString(0)}"))
-  }
-
   test("SimhashDocHex ≡ explode-tokens 64-vote groupBy construction") {
     val s = spark
     import s.implicits._
     val r = rng(77L)
     val words = Seq("wbot", "crawl", "héllo", "ß", "a", "xyz0", "—", "\tq", "\nz")
+    // single-token documents: every vote is ±1, so the doc hex is exactly
+    // that token's 64 md5-derived bits
+    val r1 = rng(99L)
+    val singles = Seq("a", "wbot", "héllo", "ü—ß", "0", "#a", "x" * 50) ++
+      (0 until 50).map(_ => r1.alphanumeric.take(1 + r1.nextInt(12)).mkString)
     val texts = Seq("", " ", "   ", "one", " lead", "trail ", "a  b", "\t", "\n \n") ++
       (0 until 40).map(_ =>
         (0 until (1 + r.nextInt(30))).map(_ => words(r.nextInt(words.length)))
-          .mkString(" "))
+          .mkString(" ")) ++ singles
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     // the previous construction, verbatim
     val toks = df.select(col("doc_id").as("id"), explode(split(col("text"), " ")).as("tok"))

@@ -168,15 +168,6 @@ class PlanSpec extends SparkSuite {
     assert(plan.contains("*("), s"expected a codegen stage around the interval projection:\n$plan")
   }
 
-  test("global rank offsets are a literal-map lookup (no scala UDF)") {
-    import spark.implicits._
-    val df = (1 to 100).map(i => (i.toLong, s"u$i")).toDF("k", "v")
-    val ranked = graft.wbot.Ranks.globalRank(df, Seq(col("k")), "rnk", 4)
-    val plan = planOf(ranked)
-    assert(!plan.contains("UDF"), s"offset lookup fell back to a scala UDF:\n$plan")
-    assert(ranked.orderBy("rnk").select("k").as[Long].collect().toSeq == (1L to 100L))
-  }
-
   test("denseRangeRank: sampling-free, no single-partition window, exact order") {
     // the crawl-loop rank: leading key's range is known → no sampling pass,
     // no global window (the round-2 small-frontier single-partition shortcut
@@ -264,7 +255,7 @@ class PlanSpec extends SparkSuite {
     val u = DatasetBridge.alignedUnion(Seq(delta(1 to 500), delta(400 to 900)), Seq("hash"), p)
     assert(u.count() == 1001L && u.distinct().count() == 900L)
     val cand = (300 to 1200).map(i => (s"h$i", i)).toDF("hash", "v")
-    // the engine's guarded anti-join shape (SparkCrawler seenHinted, large-seen path)
+    // the engine's guarded anti-join shape (SeenSet.joinSide, large-seen path)
     val anti = cand.join(u.select("hash").hint("shuffle_hash"), Seq("hash"), "left_anti")
     assert(anti.collect().length == 300) // h901..h1200 survive
     val plan = planOf(anti)

@@ -62,7 +62,8 @@ class ResumeSpec extends SparkSuite {
     assert(deltas.nonEmpty && deltas.forall(_.aligned),
       s"post-fold deltas must all load aligned: ${deltas.map(_.aligned)}")
     // superseded pre-fold smalls are compacted away from the layout-free view
-    val seenRows = st.readSeen(spark, snap.lastStep, snap.seenBaseStep).get
+    val seenRows = st.readSeenDeltas(spark, snap.lastStep, snap.seenBaseStep, wantP = -1,
+      rowBytes = 1L).map(_.df).reduce(_ unionByName _)
     assert(seenRows.count() == seenRows.select("canon").distinct().count(),
       "superseding fold double-counts pre-fold deltas")
 

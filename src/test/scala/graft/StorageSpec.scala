@@ -58,7 +58,8 @@ class StorageSpec extends SparkSuite {
     // step 1's tables, each of which can be made to throw when its write runs
     val tables = Map(
       "frontier" -> st.readFrontier(spark, 0),
-      "seen_delta" -> st.readSeen(spark, 0).get,
+      "seen_delta" -> st.readSeenDeltas(spark, 0, -1, wantP = -1, rowBytes = 1L)
+        .map(_.df).reduce(_ unionByName _),
       "crawled" -> st.readCrawled(spark, 0).get,
       "attempts" -> st.readAttempts(spark, 0).get)
     for (failing <- tables.keys.toSeq.sorted) {
