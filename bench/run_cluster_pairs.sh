@@ -102,7 +102,7 @@ runlevel() { # nWorkers totalCores pin outfile
   SPARK_SCALA_VERSION=2.13 SPARK_JARS="file:$JAR" \
   SPARK_MASTER="local-cluster[$NW,$EC,$EXEC_MEM]" SPARK_GRAFT_OFFHEAP=${OFFHEAP:-8g} \
   taskset -c "$PIN" java -Xmx"$MEM" $OPENS -Dspark.ui.enabled=false -cp "$CP" \
-    graft.wbot.CrawlBench run "$CORES" "$F" "$NH" "$PPH" "$SKEW" "$MD" "$FMIN" "$FRAND" \
+    graft.Tools crawl "$CORES" "$F" "$NH" "$PPH" "$SKEW" "$MD" "$FMIN" "$FRAND" \
     2>/dev/null | grep -o 'cores=[0-9]* wall=[0-9.]* urls=[0-9]* rate=[0-9.]*' | head -1
 }
 

@@ -51,18 +51,6 @@ object Similarity {
       .otherwise(raise_error(concat(
         lit(s"embedding length != dims=$dims: got "), size(col(vecCol)).cast("string"))))
 
-  private def signedDot(qv: Column, signs: Array[Long]): Column =
-    aggregate(zip_with(qv, typedlit(signs), (q, s) => q * s), lit(0L), (acc, x) => acc + x)
-
-  /** b-bit sign-random-projection bucket key (planes 0..bits-1). */
-  def withLshKey(df: DataFrame, vecCol: String, bits: Int, dims: Int): DataFrame = {
-    val withQ = df.withColumn("__qv", quantizedChecked(vecCol, dims))
-    val bitCols = (0 until bits).map { p =>
-      when(signedDot(col("__qv"), planeSigns(p, dims)) > 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    withQ.withColumn("lsh_key", bitCols.reduce(_ bitwiseOR _)).drop("__qv")
-  }
-
   /** Banded LSH keys for near-dup candidate generation: `bands` independent
     * keys of `bitsPerBand` planes each (band b uses planes b·w..b·w+w-1),
     * exploded to (id, band, bucket) rows — a pair is a candidate iff it

@@ -1,6 +1,6 @@
 package graft.wbot
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /**
@@ -54,15 +54,11 @@ object Udfs {
   val canonicalizeFn: String => String = raw =>
     UrlFuncs.newUrl(raw).toOption.map(_.canon).orNull
 
-  val extractTextFn: Array[Byte] => String = html =>
-    if (html == null) null else Html.extractTextBytes(html)
-
   // Column-level handles (functions.udf keeps them usable without registration)
   val extractLinks = udf(extractLinksFn)
   val resolveCandidate = udf(resolveCandidateFn)
   val parseUrl = udf(parseUrlFn)
   val canonicalize = udf(canonicalizeFn)
-  val extractText = udf(extractTextFn)
 
   def robotsAllowedUdf(rules: Seq[Schemas.RobotsRule]) =
     udf((host: String, path: String, ua: String) => Schemas.robotsAllowed(rules, host, path, ua))
@@ -70,14 +66,6 @@ object Udfs {
   def filterAllowUdf(rules: Map[String, Schemas.FilterRule]) =
     udf((root: String, path: String, urlStr: String) =>
       Schemas.filterAllow(rules, root, path, urlStr))
-
-  /** Register SQL-callable names (for spark.sql users of the library). */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("wbot_extract_links", extractLinksFn)
-    spark.udf.register("wbot_canonicalize", canonicalizeFn)
-    spark.udf.register("wbot_extract_text", extractTextFn)
-    spark.udf.register("wbot_parse_url", parseUrlFn)
-  }
 
   /** Budget lookup as a literal map expression (tiny config): codegen-friendly
     * `element_at` on a map literal — no per-row Scala UDF in the politeness

@@ -31,16 +31,7 @@ object DatasetBridge {
     sizeHint match {
       case None =>
         cdf.sparkSession.internalCreateDataFrame(cdf.queryExecution.toRdd, cdf.schema)
-      case Some((rows, bytes)) =>
-        val rdd = cdf.queryExecution.toRdd
-        val output = cdf.queryExecution.analyzed.output
-        val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-          sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows)))
-        classic.Dataset.ofRows(cdf.sparkSession,
-          execution.LogicalRDD(output, rdd,
-            org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(
-              rdd.getNumPartitions),
-            Nil, isStreaming = false)(cdf.sparkSession, Some(stats), None))
+      case hint => leaf(cdf, cdf.queryExecution.toRdd, Nil, Nil, hint)
     }
   }
 
@@ -54,8 +45,9 @@ object DatasetBridge {
     * reports as `UnknownPartitioning` — measured, hence this explicit form.
     * The CALLER asserts the data really is laid out that way (i.e. this df
     * is exactly a `repartition(numPartitions, keyCols)` output); the only
-    * machine-checkable part — the partition count — is required here. */
-  /** @param sizeHint (rowCount, sizeInBytes) when known — WITHOUT stats the
+    * machine-checkable part — the partition count — is required here.
+    *
+    * @param sizeHint (rowCount, sizeInBytes) when known — WITHOUT stats the
     *   leaf reports the session default size (effectively infinite), so a
     *   genuinely small side would never be broadcast by the planner. */
   def lineageCutPartitioned(df: DataFrame, keyCols: Seq[String],
@@ -64,17 +56,7 @@ object DatasetBridge {
     val rdd = cdf.queryExecution.toRdd
     require(rdd.getNumPartitions == numPartitions,
       s"declared $numPartitions partitions, rdd has ${rdd.getNumPartitions}")
-    val output = cdf.queryExecution.analyzed.output
-    val attrs = keyCols.map(k => output.find(_.name == k).getOrElse(
-      sys.error(s"partition key $k not in output ${output.map(_.name)}")))
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(attrs, numPartitions)
-    val stats = sizeHint.map { case (rows, bytes) =>
-      org.apache.spark.sql.catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows)))
-    }
-    classic.Dataset.ofRows(cdf.sparkSession,
-      execution.LogicalRDD(output, rdd, part, Nil, isStreaming = false)(
-        cdf.sparkSession, stats, None))
+    leaf(cdf, rdd, keyCols, Nil, sizeHint)
   }
 
   /** Partition-pruned scan of a hash-partitioned (cached) DataFrame: keeps
@@ -99,17 +81,7 @@ object DatasetBridge {
     require(rdd.getNumPartitions == numPartitions,
       s"declared $numPartitions partitions, rdd has ${rdd.getNumPartitions}")
     val keep = Array.tabulate(numPartitions)(keepPids.contains)
-    val pruned = new PartitionPrunedRDD(rdd, keep)
-    val output = cdf.queryExecution.analyzed.output
-    def attrOf(k: String) = output.find(_.name == k).getOrElse(
-      sys.error(s"column $k not in output ${output.map(_.name)}"))
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-      keyCols.map(attrOf), numPartitions)
-    val ordering = orderedBy.map(k => org.apache.spark.sql.catalyst.expressions.SortOrder(
-      attrOf(k), org.apache.spark.sql.catalyst.expressions.Ascending))
-    classic.Dataset.ofRows(cdf.sparkSession,
-      execution.LogicalRDD(output, pruned, part, ordering, isStreaming = false)(
-        cdf.sparkSession, None, None))
+    leaf(cdf, new PartitionPrunedRDD(rdd, keep), keyCols, orderedBy, None)
   }
 
   /** Reconstructs a hash-partitioned leaf from PER-BUCKET sources WITHOUT a
@@ -129,8 +101,9 @@ object DatasetBridge {
     * Caller's contract: every row in `buckets(i)` really hashes to bucket i
     * under `HashPartitioning(keyCols, buckets.size)` (guaranteed when the
     * directories were written from an aligned leaf at the same width); all
-    * bucket DataFrames share the leaf's schema. */
-  /** @param orderedBy columns each bucket's rows are ALREADY sorted by
+    * bucket DataFrames share the leaf's schema.
+    *
+    * @param orderedBy columns each bucket's rows are ALREADY sorted by
     *   (ascending) — declared on the leaf so consumers (e.g. a sort-merge
     *   join on the key) add no sort over it. Caller's contract, like the
     *   partitioning: holds when the bucket directories were written from a
@@ -147,21 +120,8 @@ object DatasetBridge {
       "bucketSourcesAligned: bucket schemas diverge")
     val rddByBucket: Array[Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]] =
       buckets.map(_.map(_.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd)).toArray
-    val rdd = new BucketAlignedRDD(head.sparkSession.sparkContext, rddByBucket)
-    val output = head.queryExecution.analyzed.output
-    def attrOf(k: String) = output.find(_.name == k).getOrElse(
-      sys.error(s"partition key $k not in output ${output.map(_.name)}"))
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-      keyCols.map(attrOf), buckets.size)
-    val ordering = orderedBy.map(k => org.apache.spark.sql.catalyst.expressions.SortOrder(
-      attrOf(k), org.apache.spark.sql.catalyst.expressions.Ascending))
-    val stats = sizeHint.map { case (rows, bytes) =>
-      org.apache.spark.sql.catalyst.plans.logical.Statistics(
-        sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows)))
-    }
-    classic.Dataset.ofRows(head.sparkSession,
-      execution.LogicalRDD(output, rdd, part, ordering, isStreaming = false)(
-        head.sparkSession, stats, None))
+    leaf(head, new BucketAlignedRDD(head.sparkSession.sparkContext, rddByBucket), keyCols,
+      orderedBy, sizeHint)
   }
 
   /** What the cache entry of a persisted DataFrame already knows, read with no
@@ -323,18 +283,36 @@ object DatasetBridge {
       s"alignedUnion inputs must all have $numPartitions partitions: " +
         rdds.map(_.getNumPartitions).mkString(","))
     val head = cparts.head
-    val union = new PartitionAlignedUnionRDD(head.sparkSession.sparkContext, rdds)
-    val output = head.queryExecution.analyzed.output
-    val attrs = keyCols.map(k => output.find(_.name == k).getOrElse(
-      sys.error(s"partition key $k not in output ${output.map(_.name)}")))
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(attrs, numPartitions)
+    leaf(head, new PartitionAlignedUnionRDD(head.sparkSession.sparkContext, rdds), keyCols,
+      Nil, sizeHint)
+  }
+
+  /** The leaf every constructor above builds: `rdd`, whose rows are in
+    * `src`'s output layout, as a `LogicalRDD` over `src`'s output attributes.
+    * It declares `HashPartitioning(keyCols, <rdd's partition count>)`
+    * (unknown partitioning when `keyCols` is empty), each partition sorted
+    * ascending by `orderedBy`, and `sizeHint` (rowCount, sizeInBytes) as its
+    * statistics. */
+  private def leaf(src: classic.Dataset[Row],
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      keyCols: Seq[String], orderedBy: Seq[String], sizeHint: Option[(Long, Long)]): DataFrame = {
+    val output = src.queryExecution.analyzed.output
+    def attrOf(k: String) = output.find(_.name == k).getOrElse(
+      sys.error(s"column $k not in output ${output.map(_.name)}"))
+    val part =
+      if (keyCols.isEmpty)
+        org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(rdd.getNumPartitions)
+      else org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
+        keyCols.map(attrOf), rdd.getNumPartitions)
+    val ordering = orderedBy.map(k => org.apache.spark.sql.catalyst.expressions.SortOrder(
+      attrOf(k), org.apache.spark.sql.catalyst.expressions.Ascending))
     val stats = sizeHint.map { case (rows, bytes) =>
       org.apache.spark.sql.catalyst.plans.logical.Statistics(
         sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows)))
     }
-    classic.Dataset.ofRows(head.sparkSession,
-      execution.LogicalRDD(output, union, part, Nil, isStreaming = false)(
-        head.sparkSession, stats, None))
+    classic.Dataset.ofRows(src.sparkSession,
+      execution.LogicalRDD(output, rdd, part, ordering, isStreaming = false)(
+        src.sparkSession, stats, None))
   }
 }
 

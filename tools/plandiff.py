@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Diff two `graft.PlanDump` output directories, ignoring what varies
+"""Diff two `graft.Tools plans` output directories, ignoring what varies
 between runs of the same code.
 
     python3 tools/plandiff.py <dirA> <dirB>
