@@ -43,13 +43,13 @@ object SparkEntry {
   /** Flagship: end-to-end crawl of a deterministic synthetic web (the whole
     * engine: seed parse → politeness → fetch-join → extract → filters →
     * dedup → rank). Driver smoke-checks rows > 0. */
-  def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
+  def entry(spark: SparkSession): DataFrame = crawlTiny(spark)
+
+  /** The crawl of [[entry]] and q24: 3 hosts × 8 pages, maxDepth 2, the
+    * crawl order with its identity columns. */
+  private def crawlTiny(spark: SparkSession): DataFrame = {
     val spec = Fixtures.SiteSpec(nHosts = 3, pagesPerHost = 8)
-    val pages = Fixtures.allPages(spec)
-      .map(p => (p.url, new java.sql.Timestamp(p.warcTsMs), p.html, p.text, p.lang))
-      .toDF("url", "warc_ts", "html", "text", "lang")
-    val run = SparkCrawler.run(spark, pages, Fixtures.seeds(spec),
+    val run = SparkCrawler.run(spark, Fixtures.pagesDf(spark, spec), Fixtures.seeds(spec),
       Schemas.CrawlConfig(maxDepth = 2, partitions = 4))
     run.order.orderBy("seq").select("seq", "depth", "url", "canon", "hash")
   }
@@ -82,8 +82,8 @@ object SparkEntry {
     * sizes are the leaves' own statistics — for files, the file listing — so
     * deciding runs no job. Below the bound a query's Janino time (Spark's
     * codegen cache cannot keep a pass's ~220 classes, see
-    * `DatasetBridge.withoutGeneratedCode`) outweighs what compiled code
-    * saves on its rows. */
+    * `DatasetBridge.interpretedCopy`) outweighs what compiled code saves on
+    * its rows. */
   private[graft] def generatedCode(leaves: Seq[LogicalPlan], bound: Long): Boolean = {
     val sizes = leaves.distinctBy(_.canonicalized).map(_.stats.sizeInBytes)
     sizes.exists(_ >= Long.MaxValue) || sizes.sum > bound
@@ -99,43 +99,13 @@ object SparkEntry {
 
   /** `q` with its regime decided from the DataFrame it builds: below the
     * bound the DataFrame is rebound to an interpreted copy of its session,
-    * so it runs without generated code wherever the caller executes it —
-    * unless the caller is repeating queries back to back ([[Repeats]]), when
-    * the compiled classes stay in Spark's codegen cache and are reused. */
-  private def sized(name: String, q: Query): Query =
+    * so it runs without generated code wherever the caller executes it. */
+  private def sized(q: Query): Query =
     (s, d) => {
       val df = q(s, d)
-      if (Repeats.record((name, d)) ||
-          generatedCode(df.queryExecution.analyzed.collectLeaves(), interpretedBytesBound.value)) df
-      else DatasetBridge.interpreted(df)
+      if (generatedCode(df.queryExecution.analyzed.collectLeaves(), interpretedBytesBound.value)) df
+      else DatasetBridge.inSession(df, DatasetBridge.interpretedCopy(s))
     }
-
-  /** Which builds keep generated code because their classes will be
-    * reused. Spark's codegen cache holds 100 classes and a pass over the
-    * queries compiles ~220, so a query built again after the others has
-    * lost its classes, while one built again right after itself finds them.
-    * A build keeps generated code when it repeats the build before it (same
-    * query name and data dir), or when that build was itself a repeat: a
-    * caller that repeats each query back to back then compiles each query
-    * once and reuses its classes, as the compiled regime alone would (only
-    * the first query's first build runs interpreted). */
-  private[graft] object Repeats {
-    private var last: (String, String) = null
-    private var lastRepeated = false
-
-    /** Records a build of query `key` (name, data dir): whether it keeps
-      * generated code. */
-    def record(key: (String, String)): Boolean = synchronized {
-      val repeated = key == last
-      val keep = repeated || lastRepeated
-      last = key
-      lastRepeated = repeated
-      keep
-    }
-
-    /** Forgets the builds so far (tests start from a fresh pattern). */
-    def forget(): Unit = synchronized { last = null; lastRepeated = false }
-  }
 
   private lazy val queryMap: Map[String, Query] = Map[String, Query](
     // ---- crawl-loop operators on the driver tables (SURVEY.md §2) ----
@@ -328,16 +298,7 @@ object SparkEntry {
     }),
 
     // ---- the whole engine, end-to-end (no SQL oracle: UDF pipeline) ----
-    "q24_crawl_tiny" -> ((s, _) => {
-      import s.implicits._
-      val spec = Fixtures.SiteSpec(nHosts = 3, pagesPerHost = 8)
-      val pages = Fixtures.allPages(spec)
-        .map(p => (p.url, new java.sql.Timestamp(p.warcTsMs), p.html, p.text, p.lang))
-        .toDF("url", "warc_ts", "html", "text", "lang")
-      val run = SparkCrawler.run(s, pages, Fixtures.seeds(spec),
-        Schemas.CrawlConfig(maxDepth = 2, partitions = 4))
-      run.order.orderBy("seq").select("seq", "depth", "url", "canon", "hash")
-    }),
+    "q24_crawl_tiny" -> ((s, _) => crawlTiny(s)),
 
     // ---- one full crawl superstep, SQL-oracle-checked (closes q24's
     // no_oracle gap): the UDF pipeline (extract → resolve → validate) is
@@ -392,18 +353,18 @@ object SparkEntry {
         .select((col("rr") - 1 + col("o") + lit(seqBase)).as("seq"),
           col("url"), col("canon"), col("hash"))
     })
-  ).map { case (name, q) => name -> sized(name, q) }
+  ).map { case (name, q) => name -> sized(q) }
 
   /** ±1 hyperplane sign, the SQL twin of `Similarity.planeSigns`: +qx iff
     * md5("plane-p-<i>") starts with a hex char >= '8' (hex a..f > '8'). */
   private def signCase(p: Int): String =
     s"CASE WHEN substr(md5('plane-$p-' || CAST(i0 AS VARCHAR)), 1, 1) >= '8' THEN qx ELSE -qx END"
 
-  /** q17 oracle: replays the LSH-banded near-dup construction end-to-end in
-    * SQL — planted flip-pairs, quantized vectors, md5 hyperplane signs,
-    * banded bucket join, exact qdot verify. */
-  private def q17Oracle: String = {
-    val bands = 6; val w = 6
+  /** The `dots`, `keys` and `bands` CTEs of the LSH oracles, over the
+    * quantized vectors `q`: per vector the dot products with `bands` × `w`
+    * md5 hyperplanes, each band's `w` sign bits as one bucket key, and one
+    * (id, band, bucket) row per band. */
+  private def lshBandCtes(bands: Int, w: Int): String = {
     val dotCols = (0 until bands * w).map(p => s"SUM(${signCase(p)}) AS dot$p").mkString(", ")
     val keyCols = (0 until bands).map { b =>
       val terms = (0 until w).map(j =>
@@ -413,6 +374,15 @@ object SparkEntry {
     val bandUnion = (0 until bands)
       .map(b => s"SELECT vec_id AS id, $b AS band, key$b AS bucket FROM keys")
       .mkString(" UNION ALL ")
+    s"""dots AS (SELECT vec_id, $dotCols FROM q GROUP BY vec_id),
+       |keys AS (SELECT vec_id, $keyCols FROM dots),
+       |bands AS ($bandUnion)""".stripMargin
+  }
+
+  /** q17 oracle: replays the LSH-banded near-dup construction end-to-end in
+    * SQL — planted flip-pairs, quantized vectors, md5 hyperplane signs,
+    * banded bucket join, exact qdot verify. */
+  private def q17Oracle: String =
     s"""WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 80),
        |corpus AS (
        |  SELECT vec_id, embedding FROM base
@@ -423,9 +393,7 @@ object SparkEntry {
        |q AS (SELECT vec_id, i - 1 AS i0, CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) AS qx
        |      FROM (SELECT vec_id, unnest(embedding) AS x, generate_subscripts(embedding, 1) AS i
        |            FROM corpus)),
-       |dots AS (SELECT vec_id, $dotCols FROM q GROUP BY vec_id),
-       |keys AS (SELECT vec_id, $keyCols FROM dots),
-       |bands AS ($bandUnion),
+       |${lshBandCtes(bands = 6, w = 6)},
        |pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
        |          FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id)
        |SELECT p.id_a, p.id_b, CAST(sum(qa.qx * qb.qx) AS BIGINT) AS qdot
@@ -433,27 +401,14 @@ object SparkEntry {
        |JOIN q qa ON qa.vec_id = p.id_a
        |JOIN q qb ON qb.vec_id = p.id_b AND qb.i0 = qa.i0
        |GROUP BY p.id_a, p.id_b HAVING sum(qa.qx * qb.qx) >= 600000""".stripMargin
-  }
 
   /** q26 oracle: the multi-band LSH ANN path — 6 bands × 4 md5 hyperplanes,
     * candidates = DISTINCT pairs sharing any band bucket, ranked once. */
-  private def q26Oracle: String = {
-    val bands = 6; val w = 4
-    val dotCols = (0 until bands * w).map(p => s"SUM(${signCase(p)}) AS dot$p").mkString(", ")
-    val keyCols = (0 until bands).map { b =>
-      val terms = (0 until w).map(j =>
-        s"(CASE WHEN dot${b * w + j} > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
-      s"($terms) AS key$b"
-    }.mkString(", ")
-    val bandUnion = (0 until bands)
-      .map(b => s"SELECT vec_id AS id, $b AS band, key$b AS bucket FROM keys")
-      .mkString(" UNION ALL ")
+  private def q26Oracle: String =
     s"""WITH q AS (SELECT vec_id, i - 1 AS i0, CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) AS qx
        |           FROM (SELECT vec_id, unnest(embedding) AS x, generate_subscripts(embedding, 1) AS i
        |                 FROM embeddings)),
-       |dots AS (SELECT vec_id, $dotCols FROM q GROUP BY vec_id),
-       |keys AS (SELECT vec_id, $keyCols FROM dots),
-       |bands AS ($bandUnion),
+       |${lshBandCtes(bands = 6, w = 4)},
        |pairs AS (SELECT DISTINCT bq.id AS query_id, bc.id AS nbr_id
        |          FROM bands bq JOIN bands bc ON bc.band = bq.band AND bc.bucket = bq.bucket
        |          WHERE bq.id < 5 AND bc.id <> bq.id),
@@ -466,7 +421,6 @@ object SparkEntry {
        |  SELECT query_id, nbr_id, qdot,
        |         row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, nbr_id) AS rank
        |  FROM scored) WHERE rank <= 3""".stripMargin
-  }
 
   /** q25 oracle: md5-bit simhash votes → 16-hex-char signature. */
   private def q25Oracle: String = {
@@ -515,6 +469,33 @@ object SparkEntry {
        |SELECT CAST(r.rr - 1 + off.o + $n AS BIGINT) AS seq, r.url, r.canon, r.hash
        |FROM r JOIN off ON off.pid = r.pid""".stripMargin
   }
+
+  /** q14 oracle: the minhash signatures of `Dedup.minhashSignatures` (6-char
+    * shingles, 4 md5 seeds) of documents 0-199. */
+  private val minhashSigSql: String =
+    """SELECT doc_id,
+      |  min(md5(shingle || '#0')) AS sig_0, min(md5(shingle || '#1')) AS sig_1,
+      |  min(md5(shingle || '#2')) AS sig_2, min(md5(shingle || '#3')) AS sig_3
+      |FROM (SELECT doc_id, substr(text, CAST(i AS INTEGER), 6) AS shingle
+      |      FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 5)) AS i
+      |            FROM documents WHERE doc_id < 200 AND length(text) >= 6))
+      |GROUP BY doc_id""".stripMargin
+
+  /** The `sig` and `bands` CTEs of the q15 and q28 oracles: [[minhashSigSql]]
+    * and its two 2-signature bands as md5 bucket keys. */
+  private val minhashBandCtes: String =
+    "sig AS (\n" + indented(minhashSigSql) + "),\n" +
+      """bands AS (
+        |  SELECT doc_id AS id, 0 AS band, md5(sig_0 || '|' || sig_1) AS bucket FROM sig
+        |  UNION ALL
+        |  SELECT doc_id AS id, 1 AS band, md5(sig_2 || '|' || sig_3) AS bucket FROM sig)""".stripMargin
+
+  /** q15 oracle's result: the distinct document pairs sharing a band bucket. */
+  private val minhashPairsSql: String =
+    """SELECT DISTINCT a.id AS id_a, b.id AS id_b
+      |FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id""".stripMargin
+
+  private def indented(sql: String): String = sql.linesIterator.map("  " + _).mkString("\n")
 
   def oracleSql: Map[String, String] = Map(
     "q30_crawl_step_sql" -> q30Oracle,
@@ -585,47 +566,14 @@ object SparkEntry {
       """SELECT doc_id, md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS prefix_key
         |FROM documents""".stripMargin,
 
-    "q14_minhash_sig" ->
-      """SELECT doc_id,
-        |  min(md5(shingle || '#0')) AS sig_0, min(md5(shingle || '#1')) AS sig_1,
-        |  min(md5(shingle || '#2')) AS sig_2, min(md5(shingle || '#3')) AS sig_3
-        |FROM (SELECT doc_id, substr(text, CAST(i AS INTEGER), 6) AS shingle
-        |      FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 5)) AS i
-        |            FROM documents WHERE doc_id < 200 AND length(text) >= 6))
-        |GROUP BY doc_id""".stripMargin,
+    "q14_minhash_sig" -> minhashSigSql,
 
-    "q15_minhash_pairs" ->
-      """WITH sig AS (
-        |  SELECT doc_id,
-        |    min(md5(shingle || '#0')) AS sig_0, min(md5(shingle || '#1')) AS sig_1,
-        |    min(md5(shingle || '#2')) AS sig_2, min(md5(shingle || '#3')) AS sig_3
-        |  FROM (SELECT doc_id, substr(text, CAST(i AS INTEGER), 6) AS shingle
-        |        FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 5)) AS i
-        |              FROM documents WHERE doc_id < 200 AND length(text) >= 6))
-        |  GROUP BY doc_id),
-        |bands AS (
-        |  SELECT doc_id AS id, 0 AS band, md5(sig_0 || '|' || sig_1) AS bucket FROM sig
-        |  UNION ALL
-        |  SELECT doc_id AS id, 1 AS band, md5(sig_2 || '|' || sig_3) AS bucket FROM sig)
-        |SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id""".stripMargin,
+    "q15_minhash_pairs" -> s"WITH $minhashBandCtes\n$minhashPairsSql",
 
     "q28_neardup_clusters" ->
-      """WITH RECURSIVE sig AS (
-        |  SELECT doc_id,
-        |    min(md5(shingle || '#0')) AS sig_0, min(md5(shingle || '#1')) AS sig_1,
-        |    min(md5(shingle || '#2')) AS sig_2, min(md5(shingle || '#3')) AS sig_3
-        |  FROM (SELECT doc_id, substr(text, CAST(i AS INTEGER), 6) AS shingle
-        |        FROM (SELECT doc_id, text, unnest(generate_series(1, length(text) - 5)) AS i
-        |              FROM documents WHERE doc_id < 200 AND length(text) >= 6))
-        |  GROUP BY doc_id),
-        |bands AS (
-        |  SELECT doc_id AS id, 0 AS band, md5(sig_0 || '|' || sig_1) AS bucket FROM sig
-        |  UNION ALL
-        |  SELECT doc_id AS id, 1 AS band, md5(sig_2 || '|' || sig_3) AS bucket FROM sig),
+      s"""WITH RECURSIVE $minhashBandCtes,
         |pairs AS (
-        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id),
+        |${indented(minhashPairsSql)}),
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
         |          UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
         |reach(id, r) AS (

@@ -367,7 +367,7 @@ object Tools {
   /** Connected components at volume on the partitioned path: `tinyPairs`
     * disjoint pairs (the LSH-dominant shape: millions of tiny components)
     * plus one `chainLen` chain (the adversarial diameter case), far above
-    * `spark.graft.cc.smallGraphEdges`. Prints wall time and peak cached
+    * `Dedup.smallGraphEdges` (4M edges). Prints wall time and peak cached
     * storage (sampled); `SPARK_GRAFT_CC_LOG=1` adds the per-round change
     * counts. Fails unless every chain node reaches cluster 0 and exactly one
     * representative per component is kept. */

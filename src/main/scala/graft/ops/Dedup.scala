@@ -140,6 +140,11 @@ object Dedup {
         (col("n_common") / (col("n_a") + col("n_b") - col("n_common"))).as("jaccard"))
   }
 
+  /** The edge count up to which [[nearDupClusters]] takes the single-task
+    * path: 4M edges, ~64 MB of edge rows in one task. Tests set it per call
+    * (`withValue(0L)`) to run small graphs on the partitioned path. */
+  private[graft] val smallGraphEdges = new scala.util.DynamicVariable[Long](4000000L)
+
   /**
    * Near-dup clusters: connected components over the candidate-pair graph
    * (the keep-one-per-cluster stage after MinHash/LSH + verify). Iterative
@@ -187,12 +192,8 @@ object Dedup {
    */
   def nearDupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     import org.apache.spark.sql.graftbridge.DatasetBridge
-    val conf = org.apache.spark.sql.SparkSession.active.conf
-    val bulk =
-      if (conf.getOption("spark.memory.offHeap.enabled").contains("true"))
-        org.apache.spark.storage.StorageLevel.OFF_HEAP
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val p = conf.get("spark.sql.shuffle.partitions").toInt
+    val bulk = graft.wbot.SparkCrawler.bulkLevel
+    val p = org.apache.spark.sql.SparkSession.active.conf.get("spark.sql.shuffle.partitions").toInt
     // symmetrize in ONE pass over the pair pipeline (explode of the two
     // directions) — the previous two-leg union executed the upstream
     // MinHash/band plan once per leg
@@ -213,9 +214,7 @@ object Dedup {
     // [[smallGraphClusters]] computes the exact fixpoint in one single-task
     // job instead; result rows are identical (equivalence pinned by
     // EmbeddingLshSpec's small≡big test and the q28 oracle).
-    val smallBound = conf.getOption("spark.graft.cc.smallGraphEdges")
-      .map(_.toLong).getOrElse(4000000L) // ~64 MB of edge rows in one task
-    if (nEdges <= smallBound) {
+    if (nEdges <= smallGraphEdges.value) {
       // edgesCache stays persisted: it backs the (lazy) result — releasing it
       // here would recompute the whole pair pipeline at consumption time.
       // Like the big path's final labels cache, it is the one surviving cache

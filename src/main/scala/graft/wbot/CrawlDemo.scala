@@ -24,11 +24,8 @@ object CrawlDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
-    val pages = Fixtures.allPages(spec)
-      .map(p => (p.url, new java.sql.Timestamp(p.warcTsMs), p.html, p.text, p.lang))
-      .toDF("url", "warc_ts", "html", "text", "lang")
+    val pages = Fixtures.pagesDf(spark, spec)
 
     val cfg = Schemas.CrawlConfig(maxDepth = maxDepth, partitions = 4)
     // WBOT_ROBOTS=1: bootstrap robots.txt rules from the snapshot itself and

@@ -58,8 +58,6 @@ object Ranks {
     val buckets = 8 * p // several value-buckets per shuffle task: evens out hash collisions
     val span = math.max(1L, hi - lo)
     val pidExpr = ((seqCol.cast("long") - lit(lo)) * lit(buckets.toLong) / lit(span)).cast("int")
-    val offHeap = org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.memory.offHeap.enabled").contains("true")
     // persist + explicit lineage cut, NOT localCheckpoint: the counts action
     // below fills the blocks, and DatasetBridge.lineageCut turns the cache
     // scan into a leaf plan — so callers can keep the ranked output (and
@@ -69,9 +67,7 @@ object Ranks {
     // scaladoc), and a lost partition recomputes instead of failing the job.
     val parted0 = df.withColumn("__pid", pidExpr)
       .repartition(p, col("__pid"))
-      .persist(
-        if (offHeap) org.apache.spark.storage.StorageLevel.OFF_HEAP
-        else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(SparkCrawler.bulkLevel)
     // ONE pass over the upstream: fills the bucket blocks and collects the
     // per-bucket counts (≤ `buckets` rows cross the driver)
     val counts = parted0.groupBy(col("__pid")).count().collect()

@@ -89,10 +89,7 @@ object SparkCrawler {
       // html-heavy: serialized cache keeps GC sane; when the session has
       // off-heap memory configured, keep the (large) pages snapshot off-heap
       // so it neither thrashes the GC nor spills to disk between supersteps
-      .persist(
-        if (org.apache.spark.sql.SparkSession.active.conf
-          .getOption("spark.memory.offHeap.enabled").contains("true")) StorageLevel.OFF_HEAP
-        else StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(bulkLevel)
   }
 
 
@@ -206,11 +203,12 @@ object SparkCrawler {
     }(sideEc)
   }
 
-  /** Storage level for the engine's bulk caches: off-heap when the session
-    * has an off-heap pool (columnar bytes stay out of the GC'd heap — the
-    * executor heap only pays the transient batch-build buffers), serialized
-    * on-heap + disk otherwise. */
-  private def bulkLevel: StorageLevel =
+  /** Storage level for the engine's bulk caches (the pages snapshot, seen
+    * deltas, rank bucket stores, connected-components labels): off-heap when
+    * the active session has an off-heap pool (columnar bytes stay out of the
+    * GC'd heap — the executor heap only pays the transient batch-build
+    * buffers), serialized on-heap + disk otherwise. */
+  private[graft] def bulkLevel: StorageLevel =
     if (org.apache.spark.sql.SparkSession.active.conf
       .getOption("spark.memory.offHeap.enabled").contains("true")) StorageLevel.OFF_HEAP
     else StorageLevel.MEMORY_AND_DISK_SER
@@ -338,7 +336,7 @@ object SparkCrawler {
     * `bound` rows together ([[interpretedRowsBound]]). Below that, Janino
     * time for the ~100 classes of a small crawl's plans, which Spark's
     * codegen cache cannot keep from one run to the next
-    * (`DatasetBridge.withoutGeneratedCode`), is a large share of each
+    * (`DatasetBridge.interpretedCopy`), is a large share of each
     * superstep, and interpretation costs little on so few rows. A pages
     * cache that is not built yet (`pagesRows` None) counts as large. */
   private[graft] def generatedCode(pagesRows: Option[Long], frontierSize: Long,
@@ -373,6 +371,11 @@ object SparkCrawler {
   private final case class Frontier(df: DataFrame, rows: Long, raw: Option[DataFrame] = None,
       owned: Option[DataFrame] = None, prunePids: Option[Set[Int]] = None) {
     def release(): Unit = owned.foreach(_.unpersist())
+
+    /** This frontier read by `session`'s jobs: every job a superstep starts
+      * reads it, so they all run in that session's regime. */
+    def in(session: SparkSession): Frontier = copy(df = DatasetBridge.inSession(df, session),
+      raw = raw.map(DatasetBridge.inSession(_, session)))
   }
 
   private object Frontier {
@@ -436,7 +439,8 @@ object SparkCrawler {
       else {
         val union =
           if (aligned.isEmpty) SeenSet.empty(spark)
-          else DatasetBridge.alignedUnion(aligned, Seq("canon"), alignP,
+          else DatasetBridge.alignedUnion(aligned.map(DatasetBridge.inSession(_, spark)),
+            Seq("canon"), alignP,
             Some((rows, math.max(1L, rows * seenRowBytes))))
         union.select("canon").hint("shuffle_hash")
       }
@@ -465,7 +469,10 @@ object SparkCrawler {
         // reconstructs the layout with zero shuffle).
         val supersedes = small.nonEmpty
         SeenUpdate(sideJob(spark) {
-          val a = alignDelta((small :+ delta).reduce(_ unionByName _), alignP)
+          // the fold runs in this superstep's session, not in that of the
+          // superstep whose delta heads the union
+          val a = alignDelta(
+            DatasetBridge.inSession((small :+ delta).reduce(_ unionByName _), spark), alignP)
           smallCaches.foreach(_.unpersist())
           (copy(aligned = aligned :+ a, small = Vector.empty, smallCaches = Vector.empty,
             rows = total, baseStep = if (supersedes) step else baseStep),
@@ -541,18 +548,21 @@ object SparkCrawler {
     def bucketOf(canon: Column): Column = pmod(hash(canon), lit(buckets)).cast("int")
 
     // runPrepared's layout contract, machine-checked on a sampled prefix the
-    // first time pruning would fire (lazy: one tiny job per crawl, and only
-    // when pruning matters): every sampled row must sit in partition
+    // first time pruning would fire (one tiny job per crawl, and only when
+    // pruning matters): every sampled row must sit in partition
     // pmod(hash(canon), P). An externally-prepared snapshot with a matching
     // partition COUNT but a different layout would otherwise be silently
     // pruned into failed fetches; instead it crawls unpruned (correct).
-    private lazy val layoutOk: Boolean = {
-      val bad = prep
+    private var layoutChecked: Option[Boolean] = None
+
+    private def layoutOk(session: SparkSession): Boolean = layoutChecked.getOrElse {
+      val bad = DatasetBridge.inSession(prep, session)
         .select(spark_partition_id().as("__pid"), bucketOf(col("canon")).as("__want"))
         .limit(1000).where(col("__pid") =!= col("__want")).count()
       if (bad > 0)
         System.err.println(s"[wbot] pagesPrep layout is not HashPartitioning(canon, $buckets) " +
           s"($bad of <=1000 sampled rows misplaced) — frontier-bucket pruning disabled")
+      layoutChecked = Some(bad == 0L)
       bad == 0L
     }
 
@@ -569,14 +579,16 @@ object SparkCrawler {
       * expected coverage is ≈ 98%, so skip the probe. The ids come from the
       * previous rank job's observation when available (zero extra jobs),
       * else from one tiny distinct-collect over the cached frontier (seeds,
-      * resume; ≤ P ints cross the driver). */
-    def sideFor(frontier: Frontier): DataFrame =
-      if (frontier.rows < 4L * buckets && layoutOk) {
+      * resume; ≤ P ints cross the driver). The probe and the pruned scan's
+      * plan run in `session`, the superstep's. */
+    def sideFor(frontier: Frontier, session: SparkSession): DataFrame =
+      if (frontier.rows < 4L * buckets && layoutOk(session)) {
         val pids = frontier.prunePids.getOrElse(
           frontier.raw.getOrElse(frontier.df).select(bucketOf(col("canon")).as("__p"))
             .distinct().collect().map(_.getInt(0)).toSet)
         if (pids.size < buckets)
-          DatasetBridge.prunedCacheScan(prep, pids, Seq("canon"), buckets, Seq("canon"))
+          DatasetBridge.prunedCacheScan(DatasetBridge.inSession(prep, session), pids,
+            Seq("canon"), buckets, Seq("canon"))
         else prep
       } else prep
   }
@@ -620,28 +632,31 @@ object SparkCrawler {
     storage.foreach(_.init())
     val pages = new Pages(pagesPrep)
     val codegenBound = interpretedRowsBound.value
+    lazy val interpreted = DatasetBridge.interpretedCopy(spark)
     @scala.annotation.tailrec
     def loop(s: Crawl, stepsRun: Int): Crawl =
       if (s.depth > cfg.maxDepth || s.frontier.rows <= 0L || stepsRun >= cfg.maxSupersteps) s
       else {
         // execution regime, from sizes the driver holds: a superstep whose
-        // rows fit one task runs without generated code (the whole
-        // superstep, side jobs included — each is awaited inside it)
+        // rows fit one task runs on the interpreted copy of the caller's
+        // session. The whole superstep follows its frontier there, side
+        // jobs and commit included.
         val rows = s.frontier.rows
         val withCodegen = generatedCode(pages.rows, rows,
           if (s.depth < cfg.maxDepth) (rows * fanout(s.steps)).toLong else 0L, codegenBound)
-        def step() =
-          superstep(spark, cfg, saltedPoliteness, pages, storage, s, stepsRun + 1, withCodegen)
-        loop(if (withCodegen) step() else DatasetBridge.withoutGeneratedCode(spark)(step()),
-          stepsRun + 1)
+        val session = if (withCodegen) spark else interpreted
+        loop(superstep(session, cfg, saltedPoliteness, pages, storage,
+          s.copy(frontier = s.frontier.in(session)), stepsRun + 1, withCodegen), stepsRun + 1)
       }
     val end = loop(start, 0)
     // a crawl stopped by maxSupersteps (or by an empty expansion) leaves a
     // live frontier that no result reads
     end.frontier.release()
-    CrawlRun(end.order.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark)),
-      end.attempts.reduceOption(_ unionByName _).getOrElse(emptyAttempts(spark)),
-      end.seen.view(spark), end.metrics, end.steps)
+    // the results are the caller's: read in its session's regime
+    def own(df: DataFrame) = DatasetBridge.inSession(df, spark)
+    CrawlRun(own(end.order.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark))),
+      own(end.attempts.reduceOption(_ unionByName _).getOrElse(emptyAttempts(spark))),
+      own(end.seen.view(spark)), end.metrics, end.steps)
   }
 
   private def bump(m: Map[String, Long], deltas: (String, Long)*): Map[String, Long] =
@@ -806,7 +821,7 @@ object SparkCrawler {
     * serializing two driver round-trips. */
   private def fetch(spark: SparkSession, cfg: CrawlConfig, pages: Pages, fr: Frontier,
       sched: Schedule, d: Int, n: Int): Fetch = {
-    val pagesSide = pages.sideFor(fr)
+    val pagesSide = pages.sideFor(fr, spark)
     def fetchJoin(f: DataFrame): DataFrame =
       f.hint("merge").join(pagesSide.drop("hash64"), Seq("canon"), "left")
     val counters = new Counters(s"fetch_d${d}_s$n",

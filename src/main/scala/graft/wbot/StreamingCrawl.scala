@@ -7,8 +7,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * Structured-Streaming skin over the batch superstep engine (SURVEY.md
  * §2.10 / §7.8): a stream of seed URLs drives the same deterministic
  * frontier-expansion pipeline via `foreachBatch` — each micro-batch of seeds
- * runs a full crawl against the pages snapshot and appends the stream
- * (order) and seen deltas to parquet sinks. No stateful streaming operators
+ * runs a full crawl against the pages snapshot and writes the stream
+ * (order) and seen rows to parquet sinks, one `batch_id=<id>` directory per
+ * micro-batch. A batch replayed after a driver failure (its offsets logged,
+ * its commit not) overwrites its own directories, so its rows land once.
+ * No stateful streaming operators
  * are needed: all crawl state lives in the engine's tables, which is what
  * makes the crawl order reproducible (and the reference has no event-time
  * semantics to model — `crawler.go:195-291` is a pull loop).
@@ -37,12 +40,8 @@ object StreamingCrawl {
         if (seeds.nonEmpty) {
           try {
             val run = SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg)
-            run.order
-              .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-              .write.mode("append").parquet(s"$outDir/crawled")
-            run.seen
-              .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-              .write.mode("append").parquet(s"$outDir/seen")
+            run.order.write.mode("overwrite").parquet(s"$outDir/crawled/batch_id=$batchId")
+            run.seen.write.mode("overwrite").parquet(s"$outDir/seen/batch_id=$batchId")
           } catch {
             case e: IllegalArgumentException if !invalidSeedsAreFatal =>
               System.err.println(s"[streaming-crawl] batch $batchId skipped: ${e.getMessage}")

@@ -159,37 +159,43 @@ object DatasetBridge {
       }
   }
 
-  /** Runs `body` with the session's generated code off: whole-stage codegen
-    * disabled (`spark.sql.codegen.wholeStage=false`) and every
-    * expression-level projection, predicate and ordering interpreted
-    * (`spark.sql.codegen.factoryMode=NO_CODEGEN`, an internal conf — hence
-    * here). The physical operators stay the same; only how they execute
-    * changes. For small inputs this skips Janino compilation that costs more
-    * than the rows it would speed up: Spark 4.1's codegen cache is static,
-    * 100 entries, and keyed by (class loader, code), so in local mode the
-    * driver's and the tasks' copies of a small crawl's ~100 classes evict
-    * each other and are recompiled by every run.
+  /** An interpreted copy of `caller`: a session with the caller's confs in
+    * which whole-stage codegen is disabled (`spark.sql.codegen.wholeStage=
+    * false`) and every expression-level projection, predicate and ordering
+    * is interpreted (`spark.sql.codegen.factoryMode=NO_CODEGEN`, an internal
+    * conf — hence here). The physical operators stay the same; only how they
+    * execute changes. For small inputs this skips Janino compilation that
+    * costs more than the rows it would speed up: Spark 4.1's codegen cache is
+    * static, 100 entries, and keyed by (class loader, code), so in local mode
+    * the driver's and the tasks' copies of a small crawl's ~100 classes
+    * evict each other and are recompiled by every run.
     *
-    * The confs are session-wide, so nested or concurrent calls on one
-    * session share one regime: the first entry saves the caller's values
-    * (set or unset) and the last exit restores them, also when `body`
-    * throws. Other queries of the session that run meanwhile run
-    * interpreted too; results are the same either way. */
-  def withoutGeneratedCode[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
-    Interpreted.enter(conf)
-    try body finally Interpreted.exit(conf)
-  }
+    * No conf of the caller changes, so the caller's other queries keep their
+    * regime. The copy shares the caller's SparkContext and cache manager:
+    * jobs on it carry the calling thread's job group and local properties,
+    * but the copy's own session tag, so the caller's `interruptAll` does not
+    * reach them.
+    *
+    * One copy per caller, not one per DataFrame: executors keep per-session
+    * state with its own class loader, and generated classes are cached per
+    * class loader, so a copy per query recompiled the few classes
+    * interpreted plans still generate in tasks (10 per pass over the
+    * queries). It is made again once the caller's confs have changed. The
+    * copy is a new session given the caller's confs, not a clone: a clone
+    * keeps its parent's session state, which would keep the weak key alive
+    * as long as the map holds the copy. */
+  def interpretedCopy(caller: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    Interpreted.copyOf(caller.asInstanceOf[classic.SparkSession])
 
-  /** `df` rebound to an interpreted copy of its session: the same analyzed
-    * plan, run wherever the caller later executes it (a write, a count, a
-    * collect) with generated code off, as in [[withoutGeneratedCode]]. The
-    * regime travels with the DataFrame, so no conf of the caller's session
-    * changes. Jobs that built `df` have already run in the caller's regime. */
-  def interpreted(df: DataFrame): DataFrame = {
-    val cdf = df.asInstanceOf[classic.Dataset[Row]]
-    classic.Dataset.ofRows(Interpreted.copyOf(cdf.sparkSession), cdf.logicalPlan)
-  }
+  /** `df`'s analyzed plan as a DataFrame of `session`: it runs in that
+    * session's regime wherever the caller later executes it (a write, a
+    * count, a collect). Caches are shared across the sessions of one
+    * SparkContext, so a persisted `df` is still read from its cache. Jobs
+    * that built `df` have already run in its own session. */
+  def inSession(df: DataFrame, session: org.apache.spark.sql.SparkSession): DataFrame =
+    if (df.sparkSession eq session) df
+    else classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 
   private object Interpreted {
     /** The confs of the regime without generated code. */
@@ -197,19 +203,11 @@ object DatasetBridge {
       org.apache.spark.sql.internal.SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
       org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
 
-    /** Per caller session: the caller's runtime confs and the interpreted
-      * copy made with them. One copy per caller, not one per DataFrame:
-      * executors keep per-session state with its own class loader, and
-      * generated classes are cached per class loader, so a copy per query
-      * recompiled the few classes interpreted plans still generate in tasks
-      * (10 per pass over the queries). The copy is a new session given the
-      * caller's confs, not a clone: a clone keeps its parent's session state,
-      * which would keep the weak key alive as long as the map holds the
-      * copy. */
+    /** Per caller session: the caller's runtime confs and the copy made
+      * with them. */
     private val copies =
       new java.util.WeakHashMap[classic.SparkSession, (Map[String, String], classic.SparkSession)]
 
-    /** The caller's copy, made again once the caller's confs have changed. */
     def copyOf(caller: classic.SparkSession): classic.SparkSession = synchronized {
       val confs = caller.sessionState.conf.getAllConfs
       Option(copies.get(caller)).filter(_._1 == confs).map(_._2).getOrElse {
@@ -217,32 +215,6 @@ object DatasetBridge {
         (confs ++ Keys).foreach { case (k, v) => copy.sessionState.conf.setConfString(k, v) }
         copies.put(caller, (confs, copy))
         copy
-      }
-    }
-
-    /** Per session conf: (entries, the caller's values of [[Keys]]). */
-    private val active =
-      new java.util.IdentityHashMap[org.apache.spark.sql.internal.SQLConf, (Int, Seq[Option[String]])]
-
-    def enter(conf: org.apache.spark.sql.internal.SQLConf): Unit = synchronized {
-      val (n, saved) = Option(active.get(conf)).getOrElse {
-        val caller = Keys.map { case (k, _) =>
-          if (conf.contains(k)) Some(conf.getConfString(k)) else None }
-        Keys.foreach { case (k, v) => conf.setConfString(k, v) }
-        (0, caller)
-      }
-      active.put(conf, (n + 1, saved))
-    }
-
-    def exit(conf: org.apache.spark.sql.internal.SQLConf): Unit = synchronized {
-      val (n, saved) = active.get(conf)
-      if (n > 1) active.put(conf, (n - 1, saved))
-      else {
-        active.remove(conf)
-        Keys.map(_._1).zip(saved).foreach {
-          case (k, Some(v)) => conf.setConfString(k, v)
-          case (k, None) => conf.unsetConf(k)
-        }
       }
     }
   }

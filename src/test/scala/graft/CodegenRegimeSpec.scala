@@ -132,18 +132,32 @@ class CodegenRegimeSpec extends SparkSuite {
         .exists(c => Option(c.getMessage).exists(_.contains("injected commit failure"))), e)
       assert(new Storage(dir).readManifest().isEmpty, "the poisoned step committed")
       assert(settings == ((None, Some("FALLBACK"))))
-
-      // nested scopes share one regime: only the outermost exit restores
-      import org.apache.spark.sql.graftbridge.DatasetBridge.withoutGeneratedCode
-      withoutGeneratedCode(spark) {
-        withoutGeneratedCode(spark)(())
-        assert(settings == ((Some("false"), Some("NO_CODEGEN"))))
-      }
-      assert(settings == ((None, Some("FALLBACK"))))
     } finally {
       conf.unset(WholeStage); conf.unset(FactoryMode)
       pagesPrep.unpersist(); ()
     }
+  }
+
+  test("another thread never sees the caller's codegen settings change while a crawl runs interpreted") {
+    def settings: (Option[String], Option[String]) =
+      (spark.conf.getAll.get(WholeStage), spark.conf.getAll.get(FactoryMode))
+    val before = settings
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(Option[String], Option[String])]()
+    @volatile var running = true
+    val poller = new Thread(() => do { seen.add(settings); Thread.sleep(1) } while (running))
+    poller.setDaemon(true)
+    val pagesPrep = prepared()
+    try {
+      poller.start()
+      val (leg, res) = CheckpointedTiny.crawl(spark, pagesPrep)
+      assert((leg.steps ++ res.steps).forall(!_.generatedCode))
+    } finally {
+      running = false
+      poller.join()
+      pagesPrep.unpersist()
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSet == Set(before))
   }
 
   private val sf = "/root/testdata/sf0.01"
@@ -180,7 +194,6 @@ class CodegenRegimeSpec extends SparkSuite {
   }
 
   test("after one warm-up pass, a pass over the operator queries compiles no class") {
-    SparkEntry.Repeats.forget()
     noopPass()
     val (_, classes, _) = compiling(noopPass())
     assert(classes == 0L, s"$classes classes compiled")
@@ -193,8 +206,6 @@ class CodegenRegimeSpec extends SparkSuite {
       (df.sparkSession ne spark,
         df.collect().toSeq.map(_.toString).groupBy(identity).view.mapValues(_.size).toMap)
     }
-    // one pass per regime, so no query is built right after itself
-    SparkEntry.Repeats.forget()
     val interpreted = passQueries.map { case (name, q) => name -> run(q, SparkEntry.interpretedBytesBound.value) }
     val compiled = passQueries.map { case (name, q) => name -> run(q, 0L) }
     interpreted.zip(compiled).foreach { case ((name, (copied, rows)), (_, (copiedAt0, rowsAt0))) =>
@@ -205,27 +216,9 @@ class CodegenRegimeSpec extends SparkSuite {
     }
   }
 
-  test("queries built back to back keep generated code; a pass does not") {
-    def copied(name: String) = SparkEntry.queries(name)(spark, sf).sparkSession ne spark
-    SparkEntry.Repeats.forget()
-    assert(copied("q07_metrics_agg"))
-    assert(!copied("q07_metrics_agg"), "a repeat finds its classes compiled")
-    assert(!copied("q08_contains_scope"), "the build after a repeat keeps generated code")
-    assert(!copied("q08_contains_scope"))
-    assert(!copied("q09_regex_filter"))
-    assert(copied("q10_seen_union"), "q09 repeated no build")
-    assert(copied("q07_metrics_agg"))
-    SparkEntry.Repeats.forget()
-    assert(copied("q07_metrics_agg"))
-    val other = new java.io.File(sf).getParent + "/sf0.001"
-    assert(SparkEntry.queries("q07_metrics_agg")(spark, other).sparkSession ne spark,
-      "the same query over other data is not a repeat")
-  }
-
   test("a pass leaves the caller's confs as they were and runs on one interpreted copy") {
     val caller = spark.newSession()
     val before = caller.conf.getAll
-    SparkEntry.Repeats.forget()
     val sessions = passQueries.map { case (_, q) =>
       val df = q(caller, sf)
       df.write.format("noop").mode("overwrite").save()
@@ -243,7 +236,6 @@ class CodegenRegimeSpec extends SparkSuite {
       df.write.format("noop").mode("overwrite").save()
       new java.lang.ref.WeakReference(caller)
     }
-    SparkEntry.Repeats.forget()
     val ref = use()
     val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
     while (ref.get != null && System.nanoTime() < deadline) { System.gc(); Thread.sleep(100) }
@@ -252,11 +244,9 @@ class CodegenRegimeSpec extends SparkSuite {
 
   test("a conf the caller changes reaches the interpreted copy") {
     val caller = spark.newSession()
-    SparkEntry.Repeats.forget()
     val q07 = SparkEntry.queries("q07_metrics_agg")
     q07(caller, sf).collect()
     caller.conf.set("spark.sql.shuffle.partitions", "3")
-    SparkEntry.Repeats.forget()
     val df = q07(caller, sf)
     assert(df.sparkSession ne caller, "q07 should run interpreted")
     val plan = df.queryExecution.executedPlan.toString

@@ -106,11 +106,9 @@ class EmbeddingLshSpec extends SparkSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     val small = rows(Dedup.nearDupClusters(pairs, maxIter = 100))
-    spark.conf.set("spark.graft.cc.smallGraphEdges", "0") // force the big path
-    try {
-      val big = rows(Dedup.nearDupClusters(pairs, maxIter = 100))
-      assert(small == big, "fast path must reach the identical fixpoint")
-      assert(small.count(_._3 == 1) == 4, "one representative per component")
-    } finally spark.conf.unset("spark.graft.cc.smallGraphEdges")
+    // the partitioned path
+    val big = Dedup.smallGraphEdges.withValue(0L)(rows(Dedup.nearDupClusters(pairs, maxIter = 100)))
+    assert(small == big, "fast path must reach the identical fixpoint")
+    assert(small.count(_._3 == 1) == 4, "one representative per component")
   }
 }

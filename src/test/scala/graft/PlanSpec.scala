@@ -48,14 +48,10 @@ class PlanSpec extends SparkSuite {
   test("whole-stage codegen spans the quality-score projection") {
     // codegen stages appear as "*(n)" in the plan string. Inputs above the
     // query byte bound keep generated code; sf0.001 is below the default one
-    // (and a query built right after itself keeps it: each build here
-    // starts from no earlier builds)
-    SparkEntry.Repeats.forget()
     val plan = SparkEntry.interpretedBytesBound.withValue(0L) {
       planOf(SparkEntry.queries("q20_quality")(spark, sf))
     }
     assert(plan.contains("*(1)"), s"expected a codegen stage:\n$plan")
-    SparkEntry.Repeats.forget()
     val small = planOf(SparkEntry.queries("q20_quality")(spark, sf))
     assert(!small.contains("*("), s"expected no codegen stage below the bound:\n$small")
   }

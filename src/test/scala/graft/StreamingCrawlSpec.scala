@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.wbot._
 import graft.wbot.Schemas._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The streaming skin must produce exactly the batch engine's output: seeds
   * arriving as a stream → same crawl order + seen set as a direct run. */
@@ -36,6 +36,35 @@ class StreamingCrawlSpec extends SparkSuite {
       .collect().map(_.getString(0)).toSet
     val oracleSeen = Oracle.run(Fixtures.oraclePages(spec), Fixtures.seeds(spec), cfg).seen
     assert(streamedSeen == oracleSeen)
+    pagesPrep.unpersist()
+  }
+
+  test("a batch replayed after a driver failure writes its rows once") {
+    val sp = spark
+    val spec = Fixtures.tiny
+    val cfg = CrawlConfig(maxDepth = 2, partitions = 4)
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    val in = Files.createTempDirectory("wbot_replay_seeds")
+    Files.writeString(in.resolve("seeds.txt"), Fixtures.seeds(spec).mkString("\n"))
+    val out = Files.createTempDirectory("wbot_replay_out").toString
+    val ckpt = Files.createTempDirectory("wbot_replay_ckpt").toString
+    def batchIds(): Seq[Long] = {
+      val q = StreamingCrawl.start(sp, sp.readStream.text(in.toString), pagesPrep, cfg, out, ckpt)
+      q.awaitTermination(120000)
+      q.recentProgress.toSeq.filter(_.numInputRows > 0).map(_.batchId)
+    }
+    assert(batchIds() == Seq(0L))
+    // the driver died after batch 0's writes and before its commit
+    Files.delete(Paths.get(ckpt, "commits", "0"))
+    Files.deleteIfExists(Paths.get(ckpt, "commits", ".0.crc"))
+    assert(batchIds() == Seq(0L), "the restart replays batch 0")
+
+    val direct = SparkCrawler.runPrepared(sp, pagesPrep, Fixtures.seeds(spec), cfg)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.head, cols.tail: _*).collect().map(_.toString).sorted.toSeq
+    assert(rows(sp.read.parquet(s"$out/crawled"), "seq", "canon", "depth") ==
+      rows(direct.order, "seq", "canon", "depth"))
+    assert(rows(sp.read.parquet(s"$out/seen"), "hash") == rows(direct.seen, "hash"))
     pagesPrep.unpersist()
   }
 }

@@ -39,9 +39,7 @@ class ToolsSpec extends SparkSuite {
     val dir = Files.createTempDirectory("tools_plans")
     val name = "q01_sha_identity"
     def masked(plan: String) = plan.replaceAll("#\\d+", "#")
-    SparkEntry.Repeats.forget()
     Tools.plans(spark, sf, dir.toString, Set(name))
-    SparkEntry.Repeats.forget()
     val expected = SparkEntry.queries(name)(spark, sf).queryExecution.explainString(FormattedMode)
     val written: Seq[Path] = Files.list(dir).toArray.toSeq.map(_.asInstanceOf[Path])
     assert(written.map(_.getFileName.toString) == Seq(s"$name.txt"))
