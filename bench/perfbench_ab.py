@@ -10,8 +10,13 @@ drift of the host hits both sides alike. Each run uses its own checkout's
 perfbench and engine sources. It then prints, for every end-to-end metric of
 the base checkout's BENCHMARK.json: each side's median and quartiles, how
 many pairs the change won, whether the median gap exceeds the base's
-interquartile range, and whether every change run read better than every
-base run. A run that fails its oracle checks is reported and
+interquartile range, whether every change run read better than every
+base run, and the regression verdict against the metric's `bound` (a
+fraction of the base median): "within" when the change's median is worse
+than the base's by at most the bound, "exceeded" when by more, and
+"unresolved" when the base's own interquartile range is wider than the
+bound, unless every change run read better than every base run. A run that
+fails its oracle checks is reported and
 leaves its pair out. Nothing under perfbench/ is written except the build
 and work directories perfbench itself uses.
 
@@ -61,6 +66,20 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def regression(e, bq, cq, apart):
+    """The regression verdict of one end-to-end metric: its change median
+    against the base median, within BENCHMARK.json's relative `bound`."""
+    bound = e["bound"]
+    worse = (cq[1] - bq[1]) / bq[1] if e["better"] == "lower" else (bq[1] - cq[1]) / bq[1]
+    spread = (bq[2] - bq[0]) / bq[1]
+    if spread > bound and not apart:
+        verdict = "unresolved"
+    else:
+        verdict = "within" if worse <= bound else "exceeded"
+    return (f"{verdict}: change median {abs(worse):.1%} {'worse' if worse > 0 else 'better'} "
+            f"than the base's, bound {bound:.0%}, base IQR {spread:.1%} of its median")
 
 
 def main():
@@ -134,6 +153,8 @@ def main():
         print(f"    change won {wins} of {len(pairs)}; median gap {gap:+.4g} vs base IQR "
               f"{iqr:.4g}: {'exceeds' if gap > iqr else 'does not exceed'}")
         print(f"    every change run better than every base run: {'yes' if apart else 'no'}")
+        if "bound" in e:
+            print(f"    regression bound: {regression(e, bq, cq, apart)}")
     return 0
 
 

@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 import graft.ops.Dedup
-import graft.wbot.{Fixtures, Schemas, SparkCrawler}
+import graft.wbot.{Fixtures, Schemas, SparkCrawler, Storage}
 
 /** Optimization tooling, separate from the frozen `Bench` and `Verify`
   * harness. One entry, one session builder, one warm-up crawl and one
@@ -433,12 +433,12 @@ object Tools {
           val p = SparkCrawler.preparePages(spark.read.parquet(rawDir), cpus)
           p.count(); p
         }
-        timed("snapshot write (one-time)")(SparkCrawler.writePreparedPages(session, dir))
+        timed("snapshot write (one-time)")(Storage.writePreparedPages(session, dir))
         val mA = timed("crawl from session prep")(
           SparkCrawler.runPrepared(spark, session, Fixtures.seedsAll(spec), cfg)).metrics
         session.unpersist()
         val stored = timed("snapshot read (zero-shuffle leaf + cache materialize)") {
-          val s = SparkCrawler.readPreparedPages(spark, dir)
+          val s = Storage.readPreparedPages(spark, dir)
           s.count(); s
         }
         val mB = timed("crawl from stored prep")(

@@ -54,7 +54,8 @@ object SparkCrawler {
 
   /** Prepare the pages side of the fetch join once: canonical key + hash64,
     * hash-partitioned (the Iceberg-table layout stand-in; on a real cluster
-    * this is the bucketed/partitioned Iceberg table, SURVEY.md §7.6). */
+    * this is the bucketed/partitioned Iceberg table, SURVEY.md §7.6).
+    * [[Storage.writePreparedPages]] keeps it on disk for later sessions. */
   def preparePages(pages: DataFrame, partitions: Int): DataFrame = {
     // canon uniqueness is a store invariant (the reference holds ONE page per
     // URL, store/in_memory.go); enforcing it here makes the regular left-join
@@ -89,79 +90,6 @@ object SparkCrawler {
       // html-heavy: serialized cache keeps GC sane; when the session has
       // off-heap memory configured, keep the (large) pages snapshot off-heap
       // so it neither thrashes the GC nor spills to disk between supersteps
-      .persist(bulkLevel)
-  }
-
-
-  /** Declared read schema of a [[writePreparedPages]] bucket — exactly what
-    * the write leaves in the footers (PrepSnapshotSpec pins it). */
-  val PreparedPagesSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL("canon STRING, hash64 BIGINT, html BINARY")
-
-  /** Persist a [[preparePages]] snapshot to disk as one bucket directory per
-    * partition (`__bucket=<pid>`, pid ≡ `pmod(hash(canon), P)`), rows inside
-    * each bucket file sorted by canon — the pages-side analogue of the
-    * bucket-aligned seen commit. A later session reconstructs the exact
-    * prepared layout with [[readPreparedPages]]: ZERO shuffle, zero
-    * canonicalize pass over the corpus — the per-session prep
-    * (canonicalize + repartition + dedup + sort of the FULL corpus, the
-    * largest remaining one-time cost at the 10^10 design point) is paid once
-    * per corpus snapshot instead of once per session. On a real cluster this
-    * is writing/reading the bucketed+sorted Iceberg pages table (SURVEY §7.6).
-    * Returns the row count (also persisted in the side-car properties). */
-  def writePreparedPages(pagesPrep: DataFrame, dir: String): Long = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val p = pagesPrep.rdd.getNumPartitions
-    val rows = pagesPrep.count()
-    val tmp = dir + ".tmp"
-    // __bucket is constant per task, so sortWithinPartitions(__bucket, canon)
-    // re-sorts each partition by canon — satisfying the dynamic-partition
-    // writer's required ordering EXPLICITLY. Without this the writer plans
-    // its own sort on __bucket alone, which is not stability-guaranteed and
-    // could scramble the canon order the fetch join's sort-free pages side
-    // depends on.
-    pagesPrep.withColumn("__bucket", spark_partition_id())
-      .sortWithinPartitions(col("__bucket"), col("canon"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__bucket").parquet(tmp)
-    val dst = new java.io.File(dir)
-    if (dst.exists()) { def del(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del); f.delete(); () }; del(dst) }
-    Files.move(Paths.get(tmp), Paths.get(dir), StandardCopyOption.ATOMIC_MOVE)
-    val props = new java.util.Properties()
-    props.setProperty("partitions", p.toString)
-    props.setProperty("rows", rows.toString)
-    val ptmp = Paths.get(s"$dir/_prep.properties.tmp")
-    val out = Files.newOutputStream(ptmp)
-    try props.store(out, "prepared pages snapshot meta") finally out.close()
-    Files.move(ptmp, Paths.get(s"$dir/_prep.properties"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    rows
-  }
-
-  /** Reconstruct a [[writePreparedPages]] snapshot as a zero-shuffle aligned
-    * leaf: `HashPartitioning(canon, P)` + per-partition canon ordering
-    * DECLARED (the fetch join adds no pages-side exchange or sort, identical
-    * to the in-session prep), cached at the same storage level
-    * [[preparePages]] uses. No stats are declared — the pages side must never
-    * broadcast, and the session-default (effectively infinite) size
-    * guarantees that. Every bucket is read with [[PreparedPagesSchema]], so
-    * no bucket pays a footer-inference job. Drop-in for
-    * [[runPrepared]]/[[resumePrepared]]. */
-  def readPreparedPages(spark: SparkSession, dir: String): DataFrame = {
-    val pf = new java.io.File(s"$dir/_prep.properties")
-    require(pf.exists(), s"no prepared-pages snapshot at $dir")
-    val props = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(pf.toPath)
-    try props.load(in) finally in.close()
-    val p = props.getProperty("partitions").toInt
-    val buckets = (0 until p).map { b =>
-      val bdir = new java.io.File(s"$dir/__bucket=$b")
-      if (bdir.exists()) Some(spark.read.schema(PreparedPagesSchema).parquet(bdir.toString))
-      else None
-    }
-    org.apache.spark.sql.graftbridge.DatasetBridge
-      .bucketSourcesAligned(buckets, Seq("canon"), None, orderedBy = Seq("canon"))
       .persist(bulkLevel)
   }
 

@@ -1,12 +1,14 @@
 package graft.wbot
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit, spark_partition_id}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.StructType
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 /**
  * Snapshot-table checkpoint layer (SURVEY.md §7.6) — the sandbox stand-in for
@@ -21,6 +23,13 @@ import scala.concurrent.duration.Duration
  *   <dir>/manifest.properties      — committed step, seqBase, metrics,
  *                                    frontier row count (atomic rename)
  *   <dir>/step=<d>/{frontier,seen_delta,crawled,attempts}/  — parquet
+ *   <dir>/step=<d>/seen_delta.properties — the seen delta's width and rows
+ *
+ * Two tables are BUCKETED — one `__bucket=<pid>` directory per partition of
+ * a leaf hash-partitioned on canon, read back as that leaf with no shuffle:
+ * the aligned seen deltas, and the prepared pages snapshot
+ * ([[Storage.writePreparedPages]]; `_prep.properties` side-car). Every
+ * bucket directory and properties side-car is written and read here.
  */
 object Storage {
   /** A seen delta handed to [[Storage.commitStep]].
@@ -63,20 +72,91 @@ object Storage {
       "superstep INT, interval INT, ua STRING, proxy STRING")
   val AttemptsSchema: StructType = StructType.fromDDL(
     "seq BIGINT, canon STRING, depth INT, hit BOOLEAN, superstep INT")
-}
 
-final class Storage(dir: String) {
-  import Storage._
+  /** Declared read schema of a [[writePreparedPages]] bucket — exactly what
+    * the write leaves in the footers (PrepSnapshotSpec pins it). */
+  val PreparedPagesSchema: StructType =
+    StructType.fromDDL("canon STRING, hash64 BIGINT, html BINARY")
 
-  def init(): Unit = new File(dir).mkdirs()
-
-  private def stepDir(d: Int) = s"$dir/step=$d"
-
-  private def writeAtomic(df: DataFrame, path: String): Unit = {
-    val tmp = path + ".tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    promote(tmp, path)
+  /** Persist a [[SparkCrawler.preparePages]] snapshot to disk as one bucket
+    * directory per partition (`__bucket=<pid>`, pid ≡ `pmod(hash(canon), P)`),
+    * rows inside each bucket file sorted by canon — the pages-side analogue
+    * of the bucket-aligned seen commit. A later session reconstructs the
+    * exact prepared layout with [[readPreparedPages]]: ZERO shuffle, zero
+    * canonicalize pass over the corpus — the per-session prep
+    * (canonicalize + repartition + dedup + sort of the FULL corpus, the
+    * largest remaining one-time cost at the 10^10 design point) is paid once
+    * per corpus snapshot instead of once per session. On a real cluster this
+    * is writing/reading the bucketed+sorted Iceberg pages table (SURVEY §7.6).
+    * Returns the row count (also persisted in the side-car properties). */
+  def writePreparedPages(pagesPrep: DataFrame, dir: String): Long = {
+    val p = pagesPrep.rdd.getNumPartitions
+    val rows = pagesPrep.count()
+    writeBuckets(pagesPrep, dir, sortedBy = Seq("canon"))
+    writeProps(s"$dir/_prep.properties", "prepared pages snapshot meta",
+      Map("partitions" -> p.toString, "rows" -> rows.toString))
+    rows
   }
+
+  /** Reconstruct a [[writePreparedPages]] snapshot as a zero-shuffle aligned
+    * leaf: `HashPartitioning(canon, P)` + per-partition canon ordering
+    * DECLARED (the fetch join adds no pages-side exchange or sort, identical
+    * to the in-session prep), cached at the same storage level
+    * [[SparkCrawler.preparePages]] uses. No stats are declared — the pages
+    * side must never broadcast, and the session-default (effectively
+    * infinite) size guarantees that. Every bucket is read with
+    * [[PreparedPagesSchema]], so no bucket pays a footer-inference job.
+    * Drop-in for [[SparkCrawler.runPrepared]]/[[SparkCrawler.resumePrepared]]. */
+  def readPreparedPages(spark: SparkSession, dir: String): DataFrame = {
+    val p = readProps(s"$dir/_prep.properties").map(_("partitions").toInt)
+    require(p.isDefined, s"no prepared-pages snapshot at $dir")
+    readBuckets(spark, dir, p.get, PreparedPagesSchema, None, orderedBy = Seq("canon"))
+      .persist(SparkCrawler.bulkLevel)
+  }
+
+  /** Write `df` as the parquet table at `path`, through `path.tmp`. */
+  private def writeAtomic(df: DataFrame, path: String): Unit = {
+    df.write.mode(SaveMode.Overwrite).parquet(path + ".tmp")
+    promote(path + ".tmp", path)
+  }
+
+  /** Write `df`, a leaf hash-partitioned on canon, as the bucketed table at
+    * `path` (through `path.tmp`): one directory `__bucket=<pid>` per
+    * non-empty partition, pid = the leaf's physical partition id ≡
+    * `pmod(hash(canon), p)`. The dynamic-partition write adds only a
+    * per-task constant-column sort (each task holds exactly one bucket) — no
+    * shuffle. With `sortedBy`, each bucket's rows are sorted by those
+    * columns: `__bucket` is constant per task, so sorting by `__bucket` and
+    * then `sortedBy` sorts each partition by `sortedBy`, which meets the
+    * writer's required ordering EXPLICITLY. Without it the writer plans its
+    * own sort on `__bucket` alone, which is not stability-guaranteed and
+    * could scramble an order the reader declares. */
+  private def writeBuckets(df: DataFrame, path: String, sortedBy: Seq[String]): Unit = {
+    val tagged = df.withColumn("__bucket", spark_partition_id())
+    val sorted =
+      if (sortedBy.isEmpty) tagged
+      else tagged.sortWithinPartitions(("__bucket" +: sortedBy).map(col): _*)
+    sorted.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(path + ".tmp")
+    promote(path + ".tmp", path)
+  }
+
+  /** The [[writeBuckets]] table at `path`, written from a leaf of `p`
+    * partitions, as that leaf: `HashPartitioning(canon, p)` declared, each
+    * bucket read with `schema` into its own partition (a missing bucket
+    * directory — an empty partition — is an empty one), each partition
+    * declared sorted by `orderedBy`. */
+  private def readBuckets(spark: SparkSession, path: String, p: Int, schema: StructType,
+      sizeHint: Option[(Long, Long)], orderedBy: Seq[String]): DataFrame = {
+    val buckets = (0 until p).map { b =>
+      val bdir = new File(s"$path/__bucket=$b")
+      if (bdir.exists()) Some(spark.read.schema(schema).parquet(bdir.toString)) else None
+    }
+    DatasetBridge.bucketSourcesAligned(buckets, Seq("canon"), sizeHint, orderedBy)
+  }
+
+  /** Whether `path` holds any [[writeBuckets]] bucket directory. */
+  private def hasBuckets(path: String): Boolean =
+    Option(new File(path).list()).exists(_.exists(_.startsWith("__bucket=")))
 
   private def promote(tmp: String, path: String): Unit = {
     val dst = new File(path)
@@ -89,29 +169,44 @@ final class Storage(dir: String) {
     f.delete(); ()
   }
 
+  /** Write `entries` as the properties file `path`, atomically: stored to
+    * `path.tmp`, then renamed over `path`. */
+  private def writeProps(path: String, comment: String, entries: Map[String, String]): Unit = {
+    val props = new java.util.Properties()
+    entries.foreach { case (k, v) => props.setProperty(k, v) }
+    val tmp = Paths.get(path + ".tmp")
+    val out = Files.newOutputStream(tmp)
+    try props.store(out, comment) finally out.close()
+    Files.move(tmp, Paths.get(path),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The properties file `path`; None when there is none. */
+  private def readProps(path: String): Option[Map[String, String]] = {
+    val f = new File(path)
+    if (!f.exists()) None
+    else {
+      val props = new java.util.Properties()
+      val in = Files.newInputStream(f.toPath)
+      try props.load(in) finally in.close()
+      Some(props.asScala.toMap)
+    }
+  }
+}
+
+final class Storage(dir: String) {
+  import Storage._
+
+  def init(): Unit = new File(dir).mkdirs()
+
+  private def stepDir(d: Int) = s"$dir/step=$d"
+
   private def writeSeenDelta(d: Int, sc: SeenCommit): Unit = {
     val path = s"${stepDir(d)}/seen_delta"
-    val tmp = path + ".tmp"
-    sc.alignedP match {
-      case Some(_) =>
-        // one directory per aligned partition: __bucket = the leaf's physical
-        // partition id ≡ pmod(hash(canon), p). The dynamic-partition write
-        // adds only a per-task constant-column sort (each task holds exactly
-        // one bucket) — no shuffle.
-        sc.df.withColumn("__bucket", org.apache.spark.sql.functions.spark_partition_id())
-          .write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(tmp)
-      case None =>
-        sc.df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-    promote(tmp, path)
-    val props = new java.util.Properties()
-    sc.alignedP.foreach(p => props.setProperty("aligned_p", p.toString))
-    props.setProperty("rows", sc.rows.toString)
-    val ptmp = Paths.get(s"${stepDir(d)}/seen_delta.properties.tmp")
-    val out = Files.newOutputStream(ptmp)
-    try props.store(out, "seen delta meta") finally out.close()
-    Files.move(ptmp, Paths.get(s"${stepDir(d)}/seen_delta.properties"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    if (sc.alignedP.isDefined) writeBuckets(sc.df, path, sortedBy = Nil)
+    else writeAtomic(sc.df, path)
+    writeProps(s"$path.properties", "seen delta meta",
+      sc.alignedP.map(p => "aligned_p" -> p.toString).toMap + ("rows" -> sc.rows.toString))
   }
 
   /** Commit superstep d: all tables first, manifest rename last (the commit
@@ -139,34 +234,20 @@ final class Storage(dir: String) {
     writes.map(w => SparkCrawler.sideJob(frontier.sparkSession)(w()))
       .map(f => Await.ready(f, Duration.Inf).value.get)
       .foreach(_.get)
-    val props = new java.util.Properties()
-    props.setProperty("committed_step", d.toString)
-    props.setProperty("seq_base", seqBase.toString)
-    props.setProperty("seen_base_step", seenBase.toString)
-    props.setProperty("frontier_rows", frontierRows.toString)
-    metrics.foreach { case (k, v) => props.setProperty(s"metric.$k", v.toString) }
-    val tmp = Paths.get(s"$dir/manifest.properties.tmp")
-    val out = Files.newOutputStream(tmp)
-    try props.store(out, "wbot-spark snapshot manifest") finally out.close()
-    Files.move(tmp, Paths.get(s"$dir/manifest.properties"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeProps(s"$dir/manifest.properties", "wbot-spark snapshot manifest",
+      Map("committed_step" -> d.toString, "seq_base" -> seqBase.toString,
+        "seen_base_step" -> seenBase.toString, "frontier_rows" -> frontierRows.toString) ++
+        metrics.map { case (k, v) => s"metric.$k" -> v.toString })
   }
 
-  def readManifest(): Option[Snapshot] = {
-    val f = new File(s"$dir/manifest.properties")
-    if (!f.exists()) return None
-    val props = new java.util.Properties()
-    val in = Files.newInputStream(f.toPath)
-    try props.load(in) finally in.close()
-    import scala.jdk.CollectionConverters._
-    val metrics = props.stringPropertyNames().asScala.toSeq
-      .filter(_.startsWith("metric."))
-      .map(k => k.stripPrefix("metric.") -> props.getProperty(k).toLong).toMap
-    Some(Snapshot(props.getProperty("committed_step").toInt,
-      props.getProperty("seq_base").toLong, metrics,
-      Option(props.getProperty("seen_base_step")).map(_.toInt).getOrElse(-1),
-      Option(props.getProperty("frontier_rows")).map(_.toLong)))
-  }
+  def readManifest(): Option[Snapshot] =
+    readProps(s"$dir/manifest.properties").map { props =>
+      val metrics = props.collect {
+        case (k, v) if k.startsWith("metric.") => k.stripPrefix("metric.") -> v.toLong
+      }
+      Snapshot(props("committed_step").toInt, props("seq_base").toLong, metrics,
+        props.get("seen_base_step").fold(-1)(_.toInt), props.get("frontier_rows").map(_.toLong))
+    }
 
   /** Frontier snapshot, with forward migration: snapshots written before the
     * O2 `score` column existed read `score` as null under the declared
@@ -200,42 +281,32 @@ final class Storage(dir: String) {
     * zero-shuffle aligned leaves with stats (`rows`, `rows × rowBytes`);
     * anything else (pre-fold smalls, width-mismatched layouts, legacy plain
     * commits) comes back as a plain parquet read for the engine to treat as
-    * small or re-align. Every read uses [[SeenSchema]]. */
+    * small or re-align. Every read uses [[SeenSchema]]. A bucketed commit
+    * whose side-car records rows but whose bucket directories are gone
+    * throws `IllegalStateException`: resuming without it would crawl every
+    * URL it holds again as fresh. */
   def readSeenDeltas(spark: SparkSession, upTo: Int, seenBase: Int, wantP: Int,
-      rowBytes: Long): Seq[LoadedDelta] = {
+      rowBytes: Long): Seq[LoadedDelta] =
     (math.max(0, seenBase) to upTo).flatMap { i =>
       val path = s"${stepDir(i)}/seen_delta"
       if (!new File(path).exists()) None
       else {
         requireCanonKeyed(new File(path))
-        val (alignedP, rows) = {
-          val pf = new File(s"${stepDir(i)}/seen_delta.properties")
-          if (!pf.exists()) (None, -1L)
-          else {
-            val props = new java.util.Properties()
-            val in = Files.newInputStream(pf.toPath)
-            try props.load(in) finally in.close()
-            (Option(props.getProperty("aligned_p")).map(_.toInt),
-              Option(props.getProperty("rows")).map(_.toLong).getOrElse(-1L))
-          }
-        }
-        alignedP match {
+        val props = readProps(s"$path.properties").getOrElse(Map.empty)
+        val rows = props.get("rows").fold(-1L)(_.toLong)
+        props.get("aligned_p").map(_.toInt) match {
+          case Some(p) if !hasBuckets(path) =>
+            if (rows > 0L) throw new IllegalStateException(s"seen delta of step $i " +
+              s"records $rows rows in $p buckets, but $path holds no __bucket= directory; " +
+              "cannot resume")
+            None
           case Some(p) if p == wantP && rows > 0L =>
-            val buckets = (0 until p).map { b =>
-              val bdir = new File(s"$path/__bucket=$b")
-              if (bdir.exists()) Some(spark.read.schema(SeenSchema).parquet(bdir.toString))
-              else None
-            }
-            if (buckets.forall(_.isEmpty)) None
-            else Some(LoadedDelta(
-              org.apache.spark.sql.graftbridge.DatasetBridge.bucketSourcesAligned(
-                buckets, Seq("canon"), Some((rows, math.max(1L, rows * rowBytes)))),
-              aligned = true, rows))
+            Some(LoadedDelta(readBuckets(spark, path, p, SeenSchema,
+              Some((rows, math.max(1L, rows * rowBytes))), orderedBy = Nil), aligned = true, rows))
           case Some(_) =>
             // width mismatch: flat read across the bucket dirs (partition
             // discovery adds __bucket — drop it), engine re-aligns
-            if (!new File(path).listFiles().exists(_.getName.startsWith("__bucket="))) None
-            else Some(LoadedDelta(spark.read.schema(SeenSchema).parquet(path).drop("__bucket"),
+            Some(LoadedDelta(spark.read.schema(SeenSchema).parquet(path).drop("__bucket"),
               aligned = false, rows))
           case None =>
             if (rows == 0L) None
@@ -244,7 +315,6 @@ final class Storage(dir: String) {
         }
       }
     }
-  }
 
   def readCrawled(spark: SparkSession, upTo: Int): Option[DataFrame] =
     readSteps(spark, upTo, "crawled", CrawledSchema)

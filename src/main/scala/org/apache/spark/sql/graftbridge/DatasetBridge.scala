@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD, UnionRDD}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution
 
@@ -80,8 +82,8 @@ object DatasetBridge {
     val rdd = cdf.queryExecution.toRdd
     require(rdd.getNumPartitions == numPartitions,
       s"declared $numPartitions partitions, rdd has ${rdd.getNumPartitions}")
-    val keep = Array.tabulate(numPartitions)(keepPids.contains)
-    leaf(cdf, new PartitionPrunedRDD(rdd, keep), keyCols, orderedBy, None)
+    val groups = Seq.tabulate(numPartitions)(i => if (keepPids(i)) Seq(i) else Nil)
+    leaf(cdf, regroup(rdd.sparkContext, Seq(rdd), groups), keyCols, orderedBy, None)
   }
 
   /** Reconstructs a hash-partitioned leaf from PER-BUCKET sources WITHOUT a
@@ -89,14 +91,14 @@ object DatasetBridge {
     * `buckets(i)` (None = empty bucket), declared as
     * `HashPartitioning(keyCols, buckets.size)`. All dependencies are narrow.
     *
-    * This is the resume half of the bucket-aligned seen store: `Storage`
-    * commits each aligned seen delta as one directory per partition
-    * (`__bucket=<pid>`, pid = `spark_partition_id()` of the aligned leaf, ≡
-    * `pmod(hash(keys), p)`), and a resumed crawl reads each bucket directory
-    * back into its declared partition — so the first post-resume anti-join
-    * adds NO exchange on the seen side, where re-aligning a plain parquet
-    * load costs one O(seen) shuffle. On a real cluster this is simply
-    * reading a bucketed table.
+    * This is the read half of `Storage`'s bucketed tables (the aligned seen
+    * deltas and the prepared pages): each is written as one directory per
+    * partition (`__bucket=<pid>`, pid = `spark_partition_id()` of the
+    * aligned leaf, ≡ `pmod(hash(keys), p)`), and each bucket directory is
+    * read back into its declared partition — so the first post-resume
+    * anti-join adds NO exchange on the seen side, where re-aligning a plain
+    * parquet load costs one O(seen) shuffle. On a real cluster this is
+    * simply reading a bucketed table.
     *
     * Caller's contract: every row in `buckets(i)` really hashes to bucket i
     * under `HashPartitioning(keyCols, buckets.size)` (guaranteed when the
@@ -111,16 +113,17 @@ object DatasetBridge {
     *   one file, which scan in offset order). */
   def bucketSourcesAligned(buckets: Seq[Option[DataFrame]], keyCols: Seq[String],
       sizeHint: Option[(Long, Long)] = None, orderedBy: Seq[String] = Nil): DataFrame = {
-    val defined = buckets.flatten
+    val reads = buckets.map(_.map(_.asInstanceOf[classic.Dataset[Row]]))
+    val defined = reads.flatten
     require(defined.nonEmpty, "bucketSourcesAligned: all buckets empty")
-    val cdefined = defined.map(_.asInstanceOf[classic.Dataset[Row]])
-    val head = cdefined.head
-    val schema = head.schema
-    require(cdefined.forall(_.schema == schema),
+    val head = defined.head
+    require(defined.forall(_.schema == head.schema),
       "bucketSourcesAligned: bucket schemas diverge")
-    val rddByBucket: Array[Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]] =
-      buckets.map(_.map(_.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd)).toArray
-    leaf(head, new BucketAlignedRDD(head.sparkSession.sparkContext, rddByBucket), keyCols,
+    val rdds = reads.map(_.map(_.queryExecution.toRdd))
+    // bucket i's partitions sit at [offsets(i), offsets(i + 1)) of the union
+    val offsets = rdds.map(_.fold(0)(_.getNumPartitions)).scanLeft(0)(_ + _)
+    val groups = buckets.indices.map(i => offsets(i) until offsets(i + 1))
+    leaf(head, regroup(head.sparkSession.sparkContext, rdds.flatten, groups), keyCols,
       orderedBy, sizeHint)
   }
 
@@ -254,9 +257,33 @@ object DatasetBridge {
     require(rdds.forall(_.getNumPartitions == numPartitions),
       s"alignedUnion inputs must all have $numPartitions partitions: " +
         rdds.map(_.getNumPartitions).mkString(","))
+    val groups = Seq.tabulate(numPartitions)(i => rdds.indices.map(_ * numPartitions + i))
     val head = cparts.head
-    leaf(head, new PartitionAlignedUnionRDD(head.sparkSession.sparkContext, rdds), keyCols,
-      Nil, sizeHint)
+    leaf(head, regroup(head.sparkSession.sparkContext, rdds, groups), keyCols, Nil, sizeHint)
+  }
+
+  /** The RDD whose partition i concatenates, in order, the partitions
+    * `groups(i)` of `parents`' flat partition list (every partition of
+    * `parents(0)`, then of `parents(1)`, …); an empty group is an empty
+    * partition that computes nothing. Spark's own `UnionRDD` under a
+    * `CoalescedRDD`: narrow dependencies only, and each parent partition is
+    * captured on the driver, which a file scan needs. `new UnionRDD`, not
+    * `sc.union`: that switches to the partition-wise
+    * `PartitionerAwareUnionRDD` when every parent reports one partitioner. */
+  private def regroup(sc: org.apache.spark.SparkContext, parents: Seq[RDD[InternalRow]],
+      groups: Seq[Seq[Int]]): RDD[InternalRow] =
+    new UnionRDD(sc, parents).coalesce(groups.length, shuffle = false, Some(FixedGroups(groups)))
+
+  /** Output partition i = the parent partitions `groups(i)`, in order. The
+    * groups name no preferred location, so the scheduler takes the parent
+    * partitions' own (cache blocks, file splits). */
+  private final case class FixedGroups(groups: Seq[Seq[Int]]) extends PartitionCoalescer {
+    override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] =
+      groups.map { g =>
+        val pg = new PartitionGroup(None)
+        pg.partitions ++= g.map(parent.partitions(_))
+        pg
+      }.toArray
   }
 
   /** The leaf every constructor above builds: `rdd`, whose rows are in
@@ -265,8 +292,7 @@ object DatasetBridge {
     * (unknown partitioning when `keyCols` is empty), each partition sorted
     * ascending by `orderedBy`, and `sizeHint` (rowCount, sizeInBytes) as its
     * statistics. */
-  private def leaf(src: classic.Dataset[Row],
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+  private def leaf(src: classic.Dataset[Row], rdd: RDD[InternalRow],
       keyCols: Seq[String], orderedBy: Seq[String], sizeHint: Option[(Long, Long)]): DataFrame = {
     val output = src.queryExecution.analyzed.output
     def attrOf(k: String) = output.find(_.name == k).getOrElse(
@@ -286,108 +312,4 @@ object DatasetBridge {
       execution.LogicalRDD(output, rdd, part, ordering, isStreaming = false)(
         src.sparkSession, stats, None))
   }
-}
-
-/** Same partitions as the parent; pruned ones compute to empty without ever
-  * touching the parent iterator (the cache block is neither fetched nor
-  * decompressed, and an uncomputed partition stays uncomputed). */
-private final class PartitionPrunedRDD(
-    parent: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-    keep: Array[Boolean])
-  extends org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow](parent) {
-
-  override def getPartitions: Array[org.apache.spark.Partition] = parent.partitions
-
-  override def compute(split: org.apache.spark.Partition,
-      context: org.apache.spark.TaskContext): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    if (keep(split.index)) firstParent[org.apache.spark.sql.catalyst.InternalRow].iterator(split, context)
-    else Iterator.empty
-
-  override def getPreferredLocations(split: org.apache.spark.Partition): Seq[String] =
-    if (keep(split.index)) parent.preferredLocations(split) else Nil
-}
-
-/** A split that CAPTURES its parent RDDs' Partition objects driver-side:
-  * `RDD.partitions` may only be computable on the driver (FileScanRDD's
-  * partition list is `@transient` — recomputing it inside a task NPEs), so
-  * any compute() that iterates a parent's partitions must carry them in the
-  * split, exactly as Spark's own `UnionRDD` does. */
-private final class CapturedParentsPart(
-    override val index: Int,
-    val parentParts: Array[org.apache.spark.Partition]) extends org.apache.spark.Partition
-
-/** Output partition i = concatenation of ALL partitions of parent RDD i
-  * (None = empty). Narrow dependencies only: the dependency on parent i maps
-  * output partition i to every partition of that parent, and every other
-  * output partition to none — no shuffle, and a lost output partition
-  * recomputes only its own bucket's file scan. */
-private final class BucketAlignedRDD(
-    sc: org.apache.spark.SparkContext,
-    parents: Array[Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]])
-  extends org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow](
-    sc, BucketAlignedRDD.mkDeps(parents)) {
-
-  override def getPartitions: Array[org.apache.spark.Partition] =
-    Array.tabulate(parents.length)(i =>
-      new CapturedParentsPart(i, parents(i).map(_.partitions).getOrElse(Array.empty)))
-
-  override def compute(split: org.apache.spark.Partition,
-      context: org.apache.spark.TaskContext): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    parents(split.index) match {
-      case Some(p) => split.asInstanceOf[CapturedParentsPart].parentParts.iterator
-        .flatMap(pp => p.iterator(pp, context))
-      case None => Iterator.empty
-    }
-
-  override def getPreferredLocations(split: org.apache.spark.Partition): Seq[String] =
-    parents(split.index).toSeq.flatMap(p =>
-      p.partitions.flatMap(pp => p.preferredLocations(pp))).distinct
-}
-
-private object BucketAlignedRDD {
-  /** Built here, not inline in the superclass constructor call: a partial-
-    * function literal there is an anon class nested in the RDD — premature
-    * access to the not-yet-initialized outer class. */
-  def mkDeps(
-      parents: Array[Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]])
-      : IndexedSeq[org.apache.spark.Dependency[_]] =
-    parents.zipWithIndex.collect {
-      case (Some(p), i) => new BucketNarrowDep(p, i)
-    }.toIndexedSeq
-}
-
-/** Dependency of [[BucketAlignedRDD]]'s output partition `bucket` on EVERY
-  * partition of its per-bucket parent; all other output partitions depend on
-  * none of them. Top-level (not an anon class inside the RDD) because Scala
-  * forbids anonymous classes in superclass constructor arguments. */
-private final class BucketNarrowDep(
-    p: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-    bucket: Int)
-  extends org.apache.spark.NarrowDependency[org.apache.spark.sql.catalyst.InternalRow](p) {
-  override def getParents(pid: Int): Seq[Int] =
-    if (pid == bucket) p.partitions.indices else Nil
-}
-
-/** Partition-wise union of RDDs with identical partition counts (and, by the
-  * caller's contract, identical partitioners): narrow dependencies only —
-  * partition i depends on every parent's partition i. */
-private final class PartitionAlignedUnionRDD(
-    sc: org.apache.spark.SparkContext,
-    parents: Seq[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]])
-  extends org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow](
-    sc, parents.map(p => new org.apache.spark.NarrowDependency(p) {
-      override def getParents(pid: Int): Seq[Int] = Seq(pid)
-    })) {
-
-  override def getPartitions: Array[org.apache.spark.Partition] =
-    Array.tabulate(parents.head.getNumPartitions)(i =>
-      new CapturedParentsPart(i, parents.map(_.partitions(i)).toArray))
-
-  override def compute(split: org.apache.spark.Partition,
-      context: org.apache.spark.TaskContext): Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    parents.iterator.zip(split.asInstanceOf[CapturedParentsPart].parentParts.iterator)
-      .flatMap { case (p, pp) => p.iterator(pp, context) }
-
-  override def getPreferredLocations(split: org.apache.spark.Partition): Seq[String] =
-    parents.flatMap(p => p.preferredLocations(p.partitions(split.index))).distinct
 }

@@ -238,6 +238,24 @@ class PlanSpec extends SparkSuite {
     } finally prep.unpersist()
   }
 
+  test("pruned scan computes only the kept partitions of an unpersisted input") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.DatasetBridge
+    // unpersisted: under AQE, toRdd of a persisted DataFrame builds the whole
+    // cache first, so only a recomputed input shows what the scan computes
+    val computed = spark.sparkContext.longAccumulator("pruned scan partitions")
+    val input = (1 to 400).map(i => s"http://h$i.example.com/").toDF("canon")
+      .repartition(4, col("canon"))
+    val counted = input.as[String].mapPartitions { it => computed.add(1L); it }.toDF("canon")
+    val keep = Set(1, 3)
+    val got = DatasetBridge.prunedCacheScan(counted, keep, Seq("canon"), 4, Nil)
+      .collect().map(_.getString(0)).toSet
+    assert(computed.value == 2L, s"computed ${computed.value} of 4 partitions")
+    val expect = input.where(spark_partition_id().isin(keep.toSeq: _*))
+      .collect().map(_.getString(0)).toSet
+    assert(got == expect && got.nonEmpty)
+  }
+
   test("seen anti-join: aligned delta union needs NO exchange or sort on the seen side") {
     import spark.implicits._
     import org.apache.spark.sql.graftbridge.DatasetBridge

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.wbot.{Fixtures, Schemas, SparkCrawler}
+import graft.wbot.{Fixtures, Schemas, SparkCrawler, Storage}
 
 /**
  * Persisted prepared-pages snapshot (the pages-side analogue of the
@@ -21,10 +21,10 @@ class PrepSnapshotSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("prep_snap").toString + "/pages"
 
     val prep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
-    val rows = SparkCrawler.writePreparedPages(prep, dir)
+    val rows = Storage.writePreparedPages(prep, dir)
     assert(rows == prep.count())
 
-    val stored = SparkCrawler.readPreparedPages(spark, dir)
+    val stored = Storage.readPreparedPages(spark, dir)
     try {
       // 1. identical snapshot content, identical per-partition placement
       val a = prep.select("canon", "hash64").withColumn("pid", spark_partition_id())
@@ -66,7 +66,7 @@ class PrepSnapshotSpec extends SparkSuite {
       assert(buckets.nonEmpty, s"no bucket directory under $dir")
       for (b <- buckets) {
         val footers = spark.read.parquet(b.toString).schema
-        assert(footers == SparkCrawler.PreparedPagesSchema, s"$b: ${footers.toDDL}")
+        assert(footers == Storage.PreparedPagesSchema, s"$b: ${footers.toDDL}")
       }
     } finally {
       stored.unpersist()

@@ -86,6 +86,56 @@ class StorageSpec extends SparkSuite {
     pagesPrep.unpersist()
   }
 
+  test("a kill between step 1's table writes and its manifest rename resumes from step 0") {
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    val probe = SparkCrawler.runPrepared(spark, pagesPrep, seeds,
+      CrawlConfig(maxDepth = 3, partitions = 4, maxSupersteps = 1))
+    // a bound of step 0's fresh rows makes step 1's commit the fold; under
+    // the default bound it commits a plain small delta
+    for (fold <- Seq(true, false)) {
+      val dir = Files.createTempDirectory("wbot_ckpt_kill").toString
+      val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir),
+        smallSeenBound = if (fold) probe.steps(0).fresh else CrawlConfig().smallSeenBound)
+      SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg.copy(maxSupersteps = 1))
+      val manifest = Paths.get(s"$dir/manifest.properties")
+      val step0 = Files.readAllBytes(manifest)
+      SparkCrawler.resumePrepared(spark, pagesPrep, cfg.copy(maxSupersteps = 1))
+      val st = new Storage(dir)
+      val snap = st.readManifest().get
+      assert(snap.lastStep == 1, s"fold=$fold")
+      assert((snap.seenBaseStep == 1) == fold, s"fold=$fold: seen_base_step ${snap.seenBaseStep}")
+      // the kill: step 1's tables and side-car are all on disk, but the
+      // manifest still names step 0
+      Files.write(manifest, step0)
+      assert(st.readManifest().get.lastStep == 0, s"fold=$fold")
+      assert(new File(s"$dir/step=1/seen_delta.properties").exists(), s"fold=$fold")
+      assertMatchesOracle(SparkCrawler.resumePrepared(spark, pagesPrep, cfg), cfg)
+    }
+    pagesPrep.unpersist()
+  }
+
+  test("a bucketed seen delta whose buckets are gone fails the resume") {
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    val probe = SparkCrawler.runPrepared(spark, pagesPrep, seeds,
+      CrawlConfig(maxDepth = 3, partitions = 4, maxSupersteps = 1))
+    val dir = Files.createTempDirectory("wbot_ckpt_nobuckets").toString
+    val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir),
+      smallSeenBound = probe.steps(0).fresh)
+    SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg.copy(maxSupersteps = 2))
+    val snap = new Storage(dir).readManifest().get
+    assert(snap.seenBaseStep == 1, s"step 1 is not the fold: ${snap.seenBaseStep}")
+    val seenDir = new File(s"$dir/step=1/seen_delta")
+    val buckets = seenDir.listFiles().filter(_.getName.startsWith("__bucket="))
+    assert(buckets.nonEmpty, seenDir.list().mkString(","))
+    buckets.foreach(delete)
+    // at the committed width (aligned read) and at another (flat read)
+    for (c <- Seq(cfg, cfg.copy(seenAlignPartitions = Some(2)))) {
+      val e = intercept[IllegalStateException](SparkCrawler.resumePrepared(spark, pagesPrep, c))
+      assert(e.getMessage.contains("step 1"), e.getMessage)
+    }
+    pagesPrep.unpersist()
+  }
+
   private def manifestProps(dir: String): java.util.Properties = {
     val props = new java.util.Properties()
     val in = Files.newInputStream(Paths.get(s"$dir/manifest.properties"))
