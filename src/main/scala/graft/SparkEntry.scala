@@ -292,7 +292,7 @@ object SparkEntry {
         floor(col("value") * 1000).cast("long").as("score"),
         lit(0).as("depth"), xxhash64(col("event_id")).as("hash64"))
       val cfg = Schemas.CrawlConfig(rateLimits = Map("*" -> Schemas.Budget(5, 1000L)))
-      Politeness.assignIntervals(frontier, cfg, salted = false)
+      Politeness.assignIntervals(frontier, cfg, saltFanout = 1)
         .select(col("seq").as("event_id"), col("root").cast("long").as("user_id"),
           col("score"), col("interval").as("iv"))
     }),

@@ -231,8 +231,7 @@ object Tools {
       val cfg = Schemas.CrawlConfig(maxDepth = 4, partitions = cpus, recordStreams = false)
       val prep = SparkCrawler.preparePages(Fixtures.pagesDf(spark, spec), cpus)
       prep.count()
-      Some(() => { SparkCrawler.runPrepared(spark, prep, Fixtures.seedsAll(spec), cfg,
-        saltedPoliteness = true); () })
+      Some(() => { SparkCrawler.runPrepared(spark, prep, Fixtures.seedsAll(spec), cfg); () })
     }
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
@@ -303,7 +302,7 @@ object Tools {
       fanRand = args.lift(5).map(_.toInt).getOrElse(4))
 
   /** One scaling level: the identical crawl (same generated input, same
-    * seeds, same politeness budget, salted skew handling on) timed over a
+    * seeds, same politeness budget, same salt fan-outs) timed over a
     * pages cache built beforehand. Run each level in a fresh JVM: a second
     * session in one JVM measures slower. */
   def crawl(spark: SparkSession, cores: Int, spec: Fixtures.SiteSpec,
@@ -322,8 +321,7 @@ object Tools {
     drain()
     jobs.reset()
     val t0 = System.nanoTime()
-    val run = SparkCrawler.runPrepared(spark, pagesPrep, Fixtures.seedsAll(spec), cfg,
-      saltedPoliteness = true)
+    val run = SparkCrawler.runPrepared(spark, pagesPrep, Fixtures.seedsAll(spec), cfg)
     val wall = (System.nanoTime() - t0) / 1e9
     drain()
     jobs.report(s"crawl cores=$cores")
@@ -345,7 +343,7 @@ object Tools {
     val eff = (hi.urlsPerSec / lo.urlsPerSec) / ratio
     val sb = new StringBuilder
     sb.append("Identical input, seeds (one per host) and politeness budget at every level;\n")
-    sb.append("salted skew handling on; each level in a fresh JVM with\n")
+    sb.append("salt fan-out sized per superstep; each level in a fresh JVM with\n")
     sb.append("spark.sql.shuffle.partitions = max(2 * cores, rows / 25,000).\n\n")
     sb.append("| cores | wall (s) | URLs fetched | URLs/s |\n|---|---|---|---|\n")
     results.foreach(r => sb.append(f"| ${r.cores} | ${r.wallSec}%.1f | ${r.urls} | ${r.urlsPerSec}%.1f |\n"))

@@ -43,7 +43,7 @@ object CrawlDemo {
     run.steps.foreach(s => println(
       f"  depth=${s.depth} frontier=${s.frontierSize} fetched=${s.fetched} failed=${s.failed} " +
       f"cand=${s.candidates} fresh=${s.fresh} intervals=${s.intervals} wall=${s.wallMs}ms " +
-      f"codegen=${s.generatedCode}"))
+      f"codegen=${s.generatedCode} salt=${s.saltFanout}"))
     spark.stop()
   }
 }

@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions._
  * delays), so interval assignment affects SCHEDULE, never crawl order —
  * order lives in `seq`.
  *
- * Two physical strategies:
- *  - windowed: exact per-host FIFO rank (`row_number` over `partitionBy(root)`).
- *    One shuffle by root; a skewed host = one big partition.
- *  - salted: two-phase skew-defused variant — rank within (root, salt),
+ * Two physical strategies, picked by the salt fan-out S ([[saltFanout]]):
+ *  - S = 1, windowed: exact per-host FIFO rank (`row_number` over
+ *    `partitionBy(root)`). One shuffle by root; a skewed host = one big partition.
+ *  - S > 1, salted: two-phase skew-defused variant — rank within (root, salt),
  *    offset by the cumulative counts of lower salts (tiny aggregate, computed
  *    with a window over ≤ hosts×S rows). Still ≤ budget per interval, with
  *    intra-host order permuted across salts (schedule-equivalent, not
@@ -33,16 +33,12 @@ object Politeness {
   private def drainOrder: Seq[org.apache.spark.sql.Column] =
     Seq(col("depth").asc, col("score").desc, col("seq").asc)
 
-  /** Rows one task is sized to hold. The crawl loop sizes its task widths
-    * from it (order-stream checkpoint, rank buckets), and [[saltFanout]]
-    * salts no frontier that fits one such task. */
-  val RowsPerTask: Long = 25000L
-
-  /** Salt fan-out for a salted frontier of `frontierSize` rows, given the
-    * previous superstep's frontier size and interval span (0 when there is
-    * none) and the shuffle `width` the host windows are spread over.
+  /** Salt fan-out for a frontier of `frontierSize` rows, given the previous
+    * superstep's frontier size and interval span (0 when there is none), the
+    * shuffle `width` the host windows are spread over and `rowsPerTask`, the
+    * rows one task is sized to hold (`SparkCrawler.rowsPerTask`).
     *
-    *  - Up to [[RowsPerTask]] rows: 1. No host's window partition can exceed
+    *  - Up to `rowsPerTask` rows: 1. No host's window partition can exceed
     *    a task's share when the whole frontier fits one task, so salting
     *    buys no balance — and it costs a `groupBy(root, __salt)`, an offsets
     *    window and a merge-join exchange ahead of the fetch (three extra AQE
@@ -59,8 +55,8 @@ object Politeness {
     * Any s ≥ 1 yields the same per-interval budgets, so the choice is purely
     * a balance knob: crawl order, seen set and counters never depend on it. */
   def saltFanout(cfg: Schemas.CrawlConfig, frontierSize: Long, prevFrontierSize: Long,
-      prevIntervals: Int, width: Int): Int =
-    if (frontierSize <= RowsPerTask) 1
+      prevIntervals: Int, width: Int, rowsPerTask: Long): Int =
+    if (frontierSize <= rowsPerTask) 1
     else if (prevFrontierSize > 0 && prevIntervals > 0) {
       val maxBudget = if (cfg.rateLimits.isEmpty) 10 else cfg.rateLimits.values.map(_.n).max
       val estMaxHost = prevIntervals.toLong * maxBudget * frontierSize / prevFrontierSize
@@ -70,15 +66,13 @@ object Politeness {
 
   /** Adds `interval` (int, 0-based rate slot within this depth).
     *
-    * `saltFanout` (salted mode): how many salt shards split each host's
-    * window; the crawl loop picks it per superstep with [[saltFanout]].
-    * Any s ≥ 1 yields the same per-interval budgets (schedule-equivalent;
-    * the budget property holds by construction), and s = 1 is the exact
-    * windowed rank. */
-  def assignIntervals(frontier: DataFrame, cfg: Schemas.CrawlConfig, salted: Boolean,
-      saltFanout: Int = 16): DataFrame = {
+    * `saltFanout`: how many salt shards split each host's window; the crawl
+    * loop picks it per superstep with [[saltFanout]]. Any s ≥ 1 yields the
+    * same per-interval budgets (schedule-equivalent; the budget property
+    * holds by construction), and s ≤ 1 is the exact windowed rank. */
+  def assignIntervals(frontier: DataFrame, cfg: Schemas.CrawlConfig, saltFanout: Int): DataFrame = {
     val budget = Udfs.budgetCol(cfg, col("root"))
-    if (!salted || saltFanout <= 1) {
+    if (saltFanout <= 1) {
       val w = Window.partitionBy(col("root")).orderBy(drainOrder: _*)
       frontier
         .withColumn("__rn", row_number().over(w))

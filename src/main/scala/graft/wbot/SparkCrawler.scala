@@ -32,11 +32,12 @@ import Schemas._
  */
 object SparkCrawler {
 
-  /** One superstep's counts and wall time; `generatedCode` records its
-    * execution regime (false: run interpreted, see [[generatedCode]]). */
+  /** One superstep's counts and wall time, and its regimes: `generatedCode`
+    * (false: run interpreted, see [[generatedCode]]) and its schedule's
+    * `saltFanout` ([[Politeness.saltFanout]]; 1: the windowed rank). */
   final case class StepStat(depth: Int, frontierSize: Long, fetched: Long, failed: Long,
       candidates: Long, passedFilters: Long, fresh: Long, intervals: Int, wallMs: Long,
-      generatedCode: Boolean = true)
+      generatedCode: Boolean = true, saltFanout: Int = 1)
 
   /** A crawl's results. The only caches a run leaves registered are the
     * ones these views read: for `seen`, its in-memory deltas (the small
@@ -164,14 +165,13 @@ object SparkCrawler {
   private def scoreCol(cfg: CrawlConfig) =
     cfg.scoreExpr.map(e => coalesce(expr(e).cast("long"), lit(0L))).getOrElse(lit(0L))
 
-  def run(spark: SparkSession, pages: DataFrame, seeds: Seq[String], cfg: CrawlConfig,
-      saltedPoliteness: Boolean = false): CrawlRun = {
+  def run(spark: SparkSession, pages: DataFrame, seeds: Seq[String], cfg: CrawlConfig): CrawlRun = {
     val pagesPrep = preparePages(pages, cfg.partitions)
     try {
       // built here, not by the first superstep: the regime gate
       // ([[generatedCode]]) reads the built cache's row count
       pagesPrep.count()
-      runPrepared(spark, pagesPrep, seeds, cfg, saltedPoliteness)
+      runPrepared(spark, pagesPrep, seeds, cfg)
     } finally { pagesPrep.unpersist(); () }
   }
 
@@ -181,12 +181,12 @@ object SparkCrawler {
     * bootstrap costs one hosts-dimension pass, not a second full-snapshot
     * canonicalization), then crawl with the rules enforced. */
   def runWithRobots(spark: SparkSession, pages: DataFrame, seeds: Seq[String],
-      cfg: CrawlConfig, saltedPoliteness: Boolean = false): CrawlRun = {
+      cfg: CrawlConfig): CrawlRun = {
     val pagesPrep = preparePages(pages, cfg.partitions)
     try {
       val rules = Robots.rulesFromPages(spark, pages, Some(pagesPrep))
       runPrepared(spark, pagesPrep, seeds,
-        cfg.copy(robots = rules, robotsStandardMode = true), saltedPoliteness)
+        cfg.copy(robots = rules, robotsStandardMode = true))
     } finally { pagesPrep.unpersist(); () }
   }
 
@@ -199,14 +199,16 @@ object SparkCrawler {
     * frontier-bucket PRUNING of the cache additionally relies on the hash
     * layout, so the loop validates it on a sampled prefix the first time
     * pruning would fire and falls back to unpruned scans (correct, just
-    * slower) on a mismatched external snapshot. */
+    * slower) on a mismatched external snapshot. `saltedPoliteness` is read
+    * by nothing (the frontier's size picks the salt fan-out); it stays only
+    * because the frozen `graft.Bench` and perfbench harnesses pass it. */
   def runPrepared(spark: SparkSession, pagesPrep: DataFrame, seeds: Seq[String],
       cfg: CrawlConfig, saltedPoliteness: Boolean = false): CrawlRun = {
     // seedFrontier keeps every seed or throws: its row count is seeds.size
     val frontier = Frontier.persisted(seedFrontier(spark, seeds, cfg), Some(seeds.size.toLong))
     val metrics = Seq("total_requests", "successful_requests", "failed_requests",
       "total_link", "crawled_link", "skipped_link", "duplicated_link").map(_ -> 0L).toMap
-    crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
+    crawlLoop(spark, pagesPrep, cfg,
       Crawl(0, frontier, SeenSet.load(spark, cfg, Nil, 0L, -1), seeds.size.toLong, metrics,
         Vector.empty, Vector.empty, Vector.empty))
   }
@@ -221,7 +223,8 @@ object SparkCrawler {
     * leaves (the first post-resume anti-join adds no exchange on the seen
     * side), and only the unaligned residue — small pre-fold deltas, the
     * final expansion's unaligned commit, width-mismatched layouts — pays a
-    * re-shuffle, O(residue) not O(seen). */
+    * re-shuffle, O(residue) not O(seen). `saltedPoliteness` is read by
+    * nothing, as in [[runPrepared]]. */
   def resumePrepared(spark: SparkSession, pagesPrep: DataFrame, cfg: CrawlConfig,
       saltedPoliteness: Boolean = false): CrawlRun = {
     val st = new Storage(cfg.checkpointDir.getOrElse(
@@ -234,7 +237,7 @@ object SparkCrawler {
       SeenSet.width(spark, cfg), seenRowBytes)
     val seen = SeenSet.load(spark, cfg, deltas, snap.metrics.getOrElse("crawled_link", 0L),
       snap.seenBaseStep)
-    crawlLoop(spark, pagesPrep, cfg, saltedPoliteness,
+    crawlLoop(spark, pagesPrep, cfg,
       Crawl(snap.lastStep + 1, frontier, seen, snap.seqBase, snap.metrics,
         st.readCrawled(spark, snap.lastStep).toVector,
         st.readAttempts(spark, snap.lastStep).toVector, Vector.empty))
@@ -258,10 +261,27 @@ object SparkCrawler {
       parted, Seq("canon"), p, Some((n, math.max(1L, n * seenRowBytes))))
   }
 
+  /** Rows one task is sized to hold: the one bound behind a crawl's regime
+    * ([[generatedCode]]), salt fan-out ([[Politeness.saltFanout]]) and task
+    * widths ([[width]]). Tests set it per crawl (`withValue(0L)`: generated
+    * code, salted, full widths). A crawl reads it once, on the caller's
+    * thread: pooled side-job threads keep their creator's value. */
+  private[graft] val rowsPerTask = new scala.util.DynamicVariable[Long](25000L)
+
+  /** Tasks for `rows` rows at `bound` rows per task: between 1 and
+    * `partitions`, and `partitions` at bound 0. The order-stream checkpoint
+    * and the rank size their widths with it: at a pinned `partitions`, a
+    * small superstep launches mostly empty tasks (32 for a 24-row superstep
+    * of the tiny bench crawl; empty rank tasks were the round-4 d0–d2
+    * floor's biggest fixed term). Only a task-count knob: no result depends on it. */
+  private def width(rows: Long, partitions: Int, bound: Long): Int =
+    if (bound <= 0L) partitions
+    else math.max(1L, math.min(partitions.toLong, rows / bound + 1)).toInt
+
   /** Whether a superstep runs with Spark's generated code. It runs
     * interpreted when everything it reads fits one task: the pages cache,
     * the frontier and, when it expands, the expected candidates — at most
-    * `bound` rows together ([[interpretedRowsBound]]). Below that, Janino
+    * `bound` rows together ([[rowsPerTask]]). Below that, Janino
     * time for the ~100 classes of a small crawl's plans, which Spark's
     * codegen cache cannot keep from one run to the next
     * (`DatasetBridge.interpretedCopy`), is a large share of each
@@ -270,12 +290,6 @@ object SparkCrawler {
   private[graft] def generatedCode(pagesRows: Option[Long], frontierSize: Long,
       expectedCandidates: Long, bound: Long): Boolean =
     pagesRows.forall(_ + frontierSize + expectedCandidates > bound)
-
-  /** The row bound of [[generatedCode]]: [[Politeness.RowsPerTask]]. Tests
-    * set it per crawl (`withValue(0L)`) to run small crawls with generated
-    * code. */
-  private[graft] val interpretedRowsBound =
-    new scala.util.DynamicVariable[Long](Politeness.RowsPerTask)
 
   /** What one superstep hands the next: the depth it runs at, its frontier,
     * the seen set, the seq watermark, the 7 counters, the recorded order and
@@ -555,11 +569,11 @@ object SparkCrawler {
   /** One superstep per BFS depth until maxDepth, an empty frontier or
     * maxSupersteps. */
   private def crawlLoop(spark: SparkSession, pagesPrep: DataFrame, cfg: CrawlConfig,
-      saltedPoliteness: Boolean, start: Crawl): CrawlRun = {
+      start: Crawl): CrawlRun = {
     val storage = cfg.checkpointDir.map(new Storage(_))
     storage.foreach(_.init())
     val pages = new Pages(pagesPrep)
-    val codegenBound = interpretedRowsBound.value
+    val bound = rowsPerTask.value
     lazy val interpreted = DatasetBridge.interpretedCopy(spark)
     @scala.annotation.tailrec
     def loop(s: Crawl, stepsRun: Int): Crawl =
@@ -570,11 +584,11 @@ object SparkCrawler {
         // session. The whole superstep follows its frontier there, side
         // jobs and commit included.
         val rows = s.frontier.rows
-        val withCodegen = generatedCode(pages.rows, rows,
-          if (s.depth < cfg.maxDepth) (rows * fanout(s.steps)).toLong else 0L, codegenBound)
+        val expected = if (s.depth < cfg.maxDepth) (rows * fanout(s.steps)).toLong else 0L
+        val withCodegen = generatedCode(pages.rows, rows, expected, bound)
         val session = if (withCodegen) spark else interpreted
-        loop(superstep(session, cfg, saltedPoliteness, pages, storage,
-          s.copy(frontier = s.frontier.in(session)), stepsRun + 1, withCodegen), stepsRun + 1)
+        loop(superstep(session, cfg, pages, storage, s.copy(frontier = s.frontier.in(session)),
+          stepsRun + 1, bound, expected, withCodegen), stepsRun + 1)
       }
     val end = loop(start, 0)
     // a crawl stopped by maxSupersteps (or by an empty expansion) leaves a
@@ -609,8 +623,9 @@ object SparkCrawler {
     * expensive to recompute). Each has one owner that releases the Dataset
     * it persisted once every consumer (main plan, order stream, commit) is
     * done; the seen set owns its own deltas. */
-  private def superstep(spark: SparkSession, cfg: CrawlConfig, salted: Boolean, pages: Pages,
-      storage: Option[Storage], s: Crawl, n: Int, withCodegen: Boolean): Crawl = {
+  private def superstep(spark: SparkSession, cfg: CrawlConfig, pages: Pages,
+      storage: Option[Storage], s: Crawl, n: Int, bound: Long, expected: Long,
+      withCodegen: Boolean): Crawl = {
     val t0 = System.nanoTime()
     val d = s.depth
     val fr = s.frontier
@@ -626,10 +641,10 @@ object SparkCrawler {
       s.copy(depth = d + 1, frontier = next, metrics = m, steps = s.steps :+
         StepStat(d, fr.rows, fetched, fr.rows - fetched, 0L, 0L, 0L, 0, wallMs, withCodegen))
     } else {
-      val sched = schedule(cfg, salted, s, n)
-      val f = fetch(spark, cfg, pages, fr, sched, d, n)
-      val exp =
-        if (d < cfg.maxDepth) Some(expand(spark, cfg, pages, s, f.joined, n)) else None
+      val sched = schedule(cfg, s, n, bound)
+      val f = fetch(spark, cfg, pages, fr, sched, d, n, bound)
+      val exp = Option.when(d < cfg.maxDepth)(
+        expand(spark, cfg, pages, s, f.joined, n, expected, bound))
       // the main thread owns the stream buffers: harvest the concurrent
       // order-stream checkpoint here
       val streams = f.stream.map { fut =>
@@ -656,7 +671,7 @@ object SparkCrawler {
       commit(storage, d, next, seenCommit, streams.fold(emptyOrder(spark))(_._1),
         streams.fold(emptyAttempts(spark))(_._2), m, seqBase, seen.baseStep)
       val stat = StepStat(d, fr.rows, fetched, fr.rows - fetched, cands, passed, next.rows,
-        intervals, wallMs, withCodegen)
+        intervals, wallMs, withCodegen, sched.saltFanout)
       sched.release()
       f.release()
       fr.release()
@@ -683,25 +698,24 @@ object SparkCrawler {
       .join(pages.prep.select("canon").hint("shuffle_hash"), Seq("canon"), "left_semi")
       .count()
 
-  /** A superstep's politeness schedule: `df` (cached when `cached`),
-    * and its interval count — eager under strict drains, which need it to
-    * build the per-interval union, else observed. */
-  private final case class Schedule(df: DataFrame, cached: Boolean, strictIntervals: Int,
-      counters: Option[Counters]) {
+  /** A superstep's politeness schedule: `df` (cached when `cached`), its
+    * salt fan-out, and its interval count — eager under strict drains,
+    * which need it to build the per-interval union, else observed. */
+  private final case class Schedule(df: DataFrame, saltFanout: Int, cached: Boolean,
+      strictIntervals: Int, counters: Option[Counters]) {
     def intervals: Int = counters.fold(strictIntervals)(c =>
       Option(c.get(df).head).fold(0)(_.asInstanceOf[Int] + 1))
 
     def release(): Unit = if (cached) { df.unpersist(); () }
   }
 
-  /** R1: politeness schedule — rate-interval slots within this depth. The
-    * salt fan-out (salted mode only) is 1 while the frontier fits one task,
-    * else from the previous superstep's observed skew. */
-  private def schedule(cfg: CrawlConfig, salted: Boolean, s: Crawl, n: Int): Schedule = {
+  /** R1: politeness schedule — rate-interval slots within this depth, salted
+    * as [[Politeness.saltFanout]] picks from sizes at `bound` rows per task. */
+  private def schedule(cfg: CrawlConfig, s: Crawl, n: Int, bound: Long): Schedule = {
     val prev = s.steps.lastOption
     val saltFanout = Politeness.saltFanout(cfg, s.frontier.rows,
-      prev.fold(0L)(_.frontierSize), prev.fold(0)(_.intervals), s.seen.alignP)
-    val scheduled0 = Politeness.assignIntervals(s.frontier.df, cfg, salted, saltFanout)
+      prev.fold(0L)(_.frontierSize), prev.fold(0)(_.intervals), s.seen.alignP, bound)
+    val scheduled0 = Politeness.assignIntervals(s.frontier.df, cfg, saltFanout)
     val counters =
       if (cfg.strictPoliteness) None
       else Some(new Counters(s"iv_d${s.depth}_s$n", "max_iv" -> max(col("interval"))))
@@ -715,7 +729,7 @@ object SparkCrawler {
         val r = df.agg(max(col("interval"))).first()
         (if (r.isNullAt(0)) 0 else r.getInt(0)) + 1
       } else 0
-    Schedule(df, cached, strictIntervals, counters)
+    Schedule(df, saltFanout, cached, strictIntervals, counters)
   }
 
   /** A superstep's fetch join (cached when `cached`), its hit counter and
@@ -748,7 +762,7 @@ object SparkCrawler {
     * frontier×html bytes in memory, so the two jobs overlap instead of
     * serializing two driver round-trips. */
   private def fetch(spark: SparkSession, cfg: CrawlConfig, pages: Pages, fr: Frontier,
-      sched: Schedule, d: Int, n: Int): Fetch = {
+      sched: Schedule, d: Int, n: Int, bound: Long): Fetch = {
     val pagesSide = pages.sideFor(fr, spark)
     def fetchJoin(f: DataFrame): DataFrame =
       f.hint("merge").join(pagesSide.drop("hash64"), Seq("canon"), "left")
@@ -778,17 +792,12 @@ object SparkCrawler {
         val ckDf = joined.select(col("seq"), col("url"), col("canon"), col("hash"),
           col("depth"), col("interval"), col("ua"), col("proxy"),
           col("html").isNotNull.as("hit"), lit(d).as("superstep"))
-        // checkpoint width sized from the EXACT frontier row count (same
-        // rows-per-task rule as the rank width): the stream rows are a pure
-        // side output — unioned and seq-sorted at crawl end, never joined
-        // back — so partitioning is only a task-count knob, and the
-        // uncoalesced plan inherits the politeness window's full shuffle
-        // width (32 tasks materializing a 24-row superstep on the tiny
-        // bench crawl). coalesce never widens, so corpus-scale supersteps
+        // [[width]] from the EXACT frontier row count: the stream rows are
+        // a pure side output, unioned and seq-sorted at crawl end, never
+        // joined back. coalesce never widens, so corpus-scale supersteps
         // keep their parallelism.
-        val ckW = math.max(1,
-          math.min(cfg.partitions, (fr.rows / Politeness.RowsPerTask).toInt + 1))
-        Some(sideJob(spark)(ckDf.coalesce(ckW).localCheckpoint(true)))
+        Some(sideJob(spark)(
+          ckDf.coalesce(width(fr.rows, cfg.partitions, bound)).localCheckpoint(true)))
       }
     Fetch(joined, cfg.strictPoliteness, counters, stream)
   }
@@ -814,7 +823,7 @@ object SparkCrawler {
     * materialization job per superstep, and the seen delta is a plain
     * projection (no window at all). */
   private def expand(spark: SparkSession, cfg: CrawlConfig, pages: Pages, s: Crawl,
-      joined: DataFrame, n: Int): Expansion = {
+      joined: DataFrame, n: Int, expected: Long, bound: Long): Expansion = {
     val d = s.depth
     val candCounters = new Counters(s"cand_d${d}_s$n", "n_cands" -> count(lit(1)),
       "n_passed" -> sum(when(col("pass"), 1L).otherwise(0L)))
@@ -824,16 +833,12 @@ object SparkCrawler {
     // bucket ids (≤ P ints) — the next superstep's prune set
     val pidObs = new org.apache.spark.sql.Observation(s"pids_d${d}_s$n")
     val fresh0Obs = fresh0.observe(pidObs, collect_set(pages.bucketOf(col("canon"))).as("pids"))
-    // rank width sized from the EXPECTED candidate volume (previous
-    // superstep's observed fan-out, default 16), not pinned to the full
-    // cfg.partitions: a 200-row seed superstep ranks through 1 bucket task
-    // instead of 160 — repartition(n, col) is a fixed-width exchange AQE
-    // cannot coalesce, and those empty task launches were the round-4 d0–d2
-    // floor's biggest fixed term. Only a balance knob: denseRangeRank's
-    // offsets are exact at any width, and an underestimate merely means
-    // fuller (spill-safe) buckets.
-    val rankP = math.max(1, math.min(cfg.partitions,
-      (s.frontier.rows * fanout(s.steps) / Politeness.RowsPerTask).toInt + 1))
+    // [[width]] from the EXPECTED candidate volume: a 200-row seed
+    // superstep ranks through 1 bucket task instead of 160, since
+    // repartition(n, col) is a fixed-width exchange AQE cannot coalesce.
+    // denseRangeRank's offsets are exact at any width; an underestimate
+    // merely means fuller (spill-safe) buckets.
+    val rankP = width(expected, cfg.partitions, bound)
     // INVARIANT: denseRangeRank's counts job MATERIALIZES its input plan (it
     // repartitions fresh0Obs into the bucket store and counts the buckets),
     // so pidObs below is guaranteed to have fired — if Ranks ever computes

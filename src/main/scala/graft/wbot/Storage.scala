@@ -23,13 +23,16 @@ import scala.jdk.CollectionConverters._
  *   <dir>/manifest.properties      — committed step, seqBase, metrics,
  *                                    frontier row count (atomic rename)
  *   <dir>/step=<d>/{frontier,seen_delta,crawled,attempts}/  — parquet
- *   <dir>/step=<d>/seen_delta.properties — the seen delta's width and rows
+ *   <dir>/step=<d>/seen_delta.properties — the seen delta's width, rows and
+ *                                    written bucket ids
  *
  * Two tables are BUCKETED — one `__bucket=<pid>` directory per partition of
  * a leaf hash-partitioned on canon, read back as that leaf with no shuffle:
  * the aligned seen deltas, and the prepared pages snapshot
  * ([[Storage.writePreparedPages]]; `_prep.properties` side-car). Every
- * bucket directory and properties side-car is written and read here.
+ * bucket directory and properties side-car is written and read here; each
+ * side-car records the ids of the buckets written (`buckets`), and a read
+ * that finds one of them gone fails ([[requireBuckets]]).
  */
 object Storage {
   /** A seen delta handed to [[Storage.commitStep]].
@@ -92,9 +95,10 @@ object Storage {
   def writePreparedPages(pagesPrep: DataFrame, dir: String): Long = {
     val p = pagesPrep.rdd.getNumPartitions
     val rows = pagesPrep.count()
-    writeBuckets(pagesPrep, dir, sortedBy = Seq("canon"))
+    val written = writeBuckets(pagesPrep, dir, sortedBy = Seq("canon"))
     writeProps(s"$dir/_prep.properties", "prepared pages snapshot meta",
-      Map("partitions" -> p.toString, "rows" -> rows.toString))
+      Map("partitions" -> p.toString, "rows" -> rows.toString,
+        "buckets" -> written.mkString(",")))
     rows
   }
 
@@ -108,10 +112,11 @@ object Storage {
     * [[PreparedPagesSchema]], so no bucket pays a footer-inference job.
     * Drop-in for [[SparkCrawler.runPrepared]]/[[SparkCrawler.resumePrepared]]. */
   def readPreparedPages(spark: SparkSession, dir: String): DataFrame = {
-    val p = readProps(s"$dir/_prep.properties").map(_("partitions").toInt)
-    require(p.isDefined, s"no prepared-pages snapshot at $dir")
-    readBuckets(spark, dir, p.get, PreparedPagesSchema, None, orderedBy = Seq("canon"))
-      .persist(SparkCrawler.bulkLevel)
+    val props = readProps(s"$dir/_prep.properties")
+    require(props.isDefined, s"no prepared-pages snapshot at $dir")
+    requireBuckets(dir, props.get, "prepared pages snapshot")
+    readBuckets(spark, dir, props.get("partitions").toInt, PreparedPagesSchema, None,
+      orderedBy = Seq("canon")).persist(SparkCrawler.bulkLevel)
   }
 
   /** Write `df` as the parquet table at `path`, through `path.tmp`. */
@@ -130,14 +135,17 @@ object Storage {
     * then `sortedBy` sorts each partition by `sortedBy`, which meets the
     * writer's required ordering EXPLICITLY. Without it the writer plans its
     * own sort on `__bucket` alone, which is not stability-guaranteed and
-    * could scramble an order the reader declares. */
-  private def writeBuckets(df: DataFrame, path: String, sortedBy: Seq[String]): Unit = {
+    * could scramble an order the reader declares. Returns the ids of the
+    * buckets written, for the caller's side-car. */
+  private def writeBuckets(df: DataFrame, path: String, sortedBy: Seq[String]): Seq[Int] = {
     val tagged = df.withColumn("__bucket", spark_partition_id())
     val sorted =
       if (sortedBy.isEmpty) tagged
       else tagged.sortWithinPartitions(("__bucket" +: sortedBy).map(col): _*)
     sorted.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(path + ".tmp")
+    val written = bucketIds(path + ".tmp")
     promote(path + ".tmp", path)
+    written
   }
 
   /** The [[writeBuckets]] table at `path`, written from a leaf of `p`
@@ -154,9 +162,23 @@ object Storage {
     DatasetBridge.bucketSourcesAligned(buckets, Seq("canon"), sizeHint, orderedBy)
   }
 
-  /** Whether `path` holds any [[writeBuckets]] bucket directory. */
-  private def hasBuckets(path: String): Boolean =
-    Option(new File(path).list()).exists(_.exists(_.startsWith("__bucket=")))
+  /** The ids of the [[writeBuckets]] bucket directories under `path`. */
+  private def bucketIds(path: String): Seq[Int] =
+    Option(new File(path).list()).toSeq.flatten
+      .collect { case n if n.startsWith("__bucket=") => n.stripPrefix("__bucket=").toInt }.sorted
+
+  /** Throws `IllegalStateException` naming every bucket that the side-car
+    * `props` records as written (`buckets`) but is gone from `path`: read
+    * without it, `what` would silently lack its rows. A side-car written
+    * before the key existed is not checked here. */
+  private def requireBuckets(path: String, props: Map[String, String], what: String): Unit =
+    props.get("buckets").foreach { v =>
+      val written = v.split(',').filter(_.nonEmpty).map(_.toInt).toSeq
+      val missing = written.diff(bucketIds(path))
+      if (missing.nonEmpty) throw new IllegalStateException(s"$what lost " +
+        s"${missing.map(b => s"__bucket=$b").mkString(", ")} of the ${written.size} buckets " +
+        s"written to $path; cannot read it")
+    }
 
   private def promote(tmp: String, path: String): Unit = {
     val dst = new File(path)
@@ -203,10 +225,12 @@ final class Storage(dir: String) {
 
   private def writeSeenDelta(d: Int, sc: SeenCommit): Unit = {
     val path = s"${stepDir(d)}/seen_delta"
-    if (sc.alignedP.isDefined) writeBuckets(sc.df, path, sortedBy = Nil)
-    else writeAtomic(sc.df, path)
+    val written =
+      if (sc.alignedP.isDefined) Some(writeBuckets(sc.df, path, sortedBy = Nil))
+      else { writeAtomic(sc.df, path); None }
     writeProps(s"$path.properties", "seen delta meta",
-      sc.alignedP.map(p => "aligned_p" -> p.toString).toMap + ("rows" -> sc.rows.toString))
+      sc.alignedP.map(p => "aligned_p" -> p.toString).toMap ++
+        written.map(b => "buckets" -> b.mkString(",")) + ("rows" -> sc.rows.toString))
   }
 
   /** Commit superstep d: all tables first, manifest rename last (the commit
@@ -282,9 +306,10 @@ final class Storage(dir: String) {
     * anything else (pre-fold smalls, width-mismatched layouts, legacy plain
     * commits) comes back as a plain parquet read for the engine to treat as
     * small or re-align. Every read uses [[SeenSchema]]. A bucketed commit
-    * whose side-car records rows but whose bucket directories are gone
-    * throws `IllegalStateException`: resuming without it would crawl every
-    * URL it holds again as fresh. */
+    * that lost any bucket its side-car records as written (or, for a
+    * side-car without that record, that records rows but has no bucket
+    * directory left) throws `IllegalStateException`: resuming without them
+    * would crawl every URL they hold again as fresh. */
   def readSeenDeltas(spark: SparkSession, upTo: Int, seenBase: Int, wantP: Int,
       rowBytes: Long): Seq[LoadedDelta] =
     (math.max(0, seenBase) to upTo).flatMap { i =>
@@ -294,8 +319,9 @@ final class Storage(dir: String) {
         requireCanonKeyed(new File(path))
         val props = readProps(s"$path.properties").getOrElse(Map.empty)
         val rows = props.get("rows").fold(-1L)(_.toLong)
+        requireBuckets(path, props, s"seen delta of step $i")
         props.get("aligned_p").map(_.toInt) match {
-          case Some(p) if !hasBuckets(path) =>
+          case Some(p) if bucketIds(path).isEmpty =>
             if (rows > 0L) throw new IllegalStateException(s"seen delta of step $i " +
               s"records $rows rows in $p buckets, but $path holds no __bucket= directory; " +
               "cannot resume")

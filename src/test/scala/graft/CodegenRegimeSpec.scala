@@ -22,9 +22,10 @@ object CheckpointedTiny {
 
   /** (the interrupted leg, the resumed run) at row bound `bound`. */
   def crawl(spark: org.apache.spark.sql.SparkSession, pagesPrep: DataFrame,
-      bound: Long = Politeness.RowsPerTask): (SparkCrawler.CrawlRun, SparkCrawler.CrawlRun) = {
+      bound: Long = SparkCrawler.rowsPerTask.value)
+      : (SparkCrawler.CrawlRun, SparkCrawler.CrawlRun) = {
     val dir = java.nio.file.Files.createTempDirectory("wbot_regime").toString
-    SparkCrawler.interpretedRowsBound.withValue(bound) {
+    SparkCrawler.rowsPerTask.withValue(bound) {
       val leg = SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg(dir).copy(maxSupersteps = 1))
       (leg, SparkCrawler.resumePrepared(spark, pagesPrep, cfg(dir)))
     }
@@ -70,7 +71,7 @@ class CodegenRegimeSpec extends SparkSuite {
       p.children.map(codegenStages).sum
 
   test("regime gate: no generated code while pages, frontier and expected candidates fit one task") {
-    val b = Politeness.RowsPerTask
+    val b = SparkCrawler.rowsPerTask.value
     // the checkpointed perfbench crawl's largest expanding superstep
     assert(!SparkCrawler.generatedCode(Some(5000L), 909L, 909L * 16, b))
     assert(!SparkCrawler.generatedCode(Some(b - 30L), 10L, 20L, b)) // at the bound
@@ -102,6 +103,8 @@ class CodegenRegimeSpec extends SparkSuite {
       val ((leg, res), classes, plans) = compiling(CheckpointedTiny.crawl(spark, pagesPrep, bound = 0L))
       val steps = leg.steps ++ res.steps
       assert(steps.size == 4 && steps.forall(_.generatedCode), steps.mkString("\n"))
+      // the same bound salts every superstep's politeness schedule
+      assert(steps.forall(_.saltFanout > 1), steps.mkString("\n"))
       assert(classes > 0L)
       assert(plans.exists(codegenStages(_) > 0), "no whole-stage codegen stage in any plan")
     } finally { pagesPrep.unpersist(); () }

@@ -13,10 +13,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
  */
 class CrawlerParitySpec extends SparkSuite {
 
-  private def assertParity(spec: Fixtures.SiteSpec, seeds: Seq[String], cfg: CrawlConfig,
-      salted: Boolean = false): SparkCrawler.CrawlRun = {
+  private def assertParity(spec: Fixtures.SiteSpec, seeds: Seq[String],
+      cfg: CrawlConfig): SparkCrawler.CrawlRun = {
     val oracle = Oracle.run(Fixtures.oraclePages(spec), seeds, cfg)
-    val run = SparkCrawler.run(spark, SparkTestBase.pagesDf(spec), seeds, cfg, salted)
+    val run = SparkCrawler.run(spark, SparkTestBase.pagesDf(spec), seeds, cfg)
     assertRunsEqual(oracle, run)
     run
   }
@@ -133,14 +133,17 @@ class CrawlerParitySpec extends SparkSuite {
   }
 
   test("parity: a small checkpointed crawl with and without generated code") {
-    // the same crawl and resume below the row bound (interpreted) and with
-    // the bound forced to 0 (generated code in every superstep)
+    // the same crawl and resume below the row bound (interpreted, unsalted)
+    // and with the bound forced to 0 (generated code, a salted schedule and
+    // full task widths in every superstep)
     val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(tiny), 4)
     pagesPrep.count()
     val oracle = Oracle.run(Fixtures.oraclePages(tiny), tinySeeds, CheckpointedTiny.cfg(""))
-    for (bound <- Seq(Politeness.RowsPerTask, 0L)) {
+    for (bound <- Seq(SparkCrawler.rowsPerTask.value, 0L)) {
       val (leg, res) = CheckpointedTiny.crawl(spark, pagesPrep, bound)
-      assert((leg.steps ++ res.steps).forall(_.generatedCode == (bound == 0L)), s"bound $bound")
+      val steps = leg.steps ++ res.steps
+      assert(steps.forall(_.generatedCode == (bound == 0L)), s"bound $bound")
+      assert(steps.forall(s => (s.saltFanout > 1) == (bound == 0L)), s"bound $bound: $steps")
       assertRunsEqual(oracle, res)
     }
     pagesPrep.unpersist()
@@ -241,7 +244,11 @@ class CrawlerParitySpec extends SparkSuite {
   }
 
   test("parity: salted politeness schedule does not change order/seen/metrics") {
-    assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4), salted = true)
+    // at a 1-row bound every frontier of more than one row is salted
+    val run = SparkCrawler.rowsPerTask.withValue(1L) {
+      assertParity(tiny, tinySeeds, CrawlConfig(maxDepth = 3, partitions = 4))
+    }
+    assert(run.steps.exists(_.saltFanout > 1), run.steps.mkString("\n"))
   }
 
   test("parity: filter rules engine (default-deny-once-a-rule-exists quirk)") {

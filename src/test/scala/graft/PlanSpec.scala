@@ -157,7 +157,7 @@ class PlanSpec extends SparkSuite {
       rateLimits = Map("*" -> graft.wbot.Schemas.Budget(3, 1000L),
         "host0.com" -> graft.wbot.Schemas.Budget(7, 1000L)))
     val frontier = SparkCrawler.seedFrontier(spark, Fixtures.seeds(Fixtures.tiny), cfg)
-    val scheduled = graft.wbot.Politeness.assignIntervals(frontier, cfg, salted = false)
+    val scheduled = graft.wbot.Politeness.assignIntervals(frontier, cfg, saltFanout = 1)
     scheduled.collect() // finalize the AQE plan so codegen stages are visible
     val plan = planOf(scheduled)
     assert(!plan.contains("UDF"), s"budget lookup fell back to a scala UDF:\n$plan")

@@ -23,7 +23,7 @@ class PolitenessSpec extends SparkSuite {
     val f = frontier(Seq(
       ("a.com", 10L, 0L), ("a.com", 50L, 1L), ("a.com", 30L, 2L),
       ("a.com", 50L, 3L), ("a.com", 90L, 4L), ("b.com", 1L, 5L)))
-    val out = Politeness.assignIntervals(f, cfg, salted = false)
+    val out = Politeness.assignIntervals(f, cfg, saltFanout = 1)
       .select("root", "seq", "interval").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
     // a.com drain order by (score desc, seq): 4(90), 1(50), 3(50), 2(30), 0(10)
@@ -37,7 +37,7 @@ class PolitenessSpec extends SparkSuite {
   test("constant score is exactly the FIFO drain (seq order)") {
     val cfg = CrawlConfig(rateLimits = Map("*" -> Budget(2, 1000L)))
     val rows = (0L until 10L).map(i => ("a.com", 0L, i))
-    val out = Politeness.assignIntervals(frontier(rows), cfg, salted = false)
+    val out = Politeness.assignIntervals(frontier(rows), cfg, saltFanout = 1)
       .select("seq", "interval").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toMap
     assert((0L until 10L).forall(i => out(i) == (i / 2).toInt))
@@ -46,7 +46,7 @@ class PolitenessSpec extends SparkSuite {
   test("salted drain never exceeds budget and respects score within a salt") {
     val cfg = CrawlConfig(rateLimits = Map("*" -> Budget(3, 1000L)))
     val rows = (0L until 200L).map(i => ("a.com", i % 7, i))
-    val out = Politeness.assignIntervals(frontier(rows), cfg, salted = true)
+    val out = Politeness.assignIntervals(frontier(rows), cfg, saltFanout = 16)
     val over = out.groupBy("root", "interval").count()
       .where(col("count") > 3).count()
     assert(over == 0, "salted schedule exceeded budget")
@@ -54,32 +54,34 @@ class PolitenessSpec extends SparkSuite {
 
   test("salt fan-out: 1 up to one task's rows, observed skew above, 16 without evidence") {
     val cfg = CrawlConfig()
-    val bound = Politeness.RowsPerTask
+    val bound = graft.wbot.SparkCrawler.rowsPerTask.value
     // the whole frontier fits one task: no salting, whatever the evidence
-    assert(Politeness.saltFanout(cfg, 20L, 0L, 0, 32) == 1)
-    assert(Politeness.saltFanout(cfg, bound, 0L, 0, 32) == 1)
-    assert(Politeness.saltFanout(cfg, bound, bound / 2, 500, 32) == 1)
+    assert(Politeness.saltFanout(cfg, 20L, 0L, 0, 32, bound) == 1)
+    assert(Politeness.saltFanout(cfg, bound, 0L, 0, 32, bound) == 1)
+    assert(Politeness.saltFanout(cfg, bound, bound / 2, 500, 32, bound) == 1)
     // above the bound with no previous superstep: the conservative 16
-    assert(Politeness.saltFanout(cfg, bound + 1, 0L, 0, 32) == 16)
+    assert(Politeness.saltFanout(cfg, bound + 1, 0L, 0, 32, bound) == 16)
     // above the bound, skewed: 500 intervals × budget 10 over 50k rows →
     // ≈ 10k rows of the biggest host at 100k rows vs a 3,125-row share
-    assert(Politeness.saltFanout(cfg, 100000L, 50000L, 500, 32) == 4)
+    assert(Politeness.saltFanout(cfg, 100000L, 50000L, 500, 32, bound) == 4)
     // above the bound, uniform hosts: one interval → no fan-out
-    assert(Politeness.saltFanout(cfg, 100000L, 50000L, 1, 32) == 1)
+    assert(Politeness.saltFanout(cfg, 100000L, 50000L, 1, 32, bound) == 1)
+    // bound 0: every non-empty frontier is above it
+    assert(Politeness.saltFanout(cfg, 1L, 0L, 0, 32, 0L) == 16)
 
     // the salted plan at the fan-out the rule picks for a skewed frontier
     // above the bound: same per-(host, interval) loads as the exact rank
     val cfg3 = CrawlConfig(rateLimits = Map("*" -> Budget(3, 1000L)))
     val n = bound + 5000L
     val rows = (0L until n).map(i => (if (i % 5 == 0) s"h${i % 50}.com" else "big.com", i % 7, i))
-    val fanout = Politeness.saltFanout(cfg3, n, n, (n * 4 / 5 / 3).toInt, 32)
+    val fanout = Politeness.saltFanout(cfg3, n, n, (n * 4 / 5 / 3).toInt, 32, bound)
     assert(fanout > 1)
-    def loads(salted: Boolean) =
-      Politeness.assignIntervals(frontier(rows), cfg3, salted, fanout)
+    def loads(saltFanout: Int) =
+      Politeness.assignIntervals(frontier(rows), cfg3, saltFanout)
         .groupBy("root", "interval").count().collect()
         .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val salted = loads(salted = true)
+    val salted = loads(fanout)
     assert(salted.values.forall(_ <= 3L), "salted schedule exceeded budget")
-    assert(salted == loads(salted = false))
+    assert(salted == loads(1))
   }
 }

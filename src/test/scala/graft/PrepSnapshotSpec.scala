@@ -68,6 +68,14 @@ class PrepSnapshotSpec extends SparkSuite {
         val footers = spark.read.parquet(b.toString).schema
         assert(footers == Storage.PreparedPagesSchema, s"$b: ${footers.toDDL}")
       }
+
+      // 6. a snapshot that lost a bucket fails the read, naming the bucket
+      val lost = buckets.filter(_.getName == "__bucket=1")
+      assert(lost.nonEmpty, buckets.mkString(","))
+      lost.flatMap(_.listFiles()).foreach(_.delete())
+      lost.foreach(_.delete())
+      val e = intercept[IllegalStateException](Storage.readPreparedPages(spark, dir))
+      assert(e.getMessage.contains("__bucket=1"), e.getMessage)
     } finally {
       stored.unpersist()
       prep.unpersist()

@@ -5,21 +5,27 @@ import graft.wbot.Schemas._
 
 /** §5.2.2: randomized small site graphs — Spark engine ≡ Oracle across
   * generator seeds, shapes, depths and budgets (the quirk cluster has no
-  * fixed-fixture blind spots). */
+  * fixed-fixture blind spots), each with the default row bound (windowed
+  * politeness ranks) and with a 1-row bound (salted ranks). */
 class PropertyParitySpec extends SparkSuite {
 
   private def parity(spec: Fixtures.SiteSpec, seeds: Seq[String], cfg: CrawlConfig): Unit = {
     val oracle = Oracle.run(Fixtures.oraclePages(spec), seeds, cfg)
-    val run = SparkCrawler.run(spark, SparkTestBase.pagesDf(spec), seeds, cfg,
-      saltedPoliteness = spec.seed % 2 == 0)
-    val engineOrder = run.order.orderBy("seq")
-      .select("seq", "canon", "depth").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toVector
-    assert(engineOrder == oracle.order.map(c => (c.seq, c.canon, c.depth)),
-      s"order mismatch for spec=$spec")
-    assert(run.seen.select("hash").collect().map(_.getString(0)).toSet == oracle.seen,
-      s"seen mismatch for spec=$spec")
-    assert(run.metrics == oracle.metrics, s"metrics mismatch for spec=$spec")
+    for (bound <- Seq(SparkCrawler.rowsPerTask.value, 1L)) {
+      val run = SparkCrawler.rowsPerTask.withValue(bound) {
+        SparkCrawler.run(spark, SparkTestBase.pagesDf(spec), seeds, cfg)
+      }
+      val what = s"spec=$spec, bound=$bound"
+      assert(run.steps.exists(_.saltFanout > 1) == (bound == 1L), s"$what: ${run.steps}")
+      val engineOrder = run.order.orderBy("seq")
+        .select("seq", "canon", "depth").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toVector
+      assert(engineOrder == oracle.order.map(c => (c.seq, c.canon, c.depth)),
+        s"order mismatch for $what")
+      assert(run.seen.select("hash").collect().map(_.getString(0)).toSet == oracle.seen,
+        s"seen mismatch for $what")
+      assert(run.metrics == oracle.metrics, s"metrics mismatch for $what")
+    }
   }
 
   test("randomized graph #1: wide fan, shallow") {
@@ -54,8 +60,11 @@ class PropertyParitySpec extends SparkSuite {
     val budget = 4
     val cfg = CrawlConfig(maxDepth = 3, partitions = 4,
       rateLimits = Map("*" -> Budget(budget, 1000L)))
-    val run = SparkCrawler.run(spark, SparkTestBase.pagesDf(spec), Fixtures.seeds(spec), cfg,
-      saltedPoliteness = true)
+    // a 1-row bound salts every frontier of more than one row
+    val run = SparkCrawler.rowsPerTask.withValue(1L) {
+      SparkCrawler.run(spark, SparkTestBase.pagesDf(spec), Fixtures.seeds(spec), cfg)
+    }
+    assert(run.steps.exists(_.saltFanout > 1), run.steps.mkString("\n"))
     // reconstruct per-(superstep, root, interval) loads from the stream
     import org.apache.spark.sql.functions.col
     val over = run.order

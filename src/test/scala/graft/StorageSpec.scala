@@ -118,20 +118,26 @@ class StorageSpec extends SparkSuite {
     val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
     val probe = SparkCrawler.runPrepared(spark, pagesPrep, seeds,
       CrawlConfig(maxDepth = 3, partitions = 4, maxSupersteps = 1))
-    val dir = Files.createTempDirectory("wbot_ckpt_nobuckets").toString
-    val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir),
-      smallSeenBound = probe.steps(0).fresh)
-    SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg.copy(maxSupersteps = 2))
-    val snap = new Storage(dir).readManifest().get
-    assert(snap.seenBaseStep == 1, s"step 1 is not the fold: ${snap.seenBaseStep}")
-    val seenDir = new File(s"$dir/step=1/seen_delta")
-    val buckets = seenDir.listFiles().filter(_.getName.startsWith("__bucket="))
-    assert(buckets.nonEmpty, seenDir.list().mkString(","))
-    buckets.foreach(delete)
-    // at the committed width (aligned read) and at another (flat read)
-    for (c <- Seq(cfg, cfg.copy(seenAlignPartitions = Some(2)))) {
-      val e = intercept[IllegalStateException](SparkCrawler.resumePrepared(spark, pagesPrep, c))
-      assert(e.getMessage.contains("step 1"), e.getMessage)
+    // every bucket deleted, and only __bucket=0 (its URLs would be crawled
+    // again as fresh)
+    for (all <- Seq(true, false)) {
+      val dir = Files.createTempDirectory("wbot_ckpt_nobuckets").toString
+      val cfg = CrawlConfig(maxDepth = 3, partitions = 4, checkpointDir = Some(dir),
+        smallSeenBound = probe.steps(0).fresh)
+      SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg.copy(maxSupersteps = 2))
+      val snap = new Storage(dir).readManifest().get
+      assert(snap.seenBaseStep == 1, s"step 1 is not the fold: ${snap.seenBaseStep}")
+      val seenDir = new File(s"$dir/step=1/seen_delta")
+      val buckets = seenDir.listFiles().filter(_.getName.startsWith("__bucket="))
+      assert(buckets.size > 1 && buckets.exists(_.getName == "__bucket=0"),
+        seenDir.list().mkString(","))
+      buckets.filter(b => all || b.getName == "__bucket=0").foreach(delete)
+      // at the committed width (aligned read) and at another (flat read)
+      for (c <- Seq(cfg, cfg.copy(seenAlignPartitions = Some(2)))) {
+        val e = intercept[IllegalStateException](SparkCrawler.resumePrepared(spark, pagesPrep, c))
+        assert(e.getMessage.contains("step 1") && (all || e.getMessage.contains("__bucket=0")),
+          s"all=$all: ${e.getMessage}")
+      }
     }
     pagesPrep.unpersist()
   }
