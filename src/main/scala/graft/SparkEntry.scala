@@ -271,8 +271,8 @@ object SparkEntry {
     "q31_byte_histogram" -> ((s, d) => {
       // The feature FORMULA of Multimodal.decodeMeta's 8-dim vector, pinned
       // by a DuckDB oracle at the exact-count level: bin j = bytes whose top
-      // 3 bits equal j, computed here by the codegen'd single-pass
-      // ByteHistCounts expression (≡ the translate-over-high-nibbles twin ≡
+      // 3 bits equal j, computed here by the single-pass
+      // OpsExprs.byteHistCounts evaluator (≡ the translate-over-high-nibbles twin ≡
       // the Scala decoder — both pins in MultimodalSpec/OpsExprSpec) and
       // replayed bin-identically by the oracle's list_filter over the
       // uppercase-hex alphabet. The decodeMeta feature column stays

@@ -57,7 +57,8 @@ object Tools {
         // shuffle width is data-sized (the depth-4 superstep shuffles ~27M
         // candidate rows; 2·cores partitions would sort ~7M rows per task);
         // AQE coalescing merges the small reads this gives shallow depths
-        run(math.max(2 * cores.toInt, spec.totalRows / 25000), s"local[$cores]", CrawlFabric) {
+        run(math.max(2 * cores.toInt, (spec.totalRows / SparkCrawler.rowsPerTask.value).toInt),
+            s"local[$cores]", CrawlFabric) {
           spark =>
             warmUp(spark)
             val line = crawl(spark, cores.toInt, spec, maxDepth).line
@@ -308,13 +309,14 @@ object Tools {
   def crawl(spark: SparkSession, cores: Int, spec: Fixtures.SiteSpec,
       maxDepth: Int): LevelResult = listening(spark) { jobs =>
     // partition count is data-sized, not core-sized (the same logical job at
-    // every level): ~25k pages per partition caps a serialized cache block
-    // at ~40 MB. At deep frontiers the working set (pages + seen deltas)
-    // exceeds the off-heap pool, blocks bounce via disk, and each bounce
-    // re-allocates a whole block on heap; 32 partitions of a 4M-page table
+    // every level): `rowsPerTask` (25k) pages per partition caps a serialized
+    // cache block at ~40 MB. At deep frontiers the working set (pages + seen
+    // deltas) exceeds the off-heap pool, blocks bounce via disk, and each
+    // bounce re-allocates a whole block on heap; 32 partitions of a 4M-page table
     // made those 190 MB apiece (executor heap OOM in
     // BlockManager.maybeCacheDiskBytesInMemory).
-    val parts = math.max(math.max(32, cores), spec.totalRows / 25000)
+    val parts = math.max(math.max(32, cores),
+      (spec.totalRows / SparkCrawler.rowsPerTask.value).toInt)
     val cfg = Schemas.CrawlConfig(maxDepth = maxDepth, partitions = parts, recordStreams = false)
     val pagesPrep = SparkCrawler.preparePages(Fixtures.pagesDf(spark, spec), parts)
     pagesPrep.count()
@@ -344,7 +346,8 @@ object Tools {
     val sb = new StringBuilder
     sb.append("Identical input, seeds (one per host) and politeness budget at every level;\n")
     sb.append("salt fan-out sized per superstep; each level in a fresh JVM with\n")
-    sb.append("spark.sql.shuffle.partitions = max(2 * cores, rows / 25,000).\n\n")
+    sb.append("spark.sql.shuffle.partitions = max(2 * cores, rows / " +
+      f"${SparkCrawler.rowsPerTask.value}%,d).\n\n")
     sb.append("| cores | wall (s) | URLs fetched | URLs/s |\n|---|---|---|---|\n")
     results.foreach(r => sb.append(f"| ${r.cores} | ${r.wallSec}%.1f | ${r.urls} | ${r.urlsPerSec}%.1f |\n"))
     sb.append(f"\n**Scaling efficiency (R_${hi.cores} / R_${lo.cores}) / $ratio%.2f = $eff%.3f**" +

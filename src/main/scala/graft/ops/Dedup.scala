@@ -52,9 +52,9 @@ object Dedup {
     // so it needs no explode and no shuffle at all. The previous shape
     // (explode shingles → groupBy(id) min, round 5's "aggregate before you
     // shuffle" refinement) still generated ~|text| rows per doc and paid one
-    // exchange + two aggregate stages; the codegen'd
-    // [[graft.ops.exprs.MinhashDocSigs]] computes the identical sig values
-    // (same code-point shingles, same md5 ⊕ "#h" mins — pinned ≡ the explode
+    // exchange + two aggregate stages; one static-evaluator call per doc
+    // ([[graft.ops.exprs.OpsExprs.minhashDocSigs]]) computes the identical sig
+    // values (same code-point shingles, same md5 ⊕ "#h" mins — pinned ≡ the explode
     // construction in OpsExprSpec, plus the q14/q15/q28 DuckDB oracles) in
     // one map-only pass: ZERO exchanges, and downstream banding starts from
     // one row per doc. Contract note: rows with duplicate ids now yield one
@@ -357,33 +357,17 @@ object Dedup {
   }
 
   /**
-   * SimHash-64 over tokens: per-document signed bit-vote using xxhash64 token
-   * hashes (codegen'd built-in). Near-dups = small hamming distance.
-   */
-  def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("tok"))
-      .where(col("tok") =!= "")
-      .withColumn("h", xxhash64(col("tok")))
-    val votes = (0 until 64).map(i =>
-      sum(when(expr(s"(h >> $i) & 1") === 1, 1).otherwise(-1)).as(s"v_$i"))
-    val voted = toks.groupBy("id").agg(votes.head, votes.tail: _*)
-    val bits = (0 until 64).map(i =>
-      when(col(s"v_$i") > 0, expr(s"cast(1 as bigint) << $i")).otherwise(lit(0L)))
-    voted.select(col("id"), bits.reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
-  }
-
-  /**
-   * ENGINE-PORTABLE SimHash-64 (oracle-checkable, unlike [[simhash64]]'s
-   * xxhash64): token bit i = high bit of hex char of md5 — chars 0..31 of
+   * ENGINE-PORTABLE SimHash-64 (oracle-checkable: md5, no platform hash):
+   * token bit i = high bit of hex char of md5 — chars 0..31 of
    * md5(tok || "#a") give bits 0..31, md5(tok || "#b") bits 32..63. Output is
    * the 16-hex-char signature string (nibble j = bits 4j..4j+3 as 8·b+4·b+2·b+b),
    * avoiding engines' differing bigint shift-overflow behavior at bit 63.
    */
   def simhashMd5(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // A SimHash is a PER-DOCUMENT value (votes over the doc's own tokens), so
-    // like [[minhashSignatures]] it needs no explode and no shuffle: the
-    // codegen'd [[graft.ops.exprs.SimhashDocHex]] tokenizes, votes and
-    // assembles the 16-hex-char signature in one map-only pass — identical
+    // like [[minhashSignatures]] it needs no explode and no shuffle: one
+    // static-evaluator call ([[graft.ops.exprs.OpsExprs.simhashDocHex]])
+    // tokenizes, votes and assembles the 16-hex-char signature in one map-only pass — identical
     // output to the explode-tokens → 64-sum groupBy → nibble-CASE
     // construction (pinned in OpsExprSpec; the q25 DuckDB oracle replays the
     // formula end to end), with zero exchanges where the previous shape paid
@@ -397,14 +381,12 @@ object Dedup {
       .select(col("id"), graft.ops.exprs.OpsExprs.simhashDocHex(col("__text")).as("simhash_hex"))
   }
 
-  /** Hamming distance between simhashes (for verify-stage pairing). */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /**
    * Embedding near-dup / similarity via QUANTIZED integer dot product:
    * floor(x·1000) per component → exact int64 arithmetic, engine-portable
    * (no float-summation-order ambiguity). Output pairs with qdot ≥ minQdot.
-   * Computed by the codegen'd native [[graft.ops.exprs.QuantizedDot]] — the
+   * Computed by one static-evaluator call per pair
+   * ([[graft.ops.exprs.OpsExprs.quantizedDot]]; both vectors array<float>) — the
    * previous `aggregate(zip_with(...))` form ran interpreted lambdas per
    * element per row (q18 scores corpus×queries pairs through this). Value-
    * and null-semantics pinned ≡ the HOF form in OpsExprSpec, plus the

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
  * exactly: vectors quantize to ×1000-floored int64 (integer sums are
  * order-independent, unlike float reductions), and hyperplane signs derive
  * from md5("plane-<p>-<i>") — sign = +1 iff the first hex char is >= '8'.
- * The signs are computed ONCE on the driver and enter the plan as literal
- * arrays: the per-row work is pure codegen'd integer arithmetic, no hashing.
+ * The signs are computed once per JVM (`OpsExprEval.signsFlat`): the per-row
+ * work is pure integer arithmetic, no hashing.
  */
 object Similarity {
 
@@ -55,7 +55,7 @@ object Similarity {
     * keys of `bitsPerBand` planes each (band b uses planes b·w..b·w+w-1),
     * exploded to (id, band, bucket) rows — a pair is a candidate iff it
     * shares ANY band's bucket (OR-amplification, as in MinHash banding).
-    * All keys come from ONE codegen'd [[exprs.LshBandKeys]] pass over the
+    * All keys come from ONE [[exprs.OpsExprs.lshBandKeys]] pass over the
     * quantized vector: the per-plane HOF form (`aggregate(zip_with(qv,
     * <dims-element literal>))` × bands·bitsPerBand) ran interpreted per row
     * AND carried the giant literal trees through planning/codegen — q17's

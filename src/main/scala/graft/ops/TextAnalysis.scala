@@ -18,8 +18,8 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "et", "est"),
     "es" -> Seq("el", "los", "y", "es"))
 
-  // Marker counting is ONE codegen'd pass over the text for ALL sets
-  // (graft.ops.exprs.TokenSetCounts): the round-5 shape — one `filter` HOF
+  // Marker counting is ONE pass over the text for ALL sets
+  // (graft.ops.exprs.OpsExprs.tokenSetCounts): the round-5 shape — one `filter` HOF
   // with a set predicate per call — still ran interpreted lambdas per row
   // (higher-order functions do not codegen) and built a filtered array per
   // set; the native pass splits once and counts every set's hits together.

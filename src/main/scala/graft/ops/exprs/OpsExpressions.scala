@@ -1,23 +1,22 @@
 package graft.ops.exprs
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst expressions for the ops/ hot paths (same promotion the
- * crawl loop got in round 4 with `UrlExprs`): Spark's array higher-order
- * functions (`aggregate`, `zip_with`, `transform`) do not participate in
- * whole-stage codegen — each row pays interpreted lambda dispatch per
- * element — and the per-plane LSH trees additionally bloat the plan (36
- * `aggregate(zip_with(qv, <64-element literal>))` subtrees for q17), which
- * is pure planning/codegen latency. Each expression here is a single
- * generated call into a static evaluator doing primitive-array arithmetic,
- * and each is pinned semantically equal to the HOF construction it replaces
+ * Static evaluators for the ops/ hot paths, called from generated code (or by
+ * reflection when interpreted) through the [[OpsExprs]] column handles.
+ * Spark's array higher-order functions (`aggregate`, `zip_with`,
+ * `transform`) do not participate in whole-stage codegen — each row pays
+ * interpreted lambda dispatch per element — and the per-plane LSH trees
+ * additionally bloat the plan (36 `aggregate(zip_with(qv, <64-element
+ * literal>))` subtrees for q17), which is pure planning/codegen latency.
+ * Each evaluator here is a single call doing primitive-array arithmetic, and
+ * each is pinned semantically equal to the HOF construction it replaces
  * (OpsExprSpec) on top of the end-to-end DuckDB oracles (q17/q18/q26/q31).
  */
 object OpsExprEval {
@@ -123,8 +122,7 @@ object OpsExprEval {
     * q25 DuckDB oracle replays it). Returns null when the text has no
     * non-empty token (callers filter `trim(text) != ''` first, matching the
     * explode form's row drop). */
-  def simhashDocHex(text: org.apache.spark.unsafe.types.UTF8String)
-      : org.apache.spark.unsafe.types.UTF8String = {
+  def simhashDocHex(text: UTF8String): UTF8String = {
     val b = text.getBytes
     val n = b.length
     val votes = new Array[Int](64)
@@ -160,7 +158,7 @@ object OpsExprEval {
       cs(j) = hexDigits.charAt(d)
       j += 1
     }
-    org.apache.spark.unsafe.types.UTF8String.fromString(new String(cs))
+    UTF8String.fromString(new String(cs))
   }
 
   /** All `numHashes` MinHash signatures of one document in one pass over its
@@ -172,8 +170,7 @@ object OpsExprEval {
     * hex-encoded once). Returns null when the text has fewer than `width`
     * characters (callers filter `length(text) >= width` first, as the
     * explode form did). */
-  def minhashDocSigs(text: org.apache.spark.unsafe.types.UTF8String,
-      width: Int, numHashes: Int): ArrayData = {
+  def minhashDocSigs(text: UTF8String, width: Int, numHashes: Int): ArrayData = {
     val b = text.getBytes
     val n = b.length
     val nc = text.numChars()
@@ -184,7 +181,7 @@ object OpsExprEval {
     var c = 0
     while (i < n) {
       offs(c) = i
-      i += org.apache.spark.unsafe.types.UTF8String.numBytesForFirstByte(b(i))
+      i += UTF8String.numBytesForFirstByte(b(i))
       c += 1
     }
     offs(c) = n
@@ -213,7 +210,7 @@ object OpsExprEval {
         cs(2 * k + 1) = hexDigits(d(k) & 0xf)
         k += 1
       }
-      org.apache.spark.unsafe.types.UTF8String.fromString(new String(cs))
+      UTF8String.fromString(new String(cs))
     }.asInstanceOf[Array[Any]])
   }
 
@@ -228,14 +225,32 @@ object OpsExprEval {
     false
   }
 
+  // parsed word sets per literal, built once per JVM; keys are copies, so a
+  // caller's buffer can never alter one
+  private val wordSetsCache =
+    new java.util.concurrent.ConcurrentHashMap[UTF8String, Array[Array[Array[Byte]]]]()
+
+  /** The UTF-8 words of each set of `spec`: sets separated by `|`, words by
+    * spaces (empty words dropped — a token is never empty). */
+  private def wordSets(spec: UTF8String): Array[Array[Array[Byte]]] = {
+    val hit = wordSetsCache.get(spec)
+    if (hit != null) hit
+    else {
+      val parsed = spec.toString.split("\\|", -1)
+        .map(_.split(" ").filter(_.nonEmpty).map(_.getBytes("UTF-8")))
+      wordSetsCache.putIfAbsent(spec.copy(), parsed)
+      parsed
+    }
+  }
+
   /** Per-set counts of space-separated tokens that equal one of the set's
     * words, all sets in ONE pass over the text: counts(k) = |{tokens t : t ∈
     * sets(k)}| (multiset count — each occurrence counts, exactly
-    * `size(filter(split(text, " "), t -> t.isin(ws)))`). Byte splitting on
-    * 0x20 ≡ Spark's split-on-space; matching is UTF-8 byte equality ≡
-    * string equality. */
-  def tokenSetCounts(text: org.apache.spark.unsafe.types.UTF8String,
-      sets: Array[Array[Array[Byte]]]): ArrayData = {
+    * `size(filter(split(text, " "), t -> t.isin(ws)))`), over the sets of
+    * [[wordSets]]`(setsSpec)`. Byte splitting on 0x20 ≡ Spark's
+    * split-on-space; matching is UTF-8 byte equality ≡ string equality. */
+  def tokenSetCounts(text: UTF8String, setsSpec: UTF8String): ArrayData = {
+    val sets = wordSets(setsSpec)
     val b = text.getBytes
     val n = b.length
     val counts = new Array[Long](sets.length)
@@ -270,207 +285,74 @@ object OpsExprEval {
     new GenericArrayData(counts)
   }
 
-  /** Exact ×1000-floor-quantized dot product of two float/double vectors:
+  /** Exact ×1000-floor-quantized dot product of two float vectors:
     * Σ floor(a_i·1000)·floor(b_i·1000) as int64. Null algebra faithful to
     * `aggregate(zip_with(a, b, …), 0L, +)`: length mismatch (zip_with null
     * padding) or any null element → null; two empty vectors → 0. */
-  def quantizedDot(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): java.lang.Long = {
+  def quantizedDot(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var acc = 0L
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val av = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val bv = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
-      acc += math.floor(av * 1000d).toLong * math.floor(bv * 1000d).toLong
+      acc += math.floor(a.getFloat(i).toDouble * 1000d).toLong *
+        math.floor(b.getFloat(i).toDouble * 1000d).toLong
       i += 1
     }
     java.lang.Long.valueOf(acc)
   }
 }
 
-/** Column handles for the native ops expressions. */
+/** Column handles for the ops kernels: each is one call into an
+  * [[OpsExprEval]] evaluator ([[ColumnBridge.staticCall]]); plan constants
+  * are literal arguments. */
 object OpsExprs {
+  private val longs = ArrayType(LongType, containsNull = false)
+
+  /** array<bigint> of the 8 top-3-bit bin counts of a binary payload. */
   def byteHistCounts(bin: Column): Column =
-    ColumnBridge.column(ByteHistCounts(ColumnBridge.expression(bin)))
+    ColumnBridge.staticCall(OpsExprEval, "byteHist", longs, Seq(bin -> BinaryType),
+      returnNullable = false)
 
+  /** array<bigint> of `bands` sign-projection band buckets of a
+    * ×1000-quantized vector (band b over planes b·bitsPerBand …
+    * b·bitsPerBand+bitsPerBand-1, the `Similarity.planeSigns` md5
+    * hyperplanes). */
   def lshBandKeys(qv: Column, bands: Int, bitsPerBand: Int, dims: Int): Column =
-    ColumnBridge.column(LshBandKeys(ColumnBridge.expression(qv), bands, bitsPerBand, dims))
+    ColumnBridge.staticCall(OpsExprEval, "bandKeys", longs,
+      Seq(qv -> ArrayType(LongType), lit(bands) -> IntegerType,
+        lit(bitsPerBand) -> IntegerType, lit(dims) -> IntegerType),
+      returnNullable = false)
 
+  /** bigint Σ floor(a_i·1000)·floor(b_i·1000) of two array<float> vectors
+    * (analysis casts another numeric array, e.g. array<double>, to
+    * array<float>). */
   def quantizedDot(a: Column, b: Column): Column =
-    ColumnBridge.column(QuantizedDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    ColumnBridge.staticCall(OpsExprEval, "quantizedDot", LongType,
+      Seq(a -> ArrayType(FloatType), b -> ArrayType(FloatType)))
 
+  /** array<string> of `numHashes` MinHash signatures over width-`width`
+    * character shingles; null when the text is shorter than `width`. */
   def minhashDocSigs(text: Column, width: Int, numHashes: Int): Column =
-    ColumnBridge.column(MinhashDocSigs(ColumnBridge.expression(text), width, numHashes))
+    ColumnBridge.staticCall(OpsExprEval, "minhashDocSigs",
+      ArrayType(StringType, containsNull = false),
+      Seq(text -> StringType, lit(width) -> IntegerType, lit(numHashes) -> IntegerType))
 
+  /** The document's 16-hex-char SimHash-64 signature; null when the text has
+    * no non-empty space-separated token. */
   def simhashDocHex(text: Column): Column =
-    ColumnBridge.column(SimhashDocHex(ColumnBridge.expression(text)))
+    ColumnBridge.staticCall(OpsExprEval, "simhashDocHex", StringType, Seq(text -> StringType))
 
-  def tokenSetCounts(text: Column, wordSets: Seq[Seq[String]]): Column =
-    ColumnBridge.column(TokenSetCounts(ColumnBridge.expression(text), wordSets))
-}
-
-/** `byte_hist(binary)` → array<bigint> of the 8 top-3-bit bin counts. */
-case class ByteHistCounts(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(input: Any): Any =
-    OpsExprEval.byteHist(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ops.exprs.OpsExprEval.byteHist($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "byte_hist"
-}
-
-/** `lsh_band_keys(qv)` → array<bigint> of `bands` sign-projection band
-  * buckets (band b over planes b·bitsPerBand … b·bitsPerBand+bitsPerBand-1,
-  * the `Similarity.planeSigns` md5 hyperplanes). */
-case class LshBandKeys(child: Expression, bands: Int, bitsPerBand: Int, dims: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint> (a ×1000-quantized vector), got $other")
+  /** array<bigint> of per-set counts of the text's space-separated tokens
+    * that are words of the set. The sets travel as one string literal
+    * ([[OpsExprEval.tokenSetCounts]]), so no word may contain a space or
+    * `|`. */
+  def tokenSetCounts(text: Column, wordSets: Seq[Seq[String]]): Column = {
+    require(wordSets.nonEmpty && wordSets.flatten.forall(w => !w.exists(c => c == ' ' || c == '|')),
+      s"word sets must be non-empty and their words free of ' ' and '|': $wordSets")
+    ColumnBridge.staticCall(OpsExprEval, "tokenSetCounts", longs,
+      Seq(text -> StringType, lit(wordSets.map(_.mkString(" ")).mkString("|")) -> StringType),
+      returnNullable = false)
   }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(input: Any): Any =
-    OpsExprEval.bandKeys(input.asInstanceOf[ArrayData], bands, bitsPerBand, dims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ops.exprs.OpsExprEval.bandKeys($c, $bands, $bitsPerBand, $dims);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "lsh_band_keys"
-}
-
-/** `token_set_counts(text)` → array<bigint> of per-set marker-token counts
-  * (see [[OpsExprEval.tokenSetCounts]]); word sets are plan constants. */
-case class TokenSetCounts(child: Expression, wordSets: Seq[Seq[String]])
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  @transient private lazy val setBytes: Array[Array[Array[Byte]]] =
-    wordSets.map(_.map(_.getBytes("UTF-8")).toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    OpsExprEval.tokenSetCounts(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], setBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordSets", setBytes, "byte[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ops.exprs.OpsExprEval.tokenSetCounts($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "token_set_counts"
-}
-
-/** `simhash_doc_hex(text)` → the document's 16-hex-char SimHash-64
-  * signature (see [[OpsExprEval.simhashDocHex]]); null when the text has no
-  * non-empty space-separated token. */
-case class SimhashDocHex(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true // token-free text → null
-
-  override protected def nullSafeEval(input: Any): Any =
-    OpsExprEval.simhashDocHex(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.ops.exprs.OpsExprEval.simhashDocHex($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "simhash_doc_hex"
-}
-
-/** `minhash_doc_sigs(text)` → array<string> of `numHashes` MinHash
-  * signatures over width-`width` character shingles (see
-  * [[OpsExprEval.minhashDocSigs]]); null when the text is shorter than
-  * `width` characters. */
-case class MinhashDocSigs(child: Expression, width: Int, numHashes: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true // short text → null
-
-  override protected def nullSafeEval(input: Any): Any =
-    OpsExprEval.minhashDocSigs(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], width, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.ops.exprs.OpsExprEval.minhashDocSigs($c, $width, $numHashes);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "minhash_doc_sigs"
-}
-
-/** `quantized_dot(a, b)` → bigint Σ floor(a_i·1000)·floor(b_i·1000). */
-case class QuantizedDot(left: Expression, right: Expression) extends BinaryExpression {
-  private def elemOk(t: DataType): Option[Boolean] = t match {
-    case ArrayType(FloatType, _) => Some(true)
-    case ArrayType(DoubleType, _) => Some(false)
-    case _ => None
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType).isDefined && elemOk(right.dataType).isDefined)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double> arguments, got " +
-        s"${left.dataType} and ${right.dataType}")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  private lazy val aFloat = elemOk(left.dataType).get
-  private lazy val bFloat = elemOk(right.dataType).get
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    OpsExprEval.quantizedDot(a.asInstanceOf[ArrayData], aFloat, b.asInstanceOf[ArrayData], bFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("qdot")
-      s"""
-        java.lang.Long $r = graft.ops.exprs.OpsExprEval.quantizedDot($a, $aFloat, $b, $bFloat);
-        if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-      """
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "quantized_dot"
 }

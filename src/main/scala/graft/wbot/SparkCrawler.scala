@@ -70,7 +70,7 @@ object SparkCrawler {
       if (pages.columns.contains("warc_ts")) struct(col("warc_ts"), col("url"))
       else struct(col("url"))
     pages
-      // native codegen'd expression (exprs.CanonicalizeUrl) — stays inside
+      // one static-evaluator call (exprs.UrlExprs.canon) — stays inside
       // whole-stage codegen on the biggest scan of the pipeline
       .withColumn("canon", exprs.UrlExprs.canonicalizeUrl(col("url")))
       .where(col("canon").isNotNull)
@@ -925,8 +925,8 @@ object SparkCrawler {
     // the deep bench's d4 — is cut to the 6 columns no later stage can
     // derive. `hash` (64 hex chars), `hash64`, `host` and `root` are all
     // pure functions of (canon | url): hash64 is re-derived right after the
-    // window, hash/host/root by codegen'd exprs (sha2, UrlHost, HostRoot —
-    // byte-equality with the UDF-side values pinned by UrlExprSpec) over the
+    // window, hash/host/root by sha2 and the urlHost/hostRoot evaluator calls
+    // (byte-equality with the UDF-side values pinned by UrlExprSpec) over the
     // POST-dedup fresh set, which on a geometric crawl is a fraction of the
     // candidate volume. hostname/path/parent_root are consumed by the pass
     // condition and ship nowhere.

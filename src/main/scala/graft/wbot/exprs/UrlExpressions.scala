@@ -1,19 +1,17 @@
 package graft.wbot.exprs
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.wbot.UrlFuncs
 
 /**
- * Native Catalyst expressions for the URL-identity hot path (SURVEY.md §4.3:
- * optional promotion of the scalar UDFs to codegen'd expressions). Compared
- * to a Scala UDF these stay inside whole-stage codegen — no
- * encoder/deserializer round-trip per row, no Option boxing; generated code
- * calls the static evaluators below directly on UTF8String.
+ * Scalar functions for the URL-identity hot path (SURVEY.md §4.3): static
+ * evaluators on UTF8String, and column handles that call them through
+ * Spark's `StaticInvoke` ([[ColumnBridge.staticCall]]). Compared to a Scala
+ * UDF there is no encoder/deserializer round-trip per row and no Option
+ * boxing; generated code calls the evaluators directly.
  */
 object UrlExprs {
 
@@ -60,100 +58,29 @@ object UrlExprs {
       case Left(_)  => null
     }
 
-  /** Column handle for [[CanonicalizeUrl]] (classic backend). */
-  def canonicalizeUrl(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      CanonicalizeUrl(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  private def call(method: String, c: Column): Column =
+    ColumnBridge.staticCall(this, method, StringType, Seq(c -> StringType))
 
-  def urlRoot(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      UrlRoot(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  /** `canon(url)` — the hashLink pre-hash transform (wbot.go:219-238) over the
+    * full NewURL validation (wbot.go:132-164). */
+  def canonicalizeUrl(c: Column): Column = call("canon", c)
 
-  def urlHost(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      UrlHost(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  /** `root(url)` — registrable-domain extraction (Hostname, wbot.go:198-217). */
+  def urlRoot(c: Column): Column = call("root", c)
 
-  def hostRoot(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      HostRoot(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  /** Go `URL.Host` (host[:port]) of an absolute URL. */
+  def urlHost(c: Column): Column = call("hostPort", c)
+
+  /** Registrable domain of a bare host[:port] (no parse). */
+  def hostRoot(c: Column): Column = call("hostRoot", c)
 
   /** Register SQL names: `wbot_canon(url)`, `wbot_root(url)`. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wbot_canon", exprs => CanonicalizeUrl(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wbot_root", exprs => UrlRoot(exprs.head), "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction("wbot_canon",
+      exprs => ColumnBridge.expression(canonicalizeUrl(ColumnBridge.column(exprs.head))),
+      "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction("wbot_root",
+      exprs => ColumnBridge.expression(urlRoot(ColumnBridge.column(exprs.head))),
+      "scala_udf")
   }
-}
-
-/** Base for string→string URL expressions that can return null on valid
-  * (non-null) input: generated code calls a static evaluator. */
-abstract class UrlUnaryExpression extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  /** simple name of the static method on UrlExprs */
-  protected def evaluatorName: String
-
-  protected def evalStatic(s: UTF8String): UTF8String
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else evalStatic(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val evaluator = "graft.wbot.exprs.UrlExprs"
-    ev.copy(code = code"""
-      ${childGen.code}
-      boolean ${ev.isNull} = true;
-      UTF8String ${ev.value} = null;
-      if (!${childGen.isNull}) {
-        ${ev.value} = $evaluator.$evaluatorName(${childGen.value});
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-}
-
-/** `canonicalize(url)` — the hashLink pre-hash transform (wbot.go:219-238)
-  * over the full NewURL validation (wbot.go:132-164), as a codegen'd native
-  * expression. */
-case class CanonicalizeUrl(child: Expression) extends UrlUnaryExpression {
-  override protected def evaluatorName: String = "canon"
-  override protected def evalStatic(s: UTF8String): UTF8String = UrlExprs.canon(s)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "wbot_canon"
-}
-
-/** `root(url)` — registrable-domain extraction (Hostname, wbot.go:198-217). */
-case class UrlRoot(child: Expression) extends UrlUnaryExpression {
-  override protected def evaluatorName: String = "root"
-  override protected def evalStatic(s: UTF8String): UTF8String = UrlExprs.root(s)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "wbot_root"
-}
-
-/** `host(url)` — Go `URL.Host` (host[:port]) of an absolute URL. */
-case class UrlHost(child: Expression) extends UrlUnaryExpression {
-  override protected def evaluatorName: String = "hostPort"
-  override protected def evalStatic(s: UTF8String): UTF8String = UrlExprs.hostPort(s)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "wbot_host"
-}
-
-/** `hostRoot(host)` — registrable domain of a bare host[:port] (no parse). */
-case class HostRoot(child: Expression) extends UrlUnaryExpression {
-  override protected def evaluatorName: String = "hostRoot"
-  override protected def evalStatic(s: UTF8String): UTF8String = UrlExprs.hostRoot(s)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "wbot_host_root"
 }

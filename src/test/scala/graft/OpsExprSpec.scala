@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.ops.{Multimodal, Similarity}
 import graft.ops.exprs.OpsExprs
 
-/** Pins the native ops expressions (ByteHistCounts, LshBandKeys,
-  * QuantizedDot) value- and null-identical to the HOF/translate
-  * constructions they replaced — on the same inputs, including the edge
-  * shapes the HOF null algebra produces (ragged vectors, null elements,
-  * empty arrays). The end-to-end q17/q18/q26/q31 DuckDB oracles pin the
-  * same semantics against a third engine. */
+/** Pins the ops kernels (`OpsExprs`: byte histogram, LSH band keys,
+  * SimHash, MinHash, token-set counts, quantized dot) value- and
+  * null-identical to the HOF/translate/explode constructions they replaced —
+  * on the same inputs, including the edge shapes the HOF null algebra
+  * produces (ragged vectors, null elements, empty arrays, blank text), and
+  * in every regime ([[SparkSuite.regimes]]): local rows, generated code and
+  * interpreted. The end-to-end q17/q18/q26/q31 DuckDB oracles pin the same
+  * semantics against a third engine. */
 class OpsExprSpec extends SparkSuite {
 
   // the exact HOF forms the natives replaced (kept here as the reference)
@@ -41,20 +43,22 @@ class OpsExprSpec extends SparkSuite {
       2L -> "hello wbot — höhößü".getBytes("UTF-8")) ++
       (3L to 40L).map(i => i -> Array.fill(r.nextInt(400))(r.nextInt(256).toByte))
     val df = rows.toDF("id", "payload")
-    val native = df
-      .withColumn("__hist", OpsExprs.byteHistCounts(col("payload")))
-      .select(col("id") +: (0 until 8).map(j => element_at(col("__hist"), j + 1).as(s"b$j")): _*)
-      .collect().map(row => row.getLong(0) -> (1 to 8).map(row.getLong).toVector).toMap
     val twin = df
       .withColumn("__high", Multimodal.highNibbles(hex(col("payload"))))
       .select(col("id") +: (0 until 8).map(j =>
         Multimodal.byteHistCountCol("__high", j).as(s"b$j")): _*)
       .collect().map(row => row.getLong(0) -> (1 to 8).map(row.getLong).toVector).toMap
-    rows.foreach { case (id, bytes) =>
-      val cnt = new Array[Long](8)
-      bytes.foreach(b => cnt((b & 0xff) >>> 5) += 1)
-      assert(native(id) == cnt.toVector, s"native vs Scala, id=$id")
-      assert(native(id) == twin(id), s"native vs translate twin, id=$id")
+    regimes(df)(_
+      .withColumn("__hist", OpsExprs.byteHistCounts(col("payload")))
+      .select(col("id") +: (0 until 8).map(j => element_at(col("__hist"), j + 1).as(s"b$j")): _*)
+    ).foreach { case (regime, out) =>
+      val native = out.map(row => row.getLong(0) -> (1 to 8).map(row.getLong).toVector).toMap
+      rows.foreach { case (id, bytes) =>
+        val cnt = new Array[Long](8)
+        bytes.foreach(b => cnt((b & 0xff) >>> 5) += 1)
+        assert(native(id) == cnt.toVector, s"$regime: native vs Scala, id=$id")
+        assert(native(id) == twin(id), s"$regime: native vs translate twin, id=$id")
+      }
     }
   }
 
@@ -67,16 +71,18 @@ class OpsExprSpec extends SparkSuite {
         i -> Array.fill(dims)((r.nextDouble() * 2 - 1).toFloat))
       val df = vecs.toDF("id", "vec")
         .withColumn("__qv", Similarity.quantizedChecked("vec", dims))
-      val native = df
-        .select(col("id"), posexplode(OpsExprs.lshBandKeys(col("__qv"), bands, w, dims)))
-        .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-        .collect().map(row => (row.getLong(0), row.getInt(1)) -> row.getLong(2)).toMap
       val hof = df
         .select(col("id") +: (0 until bands).map(b =>
           hofBandKey(col("__qv"), b, w, dims).as(s"k$b")): _*)
         .collect().flatMap(row =>
           (0 until bands).map(b => (row.getLong(0), b) -> row.getLong(1 + b))).toMap
-      assert(native == hof, s"bands=$bands w=$w dims=$dims")
+      regimes(df)(_
+        .select(col("id"), posexplode(OpsExprs.lshBandKeys(col("__qv"), bands, w, dims)))
+        .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
+      ).foreach { case (regime, out) =>
+        val native = out.map(row => (row.getLong(0), row.getInt(1)) -> row.getLong(2)).toMap
+        assert(native == hof, s"$regime: bands=$bands w=$w dims=$dims")
+      }
     }
   }
 
@@ -113,9 +119,9 @@ class OpsExprSpec extends SparkSuite {
     }
     val ref = voted.select(col("id"), concat(nibbles: _*).as("simhash_hex"))
       .collect().map(row => row.getLong(0) -> row.getString(1)).toMap
-    val got = graft.ops.Dedup.simhashMd5(df, "doc_id", "text")
-      .collect().map(row => row.getLong(0) -> row.getString(1)).toMap
-    assert(got == ref)
+    regimes(df)(graft.ops.Dedup.simhashMd5(_, "doc_id", "text")).foreach { case (regime, out) =>
+      assert(out.map(row => row.getLong(0) -> row.getString(1)).toMap == ref, regime)
+    }
   }
 
   test("MinhashDocSigs ≡ explode-shingles groupBy-min construction") {
@@ -134,9 +140,11 @@ class OpsExprSpec extends SparkSuite {
         min(md5(concat(col("shingle"), lit(s"#$i")))).as(s"sig_$i"))
       val ref = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
         .collect().map(row => row.getLong(0) -> (1 to k).map(row.getString).toVector).toMap
-      val got = graft.ops.Dedup.minhashSignatures(df, "doc_id", "text", w, k)
-        .collect().map(row => row.getLong(0) -> (1 to k).map(row.getString).toVector).toMap
-      assert(got == ref, s"width=$w numHashes=$k")
+      regimes(df)(graft.ops.Dedup.minhashSignatures(_, "doc_id", "text", w, k))
+        .foreach { case (regime, out) =>
+          val got = out.map(row => row.getLong(0) -> (1 to k).map(row.getString).toVector).toMap
+          assert(got == ref, s"$regime: width=$w numHashes=$k")
+        }
     }
   }
 
@@ -151,15 +159,20 @@ class OpsExprSpec extends SparkSuite {
       (0 until 40).map(_ =>
         (0 until r.nextInt(25)).map(_ => vocab(r.nextInt(vocab.length))).mkString(" "))
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val native = df.withColumn("__mc",
-        graft.ops.exprs.OpsExprs.tokenSetCounts(col("text"), sets))
-      .select(col("id") +: sets.indices.map(k =>
-        element_at(col("__mc"), k + 1).as(s"c$k")): _*)
-      .collect().map(row => row.getLong(0) -> (1 to sets.size).map(row.getLong).toVector).toMap
     val hof = df.select(col("id") +: sets.zipWithIndex.map { case (ws, k) =>
         size(filter(split(col("text"), " "), t => t.isin(ws: _*))).cast("long").as(s"c$k") }: _*)
       .collect().map(row => row.getLong(0) -> (1 to sets.size).map(row.getLong).toVector).toMap
-    assert(native == hof)
+    regimes(df)(_
+      .withColumn("__mc", OpsExprs.tokenSetCounts(col("text"), sets))
+      .select(col("id") +: sets.indices.map(k => element_at(col("__mc"), k + 1).as(s"c$k")): _*)
+    ).foreach { case (regime, out) =>
+      val native = out.map(row => row.getLong(0) -> (1 to sets.size).map(row.getLong).toVector).toMap
+      assert(native == hof, regime)
+    }
+    // the sets travel as one `|`/space-separated literal: words holding
+    // either separator are refused, not split
+    for (bad <- Seq(Seq(Seq("a|b")), Seq(Seq("a b")), Seq.empty[Seq[String]]))
+      intercept[IllegalArgumentException](OpsExprs.tokenSetCounts(col("text"), bad))
   }
 
   test("QuantizedDot ≡ HOF form, including the null algebra") {
@@ -175,22 +188,31 @@ class OpsExprSpec extends SparkSuite {
       } ++ Seq(
         (100L, Array.empty[java.lang.Float], Array.empty[java.lang.Float]), // both empty → 0
         (101L, Array.fill[java.lang.Float](3)(0.5f), Array.fill[java.lang.Float](5)(0.5f)), // ragged → null
-        (102L, Array[java.lang.Float](0.5f, null, 0.25f), Array.fill[java.lang.Float](3)(1.0f))) // null elem → null
+        (102L, Array[java.lang.Float](0.5f, null, 0.25f), Array.fill[java.lang.Float](3)(1.0f)), // null elem → null
+        (103L, null, Array.fill[java.lang.Float](3)(1.0f))) // null vector → null
     val df = pairs.toDF("id", "a", "b")
-    val got = df.select(col("id"),
-        OpsExprs.quantizedDot(col("a"), col("b")).as("native"),
-        hofQuantizedDot(col("a"), col("b")).as("hof"))
-      .collect()
-    got.foreach { row =>
-      val n = if (row.isNullAt(1)) null else java.lang.Long.valueOf(row.getLong(1))
-      val h = if (row.isNullAt(2)) null else java.lang.Long.valueOf(row.getLong(2))
-      assert(n == h, s"id=${row.getLong(0)}: native=$n hof=$h")
-    }
-    // the documented edge shapes hold
-    val byId = got.map(row => row.getLong(0) ->
-      (if (row.isNullAt(1)) null else java.lang.Long.valueOf(row.getLong(1)))).toMap
-    assert(byId(100L) == 0L)
-    assert(byId(101L) == null)
-    assert(byId(102L) == null)
+    def byId(rows: Array[org.apache.spark.sql.Row]): Map[Long, java.lang.Long] =
+      rows.map(row => row.getLong(0) ->
+        (if (row.isNullAt(1)) null else java.lang.Long.valueOf(row.getLong(1)))).toMap
+    // a HOF keeps its projection out of generated code, so it runs apart
+    val hof = byId(df.select(col("id"), hofQuantizedDot(col("a"), col("b"))).collect())
+    regimes(df)(_.select(col("id"), OpsExprs.quantizedDot(col("a"), col("b"))))
+      .foreach { case (regime, rows) =>
+        val native = byId(rows)
+        pairs.foreach { case (id, _, _) =>
+          assert(native(id) == hof(id), s"$regime: id=$id: native=${native(id)} hof=${hof(id)}")
+        }
+        // the documented edge shapes hold
+        assert(native(100L) == 0L, regime)
+        assert(native(101L) == null, regime)
+        assert(native(102L) == null, regime)
+        assert(native(103L) == null, regime)
+      }
+    // the evaluator reads array<float> only: analysis casts a double vector
+    // to it (never a raw read of its doubles as floats)
+    val dbl = df.select(col("id"), OpsExprs.quantizedDot(col("a").cast("array<double>"), col("b")))
+    assert(dbl.queryExecution.analyzed.toString.contains("as array<float>)"),
+      dbl.queryExecution.analyzed.toString)
+    assert(byId(dbl.collect()) == hof)
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.wbot.Fixtures
@@ -66,5 +67,22 @@ abstract class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     val s = SparkTestBase.spark
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The rows of `query` over `df` in each regime a column can run in, by
+    * name: "local" takes `df` as given (a local Seq's rows are folded into a
+    * LocalRelation, so the projection is evaluated while optimizing);
+    * "compiled" and "interpreted" read the same rows behind a shuffle, with
+    * generated code (asserted: a `*(n)` stage) and on the session's
+    * interpreted copy (asserted: none). */
+  def regimes(df: DataFrame)(query: DataFrame => DataFrame): Seq[(String, Array[Row])] = {
+    val compiled = query(df.repartition(3))
+    val interpreted = DatasetBridge.inSession(compiled, DatasetBridge.interpretedCopy(spark))
+    val rows = Seq("local" -> query(df), "compiled" -> compiled, "interpreted" -> interpreted)
+      .map { case (regime, d) => regime -> d.collect() }
+    def plan(d: DataFrame) = d.queryExecution.executedPlan.toString
+    assert(plan(compiled).contains("*("), s"expected a generated stage:\n${plan(compiled)}")
+    assert(!plan(interpreted).contains("*("), s"expected no generated stage:\n${plan(interpreted)}")
+    rows
   }
 }

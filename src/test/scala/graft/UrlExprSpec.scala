@@ -4,8 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.wbot.{Fixtures, Udfs}
 import graft.wbot.exprs.UrlExprs
 
-/** Native Catalyst expressions ≡ the UDF path (same pure core), and they
-  * stay inside whole-stage codegen. */
+/** The URL column handles (static evaluators called through `StaticInvoke`)
+  * ≡ the UDF path (same pure core) on local rows, with generated code and
+  * interpreted ([[SparkSuite.regimes]]), and they stay inside whole-stage
+  * codegen. */
 class UrlExprSpec extends SparkSuite {
 
   test("CanonicalizeUrl expression ≡ canonicalize UDF on fixture + junk URLs") {
@@ -14,14 +16,18 @@ class UrlExprSpec extends SparkSuite {
     val urls = Fixtures.allPages(Fixtures.tiny).map(_.url) ++ Seq(
       "http://www.google.com/", "ftp://nope.com/x", "http://bad.unknowntld/x",
       "http://a.com/a%2520b", "http://a.com/%zz", "not a url", "")
-    val df = urls.toDF("url").repartition(4)
-    val both = df.select(
+    regimes(urls.toDF("url"))(_.select(
       UrlExprs.canonicalizeUrl(col("url")).as("expr_canon"),
       Udfs.canonicalize(col("url")).as("udf_canon"),
-      UrlExprs.urlRoot(col("url")).as("expr_root"))
-      .collect()
-    both.foreach { r =>
-      assert(r.getString(0) == r.getString(1), s"expr vs udf mismatch: $r")
+      UrlExprs.urlRoot(col("url")).as("expr_root"),
+      col("url"))
+    ).foreach { case (regime, both) =>
+      assert(both.length == urls.length, regime)
+      both.foreach { r =>
+        assert(r.getString(0) == r.getString(1), s"$regime: expr vs udf mismatch: $r")
+        assert(r.getString(2) == graft.wbot.UrlFuncs.hostnameRoot(r.getString(3)).toOption.orNull,
+          s"$regime: root mismatch: $r")
+      }
     }
   }
 
@@ -57,16 +63,18 @@ class UrlExprSpec extends SparkSuite {
     }.map(c => (c.urlStr, c.host, c.root)) ++
       Seq(("http://user@site9.com:8080/p?q=1", "site9.com:8080", "site9.com"))
     assert(cands.nonEmpty)
-    val got = cands.map(_._1).distinct.toDF("url").repartition(4)
+    regimes(cands.map(_._1).distinct.toDF("url"))(_
       .select(col("url"),
         graft.wbot.exprs.UrlExprs.urlHost(col("url")).as("h"),
         graft.wbot.exprs.UrlExprs.hostRoot(
           graft.wbot.exprs.UrlExprs.urlHost(col("url"))).as("r"))
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-    cands.foreach { case (url, host, root) =>
-      val (h, r) = got(url)
-      assert(h == host, s"UrlHost diverges on '$url': got $h want $host")
-      assert(r == root, s"HostRoot diverges on '$url': got $r want $root")
+    ).foreach { case (regime, out) =>
+      val got = out.map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+      cands.foreach { case (url, host, root) =>
+        val (h, r) = got(url)
+        assert(h == host, s"$regime: UrlHost diverges on '$url': got $h want $host")
+        assert(r == root, s"$regime: HostRoot diverges on '$url': got $r want $root")
+      }
     }
   }
 
