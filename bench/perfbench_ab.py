@@ -15,10 +15,13 @@ base run, and the regression verdict against the metric's `bound` (a
 fraction of the base median): "within" when the change's median is worse
 than the base's by at most the bound, "exceeded" when by more, and
 "unresolved" when the base's own interquartile range is wider than the
-bound, unless every change run read better than every base run. A run that
-fails its oracle checks is reported and
-leaves its pair out. Nothing under perfbench/ is written except the build
-and work directories perfbench itself uses.
+bound, unless every change run read better than every base run. It also
+prints the claim verdict for a gain: "met" only when, over at least 10
+pairs, the change won at least 9 of every 10 (a tie counts for neither
+side) and its median gap exceeds the base's interquartile range; "not met"
+otherwise. A run that fails its oracle checks is reported and leaves its
+pair out. Nothing under perfbench/ is written except the build and work
+directories perfbench itself uses.
 
 With --trace 1 the runs report per-layer metrics instead; name the ones to
 summarize the same way with --layer (repeatable), e.g.
@@ -82,6 +85,18 @@ def regression(e, bq, cq, apart):
             f"than the base's, bound {bound:.0%}, base IQR {spread:.1%} of its median")
 
 
+def claim(wins, n, gap, iqr):
+    """The verdict on claiming a gain for one metric: over at least 10 pairs
+    the change must win at least 9 of every 10 (ties count for neither side)
+    and its median gap must exceed the base's interquartile range."""
+    won = n >= 10 and 10 * wins >= 9 * n
+    apart = gap > iqr
+    verdict = "met" if won and apart else "not met"
+    return (f"{verdict}: won {wins} of {n} pairs "
+            f"({'enough' if won else 'needs >= 9 of every 10, over >= 10 pairs'}), "
+            f"median gap {gap:+.4g} {'>' if apart else '<='} base IQR {iqr:.4g}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--base", required=True, help="checkout of the parent commit")
@@ -141,6 +156,7 @@ def main():
         c = [p[2][name] for p in pairs]
         bq, cq = quartiles(b), quartiles(c)
         wins = sum(1 for x, y in zip(b, c) if (y < x if lower else y > x))
+        ties = sum(1 for x, y in zip(b, c) if x == y)
         gap = bq[1] - cq[1] if lower else cq[1] - bq[1]
         iqr = bq[2] - bq[0]
         # every change run better than every base run: the criterion that
@@ -150,8 +166,9 @@ def main():
         print(f"    base   median {bq[1]:.4g}  [Q1 {bq[0]:.4g}, Q3 {bq[2]:.4g}]")
         print(f"    change median {cq[1]:.4g}  [Q1 {cq[0]:.4g}, Q3 {cq[2]:.4g}]  "
               f"({(cq[1] - bq[1]) / bq[1]:+.1%})")
-        print(f"    change won {wins} of {len(pairs)}; median gap {gap:+.4g} vs base IQR "
-              f"{iqr:.4g}: {'exceeds' if gap > iqr else 'does not exceed'}")
+        print(f"    change won {wins} of {len(pairs)} ({ties} tied); median gap {gap:+.4g} "
+              f"vs base IQR {iqr:.4g}: {'exceeds' if gap > iqr else 'does not exceed'}")
+        print(f"    claim of a gain: {claim(wins, len(pairs), gap, iqr)}")
         print(f"    every change run better than every base run: {'yes' if apart else 'no'}")
         if "bound" in e:
             print(f"    regression bound: {regression(e, bq, cq, apart)}")

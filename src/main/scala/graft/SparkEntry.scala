@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
 import org.apache.spark.sql.functions._
 import graft.wbot.{Fixtures, Schemas, SparkCrawler}
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -205,10 +205,16 @@ object SparkEntry {
       // LSH-banded near-dup pairs (NO cross join) over a corpus with planted
       // exact near-dups: each vec_id<80 vector plus a copy with dims 1-4
       // sign-flipped (cosine ≈ 0.875, exact integer arithmetic → portable)
-      val base = t(s, d, "embeddings").where(col("vec_id") < 80)
+      // The flipped copy is declared non-null, which it is: the not-null
+      // filter drops no row a pair could use (a null vector's qdot is
+      // null). Else the optimizer infers isnotnull on it from quantizedDot's
+      // null intolerance and pushes that below the projection, which then
+      // computes the flip a second time.
+      val base = t(s, d, "embeddings").where(col("vec_id") < 80 && col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
       val flipped = base.select((col("vec_id") + 1000).as("vec_id"),
-        expr("concat(transform(slice(embedding, 1, 4), x -> -x), slice(embedding, 5, 60))")
+        ColumnBridge.knownNotNull(
+          expr("concat(transform(slice(embedding, 1, 4), x -> -x), slice(embedding, 5, 60))"))
           .as("embedding"))
       Dedup.embeddingNearDupPairs(base.unionByName(flipped), "vec_id", "embedding",
         minQdot = 600000L, bands = 6, bitsPerBand = 6, dims = 64)

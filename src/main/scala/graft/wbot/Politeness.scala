@@ -41,10 +41,13 @@ object Politeness {
     *  - Up to `rowsPerTask` rows: 1. No host's window partition can exceed
     *    a task's share when the whole frontier fits one task, so salting
     *    buys no balance — and it costs a `groupBy(root, __salt)`, an offsets
-    *    window and a merge-join exchange ahead of the fetch (three extra AQE
-    *    stage jobs). Measured on the checkpointed perfbench crawl (4-core
-    *    host), whose leg and resume each start with a salted 20- or 253-row
-    *    superstep: 4.95 → 4.24 s per operation, ≈ 0.35 s per superstep.
+    *    window and a merge-join exchange ahead of the fetch (three extra
+    *    stages; under AQE, as when this was measured, three extra stage
+    *    jobs, while the static plan a superstep this small now runs as adds
+    *    them to its one job). Measured on the checkpointed perfbench crawl
+    *    (4-core host), whose leg and resume each start with a salted 20- or
+    *    253-row superstep: 4.95 → 4.24 s per operation, ≈ 0.35 s per
+    *    superstep.
     *  - Above it, from the OBSERVED skew: the previous interval span bounds
     *    the max-host share (≈ intervals × budget, scaled to this frontier),
     *    and s is sized so the biggest (host, salt) partition is about one

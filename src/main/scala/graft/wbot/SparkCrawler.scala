@@ -33,8 +33,9 @@ import Schemas._
 object SparkCrawler {
 
   /** One superstep's counts and wall time, and its regimes: `generatedCode`
-    * (false: run interpreted, see [[generatedCode]]) and its schedule's
-    * `saltFanout` ([[Politeness.saltFanout]]; 1: the windowed rank). */
+    * (false: run as a static, interpreted plan, see [[generatedCode]]) and
+    * its schedule's `saltFanout` ([[Politeness.saltFanout]]; 1: the
+    * windowed rank). */
   final case class StepStat(depth: Int, frontierSize: Long, fetched: Long, failed: Long,
       candidates: Long, passedFilters: Long, fresh: Long, intervals: Int, wallMs: Long,
       generatedCode: Boolean = true, saltFanout: Int = 1)
@@ -42,16 +43,27 @@ object SparkCrawler {
   /** A crawl's results. The only caches a run leaves registered are the
     * ones these views read: for `seen`, its in-memory deltas (the small
     * persisted projections, the canon-aligned stores and the last
-    * expansion's rank bucket store); for `order` and `attempts`, one
-    * order-stream checkpoint per superstep when `recordStreams` is on.
-    * Parts reloaded by a resume are parquet reads. The pages cache stays the
-    * caller's ([[runPrepared]]) or is released ([[run]]). */
+    * expansion's rank bucket store), held as `caches`; for `order` and
+    * `attempts`, one order-stream checkpoint per superstep when
+    * `recordStreams` is on, held as `checkpoints`. Parts reloaded by a resume
+    * are parquet reads. The pages cache stays the caller's ([[runPrepared]])
+    * or is released ([[run]]). */
   final case class CrawlRun(
       order: DataFrame, // seq,url,canon,hash,depth,status,superstep,interval,ua — sort by seq = reference order
       attempts: DataFrame, // every fetch attempt incl. misses
       seen: DataFrame, // hash, hash64
       metrics: Map[String, Long], // the reference's 7 counters (metrics.go:45-55)
-      steps: Vector[StepStat])
+      steps: Vector[StepStat])(caches: Seq[DataFrame], checkpoints: Seq[DataFrame]) {
+
+    /** Frees every cache the run left registered, once nothing reads its
+      * views any more: `order`, `attempts` and `seen` must not be read
+      * after it (an order-stream checkpoint has no lineage to recompute
+      * from). */
+    def release(): Unit = {
+      caches.foreach(_.unpersist())
+      checkpoints.foreach(DatasetBridge.releaseCheckpoint)
+    }
+  }
 
   /** Prepare the pages side of the fetch join once: canonical key + hash64,
     * hash-partitioned (the Iceberg-table layout stand-in; on a real cluster
@@ -210,7 +222,7 @@ object SparkCrawler {
       "total_link", "crawled_link", "skipped_link", "duplicated_link").map(_ -> 0L).toMap
     crawlLoop(spark, pagesPrep, cfg,
       Crawl(0, frontier, SeenSet.load(spark, cfg, Nil, 0L, -1), seeds.size.toLong, metrics,
-        Vector.empty, Vector.empty, Vector.empty))
+        Vector.empty, Vector.empty, Vector.empty, Vector.empty))
   }
 
   /** Resume from the last committed superstep in cfg.checkpointDir: reload
@@ -240,7 +252,7 @@ object SparkCrawler {
     crawlLoop(spark, pagesPrep, cfg,
       Crawl(snap.lastStep + 1, frontier, seen, snap.seqBase, snap.metrics,
         st.readCrawled(spark, snap.lastStep).toVector,
-        st.readAttempts(spark, snap.lastStep).toVector, Vector.empty))
+        st.readAttempts(spark, snap.lastStep).toVector, Vector.empty, Vector.empty))
   }
 
   /** Estimated unsafe-row bytes of a (canon, hash, hash64) seen row — feeds
@@ -253,12 +265,13 @@ object SparkCrawler {
     * accumulated union with zero exchange on the seen side (the in-memory
     * analogue of appending to a bucketed seen table — SURVEY §1.1/§4.3),
     * where the unaligned design re-shuffled the FULL seen set every
-    * superstep: O(seen) per superstep, quadratic cumulative. */
-  private def alignDelta(delta: DataFrame, p: Int): DataFrame = {
+    * superstep: O(seen) per superstep, quadratic cumulative. Returns the
+    * leaf and the persisted store behind it. */
+  private def alignDelta(delta: DataFrame, p: Int): (DataFrame, DataFrame) = {
     val parted = delta.repartition(p, col("canon")).persist(bulkLevel)
     val n = parted.count()
-    DatasetBridge.lineageCutPartitioned(
-      parted, Seq("canon"), p, Some((n, math.max(1L, n * seenRowBytes))))
+    (DatasetBridge.lineageCutPartitioned(
+      parted, Seq("canon"), p, Some((n, math.max(1L, n * seenRowBytes)))), parted)
   }
 
   /** Rows one task is sized to hold: the one bound behind a crawl's regime
@@ -278,26 +291,30 @@ object SparkCrawler {
     if (bound <= 0L) partitions
     else math.max(1L, math.min(partitions.toLong, rows / bound + 1)).toInt
 
-  /** Whether a superstep runs with Spark's generated code. It runs
-    * interpreted when everything it reads fits one task: the pages cache,
-    * the frontier and, when it expands, the expected candidates — at most
-    * `bound` rows together ([[rowsPerTask]]). Below that, Janino
-    * time for the ~100 classes of a small crawl's plans, which Spark's
-    * codegen cache cannot keep from one run to the next
+  /** Whether a superstep runs with Spark's generated code and adaptive
+    * execution, in the caller's session. It runs as a static, interpreted
+    * plan (`DatasetBridge.staticCopy`) when everything it reads fits one
+    * task: the pages cache, the frontier and, when it expands, the expected
+    * candidates — at most `bound` rows together ([[rowsPerTask]]). Below
+    * that, Janino time for the ~100 classes of a small crawl's plans, which
+    * Spark's codegen cache cannot keep from one run to the next
     * (`DatasetBridge.interpretedCopy`), is a large share of each
-    * superstep, and interpretation costs little on so few rows. A pages
-    * cache that is not built yet (`pagesRows` None) counts as large. */
+    * superstep, and interpretation costs little on so few rows; and AQE,
+    * which submits each query stage as its own job and re-plans after it,
+    * has nothing to coalesce or convert when no exchange holds a task's
+    * worth of rows. A pages cache that is not built yet (`pagesRows` None)
+    * counts as large. */
   private[graft] def generatedCode(pagesRows: Option[Long], frontierSize: Long,
       expectedCandidates: Long, bound: Long): Boolean =
     pagesRows.forall(_ + frontierSize + expectedCandidates > bound)
 
   /** What one superstep hands the next: the depth it runs at, its frontier,
     * the seen set, the seq watermark, the 7 counters, the recorded order and
-    * attempts streams (committed parts first on a resume) and the stats of
-    * the supersteps run so far. */
+    * attempts streams (committed parts first on a resume), the order-stream
+    * checkpoints they read and the stats of the supersteps run so far. */
   private final case class Crawl(depth: Int, frontier: Frontier, seen: SeenSet, seqBase: Long,
       metrics: Map[String, Long], order: Vector[DataFrame], attempts: Vector[DataFrame],
-      steps: Vector[StepStat])
+      checkpoints: Vector[DataFrame], steps: Vector[StepStat])
 
   /** The frontier a superstep consumes. `rows` is its exact row count, known
     * on the driver wherever a frontier is born (seed list, previous
@@ -358,11 +375,16 @@ object SparkCrawler {
     *   seen; seeds are not)
     * @param smallCaches the persisted projections behind `small`, released
     *   by the fold
+    * @param stores the persisted stores behind `aligned` and `last`, held
+    *   until the run is released
     * @param baseStep the step whose committed delta supersedes all earlier
     *   ones (the fold's compaction point); -1 until a fold commits */
   private final case class SeenSet(aligned: Vector[DataFrame], small: Vector[DataFrame],
-      smallCaches: Vector[DataFrame], last: Option[DataFrame], rows: Long, baseStep: Int,
-      alignP: Int, bound: Long) {
+      smallCaches: Vector[DataFrame], stores: Vector[DataFrame], last: Option[DataFrame],
+      rows: Long, baseStep: Int, alignP: Int, bound: Long) {
+
+    /** Every persisted Dataset the deltas read. */
+    def caches: Vector[DataFrame] = smallCaches ++ stores
 
     /** The anti-join's seen side. Small: the PLAIN union of the delta
       * leaves, broadcastable. Past the bound: the partition-wise union of
@@ -391,16 +413,18 @@ object SparkCrawler {
     def view(spark: SparkSession): DataFrame =
       (aligned ++ last ++ small).reduceOption(_ unionByName _).getOrElse(SeenSet.empty(spark))
 
-    /** Adds one expansion's `fresh` rows, read from its rank bucket leaf
-      * `store`, at superstep `step`. */
-    def add(spark: SparkSession, store: DataFrame, fresh: Long, lastExpansion: Boolean,
+    /** Adds one expansion's fresh rows, read from its rank bucket store
+      * `rank`, at superstep `step`. */
+    def add(spark: SparkSession, rank: Ranks.RankResult, lastExpansion: Boolean,
         step: Int): SeenUpdate = {
-      val delta = store.select(col("canon"), col("hash"), col("hash64"))
+      val delta = rank.cached.select(col("canon"), col("hash"), col("hash64"))
+      val fresh = rank.total
       val total = rows + fresh
       def commit(df: DataFrame, p: Option[Int], n: Long, supersedes: Boolean) =
         if (n > 0L) Some(Storage.SeenCommit(df, p, n, supersedes)) else None
       if (lastExpansion)
-        SeenUpdate(Future.successful((copy(last = Some(delta), rows = total),
+        SeenUpdate(Future.successful((copy(last = Some(delta),
+          stores = stores :+ rank.persisted, rows = total),
           commit(delta, None, fresh, supersedes = false))), ownsStore = true)
       else if (total > bound) {
         // a fold covers every seen row so far (`aligned` is empty while
@@ -413,10 +437,11 @@ object SparkCrawler {
         SeenUpdate(sideJob(spark) {
           // the fold runs in this superstep's session, not in that of the
           // superstep whose delta heads the union
-          val a = alignDelta(
+          val (a, store) = alignDelta(
             DatasetBridge.inSession((small :+ delta).reduce(_ unionByName _), spark), alignP)
           smallCaches.foreach(_.unpersist())
           (copy(aligned = aligned :+ a, small = Vector.empty, smallCaches = Vector.empty,
+            stores = stores :+ store,
             rows = total, baseStep = if (supersedes) step else baseStep),
             commit(a, Some(alignP), if (supersedes) total else fresh, supersedes))
         }, ownsStore = false)
@@ -454,14 +479,16 @@ object SparkCrawler {
       * EMPTY so a later crossing fold genuinely covers all seen rows. */
     def load(spark: SparkSession, cfg: CrawlConfig, loaded: Seq[Storage.LoadedDelta],
         rows: Long, baseStep: Int): SeenSet = {
-      val empty = SeenSet(Vector.empty, Vector.empty, Vector.empty, None, rows, baseStep,
-        width(spark, cfg), cfg.smallSeenBound)
+      val empty = SeenSet(Vector.empty, Vector.empty, Vector.empty, Vector.empty, None, rows,
+        baseStep, width(spark, cfg), cfg.smallSeenBound)
       def proj(df: DataFrame) = df.select(col("canon"), col("hash"), col("hash64"))
       if (loaded.isEmpty || rows <= 0L) empty
       else if (rows > cfg.smallSeenBound) {
         val (ok, residue) = loaded.partition(_.aligned)
-        empty.copy(aligned = ok.map(_.df).toVector ++ residue.map(ld => proj(ld.df))
-          .reduceOption(_ unionByName _).map(alignDelta(_, empty.alignP)))
+        val realigned = residue.map(ld => proj(ld.df)).reduceOption(_ unionByName _)
+          .map(alignDelta(_, empty.alignP))
+        empty.copy(aligned = ok.map(_.df).toVector ++ realigned.map(_._1),
+          stores = realigned.map(_._2).toVector)
       } else empty.copy(small = loaded.map(ld => proj(ld.df)).toVector)
     }
   }
@@ -550,7 +577,9 @@ object SparkCrawler {
       * observation then completes with an EMPTY row, and the counters are
       * recounted from `observed` (`on`'s output, or a view of it): exact,
       * because the pipeline is deterministic, and one job on that rare
-      * path. */
+      * path. That rewrite happens only in supersteps above the row bound:
+      * the small ones run static plans ([[generatedCode]]), which keep the
+      * node. */
     def get(observed: DataFrame): Seq[Any] = {
       val m = obs.get
       if (m.isEmpty) observed.agg(cols.head, cols.tail: _*).first().toSeq
@@ -574,19 +603,21 @@ object SparkCrawler {
     storage.foreach(_.init())
     val pages = new Pages(pagesPrep)
     val bound = rowsPerTask.value
-    lazy val interpreted = DatasetBridge.interpretedCopy(spark)
+    lazy val small = DatasetBridge.staticCopy(spark)
     @scala.annotation.tailrec
     def loop(s: Crawl, stepsRun: Int): Crawl =
       if (s.depth > cfg.maxDepth || s.frontier.rows <= 0L || stepsRun >= cfg.maxSupersteps) s
       else {
         // execution regime, from sizes the driver holds: a superstep whose
-        // rows fit one task runs on the interpreted copy of the caller's
-        // session. The whole superstep follows its frontier there, side
-        // jobs and commit included.
+        // rows fit one task runs on the static, interpreted copy of the
+        // caller's session (no generated code, no adaptive re-planning:
+        // each action is one multi-stage job). The whole superstep follows
+        // its frontier there, side jobs and commit included. Above the
+        // bound it runs on the caller's session: generated code and AQE.
         val rows = s.frontier.rows
         val expected = if (s.depth < cfg.maxDepth) (rows * fanout(s.steps)).toLong else 0L
         val withCodegen = generatedCode(pages.rows, rows, expected, bound)
-        val session = if (withCodegen) spark else interpreted
+        val session = if (withCodegen) spark else small
         loop(superstep(session, cfg, pages, storage, s.copy(frontier = s.frontier.in(session)),
           stepsRun + 1, bound, expected, withCodegen), stepsRun + 1)
       }
@@ -598,7 +629,7 @@ object SparkCrawler {
     def own(df: DataFrame) = DatasetBridge.inSession(df, spark)
     CrawlRun(own(end.order.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark))),
       own(end.attempts.reduceOption(_ unionByName _).getOrElse(emptyAttempts(spark))),
-      own(end.seen.view(spark)), end.metrics, end.steps)
+      own(end.seen.view(spark)), end.metrics, end.steps)(end.seen.caches, end.checkpoints)
   }
 
   private def bump(m: Map[String, Long], deltas: (String, Long)*): Map[String, Long] =
@@ -652,7 +683,7 @@ object SparkCrawler {
         (ck.where(col("hit")).select(col("seq"), col("url"), col("canon"), col("hash"),
           col("depth"), lit(200).as("status"), col("superstep"), col("interval"), col("ua"),
           col("proxy")),
-          ck.select(col("seq"), col("canon"), col("depth"), col("hit"), col("superstep")))
+          ck.select(col("seq"), col("canon"), col("depth"), col("hit"), col("superstep")), ck)
       }
       if (streams.isEmpty && exp.isEmpty) f.joined.count() // fires the fetch observation
       val fetched = f.fetched
@@ -676,7 +707,7 @@ object SparkCrawler {
       f.release()
       fr.release()
       Crawl(d + 1, next, seen, seqBase, m, s.order ++ streams.map(_._1),
-        s.attempts ++ streams.map(_._2), s.steps :+ stat)
+        s.attempts ++ streams.map(_._2), s.checkpoints ++ streams.map(_._3), s.steps :+ stat)
     }
   }
 
@@ -859,8 +890,7 @@ object SparkCrawler {
         col("host"), col("root"), col("depth"), col("score"), col("seq"),
         col("ua"), col("proxy"))
     val Seq(nCands, nPassed) = candCounters.get(cands)
-    val seen = s.seen.add(spark, rank.cached, rank.total,
-      lastExpansion = d + 1 >= cfg.maxDepth, step = d)
+    val seen = s.seen.add(spark, rank, lastExpansion = d + 1 >= cfg.maxDepth, step = d)
     Expansion(Frontier(fresh, rank.total, raw = Some(rank.cached),
       owned = if (seen.ownsStore) None else Some(rank.persisted), prunePids = pids),
       nCands.asInstanceOf[Long], Option(nPassed).fold(0L)(_.asInstanceOf[Long]), seen)

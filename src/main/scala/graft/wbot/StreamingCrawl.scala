@@ -40,8 +40,13 @@ object StreamingCrawl {
         if (seeds.nonEmpty) {
           try {
             val run = SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg)
-            run.order.write.mode("overwrite").parquet(s"$outDir/crawled/batch_id=$batchId")
-            run.seen.write.mode("overwrite").parquet(s"$outDir/seen/batch_id=$batchId")
+            // the batch's caches go once its rows are written: a long-running
+            // stream would otherwise hold every batch's seen deltas and
+            // order-stream checkpoints for the life of the session
+            try {
+              run.order.write.mode("overwrite").parquet(s"$outDir/crawled/batch_id=$batchId")
+              run.seen.write.mode("overwrite").parquet(s"$outDir/seen/batch_id=$batchId")
+            } finally run.release()
           } catch {
             case e: IllegalArgumentException if !invalidSeedsAreFatal =>
               System.err.println(s"[streaming-crawl] batch $batchId skipped: ${e.getMessage}")

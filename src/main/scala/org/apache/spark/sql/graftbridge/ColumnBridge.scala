@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, KnownNotNull}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType}
@@ -13,6 +13,11 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType}
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c` declared non-nullable: `c` must never be null on the rows it is
+    * evaluated for (the caller filters them). The optimizer then infers no
+    * `isnotnull` filter on it and drops the ones pushed onto it. */
+  def knownNotNull(c: Column): Column = column(KnownNotNull(expression(c)))
 
   /** A column that calls `owner.method(args…)`, where `owner` is a Scala
     * object: Spark's `StaticInvoke` calls the object's static forwarder

@@ -173,22 +173,44 @@ object DatasetBridge {
     * the driver's and the tasks' copies of a small crawl's ~100 classes
     * evict each other and are recompiled by every run.
     *
+    * There are two copies per caller, this one and [[staticCopy]], because
+    * adaptive execution pays off for one kind of small input and not for the
+    * other. This copy keeps adaptive execution as the caller has it: the
+    * small operator queries (`SparkEntry`) join relations whose sizes the
+    * planner only learns at run time, and AQE's broadcast conversions are
+    * worth more to them than its re-planning costs (turning AQE off for them
+    * measured 13% slower set-up on `query_suite`, local[4] on 4 vCPUs).
+    *
     * No conf of the caller changes, so the caller's other queries keep their
-    * regime. The copy shares the caller's SparkContext and cache manager:
+    * regime. A copy shares the caller's SparkContext and cache manager:
     * jobs on it carry the calling thread's job group and local properties,
     * but the copy's own session tag, so the caller's `interruptAll` does not
     * reach them.
     *
-    * One copy per caller, not one per DataFrame: executors keep per-session
-    * state with its own class loader, and generated classes are cached per
-    * class loader, so a copy per query recompiled the few classes
-    * interpreted plans still generate in tasks (10 per pass over the
-    * queries). It is made again once the caller's confs have changed. The
-    * copy is a new session given the caller's confs, not a clone: a clone
-    * keeps its parent's session state, which would keep the weak key alive
-    * as long as the map holds the copy. */
+    * One copy per caller and set of confs, not one per DataFrame: executors
+    * keep per-session state with its own class loader, and generated classes
+    * are cached per class loader, so a copy per query recompiled the few
+    * classes interpreted plans still generate in tasks (10 per pass over the
+    * queries). A copy is made again once the caller's confs have changed. It
+    * is a new session given the caller's confs, not a clone: a clone keeps
+    * its parent's session state, which would keep the weak key alive as long
+    * as the map holds the copy. */
   def interpretedCopy(caller: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    Interpreted.copyOf(caller.asInstanceOf[classic.SparkSession])
+    Interpreted.copyOf(caller.asInstanceOf[classic.SparkSession], Interpreted.Keys)
+
+  /** [[interpretedCopy]] with adaptive query execution off as well
+    * (`spark.sql.adaptive.enabled=false`): a static, interpreted plan. Each
+    * action runs as ONE multi-stage job, where AQE submits one job per query
+    * stage and re-plans the rest of the plan after each (perfbench's
+    * checkpointed crawl, an interrupted leg and its resume: 43 jobs with
+    * AQE, 18 without). That re-planning buys
+    * nothing when every exchange holds less than one task's rows, which is
+    * exactly when the crawl runs a superstep interpreted; so the crawl's
+    * small supersteps run here, and its supersteps above the bound keep the
+    * caller's session, AQE included. Same lifetime rules as
+    * [[interpretedCopy]]: one per caller and set of confs. */
+  def staticCopy(caller: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    Interpreted.copyOf(caller.asInstanceOf[classic.SparkSession], Interpreted.StaticKeys)
 
   /** `df`'s analyzed plan as a DataFrame of `session`: it runs in that
     * session's regime wherever the caller later executes it (a write, a
@@ -202,25 +224,42 @@ object DatasetBridge {
 
   private object Interpreted {
     /** The confs of the regime without generated code. */
-    val Keys = Seq(
+    val Keys: Seq[(String, String)] = Seq(
       org.apache.spark.sql.internal.SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
       org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
 
-    /** Per caller session: the caller's runtime confs and the copy made
-      * with them. */
-    private val copies =
-      new java.util.WeakHashMap[classic.SparkSession, (Map[String, String], classic.SparkSession)]
+    /** ... and without adaptive re-planning. */
+    val StaticKeys: Seq[(String, String)] =
+      Keys :+ (org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false")
 
-    def copyOf(caller: classic.SparkSession): classic.SparkSession = synchronized {
-      val confs = caller.sessionState.conf.getAllConfs
-      Option(copies.get(caller)).filter(_._1 == confs).map(_._2).getOrElse {
-        val copy = caller.newSession()
-        (confs ++ Keys).foreach { case (k, v) => copy.sessionState.conf.setConfString(k, v) }
-        copies.put(caller, (confs, copy))
-        copy
+    /** Per caller session and set of keys: the caller's runtime confs and
+      * the copy made with them. */
+    private val copies = new java.util.WeakHashMap[classic.SparkSession,
+      Map[Seq[(String, String)], (Map[String, String], classic.SparkSession)]]
+
+    def copyOf(caller: classic.SparkSession, keys: Seq[(String, String)]): classic.SparkSession =
+      synchronized {
+        val confs = caller.sessionState.conf.getAllConfs
+        val held = Option(copies.get(caller)).getOrElse(Map.empty)
+        held.get(keys).filter(_._1 == confs).map(_._2).getOrElse {
+          val copy = caller.newSession()
+          (confs ++ keys).foreach { case (k, v) => copy.sessionState.conf.setConfString(k, v) }
+          copies.put(caller, held.updated(keys, (confs, copy)))
+          copy
+        }
       }
-    }
   }
+
+  /** Frees the blocks of a `localCheckpoint`ed DataFrame: they are the
+    * persisted RDD under its plan's `LogicalRDD` leaf, which
+    * `Dataset.unpersist` (a cache-manager entry) does not reach. Nothing may
+    * read `df` afterwards: a local checkpoint has no lineage to recompute
+    * from. */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.asInstanceOf[classic.Dataset[Row]].logicalPlan.collectLeaves().foreach {
+      case r: execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
 
   /** A copy of the calling thread's Spark local properties (job group,
     * description, scheduler pool, job tags); `SparkContext` keeps the

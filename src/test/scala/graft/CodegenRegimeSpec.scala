@@ -3,11 +3,8 @@ package graft
 import graft.wbot._
 import graft.wbot.Schemas._
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlanInfo
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-  SparkListenerSQLExecutionStart}
 
 /** The small checkpointed crawl both execution regimes are tested on: the
   * tiny web at maxDepth 3, an interrupted one-superstep leg and its resume.
@@ -32,13 +29,14 @@ object CheckpointedTiny {
   }
 }
 
-/** Which supersteps and operator queries run with Spark's generated code,
-  * and that running without it leaves the session's settings as the caller
-  * had them. */
+/** Which supersteps and operator queries run with Spark's generated code
+  * and adaptive execution, and that running without them leaves the
+  * session's settings as the caller had them. */
 class CodegenRegimeSpec extends SparkSuite {
 
   private val WholeStage = "spark.sql.codegen.wholeStage"
   private val FactoryMode = "spark.sql.codegen.factoryMode"
+  private val Adaptive = "spark.sql.adaptive.enabled"
 
   private def prepared(): DataFrame = {
     val p = SparkCrawler.preparePages(SparkTestBase.pagesDf(CheckpointedTiny.spec), 4)
@@ -47,20 +45,11 @@ class CodegenRegimeSpec extends SparkSuite {
   }
 
   /** `body`'s result, the classes Janino compiled while it ran, and the
-    * final plan of every SQL execution it started. */
+    * final plan of every SQL execution it started, adaptive or static. */
   private def compiling[T](body: => T): (T, Long, Seq[SparkPlanInfo]) = {
-    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]()
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val out = SparkTestBase.listening(new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans.putIfAbsent(s.executionId, s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.put(u.executionId, u.sparkPlanInfo)
-        case _ =>
-      }
-    })(body)
-    val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    import scala.jdk.CollectionConverters._
-    (out, classes, plans.values.asScala.toSeq.filter(_.simpleString.contains("isFinalPlan=true")))
+    val (out, recorded) = SparkTestBase.recording(body)
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, recorded.finalPlans)
   }
 
   /** Whole-stage codegen stages (`*(n)` in a plan string) of a plan, not
@@ -110,6 +99,31 @@ class CodegenRegimeSpec extends SparkSuite {
     } finally { pagesPrep.unpersist(); () }
   }
 
+  test("below the row bound the crawl runs static plans: no adaptive re-plan, a pinned job count") {
+    val pagesPrep = prepared()
+    try {
+      CheckpointedTiny.crawl(spark, pagesPrep) // steady state: one crawl first
+      val ((leg, res), recorded) = SparkTestBase.recording(CheckpointedTiny.crawl(spark, pagesPrep))
+      assert((leg.steps ++ res.steps).forall(!_.generatedCode))
+      assert(recorded.adaptiveUpdates == 0, s"${recorded.adaptiveUpdates} adaptive re-plans")
+      assert(recorded.finalPlans.nonEmpty &&
+        recorded.finalPlans.forall(_.nodeName != "AdaptiveSparkPlan"))
+      // each action is one multi-stage job, where AQE starts one per stage
+      assert(recorded.jobs == 26, s"${recorded.jobs} jobs")
+    } finally { pagesPrep.unpersist(); () }
+  }
+
+  test("at bound 0 the same crawl stays adaptive") {
+    val pagesPrep = prepared()
+    try {
+      val ((leg, res), recorded) =
+        SparkTestBase.recording(CheckpointedTiny.crawl(spark, pagesPrep, bound = 0L))
+      assert((leg.steps ++ res.steps).forall(_.generatedCode))
+      assert(recorded.adaptiveUpdates > 0, "no adaptive re-plan")
+      assert(recorded.finalPlans.exists(_.nodeName == "AdaptiveSparkPlan"))
+    } finally { pagesPrep.unpersist(); () }
+  }
+
   test("the session's codegen settings come back as the caller had them, also when a superstep throws") {
     val conf = spark.conf
     def settings: (Option[String], Option[String]) =
@@ -142,10 +156,12 @@ class CodegenRegimeSpec extends SparkSuite {
   }
 
   test("another thread never sees the caller's codegen settings change while a crawl runs interpreted") {
-    def settings: (Option[String], Option[String]) =
-      (spark.conf.getAll.get(WholeStage), spark.conf.getAll.get(FactoryMode))
+    def settings: (Option[String], Option[String], Option[String]) =
+      (spark.conf.getAll.get(WholeStage), spark.conf.getAll.get(FactoryMode),
+        spark.conf.getAll.get(Adaptive))
     val before = settings
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(Option[String], Option[String])]()
+    val seen = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[(Option[String], Option[String], Option[String])]()
     @volatile var running = true
     val poller = new Thread(() => do { seen.add(settings); Thread.sleep(1) } while (running))
     poller.setDaemon(true)

@@ -206,7 +206,8 @@ class CrawlerParitySpec extends SparkSuite {
         assert(run.seen.select("hash").collect().map(_.getString(0)).toSet == oracle.seen, leg)
         assert(run.metrics == oracle.metrics, leg)
       }
-      left.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+      run.release()
+      assert(persisted == before, s"$leg: ${(persisted -- before).size} caches left after release")
     }
   }
 

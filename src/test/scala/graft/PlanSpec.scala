@@ -79,10 +79,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("fetch join: every superstep sort-merges over the pages side in place; it never broadcasts") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.SparkPlanInfo
-    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-      SparkListenerSQLExecutionStart}
     // two seeds over 20 hosts × 50 pages at P = 4: d0's frontier reads the
     // pruned bucket scan, later frontiers pass 4·P rows and read the whole
     // cache (the corpus is far below the 10 MB broadcast threshold)
@@ -90,17 +87,11 @@ class PlanSpec extends SparkSuite {
     val cfg = graft.wbot.Schemas.CrawlConfig(maxDepth = 3, partitions = 4)
     val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
     pagesPrep.count()
-    // every SQL execution's latest plan; AQE posts each re-plan, the last
-    // one being the final plan
-    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]()
-    val run = try SparkTestBase.listening(new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans.putIfAbsent(s.executionId, s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.put(u.executionId, u.sparkPlanInfo)
-        case _ =>
-      }
-    })(SparkCrawler.runPrepared(spark, pagesPrep, Fixtures.seeds(spec), cfg))
-    finally { pagesPrep.unpersist(); () }
+    // every SQL execution's final plan, adaptive (above the row bound) or
+    // static (the small supersteps)
+    val (run, recorded) =
+      try SparkTestBase.recording(SparkCrawler.runPrepared(spark, pagesPrep, Fixtures.seeds(spec), cfg))
+      finally { pagesPrep.unpersist(); () }
     assert(run.steps.map(_.frontierSize).max >= 16L, "no frontier reached 4·P rows")
 
     // the pages side's leaf: the cache scan or its pruned bucket scan, the
@@ -112,11 +103,9 @@ class PlanSpec extends SparkSuite {
       if (pagesLeaf(p)) Seq(Seq(p))
       else if (p.nodeName == "InMemoryTableScan") Nil
       else p.children.toSeq.flatMap(c => pathsToPages(c).map(p +: _))
-    import scala.jdk.CollectionConverters._
-    val finals = plans.values.asScala.toSeq.filter(_.simpleString.contains("isFinalPlan=true"))
     // per path, the join nearest the pages leaf is the fetch join
     val fetches = for {
-      plan <- finals; path <- pathsToPages(plan)
+      plan <- recorded.finalPlans; path <- pathsToPages(plan)
       j = path.lastIndexWhere(_.nodeName.contains("Join")) if j >= 0
     } yield (path(j), path.drop(j + 1))
     assert(fetches.size >= run.steps.size, s"${fetches.size} fetch joins in ${run.steps.size} supersteps")

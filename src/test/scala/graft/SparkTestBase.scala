@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,6 +50,36 @@ object SparkTestBase {
   }
 
   private val MarkerPrefix = "listener-marker-"
+
+  /** What a [[recording]] saw: the final plan of every SQL execution, the
+    * adaptive re-plans posted and the jobs started (the marker job not
+    * counted). */
+  final case class Recorded(finalPlans: Seq[SparkPlanInfo], adaptiveUpdates: Int, jobs: Int)
+
+  /** `body`'s result and what it started. An execution's final plan is, when
+    * it runs adaptively, the last re-plan it posted once that reads
+    * `isFinalPlan=true`; when it runs as a static plan, the plan it posted
+    * at its start. */
+  def recording[T](body: => T): (T, Recorded) = {
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]()
+    val updates = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val out = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!isMarker(e)) jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.putIfAbsent(s.executionId, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          updates.incrementAndGet()
+          plans.put(u.executionId, u.sparkPlanInfo)
+        case _ =>
+      }
+    })(body)
+    def isFinal(p: SparkPlanInfo) =
+      p.nodeName != "AdaptiveSparkPlan" || p.simpleString.contains("isFinalPlan=true")
+    import scala.jdk.CollectionConverters._
+    (out, Recorded(plans.values.asScala.toSeq.filter(isFinal), updates.get, jobs.get))
+  }
 
   def isMarker(e: SparkListenerJobStart): Boolean =
     Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))

@@ -39,6 +39,35 @@ class StreamingCrawlSpec extends SparkSuite {
     pagesPrep.unpersist()
   }
 
+  test("each batch releases its caches once its rows are written: only the pages cache stays") {
+    val sp = spark
+    val sc = sp.sparkContext
+    val spec = Fixtures.tiny
+    // every seen delta aligned: a batch holds a fold store, the last rank
+    // store and one order-stream checkpoint per superstep
+    val cfg = CrawlConfig(maxDepth = 2, partitions = 4, smallSeenBound = 1L)
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    pagesPrep.count()
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    // one seed per file, one file per batch: two batches
+    val in = Files.createTempDirectory("wbot_release_seeds")
+    Fixtures.seeds(spec).zipWithIndex.foreach { case (seed, i) =>
+      Files.writeString(in.resolve(s"seeds$i.txt"), seed)
+    }
+    val out = Files.createTempDirectory("wbot_release_out").toString
+    val ckpt = Files.createTempDirectory("wbot_release_ckpt").toString
+    val q = StreamingCrawl.start(sp, sp.readStream.option("maxFilesPerTrigger", "1")
+      .text(in.toString), pagesPrep, cfg, out, ckpt)
+    q.awaitTermination(120000)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    val left = persisted -- before
+    assert(left.isEmpty, s"${left.size} caches left persisted after the batches")
+    assert(before.subsetOf(persisted), "the pages cache was released")
+    assert(sp.read.parquet(s"$out/seen").count() > 0)
+    pagesPrep.unpersist()
+  }
+
   test("a batch replayed after a driver failure writes its rows once") {
     val sp = spark
     val spec = Fixtures.tiny
