@@ -19,13 +19,12 @@ object Ranks {
 
   /** Ranked output plus the total row count (free from the offset pass).
     * `cached` is the lineage-cut leaf over the range-partitioned bucket
-    * store — `df` and any further views read it without their plans
-    * compounding; `persisted` is the Dataset that holds the store's blocks:
-    * `persisted.unpersist()` frees them once nothing reads `df` or `cached`
-    * any more (`cached` is a leaf, not a cached plan, so unpersisting it
-    * frees nothing). */
-  final case class RankResult(df: DataFrame, total: Long, cached: DataFrame,
-      persisted: DataFrame)
+    * store (`DatasetBridge.store`) — `df` and any further views read it
+    * without their plans compounding. The store's blocks belong to that
+    * leaf: `DatasetBridge.release(cached)` frees them once nothing reads
+    * `df` or `cached` any more, and Spark's ContextCleaner frees them once
+    * neither is reachable. */
+  final case class RankResult(df: DataFrame, total: Long, cached: DataFrame)
 
   /**
    * SAMPLING-FREE global rank for sort keys led by a dense integer column
@@ -36,15 +35,17 @@ object Ranks {
    *   - bucket = monotone linear map of `seqCol` over its known range (a
    *     range partitioning with ZERO sampling — the bucket id is a codegen'd
    *     arithmetic expression, so the expensive upstream runs exactly ONCE,
-   *     into one spill-safe serialized cache);
-   *   - per-bucket counts → cumulative offsets as a literal-map expression
-   *     (≤ `buckets` longs cross the driver — the only non-distributed state);
+   *     into one spill-safe serialized store);
+   *   - per-bucket counts, tallied per partition by the job that fills the
+   *     store (no aggregation stage) → cumulative offsets as a literal-map
+   *     expression (≤ `buckets` longs cross the driver — the only
+   *     non-distributed state);
    *   - rank = per-bucket `row_number` + offset over the cached buckets.
    *
    * (A fully in-plan variant — counts via a reused exchange + broadcast
    * cumulative offsets — was measured and rejected: Catalyst column-prunes
    * the counts branch into a DIFFERENT exchange, so the UDF-heavy upstream
-   * would execute twice. One bounded cache + one tiny collect is strictly
+   * would execute twice. One bounded store + its in-job tally is strictly
    * cheaper.)
    *
    * Balance note: buckets are value-ranges of `seqCol`, so fan-out
@@ -58,24 +59,17 @@ object Ranks {
     val buckets = 8 * p // several value-buckets per shuffle task: evens out hash collisions
     val span = math.max(1L, hi - lo)
     val pidExpr = ((seqCol.cast("long") - lit(lo)) * lit(buckets.toLong) / lit(span)).cast("int")
-    // persist + explicit lineage cut, NOT localCheckpoint: the counts action
-    // below fills the blocks, and DatasetBridge.lineageCut turns the cache
-    // scan into a leaf plan — so callers can keep the ranked output (and
-    // views over `cached`) alive across further iterations without their
-    // plans compounding, the bytes stay in the ACCOUNTED spill-safe pool
-    // (localCheckpoint silently forces blocks on-heap — see the bridge's
-    // scaladoc), and a lost partition recomputes instead of failing the job.
-    val parted0 = df.withColumn("__pid", pidExpr)
-      .repartition(p, col("__pid"))
-      .persist(SparkCrawler.bulkLevel)
-    // ONE pass over the upstream: fills the bucket blocks and collects the
-    // per-bucket counts (≤ `buckets` rows cross the driver)
-    val counts = parted0.groupBy(col("__pid")).count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val parted = org.apache.spark.sql.graftbridge.DatasetBridge.lineageCut(parted0)
+    // ONE job over the upstream: fills the bucket store and tallies the
+    // per-bucket counts (≤ `buckets` rows cross the driver). A store, not a
+    // cache or a localCheckpoint: see DatasetBridge's header.
+    val store = org.apache.spark.sql.graftbridge.DatasetBridge.store(
+      df.withColumn("__pid", pidExpr).repartition(p, col("__pid")),
+      SparkCrawler.bulkLevel, countBy = Some("__pid"))
+    val parted = store.leaf()
     var total = 0L
     val offsets: Map[Int, Long] =
-      counts.map { case (pid, c) => val o = (pid, total); total += c; o }.toMap
+      store.counts.toSeq.sortBy(_._1).map { case (pid, c) => val o = (pid, total); total += c; o }
+        .toMap
     // literal-map lookup: stays inside whole-stage codegen (no scala UDF)
     val offsetExpr =
       if (offsets.isEmpty) lit(0L)
@@ -84,6 +78,6 @@ object Ranks {
     val out = parted
       .withColumn(outCol, row_number().over(w).cast("long") + offsetExpr)
       .drop("__pid")
-    RankResult(out, total, parted, parted0)
+    RankResult(out, total, parted)
   }
 }

@@ -40,29 +40,30 @@ object SparkCrawler {
       candidates: Long, passedFilters: Long, fresh: Long, intervals: Int, wallMs: Long,
       generatedCode: Boolean = true, saltFanout: Int = 1)
 
-  /** A crawl's results. The only caches a run leaves registered are the
-    * ones these views read: for `seen`, its in-memory deltas (the small
-    * persisted projections, the canon-aligned stores and the last
-    * expansion's rank bucket store), held as `caches`; for `order` and
-    * `attempts`, one order-stream checkpoint per superstep when
-    * `recordStreams` is on, held as `checkpoints`. Parts reloaded by a resume
-    * are parquet reads. The pages cache stays the caller's ([[runPrepared]])
-    * or is released ([[run]]). */
+  /** A crawl's results. The only blocks a run keeps are the stores
+    * (`DatasetBridge.store`) these views read: for `seen`, its in-memory
+    * deltas (the small projections, the canon-aligned stores and the last
+    * expansion's rank bucket store); for `order` and `attempts`, one
+    * order-stream store per superstep when `recordStreams` is on. Parts
+    * reloaded by a resume are parquet reads. A run makes no CacheManager
+    * entry: the pages cache stays the caller's ([[runPrepared]]) or is
+    * released ([[run]]).
+    *
+    * The stores belong to the views' plans, so Spark's ContextCleaner frees
+    * them once the run is unreachable: [[release]] is optional. With
+    * `spark.cleaner.referenceTracking=false` nothing frees them but
+    * [[release]]. */
   final case class CrawlRun(
       order: DataFrame, // seq,url,canon,hash,depth,status,superstep,interval,ua — sort by seq = reference order
       attempts: DataFrame, // every fetch attempt incl. misses
       seen: DataFrame, // hash, hash64
       metrics: Map[String, Long], // the reference's 7 counters (metrics.go:45-55)
-      steps: Vector[StepStat])(caches: Seq[DataFrame], checkpoints: Seq[DataFrame]) {
+      steps: Vector[StepStat])(stores: Seq[DataFrame]) {
 
-    /** Frees every cache the run left registered, once nothing reads its
-      * views any more: `order`, `attempts` and `seen` must not be read
-      * after it (an order-stream checkpoint has no lineage to recompute
-      * from). */
-    def release(): Unit = {
-      caches.foreach(_.unpersist())
-      checkpoints.foreach(DatasetBridge.releaseCheckpoint)
-    }
+    /** Frees the run's stores now instead of when the run becomes
+      * unreachable. `order`, `attempts` and `seen` should not be read after
+      * it: each read would recompute the supersteps behind them. */
+    def release(): Unit = stores.foreach(DatasetBridge.release)
   }
 
   /** Prepare the pages side of the fetch join once: canonical key + hash64,
@@ -106,7 +107,7 @@ object SparkCrawler {
       .persist(bulkLevel)
   }
 
-  /** Executor for per-superstep side jobs (order-stream checkpoint, seen-delta
+  /** Executor for per-superstep side jobs (order-stream store, seen-delta
     * alignment, snapshot commit and its table writes): they are independent
     * of the main superstep plan and of each other, so running them as
     * concurrent Spark jobs collapses sequential driver round-trips into
@@ -144,8 +145,9 @@ object SparkCrawler {
     }(sideEc)
   }
 
-  /** Storage level for the engine's bulk caches (the pages snapshot, seen
-    * deltas, rank bucket stores, connected-components labels): off-heap when
+  /** Storage level for the engine's bulk caches and stores (the pages
+    * snapshot, seen deltas, rank bucket stores, order-stream stores,
+    * connected-components labels): off-heap when
     * the active session has an off-heap pool (columnar bytes stay out of the
     * GC'd heap — the executor heap only pays the transient batch-build
     * buffers), serialized on-heap + disk otherwise. */
@@ -159,17 +161,24 @@ object SparkCrawler {
     * round-robin UA; the seen store is NOT pre-marked (Q4a quirk). */
   def seedFrontier(spark: SparkSession, seeds: Seq[String], cfg: CrawlConfig): DataFrame = {
     import spark.implicits._
-    val parsed = seeds.map(s => s -> UrlFuncs.newUrl(s))
-    val errs = parsed.collect { case (s, Left(e)) => s"$s: $e" }
-    if (errs.nonEmpty) throw new IllegalArgumentException(s"invalid links: ${errs.mkString("; ")}")
+    val parsed = parseSeeds(seeds).fold(e => throw new IllegalArgumentException(e), identity)
     if (parsed.isEmpty) throw new IllegalArgumentException("no valid links")
-    val rows = parsed.zipWithIndex.collect { case ((_, Right(p)), i) =>
+    val rows = parsed.zipWithIndex.map { case (p, i) =>
       (p.urlStr, p.canon, p.hash, p.host, p.root, 0, i.toLong, cfg.uaFor(i), cfg.proxyFor(i))
     }
     spark.createDataset(rows)
       .toDF("url", "canon", "hash", "host", "root", "depth", "seq", "ua", "proxy")
       .withColumn("hash64", xxhash64(col("canon")))
       .withColumn("score", scoreCol(cfg))
+  }
+
+  /** Every seed parsed, or the message naming each one that does not
+    * parse (crawler.go:121-126). */
+  private[wbot] def parseSeeds(seeds: Seq[String]): Either[String, Seq[UrlFuncs.Parsed]] = {
+    val parsed = seeds.map(s => s -> UrlFuncs.newUrl(s))
+    val errs = parsed.collect { case (s, Left(e)) => s"$s: $e" }
+    if (errs.nonEmpty) Left(s"invalid links: ${errs.mkString("; ")}")
+    else Right(parsed.collect { case (_, Right(p)) => p })
   }
 
   /** O2 drain priority as a Catalyst column over the frontier fields; the
@@ -260,18 +269,16 @@ object SparkCrawler {
   private val seenRowBytes = 160L
 
   /** Materialize a seen delta HASH-PARTITIONED on its join key: one
-    * O(delta) repartition + accounted persist at birth, lineage-cut with the
-    * partitioning DECLARED on the leaf. Every later anti-join then reads the
-    * accumulated union with zero exchange on the seen side (the in-memory
-    * analogue of appending to a bucketed seen table — SURVEY §1.1/§4.3),
-    * where the unaligned design re-shuffled the FULL seen set every
-    * superstep: O(seen) per superstep, quadratic cumulative. Returns the
-    * leaf and the persisted store behind it. */
-  private def alignDelta(delta: DataFrame, p: Int): (DataFrame, DataFrame) = {
-    val parted = delta.repartition(p, col("canon")).persist(bulkLevel)
-    val n = parted.count()
-    (DatasetBridge.lineageCutPartitioned(
-      parted, Seq("canon"), p, Some((n, math.max(1L, n * seenRowBytes)))), parted)
+    * O(delta) repartition into a store at birth, its leaf DECLARING the
+    * partitioning. Every later anti-join then reads the accumulated union
+    * with zero exchange on the seen side (the in-memory analogue of
+    * appending to a bucketed seen table — SURVEY §1.1/§4.3), where the
+    * unaligned design re-shuffled the FULL seen set every superstep:
+    * O(seen) per superstep, quadratic cumulative. */
+  private def alignDelta(delta: DataFrame, p: Int): DataFrame = {
+    val store = DatasetBridge.store(delta.repartition(p, col("canon")), bulkLevel)
+    val n = store.rows
+    store.leaf(Seq("canon"), Some((n, math.max(1L, n * seenRowBytes))))
   }
 
   /** Rows one task is sized to hold: the one bound behind a crawl's regime
@@ -282,7 +289,7 @@ object SparkCrawler {
   private[graft] val rowsPerTask = new scala.util.DynamicVariable[Long](25000L)
 
   /** Tasks for `rows` rows at `bound` rows per task: between 1 and
-    * `partitions`, and `partitions` at bound 0. The order-stream checkpoint
+    * `partitions`, and `partitions` at bound 0. The order-stream store
     * and the rank size their widths with it: at a pinned `partitions`, a
     * small superstep launches mostly empty tasks (32 for a 24-row superstep
     * of the tiny bench crawl; empty rank tasks were the round-4 d0–d2
@@ -311,25 +318,25 @@ object SparkCrawler {
   /** What one superstep hands the next: the depth it runs at, its frontier,
     * the seen set, the seq watermark, the 7 counters, the recorded order and
     * attempts streams (committed parts first on a resume), the order-stream
-    * checkpoints they read and the stats of the supersteps run so far. */
+    * stores they read and the stats of the supersteps run so far. */
   private final case class Crawl(depth: Int, frontier: Frontier, seen: SeenSet, seqBase: Long,
       metrics: Map[String, Long], order: Vector[DataFrame], attempts: Vector[DataFrame],
-      checkpoints: Vector[DataFrame], steps: Vector[StepStat])
+      streamStores: Vector[DataFrame], steps: Vector[StepStat])
 
   /** The frontier a superstep consumes. `rows` is its exact row count, known
     * on the driver wherever a frontier is born (seed list, previous
     * superstep's fresh count, manifest), so no count job measures it. `raw`
     * is the UNRANKED bucket store an expansion left: rank-invariant
     * consumers (the prune probe, the terminal hit count) read it and skip
-    * the seq-window sort. `owned` is the persisted Dataset the frontier
-    * releases once the superstep that consumes it is done: the seed or
-    * resumed frontier itself, or the rank bucket store — None when that store
+    * the seq-window sort. `owned` is what the frontier releases once the
+    * superstep that consumes it is done: the persisted seed or resumed
+    * frontier itself, or the rank bucket store's leaf — None when that store
     * doubles as a seen delta, which the [[SeenSet]] then owns. `prunePids`
     * are the frontier's distinct pages-cache bucket ids when the rank job
     * that made it observed them (zero extra jobs). */
   private final case class Frontier(df: DataFrame, rows: Long, raw: Option[DataFrame] = None,
       owned: Option[DataFrame] = None, prunePids: Option[Set[Int]] = None) {
-    def release(): Unit = owned.foreach(_.unpersist())
+    def release(): Unit = owned.foreach(DatasetBridge.release)
 
     /** This frontier read by `session`'s jobs: every job a superstep starts
       * reads it, so they all run in that session's regime. */
@@ -353,9 +360,10 @@ object SparkCrawler {
 
   /** The crawl's seen set, and the one place that knows its layout.
     *
-    * It is a LIST of materialized deltas. While the accumulated set fits the
+    * It is a LIST of materialized deltas, each a store's leaf or a committed
+    * delta read back. While the accumulated set fits the
     * broadcast bound (`CrawlConfig.smallSeenBound`), each delta stays a
-    * SMALL stats-bearing leaf over a tiny persisted projection, and the
+    * SMALL stats-bearing leaf over a tiny stored projection, and the
     * anti-join broadcasts their plain union: nothing needs a layout, so
     * shallow supersteps skip the alignP-wide alignment side job, and no
     * fixed-partition leaf next to the join pins the probe side to full
@@ -373,18 +381,13 @@ object SparkCrawler {
     *
     * @param rows its size == crawled_link (every fresh candidate is marked
     *   seen; seeds are not)
-    * @param smallCaches the persisted projections behind `small`, released
-    *   by the fold
-    * @param stores the persisted stores behind `aligned` and `last`, held
-    *   until the run is released
     * @param baseStep the step whose committed delta supersedes all earlier
     *   ones (the fold's compaction point); -1 until a fold commits */
   private final case class SeenSet(aligned: Vector[DataFrame], small: Vector[DataFrame],
-      smallCaches: Vector[DataFrame], stores: Vector[DataFrame], last: Option[DataFrame],
-      rows: Long, baseStep: Int, alignP: Int, bound: Long) {
+      last: Option[DataFrame], rows: Long, baseStep: Int, alignP: Int, bound: Long) {
 
-    /** Every persisted Dataset the deltas read. */
-    def caches: Vector[DataFrame] = smallCaches ++ stores
+    /** Every delta: releasing one frees the store it reads, if any. */
+    def deltas: Vector[DataFrame] = aligned ++ last ++ small
 
     /** The anti-join's seen side. Small: the PLAIN union of the delta
       * leaves, broadcastable. Past the bound: the partition-wise union of
@@ -411,7 +414,7 @@ object SparkCrawler {
 
     /** The layout-free union of every delta: `CrawlRun.seen`. */
     def view(spark: SparkSession): DataFrame =
-      (aligned ++ last ++ small).reduceOption(_ unionByName _).getOrElse(SeenSet.empty(spark))
+      deltas.reduceOption(_ unionByName _).getOrElse(SeenSet.empty(spark))
 
     /** Adds one expansion's fresh rows, read from its rank bucket store
       * `rank`, at superstep `step`. */
@@ -423,8 +426,7 @@ object SparkCrawler {
       def commit(df: DataFrame, p: Option[Int], n: Long, supersedes: Boolean) =
         if (n > 0L) Some(Storage.SeenCommit(df, p, n, supersedes)) else None
       if (lastExpansion)
-        SeenUpdate(Future.successful((copy(last = Some(delta),
-          stores = stores :+ rank.persisted, rows = total),
+        SeenUpdate(Future.successful((copy(last = Some(delta), rows = total),
           commit(delta, None, fresh, supersedes = false))), ownsStore = true)
       else if (total > bound) {
         // a fold covers every seen row so far (`aligned` is empty while
@@ -437,20 +439,19 @@ object SparkCrawler {
         SeenUpdate(sideJob(spark) {
           // the fold runs in this superstep's session, not in that of the
           // superstep whose delta heads the union
-          val (a, store) = alignDelta(
+          val a = alignDelta(
             DatasetBridge.inSession((small :+ delta).reduce(_ unionByName _), spark), alignP)
-          smallCaches.foreach(_.unpersist())
-          (copy(aligned = aligned :+ a, small = Vector.empty, smallCaches = Vector.empty,
-            stores = stores :+ store,
+          small.foreach(DatasetBridge.release)
+          (copy(aligned = aligned :+ a, small = Vector.empty,
             rows = total, baseStep = if (supersedes) step else baseStep),
             commit(a, Some(alignP), if (supersedes) total else fresh, supersedes))
         }, ownsStore = false)
       } else {
-        val cache = delta.persist(bulkLevel)
-        val leaf = DatasetBridge.lineageCut(cache,
+        // filled by its first reader (the commit or the next anti-join):
+        // no job of its own
+        val leaf = DatasetBridge.storeLazily(delta, bulkLevel,
           Some((fresh, math.max(1L, fresh * seenRowBytes))))
-        SeenUpdate(Future.successful((copy(small = small :+ leaf,
-          smallCaches = smallCaches :+ cache, rows = total),
+        SeenUpdate(Future.successful((copy(small = small :+ leaf, rows = total),
           commit(leaf, None, fresh, supersedes = false))), ownsStore = false)
       }
     }
@@ -479,16 +480,15 @@ object SparkCrawler {
       * EMPTY so a later crossing fold genuinely covers all seen rows. */
     def load(spark: SparkSession, cfg: CrawlConfig, loaded: Seq[Storage.LoadedDelta],
         rows: Long, baseStep: Int): SeenSet = {
-      val empty = SeenSet(Vector.empty, Vector.empty, Vector.empty, Vector.empty, None, rows,
-        baseStep, width(spark, cfg), cfg.smallSeenBound)
+      val empty = SeenSet(Vector.empty, Vector.empty, None, rows, baseStep, width(spark, cfg),
+        cfg.smallSeenBound)
       def proj(df: DataFrame) = df.select(col("canon"), col("hash"), col("hash64"))
       if (loaded.isEmpty || rows <= 0L) empty
       else if (rows > cfg.smallSeenBound) {
         val (ok, residue) = loaded.partition(_.aligned)
         val realigned = residue.map(ld => proj(ld.df)).reduceOption(_ unionByName _)
           .map(alignDelta(_, empty.alignP))
-        empty.copy(aligned = ok.map(_.df).toVector ++ realigned.map(_._1),
-          stores = realigned.map(_._2).toVector)
+        empty.copy(aligned = ok.map(_.df).toVector ++ realigned)
       } else empty.copy(small = loaded.map(ld => proj(ld.df)).toVector)
     }
   }
@@ -629,7 +629,7 @@ object SparkCrawler {
     def own(df: DataFrame) = DatasetBridge.inSession(df, spark)
     CrawlRun(own(end.order.reduceOption(_ unionByName _).getOrElse(emptyOrder(spark))),
       own(end.attempts.reduceOption(_ unionByName _).getOrElse(emptyAttempts(spark))),
-      own(end.seen.view(spark)), end.metrics, end.steps)(end.seen.caches, end.checkpoints)
+      own(end.seen.view(spark)), end.metrics, end.steps)(end.seen.deltas ++ end.streamStores)
   }
 
   private def bump(m: Map[String, Long], deltas: (String, Long)*): Map[String, Long] =
@@ -646,7 +646,8 @@ object SparkCrawler {
     * CACHE DISCIPLINE (the 100 TB memory bound): on the default batch path
     * (!strictPoliteness, !recordStreams) the whole superstep is ONE plan
     * with ONE consumer, so nothing per-superstep is persisted but the rank
-    * bucket store — the fetch payload (html) streams through the extract map
+    * bucket store (a `DatasetBridge.store`, like every state the crawl keeps
+    * past its superstep) — the fetch payload (html) streams through the extract map
     * stage and is never cached, and candidates live only in spill-safe
     * shuffle files. Caches exist only where a second consumer does:
     * `scheduled` when the order stream or strict drains re-read it, the
@@ -677,7 +678,7 @@ object SparkCrawler {
       val exp = Option.when(d < cfg.maxDepth)(
         expand(spark, cfg, pages, s, f.joined, n, expected, bound))
       // the main thread owns the stream buffers: harvest the concurrent
-      // order-stream checkpoint here
+      // order-stream store here
       val streams = f.stream.map { fut =>
         val ck = Await.result(fut, Duration.Inf)
         (ck.where(col("hit")).select(col("seq"), col("url"), col("canon"), col("hash"),
@@ -707,7 +708,7 @@ object SparkCrawler {
       f.release()
       fr.release()
       Crawl(d + 1, next, seen, seqBase, m, s.order ++ streams.map(_._1),
-        s.attempts ++ streams.map(_._2), s.checkpoints ++ streams.map(_._3), s.steps :+ stat)
+        s.attempts ++ streams.map(_._2), s.streamStores ++ streams.map(_._3), s.steps :+ stat)
     }
   }
 
@@ -763,13 +764,17 @@ object SparkCrawler {
     Schedule(df, saltFanout, cached, strictIntervals, counters)
   }
 
-  /** A superstep's fetch join (cached when `cached`), its hit counter and
-    * the concurrent order-stream checkpoint when streams are recorded. */
-  private final case class Fetch(joined: DataFrame, cached: Boolean, counters: Counters,
-      stream: Option[Future[DataFrame]]) {
+  /** A superstep's fetch join (cached when `cached`), the stores of its
+    * wall-clock paced slots, its hit counter and the concurrent order-stream
+    * store when streams are recorded. */
+  private final case class Fetch(joined: DataFrame, cached: Boolean, paced: Seq[DataFrame],
+      counters: Counters, stream: Option[Future[DataFrame]]) {
     def fetched: Long = Option(counters.get(joined).head).fold(0L)(_.asInstanceOf[Long])
 
-    def release(): Unit = if (cached) { joined.unpersist(); () }
+    def release(): Unit = {
+      if (cached) joined.unpersist()
+      paced.foreach(DatasetBridge.release)
+    }
   }
 
   /** S2: the fetch = left join against the pages snapshot on canonical key.
@@ -787,11 +792,13 @@ object SparkCrawler {
     * sort — and exchanges and sorts only the frontier.
     *
     * The html payload is cached ONLY under strict drains; everywhere else it
-    * streams through its single pass. The order-stream checkpoint, its
-    * second consumer, runs as a CONCURRENT job that recomputes the fetch join
+    * streams through its single pass. The order stream, its second
+    * consumer, is filled by a CONCURRENT job that recomputes the fetch join
     * from the cached schedule (and the pages cache) instead of holding
     * frontier×html bytes in memory, so the two jobs overlap instead of
-    * serializing two driver round-trips. */
+    * serializing two driver round-trips. Its rows land in a store
+    * (`DatasetBridge.store`, at [[bulkLevel]]) that the run's `order` and
+    * `attempts` read. */
   private def fetch(spark: SparkSession, cfg: CrawlConfig, pages: Pages, fr: Frontier,
       sched: Schedule, d: Int, n: Int, bound: Long): Fetch = {
     val pagesSide = pages.sideFor(fr, spark)
@@ -799,7 +806,8 @@ object SparkCrawler {
       f.hint("merge").join(pagesSide.drop("hash64"), Seq("canon"), "left")
     val counters = new Counters(s"fetch_d${d}_s$n",
       "fetched" -> sum(when(col("html").isNotNull, 1L).otherwise(0L)))
-    val joined0 = counters.on(
+    // the fetch's slots, and those of them that are paced stores
+    val (slots, paced) =
       if (cfg.strictPoliteness && sched.strictIntervals > 1) {
         // wall-clock pacing (limiter.go:52-59 semantics): slot i's fetch is
         // MATERIALIZED no earlier than i × slot-length; safe slot length =
@@ -807,15 +815,17 @@ object SparkCrawler {
         val slotMs =
           if (cfg.paceWallClock) cfg.rateLimits.values.map(_.intervalMs).max else 0L
         val tPace0 = System.nanoTime()
-        (0 until sched.strictIntervals).map { i =>
+        val parts = (0 until sched.strictIntervals).map { i =>
           val part = fetchJoin(sched.df.where(col("interval") === i))
           if (cfg.paceWallClock) {
             val sleepMs = (tPace0 + i * slotMs * 1000000L - System.nanoTime()) / 1000000L
             if (sleepMs > 0) Thread.sleep(sleepMs)
-            part.localCheckpoint(true) // fetch happens NOW, inside its slot
+            DatasetBridge.store(part, bulkLevel).leaf() // fetch happens NOW, inside its slot
           } else part
-        }.reduce(_ unionByName _)
-      } else fetchJoin(sched.df))
+        }
+        (parts, if (cfg.paceWallClock) parts else Nil)
+      } else (Seq(fetchJoin(sched.df)), Nil)
+    val joined0 = counters.on(slots.reduce(_ unionByName _))
     val joined = if (cfg.strictPoliteness) joined0.persist(bulkLevel) else joined0
     val stream =
       if (!cfg.recordStreams) None
@@ -828,9 +838,10 @@ object SparkCrawler {
         // joined back. coalesce never widens, so corpus-scale supersteps
         // keep their parallelism.
         Some(sideJob(spark)(
-          ckDf.coalesce(width(fr.rows, cfg.partitions, bound)).localCheckpoint(true)))
+          DatasetBridge.store(ckDf.coalesce(width(fr.rows, cfg.partitions, bound)), bulkLevel)
+            .leaf()))
       }
-    Fetch(joined, cfg.strictPoliteness, counters, stream)
+    Fetch(joined, cfg.strictPoliteness, paced, counters, stream)
   }
 
   /** An expansion's next frontier, its candidate counts and its seen-set
@@ -870,16 +881,17 @@ object SparkCrawler {
     // denseRangeRank's offsets are exact at any width; an underestimate
     // merely means fuller (spill-safe) buckets.
     val rankP = width(expected, cfg.partitions, bound)
-    // INVARIANT: denseRangeRank's counts job MATERIALIZES its input plan (it
-    // repartitions fresh0Obs into the bucket store and counts the buckets),
-    // so pidObs below is guaranteed to have fired — if Ranks ever computes
+    // INVARIANT: denseRangeRank's store job MATERIALIZES its input plan
+    // inside that plan's own SQL execution (it fills the bucket store from
+    // fresh0Obs and tallies the buckets), so pidObs below is guaranteed to
+    // have fired once it returns — if Ranks ever computes
     // counts without traversing the input plan, the blocking pidObs.get
     // would hang the driver (the empty fallback only covers AQE collapsing
     // the plan, not a never-run observation).
     val rank = Ranks.denseRangeRank(fresh0Obs, col("parent_seq"),
       s.seqBase - s.frontier.rows, s.seqBase, Seq(col("link_pos")), "__rank", rankP)
     val pids = {
-      val m0 = pidObs.get // already fired (the rank's counts job ran)
+      val m0 = pidObs.get // already fired (the rank's store job ran)
       if (m0.isEmpty) None else Option(m0("pids")).map(_.asInstanceOf[Seq[Int]].toSet)
     }
     val fresh = rank.df
@@ -892,7 +904,7 @@ object SparkCrawler {
     val Seq(nCands, nPassed) = candCounters.get(cands)
     val seen = s.seen.add(spark, rank, lastExpansion = d + 1 >= cfg.maxDepth, step = d)
     Expansion(Frontier(fresh, rank.total, raw = Some(rank.cached),
-      owned = if (seen.ownsStore) None else Some(rank.persisted), prunePids = pids),
+      owned = if (seen.ownsStore) None else Some(rank.cached), prunePids = pids),
       nCands.asInstanceOf[Long], Option(nPassed).fold(0L)(_.asInstanceOf[Long]), seen)
   }
 

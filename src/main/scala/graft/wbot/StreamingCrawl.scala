@@ -26,7 +26,8 @@ object StreamingCrawl {
    *                   seed URLs (file source, Kafka value, MemoryStream…)
    * @param invalidSeedsAreFatal the reference aborts a Run on any invalid
    *                   seed (crawler.go:124-126); a long-running service can
-   *                   choose to skip bad batches instead
+   *                   choose to skip a batch with an invalid seed instead
+   *                   (any other failure still fails the query)
    */
   def start(spark: SparkSession, seedStream: DataFrame, pagesPrep: DataFrame,
       cfg: Schemas.CrawlConfig, outDir: String, checkpointDir: String,
@@ -37,20 +38,20 @@ object StreamingCrawl {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val seeds = batch.select("value").collect().map(_.getString(0)).toSeq
-        if (seeds.nonEmpty) {
-          try {
+        // only an invalid-seed batch is skipped: every other failure, the
+        // engine's own included, fails the query
+        if (seeds.nonEmpty) SparkCrawler.parseSeeds(seeds) match {
+          case Left(e) if !invalidSeedsAreFatal =>
+            System.err.println(s"[streaming-crawl] batch $batchId skipped: $e")
+          case _ =>
             val run = SparkCrawler.runPrepared(spark, pagesPrep, seeds, cfg)
-            // the batch's caches go once its rows are written: a long-running
-            // stream would otherwise hold every batch's seen deltas and
-            // order-stream checkpoints for the life of the session
+            // the batch's stores go once its rows are written, not when the
+            // run is next collected: a long-running stream would otherwise
+            // hold them until the driver's next GC
             try {
               run.order.write.mode("overwrite").parquet(s"$outDir/crawled/batch_id=$batchId")
               run.seen.write.mode("overwrite").parquet(s"$outDir/seen/batch_id=$batchId")
             } finally run.release()
-          } catch {
-            case e: IllegalArgumentException if !invalidSeedsAreFatal =>
-              System.err.println(s"[streaming-crawl] batch $batchId skipped: ${e.getMessage}")
-          }
         }
         ()
       }

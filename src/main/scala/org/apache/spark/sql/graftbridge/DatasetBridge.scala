@@ -5,22 +5,34 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution
+import org.apache.spark.storage.StorageLevel
 
-/** Catalyst-lineage cut WITHOUT `localCheckpoint`: wraps a (cached)
-  * DataFrame's physical RDD in a fresh LogicalRDD leaf, exactly like
-  * `Dataset.checkpoint` does internally (`private[sql]`, hence this one-hop
-  * bridge — same pattern as [[ColumnBridge]]).
+/** Catalyst-lineage cuts: a DataFrame's physical RDD under a fresh
+  * `LogicalRDD` leaf, exactly like `Dataset.checkpoint` builds one internally
+  * (`private[sql]`, hence this one-hop bridge — same pattern as
+  * [[ColumnBridge]]).
   *
-  * Why not `localCheckpoint(eager, storageLevel)`: its level transform
-  * FORCES the blocks on-heap — `localCheckpoint(false, OFF_HEAP)` measures
-  * as `StorageLevel(disk, memory, ser)` (no off-heap), so a crawl holding
-  * every superstep's fresh set as checkpoint blocks slowly fills the
-  * executor HEAP with serialized bytes and dies re-caching evicted blocks
-  * (observed at the 11.5M-request deep bench). A `persist(OFF_HEAP)` +
-  * this cut keeps the bytes in the accounted off-heap pool (disk-backed
-  * eviction, direct-buffer re-cache), AND, unlike checkpoint blocks, the
-  * cache scan can recompute a lost partition from its one-superstep-deep
-  * physical plan instead of failing the job.
+  * The crawl's long-lived state lives in [[store]]s: the Dataset's own
+  * physical RDD, persisted at the caller's level and filled inside the
+  * Dataset's own SQL execution, under such a leaf. Its blocks belong to the
+  * leaf. Spark's ContextCleaner frees them, with the shuffles and plans under
+  * them, once nothing reaches the leaf; [[release]] frees them eagerly. Two
+  * other ways to hold a materialized Dataset were measured and rejected:
+  *  - `persist` + cut: a CacheManager entry. The manager keeps the plan and
+  *    a clone of the session it was persisted in until `unpersist`, so a
+  *    caller that drops its results without releasing them leaks every
+  *    superstep's state (BENCH/BASELINE.md: 4.75 MB of heap per
+  *    interrupted-and-resumed perfbench crawl).
+  *  - `localCheckpoint(eager, storageLevel)`: its level transform FORCES the
+  *    blocks on-heap — `localCheckpoint(false, OFF_HEAP)` measures as
+  *    `StorageLevel(disk, memory, ser)` (no off-heap), so a crawl holding
+  *    every superstep's fresh set as checkpoint blocks slowly fills the
+  *    executor HEAP with serialized bytes and dies re-caching evicted blocks
+  *    (observed at the 11.5M-request deep bench). A store keeps the bytes in
+  *    the accounted off-heap pool when asked (disk-backed eviction,
+  *    direct-buffer re-cache), AND, unlike checkpoint blocks, a lost
+  *    partition recomputes from its one-superstep-deep physical plan instead
+  *    of failing the job.
   */
 object DatasetBridge {
   /** @param sizeHint (rowCount, sizeInBytes) when known: without stats the
@@ -250,16 +262,78 @@ object DatasetBridge {
       }
   }
 
-  /** Frees the blocks of a `localCheckpoint`ed DataFrame: they are the
-    * persisted RDD under its plan's `LogicalRDD` leaf, which
-    * `Dataset.unpersist` (a cache-manager entry) does not reach. Nothing may
-    * read `df` afterwards: a local checkpoint has no lineage to recompute
-    * from. */
-  def releaseCheckpoint(df: DataFrame): Unit =
-    df.asInstanceOf[classic.Dataset[Row]].logicalPlan.collectLeaves().foreach {
-      case r: execution.LogicalRDD => r.rdd.unpersist()
+  /** A store of `df`, filled now: `df`'s own physical RDD, its rows copied
+    * out of Spark's reused buffers and persisted at `level`, built and
+    * filled by ONE job inside `df`'s own SQL execution — as
+    * `Dataset.checkpoint` does, so the observations in its plan fire. That
+    * job also counts the rows: per value of the int column `countBy`, or
+    * all under key 0 when None. No CacheManager entry is made; see this
+    * object's header for who frees the blocks. */
+  def store(df: DataFrame, level: StorageLevel, countBy: Option[String] = None): Stored = {
+    val cdf = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = cdf.queryExecution
+    val ord = countBy.map { c =>
+      val i = qe.analyzed.output.indexWhere(_.name == c)
+      require(i >= 0, s"column $c not in output ${qe.analyzed.output.map(_.name)}")
+      i
+    }
+    execution.SQLExecution.withNewExecutionId(qe, Some("store")) {
+      val rdd = blocks(cdf, level)
+      val tallies = rdd.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => tally(ord, rows))
+      val counts = tallies.foldLeft(Map.empty[Int, Long])((acc, t) =>
+        t.foldLeft(acc) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) })
+      new Stored(cdf, rdd, counts)
+    }
+  }
+
+  /** A filled store and its row counts ([[store]]). */
+  final class Stored private[DatasetBridge] (src: classic.Dataset[Row], rdd: RDD[InternalRow],
+      val counts: Map[Int, Long]) {
+    def rows: Long = counts.values.sum
+
+    /** The store's leaf. It declares `HashPartitioning(keyCols, <partitions>)`
+      * — the caller asserts the rows are laid out that way, as in
+      * [[lineageCutPartitioned]] — and `SinglePartition` when it has no key
+      * and one partition, as `localCheckpoint` does: a global sort over it
+      * then adds no exchange. `sizeHint` (rowCount, sizeInBytes) becomes its
+      * statistics. */
+    def leaf(keyCols: Seq[String] = Nil, sizeHint: Option[(Long, Long)] = None): DataFrame =
+      DatasetBridge.leaf(src, rdd, keyCols, Nil, sizeHint, single = true)
+  }
+
+  /** [[store]]'s leaf, filled by the first job that reads it instead of
+    * now: for a `df` whose plan runs no job of its own to start (no
+    * exchange), such as a projection of another store. */
+  def storeLazily(df: DataFrame, level: StorageLevel,
+      sizeHint: Option[(Long, Long)] = None): DataFrame = {
+    val cdf = df.asInstanceOf[classic.Dataset[Row]]
+    leaf(cdf, blocks(cdf, level), Nil, Nil, sizeHint, single = true)
+  }
+
+  private def blocks(src: classic.Dataset[Row], level: StorageLevel): RDD[InternalRow] =
+    src.queryExecution.toRdd.map(_.copy()).persist(level)
+
+  private def tally(ord: Option[Int], rows: Iterator[InternalRow]): Map[Int, Long] = ord match {
+    case None => Map(0 -> rows.size.toLong)
+    case Some(i) =>
+      val m = scala.collection.mutable.HashMap.empty[Int, Long]
+      rows.foreach { r => val k = r.getInt(i); m(k) = m.getOrElse(k, 0L) + 1L }
+      m.toMap
+  }
+
+  /** Frees the blocks `df` holds, eagerly: the persisted RDD under each
+    * `LogicalRDD` leaf of its plan (each [[store]] it reads), and its
+    * CacheManager entry when `df` is a persisted Dataset. Nothing may
+    * read `df` afterwards: it would recompute every store it reads. */
+  def release(df: DataFrame): Unit = {
+    val cdf = df.asInstanceOf[classic.Dataset[Row]]
+    cdf.unpersist()
+    cdf.logicalPlan.collectLeaves().foreach {
+      case r: execution.LogicalRDD if r.rdd.getStorageLevel != StorageLevel.NONE =>
+        r.rdd.unpersist()
       case _ =>
     }
+  }
 
   /** A copy of the calling thread's Spark local properties (job group,
     * description, scheduler pool, job tags); `SparkContext` keeps the
@@ -328,16 +402,20 @@ object DatasetBridge {
   /** The leaf every constructor above builds: `rdd`, whose rows are in
     * `src`'s output layout, as a `LogicalRDD` over `src`'s output attributes.
     * It declares `HashPartitioning(keyCols, <rdd's partition count>)`
-    * (unknown partitioning when `keyCols` is empty), each partition sorted
+    * (when `keyCols` is empty: `SinglePartition` for a one-partition `rdd`
+    * when `single`, else unknown partitioning), each partition sorted
     * ascending by `orderedBy`, and `sizeHint` (rowCount, sizeInBytes) as its
     * statistics. */
   private def leaf(src: classic.Dataset[Row], rdd: RDD[InternalRow],
-      keyCols: Seq[String], orderedBy: Seq[String], sizeHint: Option[(Long, Long)]): DataFrame = {
+      keyCols: Seq[String], orderedBy: Seq[String], sizeHint: Option[(Long, Long)],
+      single: Boolean = false): DataFrame = {
     val output = src.queryExecution.analyzed.output
     def attrOf(k: String) = output.find(_.name == k).getOrElse(
       sys.error(s"column $k not in output ${output.map(_.name)}"))
     val part =
-      if (keyCols.isEmpty)
+      if (keyCols.isEmpty && single && rdd.getNumPartitions == 1)
+        org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+      else if (keyCols.isEmpty)
         org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(rdd.getNumPartitions)
       else org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
         keyCols.map(attrOf), rdd.getNumPartitions)

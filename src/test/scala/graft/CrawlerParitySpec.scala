@@ -211,6 +211,46 @@ class CrawlerParitySpec extends SparkSuite {
     }
   }
 
+  test("a prepared crawl and its resume leave no CacheManager entry, released or not") {
+    // the session is shared: entries other suites left go first, so that
+    // `isEmpty` speaks of this crawl only
+    spark.catalog.clearCache()
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(CheckpointedTiny.spec), 4)
+    pagesPrep.count()
+    // every seen delta aligned: the resume's first superstep folds, and the
+    // last expansion's rank store stays behind as a seen delta
+    val (leg, res) = CheckpointedTiny.crawl(spark, pagesPrep)
+    assert(res.steps.nonEmpty && res.seen.count() > 0)
+    pagesPrep.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty, "the crawl left a cache entry")
+    leg.release()
+    res.release()
+  }
+
+  test("a run dropped without release() leaves no persisted RDD of its own") {
+    val sc = spark.sparkContext
+    // a fresh set of ids: the map's own key set would hold the RDDs
+    def persisted: Set[Int] = sc.getPersistentRDDs.keysIterator.toSet
+    // the run is only reachable inside this method
+    def crawlAndDrop(): Set[Int] = {
+      val before = persisted
+      val run = SparkCrawler.run(spark, SparkTestBase.pagesDf(tiny), tinySeeds,
+        CrawlConfig(maxDepth = 3, partitions = 4, smallSeenBound = 3L))
+      assert(run.order.count() > 0 && run.seen.count() > 0)
+      persisted -- before
+    }
+    val left = crawlAndDrop()
+    assert(left.nonEmpty, "the run held no store")
+    // as Spark's ContextCleanerSuite does: collect until the cleaner has run
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    eventually(timeout(60.seconds), interval(200.millis)) {
+      System.gc()
+      val kept = persisted.intersect(left)
+      assert(kept.isEmpty, s"${kept.size} of the run's ${left.size} stores still persisted")
+    }
+  }
+
   test("parity: score-priority drain is schedule-only (order/seen/metrics invariant)") {
     // O2: a non-constant drain priority must change interval slots but NEVER
     // crawl order, the seen set, or the counters

@@ -173,6 +173,48 @@ class PlanSpec extends SparkSuite {
       s"rank window must partition by the range bucket:\n$plan")
   }
 
+  test("denseRangeRank: an empty input ranks nothing") {
+    import spark.implicits._
+    val df = Seq.empty[(Long, Long)].toDF("seqk", "tie")
+    val rank = graft.wbot.Ranks.denseRangeRank(df, col("seqk"), 0L, 500L,
+      Seq(col("tie")), "rnk", 4)
+    assert(rank.total == 0L)
+    assert(rank.df.collect().isEmpty)
+  }
+
+  test("denseRangeRank: every row under one parent keeps the exact order") {
+    import spark.implicits._
+    // one value bucket holds all rows, the other 31 none
+    val df = (1 to 3000).map(i => (7L, (i * 7919L) % 3001L)).toDF("seqk", "tie")
+    val rank = graft.wbot.Ranks.denseRangeRank(df, col("seqk"), 0L, 500L,
+      Seq(col("tie")), "rnk", 4)
+    assert(rank.total == 3000L)
+    val got = rank.df.orderBy("rnk").select("rnk", "tie").as[(Long, Long)].collect().toSeq
+    assert(got.map(_._1) == (1L to 3000L))
+    assert(got.map(_._2) == (1 to 3000).map(i => (i * 7919L) % 3001L).sorted)
+  }
+
+  test("denseRangeRank: one job fills the bucket store and returns its counts") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.DatasetBridge
+    // a static plan: one job per action (AQE would add one per query stage)
+    val static = DatasetBridge.staticCopy(spark)
+    val df = DatasetBridge.inSession(
+      (1 to 5000).map(i => (i.toLong % 500, i.toLong)).toDF("seqk", "tie"), static)
+    val (rank, recorded) = SparkTestBase.recording(graft.wbot.Ranks.denseRangeRank(df,
+      col("seqk"), 0L, 500L, Seq(col("tie")), "rnk", 4))
+    assert(recorded.jobs == 1, s"${recorded.jobs} jobs")
+    assert(rank.total == 5000L)
+    val stores = rank.cached.queryExecution.analyzed.collectLeaves().collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    val info = spark.sparkContext.getRDDStorageInfo.filter(i => stores.contains(i.id))
+    assert(info.length == 1 && info.head.numCachedPartitions == info.head.numPartitions,
+      "the store is not filled")
+    DatasetBridge.release(rank.cached)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(stores.head))
+  }
+
   test("pages-cache pid formula matches Spark's hash partitioning exactly") {
     // the fetch-join bucket pruning derives a partition id as
     // pmod(hash(canon), P); it MUST equal the id Spark's repartition

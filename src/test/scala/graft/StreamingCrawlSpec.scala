@@ -68,6 +68,57 @@ class StreamingCrawlSpec extends SparkSuite {
     pagesPrep.unpersist()
   }
 
+  test("with invalid seeds not fatal, an engine failure still fails the query") {
+    val sp = spark
+    import sp.implicits._
+    val spec = Fixtures.tiny
+    // a fold at alignment width 0: the engine's repartition(0, canon) throws
+    // IllegalArgumentException, which is no invalid seed
+    val cfg = CrawlConfig(maxDepth = 2, partitions = 4, smallSeenBound = 1L,
+      seenAlignPartitions = Some(0))
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    val out = Files.createTempDirectory("wbot_fail_out").toString
+    val ckpt = Files.createTempDirectory("wbot_fail_ckpt").toString
+    implicit val sqlCtx = sp.sqlContext
+    val mem = MemoryStream[String]
+    mem.addData(Fixtures.seeds(spec): _*)
+    val q = StreamingCrawl.start(sp, mem.toDF(), pagesPrep, cfg, out, ckpt,
+      invalidSeedsAreFatal = false)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination(120000)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalArgumentException]), e)
+    pagesPrep.unpersist()
+  }
+
+  test("with invalid seeds not fatal, a batch with an invalid seed is skipped") {
+    val sp = spark
+    val spec = Fixtures.tiny
+    val cfg = CrawlConfig(maxDepth = 2, partitions = 4)
+    val pagesPrep = SparkCrawler.preparePages(SparkTestBase.pagesDf(spec), 4)
+    // one file per batch: a valid seed, and a seed the reference rejects
+    val seed = Fixtures.seeds(spec).head
+    val in = Files.createTempDirectory("wbot_skip_seeds")
+    Files.writeString(in.resolve("a.txt"), seed)
+    Files.writeString(in.resolve("b.txt"), "http://bad.unknowntld/x")
+    val out = Files.createTempDirectory("wbot_skip_out").toString
+    val ckpt = Files.createTempDirectory("wbot_skip_ckpt").toString
+    val q = StreamingCrawl.start(sp, sp.readStream.option("maxFilesPerTrigger", "1")
+      .text(in.toString), pagesPrep, cfg, out, ckpt, invalidSeedsAreFatal = false)
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, q.exception)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    val written = Files.list(Paths.get(out, "crawled")).toArray.map(_.toString)
+      .filter(_.contains("batch_id="))
+    assert(written.length == 1, written.mkString(", "))
+    val direct = SparkCrawler.runPrepared(sp, pagesPrep, Seq(seed), cfg)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("seq", "canon", "depth").collect().map(_.toString).sorted.toSeq
+    assert(rows(sp.read.parquet(written.head)) == rows(direct.order))
+    pagesPrep.unpersist()
+  }
+
   test("a batch replayed after a driver failure writes its rows once") {
     val sp = spark
     val spec = Fixtures.tiny
